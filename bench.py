@@ -32,7 +32,7 @@ EXCLUDE: set[str] = set()
 # the index build every run, conflating build with serving cost: instead
 # the cache is cleared ONCE before an untimed build run (recorded
 # separately), and the timed runs measure serving against the warm index.
-INDEX_BACKED: set[str] = {"lsh_topk_ann", "ann_recall_eval"}
+INDEX_BACKED: set[str] = {"ann_recall_eval"}
 
 
 def _wait_for_quiet_box() -> list[float]:

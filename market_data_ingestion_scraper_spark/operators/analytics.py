@@ -210,14 +210,6 @@ def daily_price_delta(lineitem: DataFrame) -> DataFrame:
     )
 
 
-def rollup_revenue(lineitem: DataFrame) -> DataFrame:
-    """Hierarchical rollup (Ext-A6): revenue at (flag, status), (flag), ()
-    grains in one pass — Spark plans one shuffle with grouping-set expand."""
-    return lineitem.rollup("l_returnflag", "l_linestatus").agg(
-        exact_sum(revenue(), scale=4).alias("revenue")
-    )
-
-
 def union_day_slices(lineitem: DataFrame) -> DataFrame:
     """Schema-drift-tolerant union (U1, ``table_scraper.py:35`` +
     file-per-day accumulation): two day-slices with different column sets

@@ -1,7 +1,7 @@
 """Character-level byte-pair-encoding tokenization at corpus scale
 (SURVEY X16) — the real-tokenizer companion to the word-level proxies in
-``operators/text.py`` (`token_counts` whitespace/BPE-regex proxy,
-`bigram_merge_candidates` one word-level merge round).
+``operators/text.py`` (`bigram_merge_candidates`, one word-level merge
+round).
 
 Algorithm: Sennrich, Haddow & Birch 2016, "Neural Machine Translation of
 Rare Words with Subword Units" (arXiv:1508.07909) — learn merges greedily

@@ -1,7 +1,7 @@
 """Context-window preparation for LLM training pipelines: document
-chunking (overlapping windows for retrieval/embedding) and sequence
-packing (the concat-then-slice plan pretraining uses to fill fixed-size
-contexts without padding waste).
+chunking (overlapping windows for retrieval/embedding) and curriculum
+sequence packing (the concat-then-slice plan pretraining uses to fill
+fixed-size contexts without padding waste).
 
 Both are pure relational transforms — chunking is a per-row explode (no
 shuffle), packing is one window cumsum per stratum — and both have exact
@@ -41,46 +41,6 @@ def chunk_documents(
     )
 
 
-def pack_sequences(
-    documents: DataFrame,
-    ctx_tokens: int = 512,
-    strata_cols: str | list[str] = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sequence-packing plan: concatenate documents in ``id_col`` order
-    within each stratum and slice the token stream into ``ctx_tokens``
-    windows — each doc gets (start_bin, start_offset) locating its first
-    token in the packed stream.  This is the standard pretraining layout
-    (documents straddle window boundaries; no padding).
-
-    One cumulative-sum window per stratum: the shuffle key is the stratum
-    and the state is a running integer.  Parallelism equals the stratum
-    count, so at 100 TB you pack within partition-sized strata — pass
-    ``["lang", "shard"]`` (a deterministic hash shard alongside language),
-    never one global stream; a 4-language corpus packed by ``lang`` alone
-    serializes through 4 tasks."""
-    if ctx_tokens < 1:
-        # under non-ANSI SQL a zero divisor yields NULL bins, not an
-        # error — an all-null pack order that LOOKS successfully built
-        raise ValueError(f"ctx_tokens must be >= 1, got {ctx_tokens}")
-    cols = [strata_cols] if isinstance(strata_cols, str) else list(strata_cols)
-    n_tok = F.size(tokens("text"))
-    w = (
-        Window.partitionBy(*cols)
-        .orderBy(id_col)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    cum = F.sum(n_tok).over(w)
-    cum_before = cum - n_tok
-    return documents.select(
-        id_col,
-        *cols,
-        n_tok.alias("n_tokens"),
-        F.floor(cum_before / ctx_tokens).cast("long").alias("start_bin"),
-        (cum_before % ctx_tokens).cast("long").alias("start_offset"),
-    )
-
-
 def curriculum_pack_order(
     documents: DataFrame,
     ctx_tokens: int = 512,
@@ -88,8 +48,8 @@ def curriculum_pack_order(
     id_col: str = "doc_id",
     salt: str = "curriculum-0",
 ) -> DataFrame:
-    """X26 sequence-length-warmup curriculum packing: the composition of
-    :func:`pack_sequences` with the deterministic-order discipline of
+    """X26 sequence-length-warmup curriculum packing: a packing cumsum
+    composed with the deterministic-order discipline of
     ``mixing.training_order``.  Within each stratum, documents are ordered
     by (n_tokens ASC, md5(salt ∥ id), id) — short sequences first, the
     curriculum that stabilizes early training (Li et al. 2022, "The
@@ -103,13 +63,14 @@ def curriculum_pack_order(
     pure function of (data, salt) — change the salt to redraw the
     within-length shuffle per epoch, like the training-order epochs.
 
-    Scale shape is pack_sequences': ONE window per stratum (shuffle keyed
+    Scale shape: ONE window per stratum (shuffle keyed
     on the strata, running-integer state; rank and cumsum share the same
     sort).  At 100 TB pass ``["lang", "shard"]`` so the stream packs
     within partition-sized strata — a warmup ordering only needs to hold
     WITHIN each reader's shard."""
     if ctx_tokens < 1:
-        # same guard as pack_sequences: NULL bins under non-ANSI division
+        # under non-ANSI SQL a zero divisor yields NULL bins, not an
+        # error — an all-null pack order that LOOKS successfully built
         raise ValueError(f"ctx_tokens must be >= 1, got {ctx_tokens}")
     cols = [strata_cols] if isinstance(strata_cols, str) else list(strata_cols)
     n_tok = F.size(tokens("text"))
@@ -128,37 +89,4 @@ def curriculum_pack_order(
         F.row_number().over(w).cast("long").alias("curriculum_rank"),
         F.floor(cum_before / ctx_tokens).cast("long").alias("start_bin"),
         (cum_before % ctx_tokens).cast("long").alias("start_offset"),
-    )
-
-
-def pack_efficiency(
-    documents: DataFrame,
-    ctx_tokens: int = 512,
-    strata_cols: str | list[str] = "lang",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Packing utilization per stratum: total tokens, documents, context
-    windows consumed (ceil(total/ctx)) and fill rate — the batch-economics
-    view of :func:`pack_sequences` (a fill rate well under 1.0 means the
-    last window of each stratum wastes compute; more/smaller strata trade
-    parallelism against tail waste).
-
-    One grouped aggregate over per-row token counts — the shuffle carries
-    |strata| rows after map-side combine."""
-    cols = [strata_cols] if isinstance(strata_cols, str) else list(strata_cols)
-    n_tok = F.size(tokens("text"))
-    g = documents.groupBy(*cols).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum(n_tok).alias("total_tokens"),
-    )
-    n_bins = F.ceil(F.col("total_tokens") / F.lit(ctx_tokens)).cast("long")
-    return g.select(
-        *cols,
-        "n_docs",
-        "total_tokens",
-        n_bins.alias("n_bins"),
-        F.round(
-            F.col("total_tokens") / (n_bins * F.lit(ctx_tokens)).cast("double"),
-            6,
-        ).alias("fill_rate"),
     )

@@ -21,7 +21,7 @@ linear text classifier).  The pipeline shape that survives 100 TB:
   Python list of literals); the logit is an exact integer dot product
   (micro-unit weights x micro-unit features), so keep/drop decisions
   are integer-sign comparisons — bit-for-bit reproducible across
-  engines, which is what the `quality_classifier_scores` oracle pins.
+  engines, which is what the `quality_ensemble` oracle's clf vote pins.
 
 Nothing here derives from the reference repo (a Selenium scraper,
 /root/reference/main.py); linear classifiers and logistic regression

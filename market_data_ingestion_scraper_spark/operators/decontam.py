@@ -1,15 +1,13 @@
-"""Benchmark decontamination for training-data pipelines: flag corpus
-documents that share word n-grams with an evaluation/benchmark set, so
-test data can be excluded from training (the standard n-gram-overlap
-decontamination used by large-LM data pipelines).
+"""Word n-gram overlap between a training corpus and an evaluation set:
+the gram hit pairs behind the contamination-aware holdout
+(:func:`gram_hits`, used by ``splits.decontaminated_holdout``) and the
+per-eval-document memorization profile (:func:`memorization_profile`).
 
-Scale shape: the benchmark set is tiny relative to the corpus (thousands
-of eval documents vs billions of training documents), so its exploded
-gram table is BROADCAST — the corpus-side gram explode joins against it
-map-side with no shuffle of corpus data at all; the only shuffle is the
-final per-document aggregation of matched grams, which carries matched
-rows only (a vanishing fraction of the corpus).  A 100 TB corpus scan
-stays one pass, embarrassment-free.
+Scale shape: the evaluation side is small relative to the corpus, so
+the overlap joins either broadcast it (the memorization profile) or let
+AQE broadcast it at runtime (the holdout, whose eval side is a fraction
+of the corpus); the corpus is scanned once and only matched rows reach
+the final per-document aggregation.
 """
 
 from __future__ import annotations
@@ -55,23 +53,17 @@ def gram_hits(
     id_col: str = "doc_id",
     text_col: str = "text",
     ref_id_col: str = "bench_id",
-    broadcast_reference: bool = True,
 ) -> DataFrame:
     """Raw word-``k``-gram hit pairs between a corpus and a reference
     set: ``(g, id_col, ref_id_col)`` — one row per (corpus doc,
-    reference doc, shared gram).  THE shared overlap machinery of the
-    decontamination family: :func:`decontaminate` aggregates it by the
-    corpus side (which training docs hit a benchmark) and
-    :func:`~.splits.decontaminated_holdout` by the reference side
-    (which held-out eval docs are contaminated by train) — one plan
-    shape, two groupings, so the two cannot drift.
+    reference doc, shared gram).  :func:`~.splits.decontaminated_holdout`
+    aggregates it by the reference side (which held-out eval docs are
+    contaminated by train).
 
-    ``broadcast_reference=True`` (the :func:`decontaminate` case) hints
-    the benchmark gram table map-side — correct when the reference is a
-    bounded eval set.  Pass ``False`` when the reference side scales
-    with the corpus (a fractional holdout): the equi-join on ``g`` then
-    shuffles both gram tables and AQE still broadcasts at runtime
-    whenever the reference side turns out small.
+    No broadcast hint: the reference side may scale with the corpus (a
+    fractional holdout), so the equi-join on ``g`` shuffles both gram
+    tables and AQE still broadcasts at runtime whenever the reference
+    side turns out small.
 
     Exact and engine-portable (string grams, no hashing), so DuckDB
     oracles reproduce consumers byte-for-byte."""
@@ -81,47 +73,7 @@ def gram_hits(
     ref_g = reference.select(
         F.col(ref_id_col), F.explode(string_shingles(text_col, k)).alias("g")
     ).distinct()
-    if broadcast_reference:
-        ref_g = F.broadcast(ref_g)
     return corpus_g.join(ref_g, "g")
-
-
-def decontaminate(
-    documents: DataFrame,
-    benchmark: DataFrame,
-    k: int = 5,
-    min_hits: int = 1,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    bench_id_col: str = "bench_id",
-) -> DataFrame:
-    """Flag training documents sharing >= ``min_hits`` distinct word
-    ``k``-grams with any benchmark document.
-
-    Returns one row per contaminated document:
-    ``(doc_id, n_hit_grams, n_benchmarks_hit)`` — distinct matched grams
-    and distinct benchmark documents matched.  Clean documents are absent
-    (the common case; the caller anti-joins to drop flagged docs).
-
-    Exact and engine-portable (string grams, no hashing), so the DuckDB
-    oracle reproduces it byte-for-byte."""
-    hits = gram_hits(
-        documents,
-        benchmark,
-        k=k,
-        id_col=id_col,
-        text_col=text_col,
-        ref_id_col=bench_id_col,
-        broadcast_reference=True,
-    )
-    return (
-        hits.groupBy(id_col)
-        .agg(
-            F.countDistinct("g").alias("n_hit_grams"),
-            F.countDistinct(bench_id_col).alias("n_benchmarks_hit"),
-        )
-        .filter(F.col("n_hit_grams") >= min_hits)
-    )
 
 
 def memorization_profile(
@@ -135,7 +87,7 @@ def memorization_profile(
     """Per-evaluation-document memorization/novelty profile against a
     training corpus: how MUCH of each eval document appears verbatim in
     training data, not just whether any of it does (the overlap-LENGTH
-    extension of :func:`decontaminate`'s boolean hit — the view
+    extension of a boolean overlap hit — the view
     memorization analyses key off, cf. Lee et al. 2021 arXiv:2107.06499
     and the n-gram overlap appendices of large-LM reports).
 
@@ -158,7 +110,7 @@ def memorization_profile(
     *different* corpus documents — the same approximation
     :func:`dedup.duplicated_span_stats` documents).
 
-    Scale shape (the decontaminate asymmetry, run twice): the benchmark
+    Scale shape (the broadcast-reference asymmetry, run twice): the benchmark
     side is tiny (thousands of eval docs vs billions of training docs),
     so its distinct gram set BROADCASTS into a map-side semi-join against
     the corpus gram explode — the 100 TB corpus is scanned once and never

@@ -151,10 +151,10 @@ def shingles(
     ``portable=True`` swaps the xxhash64 token hash for
     :func:`portable_token_hash`, making every downstream signature value
     reproducible in the DuckDB oracle; xxhash64 stays the throughput
-    default.  NOTE: this column form pays the token hash per OCCURRENCE —
-    for the md5-based portable hash prefer :func:`minhash_table`'s fused
-    window-lead path, which hashes each distinct token once via the
-    vocabulary dictionary and composes grams positionally."""
+    default.  This column form pays the token hash per OCCURRENCE, and
+    it is the form :func:`minhash_table` uses for both hash flavors: a
+    per-row projection is cheaper than hashing distinct tokens once and
+    joining them back to every occurrence."""
     tok_hash = (
         portable_token_hash
         if portable
@@ -1061,9 +1061,16 @@ def _simhash_from_hash_arrays():
             bits = np.unpackbits(
                 flat.view(np.uint8).reshape(-1, 8), axis=1, bitorder="little"
             )
-            seg = np.cumsum(lens[start:end]) - lens[start:end]
-            cnt = np.add.reduceat(bits, seg, axis=0, dtype=np.int64)
-            maj = (cnt * 2 > lens[start:end, None]).astype(np.uint64)
+            n = lens[start:end]
+            # reduceat gives an empty segment the NEXT row's bits (and
+            # raises on a trailing one): fold only the non-empty docs and
+            # leave the empty ones at zero votes, i.e. signature 0
+            nz = n > 0
+            cnt = np.zeros((end - start, 64), dtype=np.int64)
+            if nz.any():
+                seg = (np.cumsum(n) - n)[nz]
+                cnt[nz] = np.add.reduceat(bits, seg, axis=0, dtype=np.int64)
+            maj = (cnt * 2 > n[:, None]).astype(np.uint64)
             out[start:end] = (maj << shifts).sum(axis=1, dtype=np.uint64)
             start = end
         return pd.Series(out.view(np.int64))
@@ -1236,13 +1243,6 @@ def simhash_near_duplicates(
 
 # ------------------------------------------------------------ exact dedup
 
-def exact_duplicate_groups(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """X1 exact dedup: group by content, keep min doc_id as representative."""
-    return documents.groupBy(text_col).agg(
-        F.min("doc_id").alias("keep_doc_id"), F.count(F.lit(1)).alias("n_copies")
-    )
-
-
 def content_hash_dedup(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """X1 at scale: dedup on sha256 of normalized content (lower + collapsed
     whitespace) — the hash groupBy shuffles 32-byte keys, not documents."""
@@ -1307,60 +1307,6 @@ def paragraph_dup_stats(documents: DataFrame, k: int = 10) -> DataFrame:
     )
 
 
-def dup_paragraph_docs(documents: DataFrame, k: int = 10) -> DataFrame:
-    """Per-document duplicated-paragraph ratio: a paragraph is "duplicated"
-    when its hash appears in more than one distinct document (cross-doc
-    boilerplate — self-repetition within one doc is repetition_scores'
-    job).  Returns only documents that share at least one paragraph.
-
-    Two bounded shuffles: hash → distinct-doc count (map-side combined),
-    then the hash-keyed join back and a per-doc aggregation.  Paragraph
-    text never shuffles — only (id, idx, hash) triples."""
-    pt = paragraph_table(documents, k)
-    cross_doc = pt.groupBy("para_hash").agg(
-        F.count_distinct("doc_id").alias("ndocs")
-    )
-    dup_flag = F.sum(F.when(F.col("ndocs") > 1, F.lit(1)).otherwise(F.lit(0)))
-    return (
-        pt.join(cross_doc, "para_hash")
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_paras"),
-            dup_flag.cast("long").alias("n_dup_paras"),
-            F.round(dup_flag / F.count(F.lit(1)), 6).alias("dup_ratio"),
-        )
-        .filter(F.col("n_dup_paras") > 0)
-    )
-
-
-def collapse_repeated_paragraphs(documents: DataFrame, k: int = 10) -> DataFrame:
-    """Intra-document repetition removal (the RefinedWeb "remove duplicated
-    spans" pass): drop every paragraph that already occurred earlier in the
-    SAME document, preserving first-occurrence order, and emit the cleaned
-    text's identity hash.
-
-    Pure per-row projection — zero shuffle at any scale.  The
-    order-preserving distinct is an indexed array filter (keep paragraph i
-    iff it is absent from the prefix), O(paras²) per document but paras is
-    text-length/k, and it all runs inside whole-stage codegen."""
-    staged = documents.select(
-        "doc_id", tokens("text").alias("_toks")
-    ).select("doc_id", _para_array("_toks", k).alias("_paras"))
-    kept = F.filter(
-        F.col("_paras"),
-        lambda p, i: ~F.array_contains(F.slice(F.col("_paras"), 1, i), p),
-    )
-    deduped = staged.select(
-        "doc_id", F.size("_paras").cast("long").alias("n_paras"), kept.alias("_kept")
-    )
-    return deduped.select(
-        "doc_id",
-        "n_paras",
-        F.size("_kept").cast("long").alias("n_kept"),
-        F.md5(F.concat_ws("\n", F.col("_kept")).cast("binary")).alias("clean_hash"),
-    )
-
-
 def dedup_survivors(
     documents: DataFrame,
     threshold: float = 0.7,
@@ -1385,68 +1331,6 @@ def dedup_survivors(
 
 # ------------------------------------- exact-substring overlap / calibration
 
-def shared_gram_pairs(
-    documents: DataFrame,
-    n: int = 8,
-    min_shared: int = 3,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    max_df: int | None = None,
-) -> DataFrame:
-    """Cross-document exact n-gram overlap — the exact-substring dedup
-    signal (Lee et al. 2021, "Deduplicating Training Data Makes Language
-    Models Better", arXiv:2107.06499 §4.1: verbatim spans repeated across
-    documents).  Two docs sharing ≥ ``min_shared`` distinct n-token grams
-    contain near-verbatim shared spans even when whole-document Jaccard
-    is low — the long-quotation / partial-mirror case MinHash misses.
-
-    Same inverted-index shape as :func:`jaccard_similarity_join`: docs
-    sharing zero n-grams never meet, cost is Σ_g df(g)² over gram doc
-    frequencies; at n=8 grams are near-unique (df ≈ 1-2) so the join is
-    close to linear.  ``max_df`` caps boilerplate grams exactly like the
-    ssjoin's stop-shingle guard.
-
-    The inverted index carries ``xxhash64`` of each distinct gram, not
-    the ~50-byte 8-token string — the gram is a join key only (never
-    surfaced), so the count is identical modulo a 64-bit collision (the
-    banding precedent) and both self-join sides shuffle 8-byte longs;
-    the index is persisted one generation so the corpus is shingled
-    once, not once per join side (r18: 2.20 → ~1.2 s at sf0.1)."""
-    ex = _persist_generation(
-        "shared_gram_pairs.index",
-        documents.select(
-            F.col(id_col),
-            F.explode(
-                F.transform(
-                    string_shingles(text_col, n), lambda g: F.xxhash64(g)
-                )
-            ).alias("gram"),
-        ),
-    )
-    if max_df is not None:
-        keep = (
-            ex.groupBy("gram")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .filter(F.col("df") <= max_df)
-            .select("gram")
-        )
-        ex = ex.join(keep, "gram")
-    l, r = ex.alias("l"), ex.alias("r")
-    return (
-        l.join(
-            r,
-            (F.col("l.gram") == F.col("r.gram"))
-            & (F.col(f"l.{id_col}") < F.col(f"r.{id_col}")),
-        )
-        .groupBy(
-            F.col(f"l.{id_col}").alias("doc_a"),
-            F.col(f"r.{id_col}").alias("doc_b"),
-        )
-        .agg(F.count(F.lit(1)).alias("n_shared_grams"))
-        .filter(F.col("n_shared_grams") >= min_shared)
-    )
-
-
 def duplicated_span_stats(
     documents: DataFrame,
     n: int = 8,
@@ -1457,9 +1341,8 @@ def duplicated_span_stats(
     """Positional exact-substring duplication report — per document, the
     maximal verbatim spans it shares with OTHER documents (Lee et al.
     2021, arXiv:2107.06499 §3: remove substrings duplicated across the
-    corpus, not whole near-dup documents).  :func:`shared_gram_pairs`
-    answers *which pairs* overlap; this answers *where and how much* —
-    the view a span-removal pass keys off.
+    corpus, not whole near-dup documents).  It answers *where and how
+    much* — the view a span-removal pass keys off.
 
     Semantics: every n-token gram START position whose gram occurs in
     ≥ ``min_df`` distinct documents is "duplicated"; each such position

@@ -324,74 +324,14 @@ def budget_fill_docs(
     source_col: str = "source",
     seed: str = "fill",
 ) -> DataFrame:
-    """The selected documents themselves (original columns, plus
-    ``_n_tok``) under the same cutoffs :func:`hash_budget_fill` reports
-    on — the materialization half of the budgeted-mixture pair."""
+    """The documents a token-budgeted mixture selects (original columns,
+    plus ``_n_tok``): per-source token budgets from the temperature-
+    ``alpha`` weights, each filled by a deterministic hash threshold —
+    every doc whose portable-hash uniform ``u(seed ':' doc_id)`` falls
+    below ``min(1, budget / tokens)``.  One broadcast join of a
+    |sources|-row cutoff table, no ordering anywhere."""
     budgets = _budget_cutoffs(documents, total_token_budget, alpha, source_col)
     return _threshold_filter(documents, budgets, source_col, seed)
-
-
-def hash_budget_fill(
-    documents: DataFrame,
-    total_token_budget: int,
-    alpha: float = 0.5,
-    source_col: str = "source",
-    seed: str = "fill",
-) -> DataFrame:
-    """Turn :func:`temperature_mixture` weights into an ACTUAL selection:
-    per-source token budgets ``B_s = half_up(T · w_s)`` filled by a
-    deterministic hash threshold — select every doc whose portable-hash
-    uniform ``u = (h(seed ':' doc_id)+1)/(HASH_P+1)`` falls below
-    ``min(1, B_s / tokens_s)``.
-
-    This is the SCALE-CORRECT shape for budgeted sampling: the obvious
-    per-source running-sum window sorts each source on a single partition
-    (parallel across sources only — one web-scale source serializes the
-    job); the hash threshold needs NO ordering at all — one broadcast
-    join of a |sources|-row cutoff table against the corpus, then a
-    map-side-combined per-source aggregate.  Token-count concentration
-    does the rest: the selected token mass is within O(√N) of the budget
-    at any real corpus size (binomial tails), which is exactly the
-    precision a mixture spec means.
-
-    Determinism/exactness: budgets derive from the mixture's integer ppm
-    weights via the half-up DIV identity; the threshold compare runs on
-    identically-derived doubles in both engines; doc hashes are the
-    portable md5 hash, so the SELECTED SET is bit-stable across engines,
-    partitionings, and re-runs (and decoupled from `training_order`'s
-    epoch salt by the ``seed`` prefix).
-
-    Returns one row per source: ``(source, budget_tokens, n_docs,
-    n_tokens, fill_rate)`` — ``fill_rate`` is round-6 ``n_tokens /
-    budget_tokens`` (NULL for a zero budget).  :func:`budget_fill_docs`
-    returns the selected DOCUMENTS themselves under the same cutoffs.
-    """
-    budgets = _budget_cutoffs(documents, total_token_budget, alpha, source_col)
-    picked = (
-        _threshold_filter(documents, budgets, source_col, seed)
-        .groupBy(source_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("_n_tok").cast("long").alias("n_tokens"),
-        )
-    )
-    return (
-        budgets.join(F.broadcast(picked), source_col, "left")
-        .select(
-            source_col,
-            "budget_tokens",
-            F.coalesce("n_docs", F.lit(0)).cast("long").alias("n_docs"),
-            F.coalesce("n_tokens", F.lit(0)).cast("long").alias("n_tokens"),
-            F.when(
-                F.col("budget_tokens") > 0,
-                F.round(
-                    F.coalesce("n_tokens", F.lit(0))
-                    / F.col("budget_tokens").cast("double"),
-                    6,
-                ),
-            ).alias("fill_rate"),
-        )
-    )
 
 
 def domain_mix_report(

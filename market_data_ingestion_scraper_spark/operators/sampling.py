@@ -9,8 +9,7 @@ any partitioning, any engine (md5 exists everywhere — the DuckDB oracle
 runs the identical expression).
 
 Scale: hash ranking is one window per stratum (shuffle on the stratum
-key, state = top-n per stratum via the rank filter); the uniform variant
-is a pure per-row filter with NO shuffle at all — the 100 TB default.
+key, state = top-n per stratum via the rank filter).
 """
 
 from __future__ import annotations
@@ -19,42 +18,6 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .dedup import portable_uniform as _uniform
-
-
-def uniform_hash_sample(
-    df: DataFrame,
-    rate_ppm: int,
-    key_col: str = "doc_id",
-    salt: str = "sample-v1",
-) -> DataFrame:
-    """Shuffle-free deterministic sample: keep rows whose md5(salt ∥ key)
-    falls below ``rate_ppm``/1e6 of the hash space.  Changing the salt
-    draws an independent sample; the same salt always reproduces the same
-    rows.  The threshold is a hex-PREFIX comparison (lexicographic on the
-    lowercase digest), so the identical expression runs in any engine —
-    no bigint hex parsing needed.  Pure projection+filter — scales with
-    scan bandwidth.
-
-    The prefix comparison is only well-defined for thresholds below
-    16^6 (6 hex chars): at rate_ppm=1_000_000 the threshold would format
-    to the 7-char string '1000000' and the lexicographic compare would
-    keep only digests starting with '0'.  That rate instead uses the
-    sentinel threshold 'g' — lexicographically above every hex digest —
-    so ALL rates share one code path and one semantics: a NULL key never
-    samples (null digest fails the comparison) at any rate, including
-    1e6.  Out-of-range rates are rejected."""
-    if not 0 <= rate_ppm <= 1_000_000:
-        raise ValueError(f"rate_ppm must be in [0, 1_000_000], got {rate_ppm}")
-    if rate_ppm == 1_000_000:
-        threshold = "g"
-    else:
-        threshold = format(rate_ppm * 16**6 // 1_000_000, "06x")
-    h6 = F.substring(
-        F.md5(F.concat(F.lit(salt), F.col(key_col).cast("string")).cast("binary")),
-        1,
-        6,
-    )
-    return df.filter(h6 < F.lit(threshold))
 
 
 def aes_key_nano(

@@ -52,11 +52,6 @@ def l2_norm(v: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(v, lambda x: x * x), F.lit(0.0), lambda a, x: a + x))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    da, db = _dbl(a), _dbl(b)
-    return dot(da, db) / (l2_norm(da) * l2_norm(db))
-
-
 def _scoring_side(
     df: DataFrame, id_col: str, vec_col: str, out_id: str, suffix: str
 ) -> DataFrame:
@@ -80,13 +75,6 @@ def _pair_cosine() -> Column:
     return F.round(
         dot(F.col("_vq"), F.col("_vn")) / (F.col("_nq") * F.col("_nn")), 6
     ).alias("cos_sim")
-
-
-def embedding_norms(embeddings: DataFrame) -> DataFrame:
-    """X5 vector profiling: L2 norm per embedding, rounded for parity."""
-    return embeddings.select(
-        "vec_id", F.round(l2_norm(_dbl(F.col("embedding"))), 6).alias("l2_norm")
-    )
 
 
 def brute_force_topk(
@@ -139,12 +127,12 @@ def hard_negative_mining(
     linearly with the corpus (corpus/25 at the default — far past any
     broadcast threshold at 100 TB), so the broadcast side must be bounded
     by a constant, not a rate.  The cap keeps the ``max_anchors`` anchors
-    with the lexicographically-lowest ``md5(salt ∥ id)`` digests (the
-    `uniform_hash_sample` idiom — a deterministic pseudo-random draw,
-    engine-portable, no RNG state), compiled by Spark to
-    TakeOrderedAndProject: per-partition heaps of ``max_anchors`` rows,
-    never a full sort.  At the default cap the broadcast is ≤10 k × dim
-    doubles (~5 MB at dim=64) regardless of corpus size; ``None``
+    with the lexicographically-lowest ``md5(salt ∥ id)`` digests (a
+    deterministic pseudo-random draw, engine-portable, no RNG state),
+    compiled by Spark to TakeOrderedAndProject: per-partition heaps of
+    ``max_anchors`` rows, never a full sort.  At the default cap the
+    broadcast is ≤10 k × dim doubles (~5 MB at dim=64) regardless of
+    corpus size; ``None``
     disables the cap for bounded inputs.  Scale shape otherwise mirrors
     :func:`brute_force_topk`: the anchor set broadcasts, the corpus side
     streams through one scan, and per-anchor ranking is a window keyed by
@@ -210,20 +198,6 @@ def hyperplanes(dim: int = 64, n_planes: int = 12, seed: int = 42) -> list[list[
     """Seeded Gaussian hyperplanes, folded into plans as literals."""
     rng = np.random.default_rng(seed)
     return rng.standard_normal((n_planes, dim)).tolist()
-
-
-def lsh_bucket(vec_col: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane signature: bit i = sign(v·planeᵢ) → int bucket id.
-    Column form for single-table use; multi-table pipelines use
-    ``bucket_table`` (constant plan size regardless of table count)."""
-    bucket = F.lit(0).cast("long")
-    for i, p in enumerate(planes):
-        plane = F.array(*[F.lit(float(x)) for x in p])
-        bit = F.when(dot(_dbl(vec_col), plane) >= 0, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-        bucket = bucket.bitwiseOR(F.shiftleft(bit, i))
-    return bucket
 
 
 def bucket_table(
@@ -1218,64 +1192,6 @@ def pq_encode(
     )
 
 
-def pq_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codebooks: list[list[list[float]]] | None = None,
-    encoded: DataFrame | None = None,
-) -> DataFrame:
-    """PQ top-k via asymmetric distance computation (ADC): each query
-    precomputes its distance to every codebook entry (an m×``n_codes``
-    lookup table, exact int64 micro²-units), and a corpus vector's
-    approximate squared L2 distance is the sum of m table lookups on its
-    codes — the raw corpus vectors are never touched.
-
-    Scale shape (r10, expression form): each query precomputes its m×k
-    table as ONE let-bound expression column and broadcasts with it; the
-    corpus side reads only the ENCODED index (m small ints per vector,
-    the whole point of PQ) and scores each pair with m int64 array
-    lookups — the same broadcast-the-tiny-side exhaustive scan as
-    :func:`brute_force_topk`, with zero corpus shuffles before the
-    per-query top-k.  Exhaustive ADC scans every encoded row per query —
-    the production composition is IVF-PQ (probe cells first, ADC
-    within), which this function's ``encoded=`` parameter makes a
-    straightforward join-reduction.
-    Returns squared-L2 distances (on unit vectors, d² = 2 - 2·cos)."""
-    if codebooks is None:
-        codebooks = fit_pq_codebooks(
-            embeddings, m=m, k=n_codes, seed=seed, vec_col=vec_col
-        )
-    if encoded is None:
-        encoded = pq_encode(embeddings, codebooks, id_col=id_col, vec_col=vec_col)
-    qtab = queries.select(
-        F.col(id_col).alias("query_id"),
-        _adc_table_expr(F.col(vec_col), codebooks).alias("_qtab"),
-    )
-    scored = (
-        encoded.withColumnsRenamed({id_col: "neighbor_id"})
-        .crossJoin(F.broadcast(qtab))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_pair_dist().alias("d_m"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("d_m"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("d_m") / 1e12, 6).alias("approx_dist2"),
-            F.col("rnk").cast("int").alias("rnk"),
-        )
-    )
-
-
 def ivfpq_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -1305,8 +1221,7 @@ def ivfpq_topk(
     corpus is partitioned BY CELL on disk, so a probe reads only its
     cells' files — the candidate join below is the in-memory equivalent.
 
-    Returns squared-L2 distances like :func:`pq_topk` (on unit vectors
-    d² = 2 - 2·cos).
+    Returns squared-L2 ADC distances (on unit vectors d² = 2 - 2·cos).
 
     r10 expression form: both quantizer halves fold into the plan as
     int64 micro-unit literals, so the corpus side is ONE projection

@@ -1,14 +1,8 @@
-"""Skew-handling utilities for hot-key aggregations and joins.
+"""Skew handling for hot-key joins.
 
 AQE's skew-join splitting (on in ``session.get_spark``) handles most
-runtime skew; these helpers cover the cases AQE can't re-plan:
+runtime skew; this helper covers the case AQE can't re-plan:
 
-- ``salted_group_sum``: two-stage aggregation for extreme single-key skew
-  (a commodity with 100× the rows of any other) — stage 1 aggregates on
-  (key, salt) spreading the hot key over N reducers, stage 2 merges the
-  N partials.  Works because SUM/COUNT/MIN/MAX are associative; the exact
-  DECIMAL representation keeps the two-stage sum bit-identical to the
-  one-stage one.
 - ``salted_broadcast_left``: replicate-broadcast pattern for joining a
   skewed fact against a dimension too big for one broadcast but small
   enough for N-way replication.
@@ -16,34 +10,8 @@ runtime skew; these helpers cover the cases AQE can't re-plan:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_group_sum(
-    df: DataFrame,
-    key: str,
-    measure: Column | str,
-    alias: str,
-    n_salts: int = 16,
-    scale: int = 2,
-) -> DataFrame:
-    """Exact two-stage sum per key, skew-spread over ``n_salts`` reducers.
-
-    Equivalent plan-wise to groupBy(key).sum() but the first shuffle
-    hash-partitions on (key, salt), bounding any single reducer's share of
-    a hot key to 1/n_salts.  DECIMAL partials make the result identical to
-    the unsalted sum regardless of split."""
-    m = F.col(measure) if isinstance(measure, str) else measure
-    partial = (
-        df.withColumn("_salt", F.pmod(F.spark_partition_id() + F.monotonically_increasing_id(), F.lit(n_salts)))
-        .groupBy(key, "_salt")
-        .agg(F.sum(m.cast(f"decimal(18,{scale})")).alias("_part"))
-    )
-    return (
-        partial.groupBy(key)
-        .agg(F.sum("_part").cast("double").alias(alias))
-    )
 
 
 def salted_broadcast_left(

@@ -1,5 +1,4 @@
-"""X33 leakage-safe temporal train/val split CONSTRUCTION — the
-builder-side complement of the `split_leakage` DETECTOR: instead of
+"""X33 leakage-safe temporal train/val split CONSTRUCTION: instead of
 checking an existing split for contamination, construct one with the
 guarantees a temporal evaluation needs (standard public methodology:
 time-based holdout with an embargo/purge window, López de Prado 2018
@@ -222,8 +221,7 @@ def decontaminated_holdout(
     """X36 contamination-aware eval-split BUILDER: construct a held-out
     evaluation set that is decontaminated against its own training side
     by word-``k``-gram overlap — the composition of the X29 gram
-    machinery (:func:`~.decontam.gram_hits`, the exact construction the
-    gated ``benchmark_decontam`` aggregates the other way) with the X33
+    machinery (:func:`~.decontam.gram_hits`) with the X33
     split discipline (every document gets exactly one label; anything
     unplaceable is excluded from BOTH sides, never silently assigned).
 
@@ -270,18 +268,16 @@ def decontaminated_holdout(
     not share a scan across plan branches; persist the slim two-column
     projection upstream to make it one read plus cache traffic, the
     call the CLI/bench scale does not need).  Candidacy itself is a
-    pure projection; the gram check is
-    :func:`~.decontam.gram_hits(broadcast_reference=False)` — the
-    train-side gram explode equi-joins the holdout-side distinct gram
-    table on ``g`` (both shuffles carry grams of THEIR side only; the
-    holdout side is ``holdout_ppm``-fractional, and AQE broadcasts it
-    at runtime whenever it fits, recovering the benchmark-decontam plan
-    exactly) — and the contamination aggregate is bounded by matched
-    eval docs.  The final assignment is an id-keyed LEFT join of the
+    pure projection; the gram check is :func:`~.decontam.gram_hits` —
+    the train-side gram explode equi-joins the holdout-side distinct
+    gram table on ``g`` (both shuffles carry grams of THEIR side only;
+    the holdout side is ``holdout_ppm``-fractional, and AQE broadcasts
+    it at runtime whenever it fits) — and the contamination aggregate
+    is bounded by matched eval docs.  The final assignment is an id-keyed LEFT join of the
     corpus against that bounded contamination table.  Exact string
     grams keep the oracle bit-for-bit; swap
     :func:`~.dedup.shingles` hashed grams for long-key shuffles at
-    extreme scale (the :func:`~.decontam.decontaminate` tradeoff).
+    extreme scale.
     """
     from .decontam import gram_hits
     from .dedup import portable_token_hash
@@ -336,7 +332,6 @@ def decontaminated_holdout(
             id_col=id_col,
             text_col=text_col,
             ref_id_col="_eval_id",
-            broadcast_reference=False,
         )
         .groupBy("_eval_id")
         .agg(

@@ -44,32 +44,6 @@ def tokens(text: Column | str = "text") -> Column:
     return F.filter(F.split(F.lower(c), r"[^a-z0-9]+"), lambda t: t != "")
 
 
-def bpe_ish_token_count(
-    text: Column | str = "text", *, token_array: Column | None = None
-) -> Column:
-    """Sub-word-ish token count: word tokens plus an extra token per 4 chars
-    of long words (a cheap BPE-rate proxy — long words split into pieces).
-    Deterministic, built-in only.  Pass ``token_array`` (e.g. a staged
-    ``_toks`` column) to count pre-tokenized input — the proxy formula
-    lives only here, so callers and their oracles cannot drift."""
-    t = tokens(text) if token_array is None else token_array
-    return F.aggregate(
-        t,
-        F.lit(0),
-        lambda acc, w: acc + F.greatest(F.lit(1), F.ceil(F.length(w) / 4).cast("int")),
-    )
-
-
-def term_frequencies(documents: DataFrame) -> DataFrame:
-    """Corpus term counts: explode tokens → count per term.  Map-side
-    combine bounds the shuffle by vocabulary, not corpus size."""
-    return (
-        documents.select(F.explode(tokens("text")).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
-
-
 def quality_features(
     documents: DataFrame, keep: tuple[str, ...] = ()
 ) -> DataFrame:
@@ -587,19 +561,6 @@ def fingerprints(documents: DataFrame) -> DataFrame:
         "doc_id",
         bow_fingerprint("text").alias("bow_fp"),
         rolling_fingerprint("text").alias("rolling_fp"),
-    )
-
-
-def token_counts(documents: DataFrame) -> DataFrame:
-    """Per-document token counts: whitespace/punct word count plus the
-    BPE-rate proxy (:func:`bpe_ish_token_count` semantics).  Staged so the
-    tokenizer runs once per row; pure per-row projection, no shuffle."""
-    staged = documents.select("doc_id", tokens("text").alias("_toks"))
-    bpe = bpe_ish_token_count(token_array=F.col("_toks"))
-    return staged.select(
-        "doc_id",
-        F.size("_toks").cast("long").alias("n_words"),
-        bpe.cast("long").alias("n_bpe_tokens"),
     )
 
 
@@ -1373,38 +1334,6 @@ def perplexity_buckets(documents: DataFrame) -> DataFrame:
     )
 
 
-def lexical_diversity(documents: DataFrame) -> DataFrame:
-    """Per-document type-token ratio (distinct tokens / tokens) and
-    hapax ratio (tokens occurring once / tokens) — the classic lexical
-    diversity signals low-quality generated or keyword-stuffed text fails.
-    Pure per-row projection (array ops only), no shuffle.
-
-    Hapax counting runs on the SORTED token array (a token is a hapax iff
-    both sorted neighbors differ): O(n log n) per document, where the
-    naive distinct×filter nesting is O(n²) — the difference between a
-    projection and a stall on book-length documents."""
-    staged = documents.select(
-        "doc_id", tokens("text").alias("_toks")
-    ).select("doc_id", "_toks", F.array_sort("_toks").alias("_srt"))
-    n = F.size("_toks")
-    n_types = F.size(F.array_distinct("_toks"))
-    s = F.col("_srt")
-    hapax = F.size(
-        F.filter(
-            s,
-            lambda w, i: ~F.coalesce(F.get(s, i - 1) == w, F.lit(False))
-            & ~F.coalesce(F.get(s, i + 1) == w, F.lit(False)),
-        )
-    )
-    return staged.select(
-        "doc_id",
-        n.cast("long").alias("n_tokens"),
-        n_types.cast("long").alias("n_types"),
-        F.round(n_types / F.greatest(n, F.lit(1)), 6).alias("type_token_ratio"),
-        F.round(hapax / F.greatest(n, F.lit(1)), 6).alias("hapax_ratio"),
-    )
-
-
 def zipf_profile(documents: DataFrame, top_n: int = 100) -> DataFrame:
     """Corpus Zipf rank-frequency table: the ``top_n`` most frequent terms
     with rank, count, and ln(rank)/ln(count) in exact micro-units — the
@@ -1439,34 +1368,6 @@ def zipf_profile(documents: DataFrame, top_n: int = 100) -> DataFrame:
     )
 
 
-def length_histogram(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Corpus length profile: documents bucketed by floor(log2(chars)) —
-    the curation view that exposes truncation spikes, boilerplate stubs,
-    and runaway concatenations before training.
-
-    The bucket is computed with INTEGER arithmetic (length of the binary
-    representation, minus one) rather than float log2, so any engine
-    agrees bit-for-bit at power-of-two boundaries.  One groupBy whose
-    shuffle carries ≤ ~40 bucket rows after map-side combine; the share
-    denominator is a window over those bucket rows, not a second scan.
-    """
-    n = F.greatest(F.length(F.col(text_col)), F.lit(1))
-    bucket = (F.length(F.conv(n.cast("string"), 10, 2)) - 1).cast("int")
-    grouped = documents.groupBy(bucket.alias("len_bucket")).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.min(F.length(text_col)).alias("min_chars"),
-        F.max(F.length(text_col)).alias("max_chars"),
-    )
-    total = bounded_window("len_bucket")
-    return grouped.select(
-        "len_bucket",
-        "n_docs",
-        "min_chars",
-        "max_chars",
-        F.round(F.col("n_docs") / F.sum("n_docs").over(total), 6).alias("share"),
-    )
-
-
 def source_language_mix(documents: DataFrame) -> DataFrame:
     """Source × predicted-language composition: how much of each source is
     (predicted) which language — the contamination/mix view a multilingual
@@ -1495,7 +1396,7 @@ def token_count_histogram(documents: DataFrame, text_col: str = "text") -> DataF
     """Token-count profile: documents bucketed by floor(log2(tokens)) —
     the sequence-length view batch/packing decisions key off (char
     length ≠ token length under heavy punctuation or CJK romanization).
-    Same integer binary-length bucket trick as :func:`length_histogram`."""
+    Integer binary-length buckets, so both engines agree exactly."""
     n = F.greatest(F.size(tokens(text_col)), F.lit(1))
     bucket = (F.length(F.conv(n.cast("string"), 10, 2)) - 1).cast("int")
     grouped = documents.groupBy(bucket.alias("tok_bucket")).agg(

@@ -225,18 +225,6 @@ def q_covered(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "rollup_revenue",
-    f"""
-    SELECT l_returnflag, l_linestatus, {_REV} AS revenue
-    FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)
-    """,
-    doc="Ext-A6 hierarchical rollup in one grouping-sets pass.",
-)
-def q_rollup(spark: SparkSession, sf: str) -> DataFrame:
-    return A.rollup_revenue(_t(spark, sf, "lineitem"))
-
-
-@register(
     "pivot_status_qty",
     """
     SELECT l_returnflag,
@@ -286,44 +274,13 @@ def q_cube(spark: SparkSession, sf: str) -> DataFrame:
     FROM lineitem GROUP BY l_returnflag
     """,
     doc="Exact interpolated percentiles per group (Spark percentile ≡ "
-    "DuckDB quantile_cont); the approx_profile query is the sketch variant.",
+    "DuckDB quantile_cont).",
 )
 def q_percentiles(spark: SparkSession, sf: str) -> DataFrame:
     li = _t(spark, sf, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.round(F.percentile("l_quantity", F.lit(0.5)), 6).alias("p50"),
         F.round(F.percentile("l_quantity", F.lit(0.95)), 6).alias("p95"),
-    )
-
-
-@register(
-    "top_part_per_brand_maxby",
-    f"""
-    WITH rev AS (
-      SELECT p_brand, p_name, {_REV} AS revenue
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      GROUP BY p_brand, p_name
-    )
-    SELECT p_brand, arg_max(p_name, revenue) AS best_part,
-           MAX(revenue) AS best_revenue
-    FROM rev GROUP BY p_brand
-    """,
-    doc="T1 variant via max_by/arg_max: argmax aggregation instead of a "
-    "rank window — one pass, no window state.  Per-brand revenues are "
-    "verified tie-free in this data; with ties, compose the ordering key.",
-)
-def q_maxby(spark: SparkSession, sf: str) -> DataFrame:
-    from .functions import exact_sum, revenue
-
-    li, part = _t(spark, sf, "lineitem"), _t(spark, sf, "part")
-    rev = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_name")
-        .agg(exact_sum(revenue(), scale=4).alias("revenue"))
-    )
-    return rev.groupBy("p_brand").agg(
-        F.max_by("p_name", "revenue").alias("best_part"),
-        F.max("revenue").alias("best_revenue"),
     )
 
 
@@ -369,49 +326,6 @@ def q_lead_time(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_topk_group(spark: SparkSession, sf: str) -> DataFrame:
     return A.topk_per_group(_t(spark, sf, "lineitem"), _t(spark, sf, "part"), k=3)
-
-
-@register(
-    "revenue_rank_tiers",
-    f"""
-    WITH rev AS (
-      SELECT p_brand, p_name, {_REV} AS revenue
-      FROM lineitem JOIN part ON l_partkey = p_partkey
-      GROUP BY p_brand, p_name
-    ),
-    tiers AS (SELECT p_brand, p_name, CAST(floor(revenue / 100000) AS BIGINT) AS tier FROM rev)
-    SELECT p_brand, p_name, tier,
-           CAST(RANK()       OVER (PARTITION BY p_brand ORDER BY tier DESC) AS INT) AS rnk,
-           CAST(DENSE_RANK() OVER (PARTITION BY p_brand ORDER BY tier DESC) AS INT) AS drnk
-    FROM tiers
-    """,
-    doc="§2.8 rank/dense_rank with genuine ties (revenue tiers) — "
-    "deterministic under ties, unlike row_number.",
-)
-def q_rank_tiers(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql import Window
-
-    from .functions import exact_sum, revenue
-
-    li, part = _t(spark, sf, "lineitem"), _t(spark, sf, "part")
-    rev = (
-        li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
-        .groupBy("p_brand", "p_name")
-        .agg(exact_sum(revenue(), scale=4).alias("revenue"))
-        .select(
-            "p_brand",
-            "p_name",
-            F.floor(F.col("revenue") / 100000).cast("long").alias("tier"),
-        )
-    )
-    w = Window.partitionBy("p_brand").orderBy(F.desc("tier"))
-    return rev.select(
-        "p_brand",
-        "p_name",
-        "tier",
-        F.rank().over(w).cast("int").alias("rnk"),
-        F.dense_rank().over(w).cast("int").alias("drnk"),
-    )
 
 
 @register(
@@ -522,41 +436,6 @@ def q_lineage(spark: SparkSession, sf: str) -> DataFrame:
 )
 def q_union_days(spark: SparkSession, sf: str) -> DataFrame:
     return A.union_day_slices(_t(spark, sf, "lineitem"))
-
-
-@register(
-    "repeat_vs_lapsed_custs",
-    """
-    WITH h1 AS (SELECT o_custkey FROM orders
-                WHERE o_orderdate BETWEEN DATE '1994-01-01' AND DATE '1994-06-30'),
-         h2 AS (SELECT o_custkey FROM orders
-                WHERE o_orderdate BETWEEN DATE '1994-07-01' AND DATE '1994-12-31'),
-         rep AS (SELECT o_custkey FROM h1 INTERSECT SELECT o_custkey FROM h2),
-         lap AS (SELECT o_custkey FROM h1 EXCEPT SELECT o_custkey FROM h2)
-    SELECT 'repeat' AS cohort, COUNT(*) AS n_custs FROM rep
-    UNION ALL
-    SELECT 'lapsed' AS cohort, COUNT(*) AS n_custs FROM lap
-    """,
-    doc="U2/U3 set-operator coverage: INTERSECT (customers ordering in "
-    "both 1994 halves) and EXCEPT (first half only) as native Spark "
-    "df.intersect/exceptAll-distinct ops — both compile to aggregate + "
-    "hash-join plans, no driver-side sets.",
-)
-def q_repeat_vs_lapsed(spark: SparkSession, sf: str) -> DataFrame:
-    o = _t(spark, sf, "orders")
-    h1 = o.filter(
-        F.col("o_orderdate").between("1994-01-01", "1994-06-30")
-    ).select("o_custkey")
-    h2 = o.filter(
-        F.col("o_orderdate").between("1994-07-01", "1994-12-31")
-    ).select("o_custkey")
-    rep = h1.intersect(h2).agg(
-        F.lit("repeat").alias("cohort"), F.count(F.lit(1)).alias("n_custs")
-    )
-    lap = h1.distinct().exceptAll(h2.distinct()).agg(
-        F.lit("lapsed").alias("cohort"), F.count(F.lit(1)).alias("n_custs")
-    )
-    return rep.unionAll(lap)
 
 
 @register(
@@ -757,21 +636,6 @@ _EN_STOP = "['the','a','of','and','to','in','is','it']"
 
 
 @register(
-    "term_frequencies",
-    f"""
-    SELECT term, COUNT(*) AS n
-    FROM (SELECT unnest({_TOKS}) AS term FROM documents)
-    GROUP BY term
-    """,
-    doc="X4 corpus term counts: tokenize → explode → count (map-side combined).",
-)
-def q_term_freq(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import term_frequencies
-
-    return term_frequencies(_t(spark, sf, "documents"))
-
-
-@register(
     "tfidf_top_terms",
     f"""
     WITH tf AS (
@@ -828,33 +692,6 @@ def q_text_quality(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import quality_features
 
     return quality_features(_t(spark, sf, "documents"))
-
-
-@register(
-    "language_id",
-    f"""
-    WITH s AS (
-      SELECT doc_id, lang,
-        len(list_filter({_TOKS}, w -> list_contains(['der','die','das','und','ist','ein','nicht','mit'], w))) AS s_de,
-        len(list_filter({_TOKS}, w -> list_contains({_EN_STOP}, w))) AS s_en,
-        len(list_filter({_TOKS}, w -> list_contains(['el','la','de','que','y','en','un','es'], w))) AS s_es,
-        len(list_filter({_TOKS}, w -> list_contains(['le','la','de','et','un','est','que','pour'], w))) AS s_fr,
-        len(list_filter({_TOKS}, w -> list_contains(['de5','shi4','bu4','le5','wo3','you3','zai4','ta1'], w))) AS s_zh
-      FROM documents
-    )
-    SELECT doc_id, lang,
-           CASE WHEN s_de = best THEN 'de' WHEN s_en = best THEN 'en'
-                WHEN s_es = best THEN 'es' WHEN s_fr = best THEN 'fr'
-                ELSE 'zh' END AS pred_lang,
-           best AS best_score
-    FROM (SELECT *, greatest(s_de, s_en, s_es, s_fr, s_zh) AS best FROM s)
-    """,
-    doc="X4 stopword-intersection language ID with alphabetical tie-break.",
-)
-def q_language_id(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import language_id
-
-    return language_id(_t(spark, sf, "documents"))
 
 
 @register(
@@ -946,35 +783,6 @@ def q_html_table_scan(spark: SparkSession, sf: str) -> DataFrame:
     return _retype_nation(raw)
 
 
-@register(
-    "html_table_scan_datasource",
-    """
-    SELECT CAST(n_nationkey AS BIGINT) AS n_nationkey, n_name,
-           CAST(n_regionkey AS BIGINT) AS n_regionkey
-    FROM nation
-    """,
-    doc="S1 through the Spark 4 Python Data Source API: the same landed "
-    "pages read via a registered format('htmltable') — one task per page, "
-    "same parser/guards as the mapInPandas path; three-way differential "
-    "(DataSource scan ≡ mapInPandas scan ≡ parquet oracle).",
-)
-def q_html_table_scan_datasource(spark: SparkSession, sf: str) -> DataFrame:
-    import json
-
-    from .sources.html_table import HtmlTableDataSource
-
-    d = _land_nation_pages(spark, sf)
-    spark.dataSource.register(HtmlTableDataSource)
-    raw = (
-        spark.read.format("htmltable")
-        .option("path", d)
-        .option("headers", json.dumps(_HTML_HEADERS))
-        .option("columns", json.dumps(["nationkey", "name", "regionkey"]))
-        .load()
-    )
-    return _retype_nation(raw)
-
-
 # ------------------------- curation: sampling / quality / PII (X4 ext)
 
 @register(
@@ -997,26 +805,6 @@ def q_stratified_sample(spark: SparkSession, sf: str) -> DataFrame:
 
     return stratified_sample(
         _t(spark, sf, "documents"), "lang", 20
-    )
-
-
-@register(
-    "uniform_hash_sample",
-    """
-    SELECT doc_id, lang
-    FROM documents
-    WHERE substring(md5('sample-v1' || CAST(doc_id AS VARCHAR)), 1, 6)
-          < '199999'
-    """,
-    doc="Shuffle-free deterministic ~10% sample via salted-hash prefix "
-    "threshold: pure filter, scan-bandwidth-bound at 100 TB, same rows on "
-    "every rerun (unlike df.sample, which is partition-order-dependent).",
-)
-def q_uniform_sample(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.sampling import uniform_hash_sample
-
-    return uniform_hash_sample(_t(spark, sf, "documents"), 100_000).select(
-        "doc_id", "lang"
     )
 
 
@@ -1121,87 +909,6 @@ def q_doc_chunks(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "pack_plan",
-    """
-    WITH t AS (
-      SELECT doc_id, lang,
-             (ascii(substring(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-              + ascii(substring(md5('pack' || CAST(doc_id AS VARCHAR)), 2, 1))) % 8
-               AS shard,
-             len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                             x -> x <> '')) AS n_tokens
-      FROM documents
-    ), c AS (
-      SELECT doc_id, lang, shard, n_tokens,
-             SUM(n_tokens) OVER (
-               PARTITION BY lang, shard ORDER BY doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-             ) - n_tokens AS cum_before
-      FROM t
-    )
-    SELECT doc_id, lang, shard, n_tokens,
-           CAST(cum_before // 512 AS BIGINT) AS start_bin,
-           CAST(cum_before % 512 AS BIGINT) AS start_offset
-    FROM c
-    """,
-    doc="LLM-pipeline sequence packing: concat-then-slice plan locating "
-    "each document's first token in 512-token context windows, packed "
-    "per (lang, hash-shard) stratum — the stratum count, not the language "
-    "count, is the parallelism, so it scales with the cluster.",
-)
-def q_pack_plan(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.chunking import pack_sequences
-
-    docs = _t(spark, sf, "documents")
-    h = F.md5(F.concat(F.lit("pack"), F.col("doc_id").cast("string")).cast("binary"))
-    shard = F.pmod(
-        F.ascii(F.substring(h, 1, 1)) * 31 + F.ascii(F.substring(h, 2, 1)),
-        F.lit(8),
-    )
-    return pack_sequences(
-        docs.withColumn("shard", shard), 512, ["lang", "shard"]
-    )
-
-
-@register(
-    "benchmark_decontam",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(ts) >= 5
-                  THEN list_distinct(list_transform(range(1, len(ts) - 3),
-                         i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]
-                              || ' ' || ts[i+3] || ' ' || ts[i+4]))
-                  ELSE [] END AS shs
-      FROM tok
-    ),
-    corpus AS (SELECT doc_id, unnest(shs) AS g FROM sh WHERE doc_id % 29 <> 0),
-    bench AS (SELECT doc_id AS bench_id, unnest(shs) AS g FROM sh
-              WHERE doc_id % 29 = 0)
-    SELECT c.doc_id,
-           COUNT(DISTINCT c.g) AS n_hit_grams,
-           COUNT(DISTINCT b.bench_id) AS n_benchmarks_hit
-    FROM corpus c JOIN bench b ON c.g = b.g
-    GROUP BY 1
-    """,
-    doc="Benchmark decontamination: flag training docs sharing word "
-    "5-grams with a (broadcast) eval set — the standard n-gram-overlap "
-    "decontamination step; the held-out set here is the deterministic "
-    "doc_id%29 slice.",
-)
-def q_benchmark_decontam(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.decontam import decontaminate
-
-    docs = _t(spark, sf, "documents")
-    bench = docs.filter(F.col("doc_id") % 29 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 29 != 0)
-    return decontaminate(corpus, bench, k=5)
-
-
-@register(
     "memorization_profile",
     f"""
     WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
@@ -1250,7 +957,7 @@ def q_benchmark_decontam(spark: SparkSession, sf: str) -> DataFrame:
     FROM base b LEFT JOIN per p USING (bench_id)
     """,
     doc="Memorization/novelty profile (Lee et al. 2021 overlap analyses, "
-    "extended from decontaminate's boolean hit to a length profile): per "
+    "extended from a boolean overlap hit to a length profile): per "
     "eval document — the deterministic doc_id%29 held-out slice — the "
     "count of 8-gram positions matched anywhere in the training corpus, "
     "maximal consecutive-match runs, the longest verbatim-overlap extent "
@@ -1269,33 +976,6 @@ def q_memorization_profile(spark: SparkSession, sf: str) -> DataFrame:
     )
     corpus = docs.filter(F.col("doc_id") % 29 != 0)
     return memorization_profile(corpus, bench, k=8)
-
-
-@register(
-    "source_mix",
-    f"""
-    WITH per AS (
-      SELECT source, COUNT(*) AS n_docs, CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY 1
-    ), t AS (
-      SELECT *, SUM(n_docs) OVER () AS tot_docs,
-             SUM(n_tokens) OVER () AS tot_tokens
-      FROM per
-    )
-    SELECT source, n_docs, n_tokens,
-           CAST((CAST(n_docs AS HUGEINT) * 2000000 + tot_docs)
-                // (2 * tot_docs) AS BIGINT) / 1000000.0 AS doc_share,
-           CAST((CAST(n_tokens AS HUGEINT) * 2000000 + tot_tokens)
-                // (2 * tot_tokens) AS BIGINT) / 1000000.0 AS token_share
-    FROM t
-    """,
-    doc="Dataset-mixing report: per-source doc/token counts and corpus "
-    "shares — the composition table a mixture-reweighting step consumes.",
-)
-def q_source_mix(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.mixing import source_mix
-
-    return source_mix(_t(spark, sf, "documents"))
 
 
 @register(
@@ -1360,35 +1040,6 @@ def q_quality_funnel(spark: SparkSession, sf: str) -> DataFrame:
 
 # ------------------------------------------------------- dedup (X1/X2)
 
-@register(
-    "dedup_exact_groups",
-    """
-    SELECT text, MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-    FROM documents GROUP BY text
-    """,
-    doc="X1 exact dedup: group by content, min-id representative.",
-)
-def q_dedup_exact(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import exact_duplicate_groups
-
-    return exact_duplicate_groups(_t(spark, sf, "documents"))
-
-
-@register(
-    "dedup_content_hash",
-    r"""
-    SELECT sha256(regexp_replace(lower(trim(text)), '\s+', ' ', 'g')) AS content_hash,
-           MIN(doc_id) AS keep_doc_id, COUNT(*) AS n_copies
-    FROM documents GROUP BY 1
-    """,
-    doc="X1 content-hash dedup: shuffle 32-byte hashes, not documents.",
-)
-def q_dedup_hash(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import content_hash_dedup
-
-    return content_hash_dedup(_t(spark, sf, "documents"))
-
-
 def _minhash_oracle_sql() -> str:
     """Generate the DuckDB twin of the ENTIRE MinHash-LSH pipeline with the
     portable token hash: shingle-field arithmetic, the 64 (a·x+b) mod p MIN
@@ -1452,90 +1103,6 @@ def _minhash_oracle_sql() -> str:
 
 
 @register(
-    "minhash_lsh_candidates",
-    _minhash_oracle_sql(),
-    doc="X2 MinHash-LSH near-dup candidate pairs with estimated Jaccard — "
-    "oracle-checked end to end: the portable md5-fold token hash makes "
-    "all 64 signature values engine-reproducible, so DuckDB rebuilds the "
-    "identical signatures, bands, candidates, and estimates.",
-)
-def q_minhash(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import lsh_candidate_pairs
-
-    return lsh_candidate_pairs(_t(spark, sf, "documents"), portable=True)
-
-
-# Exact 3-gram Jaccard ≥ 0.7 over all pairs, computed with STRING shingles
-# (engine-portable — no xxhash64).  Shared by two queries below: the exact
-# inverted-index ssjoin matches it by construction; the MinHash-LSH
-# pipeline matches it because (a) hashed-shingle Jaccard equals
-# string-shingle Jaccard absent 31-bit collisions and (b) the seeded
-# 64-hash/16-band LSH attains full recall at j ≥ 0.7 on these corpora —
-# both facts deterministic for a fixed fixture+seed, so the equality is a
-# real differential test, not a tautology.
-_JACCARD_07_SQL = r"""
-    WITH tok AS (
-      SELECT doc_id,
-             list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                         t -> t <> '') AS ts
-      FROM documents
-    ),
-    sh AS (
-      SELECT doc_id,
-             CASE WHEN len(ts) >= 3
-                  THEN list_distinct(list_transform(range(1, len(ts) - 1),
-                         i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2]))
-                  ELSE [] END AS shs
-      FROM tok
-    ),
-    ex AS (SELECT doc_id, len(shs) AS sz, unnest(shs) AS s FROM sh),
-    pairs AS (
-      SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS inter,
-             ANY_VALUE(a.sz) AS sz_a, ANY_VALUE(b.sz) AS sz_b
-      FROM ex a JOIN ex b ON a.s = b.s AND a.doc_id < b.doc_id
-      GROUP BY 1, 2
-    )
-    SELECT doc_a, doc_b,
-           ROUND(inter * 1.0 / (sz_a + sz_b - inter), 6) AS jaccard
-    FROM pairs
-    WHERE ROUND(inter * 1.0 / (sz_a + sz_b - inter), 6) >= 0.7
-"""
-
-
-@register(
-    "ngram_jaccard_near_dups",
-    _JACCARD_07_SQL,
-    doc="X2 LSH candidates verified with exact n-gram Jaccard ≥ 0.7; "
-    "oracle is the full all-pairs exact Jaccard in DuckDB, so the gate "
-    "also proves the LSH stage misses no true pair on this corpus.",
-)
-def q_near_dups(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import near_duplicates
-
-    return near_duplicates(_t(spark, sf, "documents"))
-
-
-@register(
-    "dedup_survivors",
-    f"""
-    WITH dropped AS (
-      SELECT DISTINCT doc_b FROM ({_JACCARD_07_SQL})
-    )
-    SELECT doc_id FROM documents
-    WHERE doc_id NOT IN (SELECT doc_b FROM dropped)
-    """,
-    doc="Greedy near-dup removal applied: surviving doc ids after dropping "
-    "every document with a ≥0.7-Jaccard near-duplicate of smaller id "
-    "(keep-lowest-id policy; one anti-join over the ssjoin pair list, "
-    "no iteration).",
-)
-def q_dedup_survivors(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import dedup_survivors
-
-    return dedup_survivors(_t(spark, sf, "documents"))
-
-
-@register(
     "near_dup_clusters",
     """
     WITH RECURSIVE tok AS (
@@ -1587,19 +1154,6 @@ def q_near_dup_clusters(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import near_duplicate_clusters
 
     return near_duplicate_clusters(_t(spark, sf, "documents"))
-
-
-@register(
-    "jaccard_ssjoin_near_dups",
-    _JACCARD_07_SQL,
-    doc="X2 exact set-similarity join: inverted-index equi-join on shared "
-    "shingles, jaccard from co-occurrence counts — the deterministic "
-    "baseline the probabilistic LSH pipeline is measured against.",
-)
-def q_jaccard_ssjoin(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import jaccard_similarity_join
-
-    return jaccard_similarity_join(_t(spark, sf, "documents"))
 
 
 def _simhash_oracle_sql() -> str:
@@ -1666,25 +1220,8 @@ def q_simhash(spark: SparkSession, sf: str) -> DataFrame:
 
 # -------------------------------------------- similarity search (X3/X5)
 
-@register(
-    "embedding_norms",
-    """
-    SELECT vec_id,
-           round(sqrt(list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                 list_transform(embedding::DOUBLE[], x -> x * x)),
-                 (a, x) -> a + x)), 6) AS l2_norm
-    FROM embeddings
-    """,
-    doc="X5 vector-column profiling: L2 norms via built-in array fold.",
-)
-def q_embedding_norms(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import embedding_norms
-
-    return embedding_norms(_t(spark, sf, "embeddings"))
-
-
-# Shared by cosine_topk_bruteforce (the query) and ann_recall_eval (as
-# the exact ground-truth side): sequential left-fold arithmetic matches
+# Exact brute-force top-5, the ground-truth side of the recall evals:
+# sequential left-fold arithmetic matches
 # Spark's F.aggregate fold exactly.
 _BRUTE_TOPK_SQL = """
     WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
@@ -1706,19 +1243,6 @@ _BRUTE_TOPK_SQL = """
       FROM scored
     ) WHERE rnk <= 5
     """
-
-
-@register(
-    "cosine_topk_bruteforce",
-    _BRUTE_TOPK_SQL,
-    doc="X3 exact cosine top-5 for query vectors vec_id<8; broadcast "
-    "queries × corpus, per-query rank window; fold order mirrored in SQL.",
-)
-def q_cosine_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import brute_force_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return brute_force_topk(emb, emb.filter(F.col("vec_id") < 8), k=5)
 
 
 def _lsh_bucket_cte(n_planes: int, n_tables: int, seed_base: int) -> str:
@@ -1788,7 +1312,8 @@ def _lsh_pair_oracle(
 
 
 def _lsh_topk_oracle() -> str:
-    """Bit-exact DuckDB twin of q_lsh_topk: the same integer micro-unit
+    """Bit-exact DuckDB twin of similarity.lsh_topk as ann_recall_eval
+    serves it: the same integer micro-unit
     hyperplane weights (one VALUES row per hash table × plane), the same
     order-independent int64 dot signs for bucket assignment, the same
     candidate equi-join and sequential-fold cosine rank."""
@@ -1814,23 +1339,6 @@ def _lsh_topk_oracle() -> str:
       FROM scored
     ) WHERE rnk <= 5
     """
-    )
-
-
-@register(
-    "lsh_topk_ann",
-    _lsh_topk_oracle(),
-    doc="X3 ANN top-k via random-hyperplane LSH bucket equi-join; oracle "
-    "reproduces every bucket bit from the shared integer micro-unit "
-    "weights, then ranks candidates with the same fold cosine.",
-)
-def q_lsh_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import lsh_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5,
-        corpus_buckets=_lsh_index_for(spark, sf, emb),
     )
 
 
@@ -1892,7 +1400,8 @@ def q_ann_recall(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def _ivf_topk_oracle() -> str:
-    """DuckDB twin of q_ivf_topk: label-prototype coarse quantizer (exact
+    """DuckDB twin of similarity.ivf_topk as ivf_recall_eval serves it:
+    label-prototype coarse quantizer (exact
     micro-unit means, the label_centroids construction), integer cell
     scores -2·v·c + ‖c‖², argmin corpus assignment, top-4 probe cells per
     query, fold-cosine rank within probed cells."""
@@ -1947,28 +1456,6 @@ def _ivf_topk_oracle() -> str:
       FROM scored
     ) WHERE rnk <= 5
     """
-
-
-@register(
-    "ivf_topk_ann",
-    _ivf_topk_oracle(),
-    doc="X3 ANN top-k via IVF with an externally-trained coarse quantizer "
-    "(label prototypes in exact micro-units — the faiss pattern; the "
-    "unsupervised sample-bounded KMeans fit remains available and is "
-    "recall-tested in tests/test_dedup_similarity.py).  Integer cell "
-    "scores make assignment parallelism-independent and SQL-reproducible.",
-)
-def q_ivf_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import ivf_topk, label_centroid_elements
-
-    emb = _t(spark, sf, "embeddings")
-    return ivf_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        k=5,
-        n_probe=4,
-        centroid_elements=label_centroid_elements(emb),
-    )
 
 
 def _ivf_recall_oracle() -> str:
@@ -2171,7 +1658,7 @@ def q_record_linkage(spark: SparkSession, sf: str) -> DataFrame:
     "demo runs at cos ≥ 0.45 to exercise the path end-to-end; production "
     "default is 0.95 (see tests for a planted-pair recall check).  Oracle "
     "reproduces every bucket bit from the shared integer micro-unit "
-    "weights (same construction as lsh_topk_ann).",
+    "weights (same construction as ann_recall_eval's LSH side).",
 )
 def q_embedding_near_dups(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import embedding_near_duplicates
@@ -2368,171 +1855,7 @@ def q_multimodal(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "salted_qty_by_flag",
-    """
-    SELECT l_returnflag, CAST(SUM(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-    FROM lineitem GROUP BY l_returnflag
-    """,
-    doc="Skew-salted two-stage aggregation (operators/skew.py): the hot-key "
-    "spread plan must produce the same answer as the plain one-stage sum — "
-    "the oracle IS the plain sum, so the equality is hash-checked.",
-)
-def q_salted(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.skew import salted_group_sum
-
-    return salted_group_sum(
-        _t(spark, sf, "lineitem"), "l_returnflag", "l_quantity", "sum_qty"
-    )
-
-
-@register(
-    "grouped_pandas_price_stats",
-    """
-    SELECT p_brand,
-           ROUND(CAST(SUM(CAST(round(l_extendedprice * 100) AS BIGINT)
-                          * CAST(round(l_quantity * 100) AS BIGINT)) AS DOUBLE)
-                 / SUM(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0,
-                 6) AS weighted_avg_price,
-           COUNT(*) AS n_lines
-    FROM lineitem JOIN part ON l_partkey = p_partkey
-    GROUP BY p_brand
-    """,
-    doc="UDAF surface (§2.11): per-brand weighted average price via "
-    "applyInPandas one-row-per-group output — the Arrow-batched escape "
-    "hatch for aggregations built-ins can't express.  Oracle-checkable "
-    "because the pandas group sums in int64 micro-units (prices and "
-    "quantities are 2-dp decimals), so the sum is order-independent and "
-    "the single final division matches DuckDB's BIGINT arithmetic "
-    "bit-for-bit.",
-)
-def q_grouped_pandas(spark: SparkSession, sf: str) -> DataFrame:
-    import pandas as pd
-
-    li, part = _t(spark, sf, "lineitem"), _t(spark, sf, "part")
-    joined = li.join(F.broadcast(part), li.l_partkey == part.p_partkey).select(
-        "p_brand", "l_extendedprice", "l_quantity"
-    )
-
-    def stats(pdf: pd.DataFrame) -> pd.DataFrame:
-        # Exact integer arithmetic: 2-dp values scaled to int64 cents, so
-        # the sum is the same in any accumulation order and the one float
-        # division at the end mirrors the oracle's BIGINT/BIGINT/100.0.
-        price_c = (pdf["l_extendedprice"] * 100).round().astype("int64")
-        qty_c = (pdf["l_quantity"] * 100).round().astype("int64")
-        w = int(qty_c.sum())
-        return pd.DataFrame(
-            {
-                "p_brand": [pdf["p_brand"].iloc[0]],
-                "weighted_avg_price": [
-                    float((price_c * qty_c).sum()) / w / 100.0 if w else None
-                ],
-                "n_lines": [len(pdf)],
-            }
-        )
-
-    # No explicit repartition before the grouped Arrow transform: AQE
-    # coalesces the ~25-brand shuffle to a handful of tasks (and python
-    # workers); an explicit repartition(n, key) would pin n full tasks
-    # and disable that coalescing.
-    out = joined.groupBy("p_brand").applyInPandas(
-        stats, "p_brand string, weighted_avg_price double, n_lines long"
-    )
-    # Rounding stays JVM-side: F.round (HALF_UP) matches DuckDB ROUND,
-    # while Python's round() is banker's — rounding inside the pandas
-    # group would diverge on ties.
-    return out.select(
-        "p_brand",
-        F.round("weighted_avg_price", 6).alias("weighted_avg_price"),
-        "n_lines",
-    )
-
-
-@register(
-    "per_doc_term_counts",
-    f"""
-    SELECT doc_id, term, COUNT(*) AS tf
-    FROM (SELECT doc_id, unnest({_TOKS}) AS term FROM documents)
-    GROUP BY 1, 2
-    """,
-    doc="UDTF surface (§2.11): a Spark 4 Python UDTF exploding each "
-    "document into (term, tf) rows via a LATERAL table-function join — "
-    "the one-row-to-many escape hatch for expansions built-ins can't "
-    "express.  Here they CAN (explode+groupBy is the production path, "
-    "see term_frequencies), which is exactly what makes this "
-    "oracle-checkable: the DuckDB twin is the relational form.",
-)
-def q_per_doc_term_counts(spark: SparkSession, sf: str) -> DataFrame:
-    from pyspark.sql.functions import udtf
-
-    # Defined inside the query fn so cloudpickle ships the class by value
-    # (the driving process loads this repo by file path; executor workers
-    # cannot import the package — see operators/multimodal.py).
-    class TermCounts:
-        def eval(self, doc_id, text):
-            import re
-            from collections import Counter
-
-            toks = (t for t in re.split(r"[^a-z0-9]+", (text or "").lower()) if t)
-            for term, n in Counter(toks).items():
-                yield doc_id, term, n
-
-    tc = udtf(TermCounts, returnType="doc_id bigint, term string, tf bigint")
-    spark.udtf.register("term_counts_tvf", tc)
-    _t(spark, sf, "documents").createOrReplaceTempView("_udtf_docs")
-    return spark.sql(
-        "SELECT t.doc_id, t.term, t.tf FROM _udtf_docs d, "
-        "LATERAL term_counts_tvf(d.doc_id, d.text) t"
-    )
-
-
-@register(
-    "validate_documents",
-    """
-    SELECT COUNT(*) AS n_rows,
-           COUNT(*) FILTER (WHERE n_chars <> length(text)) AS n_bad_len,
-           COUNT(*) FILTER (WHERE text IS NULL OR trim(text) = '') AS n_empty,
-           COUNT(*) FILTER (WHERE lang NOT IN ('de','en','es','fr','zh')) AS n_bad_lang
-    FROM documents
-    """,
-    doc="Data-quality validation: declared metadata vs actual content "
-    "(the ingest-side guard layer a training-data pipeline runs first).",
-)
-def q_validate(spark: SparkSession, sf: str) -> DataFrame:
-    d = _t(spark, sf, "documents")
-    return d.agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("n_chars") != F.length("text"), 1)).alias("n_bad_len"),
-        F.count(
-            F.when(F.col("text").isNull() | (F.trim("text") == ""), 1)
-        ).alias("n_empty"),
-        F.count(
-            F.when(~F.col("lang").isin("de", "en", "es", "fr", "zh"), 1)
-        ).alias("n_bad_lang"),
-    )
-
-
-# ------------------------------------------------------- sketches (X6)
-
-@register(
-    "approx_profile",
-    None,  # sketch algorithms (HLL++/GK) differ across engines by design
-    doc="X6 100TB-scale profiling: approx distinct + approx quantiles "
-    "(single pass, bounded memory; exactness traded for scale).",
-)
-def q_approx_profile(spark: SparkSession, sf: str) -> DataFrame:
-    li = _t(spark, sf, "lineitem")
-    # Quantiles projected to scalar columns (not one array<double>) so the
-    # driver's canonicalizer can sort the result.
-    q = F.percentile_approx("l_extendedprice", [0.5, 0.95, 0.99])
-    return li.agg(
-        F.approx_count_distinct("l_partkey").alias("approx_parts"),
-        F.approx_count_distinct("l_orderkey").alias("approx_orders"),
-        q.getItem(0).alias("price_p50"),
-        q.getItem(1).alias("price_p95"),
-        q.getItem(2).alias("price_p99"),
-    )
-
+# ------------------------------------------------- event-time interval join
 
 @register(
     "clicks_recent_purchase",
@@ -2698,12 +2021,10 @@ def q_range_join(spark: SparkSession, sf: str) -> DataFrame:
 
 # ------------------------------------------------ r4 curation additions
 
-# Gopher-rule feature projection + composite keep, shared verbatim
-# between the gopher_quality_rules oracle and the quality_ensemble
-# oracle (r16 review finding: the ensemble's first draft copy-pasted
-# this SQL, which is exactly the drift the ensemble's shared-constant
-# design exists to prevent).  The feature SELECT reads from a CTE named
-# by the caller that provides (doc_id, ts).
+# Gopher-rule feature projection + composite keep, the DuckDB twin of
+# operators/text.gopher_rules that the quality_ensemble oracle nests as
+# its gopher vote.  The feature SELECT reads from a CTE named by the
+# caller that provides (doc_id, ts).
 _GOPHER_FEAT_SQL = """
       SELECT doc_id,
              len(ts) AS n_words,
@@ -2720,32 +2041,6 @@ _GOPHER_KEEP_SQL = """CAST(n_words BETWEEN 50 AND 100000 AS INT)
              * CAST(mean_word_len BETWEEN 3.0 AND 10.0 AS INT)
              * CAST(frac_alpha_words >= 0.8 AS INT)
              * CAST(n_stop_hits >= 2 AS INT)"""
-
-
-@register(
-    "gopher_quality_rules",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
-    feat AS (
-{_GOPHER_FEAT_SQL}
-      FROM tok
-    )
-    SELECT doc_id, n_words, mean_word_len, frac_alpha_words, n_stop_hits,
-           CAST(n_words BETWEEN 50 AND 100000 AS INT) AS ok_word_count,
-           CAST(mean_word_len BETWEEN 3.0 AND 10.0 AS INT) AS ok_mean_len,
-           CAST(frac_alpha_words >= 0.8 AS INT) AS ok_alpha,
-           CAST(n_stop_hits >= 2 AS INT) AS ok_stops,
-           {_GOPHER_KEEP_SQL} AS keep
-    FROM feat
-    """,
-    doc="Gopher-rule quality gate (Rae et al. 2021 §A1.1 subset): word "
-    "count / mean word length / alpha fraction / stopword probe, one int "
-    "flag per rule plus composite keep.  Per-row projection, no shuffle.",
-)
-def q_gopher_rules(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import gopher_rules
-
-    return gopher_rules(_t(spark, sf, "documents"))
 
 
 @register(
@@ -2810,57 +2105,6 @@ def q_label_centroids(spark: SparkSession, sf: str) -> DataFrame:
 
 # ------------------------------------------------ r6 curation additions
 
-@register(
-    "token_counts",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents)
-    SELECT doc_id,
-           CAST(len(ts) AS BIGINT) AS n_words,
-           CAST(COALESCE(list_sum(list_transform(ts, w ->
-                greatest(1, CAST(ceil(length(w) / 4.0) AS INT)))), 0) AS BIGINT)
-             AS n_bpe_tokens
-    FROM tok
-    """,
-    doc="Per-document token counting: whitespace/punct word count plus a "
-    "BPE-rate proxy (1 token per word + 1 per 4 chars of long words). "
-    "Per-row projection, no shuffle.",
-)
-def q_token_counts(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import token_counts
-
-    return token_counts(_t(spark, sf, "documents"))
-
-
-@register(
-    "unigram_logprob_quality",
-    f"""
-    WITH toks AS (SELECT doc_id, unnest({_TOKS}) AS term FROM documents),
-    tf AS (SELECT term, COUNT(*) AS n FROM toks GROUP BY term),
-    tot AS (SELECT CAST(SUM(n) AS BIGINT) AS total FROM tf),
-    lp AS (
-      SELECT term,
-             CAST(ROUND(LN(CAST(n AS DOUBLE) / total) * 1000000) AS BIGINT)
-               AS lp_micro
-      FROM tf, tot
-    )
-    SELECT doc_id,
-           COUNT(*) AS n_tokens,
-           ROUND(CAST(SUM(lp_micro) AS BIGINT) / COUNT(*) / 1000000.0, 6)
-             AS avg_logprob
-    FROM toks JOIN lp USING (term)
-    GROUP BY doc_id
-    """,
-    doc="CCNet-style unigram-LM quality score: per-doc mean token "
-    "log-probability under the corpus unigram distribution.  Per-term "
-    "log-probs snap to int64 micro-units before the per-doc sum, so the "
-    "result is partitioning-independent.",
-)
-def q_unigram_logprob(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import unigram_logprob
-
-    return unigram_logprob(_t(spark, sf, "documents"))
-
-
 # DuckDB twin of operators/dedup.py::paragraph_table (k=10): positional
 # 10-token windows joined back to text, hashed.  list_slice is 1-based
 # inclusive [begin, end]; Spark's slice(arr, start, length) clamps the
@@ -2901,73 +2145,6 @@ def q_paragraph_dup_stats(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.dedup import paragraph_dup_stats
 
     return paragraph_dup_stats(_t(spark, sf, "documents"), k=10)
-
-
-@register(
-    "dup_paragraph_docs",
-    _PARAS + """
-    , pd AS (SELECT para_hash, COUNT(DISTINCT doc_id) AS ndocs
-             FROM par GROUP BY para_hash)
-    SELECT doc_id,
-           COUNT(*) AS n_paras,
-           CAST(SUM(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS BIGINT)
-             AS n_dup_paras,
-           ROUND(CAST(SUM(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) AS DOUBLE)
-                 / COUNT(*), 6) AS dup_ratio
-    FROM par JOIN pd USING (para_hash)
-    GROUP BY doc_id
-    HAVING SUM(CASE WHEN ndocs > 1 THEN 1 ELSE 0 END) > 0
-    """,
-    doc="Per-document cross-doc duplicated-paragraph ratio: paragraphs "
-    "whose hash appears in more than one distinct document (boilerplate "
-    "detection).  Only (id, idx, hash) triples ever shuffle.",
-)
-def q_dup_paragraph_docs(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import dup_paragraph_docs
-
-    return dup_paragraph_docs(_t(spark, sf, "documents"), k=10)
-
-
-@register(
-    "centroid_assign",
-    """
-    WITH ex AS (
-      SELECT vec_id, generate_subscripts(embedding, 1) - 1 AS pos,
-             CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT)
-               AS vm
-      FROM embeddings
-    ),
-    lab AS (
-      SELECT label, generate_subscripts(embedding, 1) - 1 AS pos,
-             CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT)
-               AS vm
-      FROM embeddings
-    ),
-    proto AS (
-      SELECT label, pos, CAST(SUM(vm) AS BIGINT) AS sm FROM lab GROUP BY label, pos
-    ),
-    sc AS (
-      SELECT vec_id, label, CAST(SUM(vm * sm) AS BIGINT) AS s2
-      FROM ex JOIN proto USING (pos) GROUP BY vec_id, label
-    ),
-    rk AS (
-      SELECT vec_id, label, s2,
-             ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY s2 DESC, label) AS rn
-      FROM sc
-    )
-    SELECT vec_id, label AS pred_label,
-           ROUND(CAST(s2 AS DOUBLE) / 1000000000000.0, 6) AS score
-    FROM rk WHERE rn = 1
-    """,
-    doc="Nearest-prototype labeling: each vector assigned to the class-sum "
-    "prototype with the largest dot product, exact int64 micro-unit "
-    "arithmetic.  Prototype table broadcasts; corpus vectors never "
-    "shuffle whole.",
-)
-def q_centroid_assign(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import centroid_assign
-
-    return centroid_assign(_t(spark, sf, "embeddings"))
 
 
 @register(
@@ -3076,40 +2253,6 @@ def q_bigram_merges(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "collapse_repeated_paras",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
-    par AS (
-      SELECT doc_id,
-             list_transform(range(0, CAST(ceil(len(ts) / 10.0) AS INT)),
-               i -> array_to_string(list_slice(ts, i*10 + 1, i*10 + 10), ' '))
-               AS paras
-      FROM tok
-    ),
-    ded AS (
-      SELECT doc_id, paras,
-             list_filter(paras, (p, i) ->
-               NOT list_contains(list_slice(paras, 1, i - 1), p)) AS kept
-      FROM par
-    )
-    SELECT doc_id,
-           CAST(len(paras) AS BIGINT) AS n_paras,
-           CAST(len(kept) AS BIGINT) AS n_kept,
-           md5(array_to_string(kept, chr(10))) AS clean_hash
-    FROM ded
-    """,
-    doc="Intra-document repetition removal (RefinedWeb-style): drop "
-    "paragraphs already seen earlier in the same document, keep "
-    "first-occurrence order, hash the cleaned text.  Per-row projection, "
-    "zero shuffle.",
-)
-def q_collapse_paras(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import collapse_repeated_paragraphs
-
-    return collapse_repeated_paragraphs(_t(spark, sf, "documents"), k=10)
-
-
-@register(
     "curation_pipeline",
     f"""
     WITH tok0 AS (SELECT doc_id, source, {_TOKS} AS ts FROM documents),
@@ -3165,30 +2308,6 @@ def q_curation_pipeline(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "lexical_diversity",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents)
-    SELECT doc_id,
-           CAST(len(ts) AS BIGINT) AS n_tokens,
-           CAST(len(list_distinct(ts)) AS BIGINT) AS n_types,
-           ROUND(CAST(len(list_distinct(ts)) AS DOUBLE)
-                 / greatest(len(ts), 1), 6) AS type_token_ratio,
-           ROUND(CAST(len(list_filter(list_distinct(ts),
-                 w -> len(list_filter(ts, t -> t = w)) = 1)) AS DOUBLE)
-                 / greatest(len(ts), 1), 6) AS hapax_ratio
-    FROM tok
-    """,
-    doc="Per-document lexical diversity: type-token ratio + hapax ratio "
-    "(the quality signals template spam fails).  Per-row projection, "
-    "no shuffle.",
-)
-def q_lexical_diversity(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import lexical_diversity
-
-    return lexical_diversity(_t(spark, sf, "documents"))
-
-
-@register(
     "zipf_profile",
     f"""
     WITH counted AS (
@@ -3217,47 +2336,6 @@ def q_zipf_profile(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import zipf_profile
 
     return zipf_profile(_t(spark, sf, "documents"), top_n=100)
-
-
-@register(
-    "split_leakage",
-    """
-    WITH h AS (
-      SELECT md5(regexp_replace(lower(trim(text)), '\\s+', ' ', 'g'))
-               AS content_hash,
-             source, doc_id
-      FROM documents
-    ),
-    leaks AS (
-      SELECT content_hash,
-             COUNT(DISTINCT source) AS n_sources,
-             COUNT(*) AS n_docs,
-             MIN(doc_id) AS example_doc
-      FROM h GROUP BY content_hash
-      HAVING COUNT(DISTINCT source) > 1
-    )
-    SELECT content_hash, n_sources, n_docs, example_doc FROM leaks
-    """,
-    doc="Train/eval split-leakage check: normalized-content hashes that "
-    "appear in more than one source split (the contamination a holdout "
-    "split must not have).  One hash-keyed groupBy; 16-byte keys on the "
-    "shuffle, never text.",
-)
-def q_split_leakage(spark: SparkSession, sf: str) -> DataFrame:
-    docs = _t(spark, sf, "documents")
-    norm = F.regexp_replace(F.lower(F.trim(F.col("text"))), r"\s+", " ")
-    h = docs.select(
-        F.md5(norm.cast("binary")).alias("content_hash"), "source", "doc_id"
-    )
-    return (
-        h.groupBy("content_hash")
-        .agg(
-            F.count_distinct("source").alias("n_sources"),
-            F.count(F.lit(1)).alias("n_docs"),
-            F.min("doc_id").alias("example_doc"),
-        )
-        .filter(F.col("n_sources") > 1)
-    )
 
 
 @register(
@@ -3307,43 +2385,6 @@ def q_norm_outliers(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import norm_outliers
 
     return norm_outliers(_t(spark, sf, "embeddings"))
-
-
-@register(
-    "pack_efficiency",
-    f"""
-    WITH t AS (
-      SELECT lang,
-             (ascii(substring(md5('pack' || CAST(doc_id AS VARCHAR)), 1, 1)) * 31
-              + ascii(substring(md5('pack' || CAST(doc_id AS VARCHAR)), 2, 1))) % 8
-               AS shard,
-             len({_TOKS}) AS n_tokens
-      FROM documents
-    )
-    SELECT lang, shard, COUNT(*) AS n_docs,
-           CAST(SUM(n_tokens) AS BIGINT) AS total_tokens,
-           CAST(CEIL(CAST(SUM(n_tokens) AS DOUBLE) / 512) AS BIGINT) AS n_bins,
-           ROUND(CAST(SUM(n_tokens) AS DOUBLE)
-                 / (CAST(CEIL(CAST(SUM(n_tokens) AS DOUBLE) / 512) AS BIGINT)
-                    * 512), 6) AS fill_rate
-    FROM t GROUP BY lang, shard
-    """,
-    doc="Packing utilization per (lang, shard) stratum: windows consumed "
-    "and fill rate — the batch-economics companion of pack_plan (tail "
-    "waste vs parallelism trade).  One map-side-combined aggregate.",
-)
-def q_pack_efficiency(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.chunking import pack_efficiency
-
-    docs = _t(spark, sf, "documents")
-    h = F.md5(F.concat(F.lit("pack"), F.col("doc_id").cast("string")).cast("binary"))
-    shard = F.pmod(
-        F.ascii(F.substring(h, 1, 1)) * 31 + F.ascii(F.substring(h, 2, 1)),
-        F.lit(8),
-    )
-    return pack_efficiency(
-        docs.withColumn("shard", shard), 512, ["lang", "shard"]
-    )
 
 
 @register(
@@ -3397,38 +2438,6 @@ def q_token_count_histogram(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.text import token_count_histogram
 
     return token_count_histogram(_t(spark, sf, "documents"))
-
-
-@register(
-    "cross_doc_gram_overlap",
-    f"""
-    WITH tok AS (SELECT doc_id, {_TOKS} AS ts FROM documents),
-    g AS (
-      SELECT doc_id,
-             CASE WHEN len(ts) >= 8
-                  THEN list_distinct(list_transform(range(1, len(ts) - 6),
-                         i -> ts[i] || ' ' || ts[i+1] || ' ' || ts[i+2] || ' '
-                              || ts[i+3] || ' ' || ts[i+4] || ' ' || ts[i+5]
-                              || ' ' || ts[i+6] || ' ' || ts[i+7]))
-                  ELSE [] END AS gs
-      FROM tok
-    ),
-    ex AS (SELECT doc_id, unnest(gs) AS gram FROM g)
-    SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-           COUNT(*) AS n_shared_grams
-    FROM ex a JOIN ex b ON a.gram = b.gram AND a.doc_id < b.doc_id
-    GROUP BY 1, 2
-    HAVING COUNT(*) >= 3
-    """,
-    doc="Exact-substring dedup signal (Lee et al. 2021): doc pairs sharing "
-    ">= 3 distinct 8-token grams — verbatim shared spans that "
-    "whole-document Jaccard misses.  Inverted-index equi-join; at n=8 "
-    "gram doc-frequencies are near 1, so cost ~ corpus size.",
-)
-def q_gram_overlap(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import shared_gram_pairs
-
-    return shared_gram_pairs(_t(spark, sf, "documents"))
 
 
 @register(
@@ -3583,32 +2592,6 @@ def q_semdedup(spark: SparkSession, sf: str) -> DataFrame:
 
 
 @register(
-    "doc_length_histogram",
-    """
-    WITH b AS (
-      SELECT CAST(length(bin(greatest(length(text), 1))) - 1 AS INT) AS len_bucket,
-             length(text) AS n
-      FROM documents
-    ), g AS (
-      SELECT len_bucket, COUNT(*) AS n_docs,
-             MIN(n) AS min_chars, MAX(n) AS max_chars
-      FROM b GROUP BY len_bucket
-    )
-    SELECT len_bucket, n_docs, min_chars, max_chars,
-           ROUND(CAST(n_docs AS DOUBLE) / SUM(n_docs) OVER (), 6) AS share
-    FROM g
-    """,
-    doc="Corpus length profile: floor(log2(chars)) buckets via integer "
-    "binary-representation length (engine-exact at power-of-two "
-    "boundaries, unlike float log2), with per-bucket share.",
-)
-def q_length_histogram(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.text import length_histogram
-
-    return length_histogram(_t(spark, sf, "documents"))
-
-
-@register(
     "source_language_mix",
     f"""
     WITH s AS (
@@ -3651,89 +2634,16 @@ def q_source_language_mix(spark: SparkSession, sf: str) -> DataFrame:
 # (VERDICT r7 "What's missing"): product quantization, time-series
 # similarity, corpus BPE, and mergeable sketch profiling.
 
-def _pq_topk_oracle() -> str:
-    """DuckDB twin of q_pq_topk: label-prototype codebooks (the IVF
-    oracle's exact micro-unit construction sliced into m=8 subspaces of 8
-    dims), integer-exact corpus encode (argmin of ‖c‖² − 2·v·c per
-    subspace, ties to the lower code), per-query ADC tables
-    (Σq² − 2Σq·c + ‖c‖²), and the summed-lookup rank.  Every score is
-    int64 micro²-units, so both engines agree bit-for-bit."""
-    return """
-    WITH exv AS (
-      SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS pos,
-             CAST(ROUND(CAST(unnest(embedding) AS DOUBLE) * 1000000) AS BIGINT)
-               AS vm
-      FROM embeddings
-    ),
-    per AS (
-      SELECT label, pos, CAST(SUM(vm) AS BIGINT) AS s, COUNT(*) AS n_vecs
-      FROM exv GROUP BY label, pos
-    ),
-    cw AS (
-      SELECT label AS code, pos // 8 AS sub, pos % 8 AS spos,
-             CAST(ROUND(ROUND(CAST(s AS DOUBLE) / 1000000.0 / n_vecs, 6)
-                        * 1000000) AS BIGINT) AS wm
-      FROM per
-    ),
-    cn AS (SELECT sub, code, CAST(SUM(wm * wm) AS BIGINT) AS cn_m
-           FROM cw GROUP BY sub, code),
-    exv2 AS (SELECT vec_id, pos // 8 AS sub, pos % 8 AS spos, vm FROM exv),
-    escore AS (
-      SELECT e.vec_id, c.sub, c.code,
-             CAST(ANY_VALUE(n.cn_m) - 2 * SUM(e.vm * c.wm) AS BIGINT) AS score
-      FROM exv2 e
-      JOIN cw c ON c.sub = e.sub AND c.spos = e.spos
-      JOIN cn n ON n.sub = c.sub AND n.code = c.code
-      GROUP BY e.vec_id, c.sub, c.code
-    ),
-    codes AS (
-      SELECT vec_id, sub, code FROM (
-        SELECT vec_id, sub, code,
-               ROW_NUMBER() OVER (PARTITION BY vec_id, sub
-                                  ORDER BY score, code) AS rn
-        FROM escore
-      ) WHERE rn = 1
-    ),
-    qtab AS (
-      SELECT e.vec_id AS query_id, c.sub, c.code,
-             CAST(SUM(e.vm * e.vm) - 2 * SUM(e.vm * c.wm)
-                  + ANY_VALUE(n.cn_m) AS BIGINT) AS qd_m
-      FROM exv2 e
-      JOIN cw c ON c.sub = e.sub AND c.spos = e.spos
-      JOIN cn n ON n.sub = c.sub AND n.code = c.code
-      WHERE e.vec_id < 8
-      GROUP BY e.vec_id, c.sub, c.code
-    ),
-    scored AS (
-      SELECT q.query_id, cd.vec_id AS neighbor_id,
-             CAST(SUM(q.qd_m) AS BIGINT) AS d_m
-      FROM codes cd
-      JOIN qtab q ON q.sub = cd.sub AND q.code = cd.code
-      WHERE cd.vec_id <> q.query_id
-      GROUP BY q.query_id, cd.vec_id
-    )
-    SELECT query_id, neighbor_id, approx_dist2, rnk FROM (
-      SELECT query_id, neighbor_id,
-             ROUND(d_m / 1e12, 6) AS approx_dist2,
-             CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-                   ORDER BY d_m, neighbor_id) AS INT) AS rnk
-      FROM scored
-    ) WHERE rnk <= 5
-    """
-
-
 def _label_pq_quantizer(
     emb: DataFrame,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Deterministic (centroids, codebooks) from the label prototypes —
-    the same externally-trained-quantizer pattern q_ivf_topk uses.  The
+    an externally-trained quantizer, like ivf_recall_eval's.  The
     centroids are the full 64-dim prototypes (IVF coarse cells); the
     codebooks slice them into m=8 subspaces of 8 dims (codebook j,
     code c = subspace-j slice of label c's centroid), so both quantizer
     halves come from ONE |labels| × 64 collect — bounded by the label
-    vocabulary, never the corpus.  Both q_pq_topk and q_ivfpq_topk call
-    this single builder so the codebook layout (dsub, label ordering)
-    can never diverge between the two gate rows; the sample-bounded
+    vocabulary, never the corpus.  The sample-bounded
     KMeans fit (fit_pq_codebooks) remains the unsupervised production
     default and is recall/ADC-exactness-tested in
     tests/test_dedup_similarity."""
@@ -3752,34 +2662,12 @@ def _label_pq_quantizer(
     return centroids, codebooks
 
 
-@register(
-    "pq_topk_adc",
-    _pq_topk_oracle(),
-    doc="X13 product quantization: asymmetric-distance top-5 for query "
-    "vectors vec_id<8 over the PQ-encoded corpus (m=8 subspaces, "
-    "label-prototype codebooks).  The encoded (id, codes) table is the "
-    "memory-bound ANN index; scoring sums m broadcast table lookups and "
-    "never touches a raw corpus vector.  All arithmetic is int64 "
-    "micro²-units — the oracle reproduces encode and ADC bit-for-bit.",
-)
-def q_pq_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import pq_topk
-
-    emb = _t(spark, sf, "embeddings")
-    return pq_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        k=5,
-        codebooks=_label_pq_quantizer(emb)[1],
-    )
-
-
 def _ivfpq_topk_oracle() -> str:
     """DuckDB twin of q_ivfpq_topk: the IVF oracle's probe-cell
-    construction composed with the PQ oracle's encode/ADC — candidates
-    come from the top-4 probed cells, and only candidate code rows enter
-    the ADC sum.  Shares every micro-unit convention with the two parent
-    oracles, so the composition is bit-exact too."""
+    construction composed with a PQ encode/ADC — candidates come from
+    the top-4 probed cells, and only candidate code rows enter the ADC
+    sum.  Every score is int64 micro²-units, so both engines agree
+    bit-for-bit."""
     return """
     WITH exv AS (
       SELECT vec_id, label, generate_subscripts(embedding, 1) - 1 AS pos,
@@ -4154,9 +3042,8 @@ def q_sketch_profile_check(spark: SparkSession, sf: str) -> DataFrame:
         for r in tok.filter(F.col("tok").isin(cms_terms))
         .groupBy("tok").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    # exact percentile brackets around each KLL quartile estimate (the
-    # approx_profile bracketing pattern: value-domain brackets absorb
-    # both KLL rank error and mass points)
+    # exact percentile brackets around each KLL quartile estimate
+    # (value-domain brackets absorb both KLL rank error and mass points)
     lens = docs.select(F.size(tokens("text")).cast("long").alias("n"))
     br = lens.select(
         F.expr(
@@ -4418,9 +3305,8 @@ _LR_FEATS = (
 
 
 # The one-step LR score CTEs + the integer dot product, shared verbatim
-# between the quality_classifier_scores oracle and the quality_ensemble
-# oracle (r16) so the classifier's SQL twin cannot drift between its
-# standalone gate and the ensemble's clf vote.
+# by the quality_ensemble, preference_pairs and best_of_n_examples oracles
+# so the classifier's SQL twin cannot drift between their clf votes.
 _LR_SCORE_CTES = """
     f AS (
       SELECT doc_id,
@@ -4454,43 +3340,6 @@ _LR_DOT = (
     "f.m_bias * w.wm_bias + f.m_len * w.wm_len + f.m_avg * w.wm_avg"
     " + f.m_punct * w.wm_punct + f.m_stop * w.wm_stop"
 )
-
-
-@register(
-    "quality_classifier_scores",
-    f"""
-    WITH {_LR_FEATS},
-    {_LR_SCORE_CTES}
-    SELECT f.doc_id,
-           ROUND(CAST({_LR_DOT} AS DOUBLE)
-                 / 1000000000000.0, 6) AS logit,
-           ({_LR_DOT}) > 0 AS keep
-    FROM f CROSS JOIN w
-    """,
-    doc="CCNet/fastText-style linear quality classifier "
-    "(operators/classifier.py): featurize relationally (saturating "
-    "[0,1] signals from quality_features), take ONE exact full-batch "
-    "logistic gradient step from zeros computed DISTRIBUTED (sigma(0) "
-    "= 1/2 exactly, so the step is the plain aggregate lr/2n * "
-    "sum(x*s) — no sigmoid, bit-exact in int64 micro-units), then "
-    "score every document via the broadcast 1-row weight table with an "
-    "integer dot product.  keep is an integer sign test; the oracle "
-    "replays featurize -> train-step -> score bit-for-bit.  Multi-step "
-    "driver training (fit_lr) and literal-weight serving are "
-    "pytest-pinned (test_classifier.py).",
-)
-def q_quality_classifier_scores(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.classifier import (
-        classifier_features,
-        gradient_step_weights,
-        logit_scores,
-    )
-    from .operators.text import quality_features
-
-    feats = classifier_features(
-        quality_features(_t(spark, sf, "documents")), label_threshold=0.6
-    )
-    return logit_scores(feats, gradient_step_weights(feats, lr=1.0))
 
 
 @register(
@@ -4633,7 +3482,7 @@ def q_bm25_ranking(spark: SparkSession, sf: str) -> DataFrame:
            ROUND(SUM(lp) / COUNT(*) / 1000000.0, 6) AS avg_logprob
     FROM allrows GROUP BY doc_id
     """,
-    doc="X7 one order up from unigram_logprob_quality: per-document mean "
+    doc="X7 one order up from the unigram LM: per-document mean "
     "log-prob under an INTERPOLATED BIGRAM LM (Jelinek-Mercer lam=0.75 — "
     "the CCNet-style fluency signal; operators/text.bigram_logprob).  "
     "Bigram pairs derive shuffle-free from the token array (arrays_zip "
@@ -4869,71 +3718,6 @@ def q_dsir_select(spark: SparkSession, sf: str) -> DataFrame:
     )
 
 
-@register(
-    "mixture_budget_fill",
-    f"""
-    WITH per AS (
-      SELECT source, CAST(SUM(len({_TOKS})) AS BIGINT) AS n_tokens
-      FROM documents GROUP BY 1
-    ), t AS (
-      SELECT *, SUM(n_tokens) OVER () AS tot_tokens FROM per
-    ), m AS (
-      SELECT source, n_tokens,
-             CAST((CAST(n_tokens AS HUGEINT) * 2000000 + tot_tokens)
-                  // (2 * tot_tokens) AS BIGINT) / 1000000.0 AS token_share
-      FROM t
-    ), s AS (
-      SELECT *, CAST(ROUND(ROUND(sqrt(token_share), 6) * 1000000) AS BIGINT)
-                  AS sm
-      FROM m
-    ), n AS (SELECT *, SUM(sm) OVER () AS tot FROM s),
-    b AS (
-      SELECT source, n_tokens AS src_tokens,
-             CAST(((CAST(sm AS HUGEINT) * 2000000 + tot) // (2 * tot)
-                   * 10000 + 500000) // 1000000 AS BIGINT) AS budget_tokens
-      FROM n
-    ),
-    c AS (
-      SELECT *, LEAST(1.0, CAST(budget_tokens AS DOUBLE) / src_tokens)
-                  AS frac
-      FROM b
-    ),
-    scored AS (
-      SELECT source, len({_TOKS}) AS n_tok,
-             ((('0x' || substring(md5('fill:' || CAST(doc_id AS VARCHAR)),
-                1, 8))::BIGINT % 2147483647) + 1) / 2147483648.0 AS u
-      FROM documents
-    ),
-    sel AS (
-      SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_docs,
-             CAST(SUM(d.n_tok) AS BIGINT) AS n_tokens
-      FROM scored d JOIN c USING (source)
-      WHERE d.u < c.frac GROUP BY d.source
-    )
-    SELECT c.source, c.budget_tokens,
-           CAST(COALESCE(sel.n_docs, 0) AS BIGINT) AS n_docs,
-           CAST(COALESCE(sel.n_tokens, 0) AS BIGINT) AS n_tokens,
-           CASE WHEN c.budget_tokens > 0
-                THEN ROUND(CAST(COALESCE(sel.n_tokens, 0) AS DOUBLE)
-                           / c.budget_tokens, 6) END AS fill_rate
-    FROM c LEFT JOIN sel USING (source)
-    """,
-    doc="Budgeted mixture materialization: per-source token budgets from "
-    "temperature_mixture (alpha=0.5, total T=10000) filled by a "
-    "deterministic portable-hash threshold — the SCALE-CORRECT shape "
-    "(no per-source sort window, which serializes a web-scale source "
-    "onto one partition; a |sources|-row cutoff table broadcasts "
-    "against the corpus and a map-side-combined aggregate reports the "
-    "fill).  Budgets derive via exact integer-ppm half-up DIV "
-    "identities; the u < frac compare runs on identically-derived "
-    "doubles, so the selected set is bit-stable across engines.",
-)
-def q_mixture_budget_fill(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.mixing import hash_budget_fill
-
-    return hash_budget_fill(_t(spark, sf, "documents"), 10_000, alpha=0.5)
-
-
 # ------------------------------------------------ r11 additions: LM scoring
 
 
@@ -5110,7 +3894,7 @@ def q_perplexity_buckets(spark: SparkSession, sf: str) -> DataFrame:
 
 # ------------------------------------------ r16 addition: X35 ensemble
 
-# The gopher voter CTEs reuse the gopher_quality_rules SQL constants
+# The gopher voter CTEs reuse the gopher SQL constants above
 # VERBATIM (gtok/gfeat names avoid colliding with _LR_FEATS's tok/feat);
 # the vote coalesces to 0 for NULL-text documents so an unscoreable doc
 # gets a definite 0 vote, mirroring operators/ensemble.py.
@@ -5509,7 +4293,7 @@ def q_xlingual_align(spark: SparkSession, sf: str) -> DataFrame:
     doc="X26 sequence-length-warmup curriculum packing (Li et al. 2022 "
     "sequence length warmup; Bengio et al. 2009 curricula): per-language "
     "short-first deterministic order (n_tokens, md5 salt tie-break, id), "
-    "then the pack_sequences cumsum locates each doc's first token — "
+    "then a packing cumsum locates each doc's first token — "
     "start_bin IS the training position of its context window "
     "(operators/chunking.curriculum_pack_order).",
 )
@@ -5913,10 +4697,9 @@ def q_shard_admission_index(spark: SparkSession, sf: str) -> DataFrame:
     FROM e
     """,
     doc="X33 leakage-safe temporal split CONSTRUCTION "
-    "(operators/splits.temporal_split — the builder complement of the "
-    "split_leakage detector; purged/embargoed time split per Lopez de "
-    "Prado 2018 ch.7 with warm/cold entity stratification): every event "
-    "assigned train / embargo / val_warm / val_cold against cutoff "
+    "(operators/splits.temporal_split — purged/embargoed time split per "
+    "Lopez de Prado 2018 ch.7 with warm/cold entity stratification): "
+    "every event assigned train / embargo / val_warm / val_cold against cutoff "
     "2024-01-25 + 1-day embargo.  The gate fixture drops pre-cutoff "
     "history for every 7th user so all four branches occur.  One "
     "map-side-combined distinct over pre-cutoff entities, one "
@@ -6102,10 +4885,9 @@ def q_fim_examples(spark: SparkSession, sf: str) -> DataFrame:
     "(operators/splits.decontaminated_holdout): select a deterministic "
     "10% holdout (portable md5 of 'holdout:'||doc_id — stable under "
     "corpus growth), then QUARANTINE any selected document sharing a "
-    "word 5-gram with the training side (decontam.gram_hits — the "
-    "identical machinery benchmark_decontam aggregates the other way, "
-    "reference-side grouping with broadcast_reference=False so AQE "
-    "sizes the join at runtime).  One row per document: train docs "
+    "word 5-gram with the training side (decontam.gram_hits, "
+    "reference-side grouping; AQE sizes the join at runtime).  One "
+    "row per document: train docs "
     "carry NULL stats (never gram-checked — the cost stays bounded by "
     "the holdout), clean eval docs 0, quarantined docs the contamination "
     "evidence.  Composes X29's gram machinery with X33's split "
@@ -6426,11 +5208,9 @@ GATE_PRIORITY: tuple[str, ...] = (
     # (test_instruct.py) plus plan pins (test_plans.py).  This window
     # also delivers the post-change driver rows the r18 verdict required
     # for the optimization rewrites: shard_admission_index,
-    # quality_ensemble, near_dup_clusters, minhash_est_calibration
-    # (gated carrier of the retired minhash_lsh_candidates +
-    # ngram_jaccard_near_dups evidence) and duplicated_span_stats
-    # (carrier of cross_doc_gram_overlap), plus simhash_near_dups and
-    # dsir_select ahead of their r19 optimization work.
+    # quality_ensemble, near_dup_clusters, minhash_est_calibration and
+    # duplicated_span_stats, plus simhash_near_dups and dsir_select ahead
+    # of their r19 optimization work.
     "preference_pairs",
     "best_of_n_examples",
     "shard_admission_index",
@@ -6545,395 +5325,26 @@ GATE_DEFERRED: tuple[str, ...] = (
     "quantity_percentiles",
 )
 
-# Retired from the GATE EXPORT only (r8, on the r7 verdict's advice): each
-# is a demo-duplicate of a sibling that carries the same SURVEY §2
-# operator's oracle evidence, and keeping all four would stretch the
-# rotation cycle to 3 rounds.  They stay REGISTERED — `list`, bench, and
-# the pytest suite still exercise them — but no longer consume snapshot
-# slots.  Coverage continuity: html_table_scan_datasource ≡ S1
-# (html_table_scan), dedup_survivors ≡ X10 (curation_pipeline),
-# token_counts ≡ X7 (token_count_histogram), dup_paragraph_docs ≡ X8
-# (paragraph_dup_stats, collapse_repeated_paras).
-GATE_RETIRED: tuple[str, ...] = (
-    "html_table_scan_datasource",
-    "dedup_survivors",
-    "token_counts",
-    "dup_paragraph_docs",
-    # r8, swapped for ivfpq_topk_adc: the norms projection is a strict
-    # subset of embedding_norm_outliers' (same exact micro-unit L1/L2
-    # arithmetic feeds its z-scores), which stays oracle-gated.
-    "embedding_norms",
-    # r9, swapped for the three new families (bloom/kmeans-refine/diff):
-    # cosine_topk_bruteforce is re-verified INSIDE ann_recall_eval and
-    # ivf_recall_eval every cycle (the brute-force pipeline is their
-    # ground-truth CTE); dedup_exact_groups' X1 evidence continues via
-    # dedup_content_hash + dedup_rate_by_source (same hash-groupBy path);
-    # doc_length_histogram is the same integer-log2 bucket construction
-    # as token_count_histogram, which stays gated.
-    "cosine_topk_bruteforce",
-    "dedup_exact_groups",
-    "doc_length_histogram",
-    # r9, swapped for quality_classifier_scores: minhash_lsh_candidates'
-    # banded signature join runs VERBATIM inside minhash_est_calibration
-    # (which persists the candidate pairs and differentials the MinHash
-    # estimate against exact Jaccard on them every cycle), so X2's LSH
-    # evidence continues oracle-gated through the calibration query.
-    "minhash_lsh_candidates",
-    # r9, swapped for bm25_ranking + temperature_mixture: both retired
-    # queries are strict sub-constructions of pipelines that stay gated —
-    # per_doc_term_counts is the per-(doc,term) tf aggregate that forms
-    # the first stage of bm25_ranking AND tfidf_top_terms;
-    # term_frequencies is the corpus-level explode+count whose shape is
-    # exercised by token_count_histogram, bigram_merge_candidates, and
-    # bm25_ranking's df stage (all oracle-gated).
-    "per_doc_term_counts",
-    "term_frequencies",
-    # r9, swapped for bigram_logprob_quality (deferred slot): every
-    # grouping set ROLLUP(a, b) produces is a strict subset of CUBE(a,
-    # b)'s, and cube_revenue stays oracle-gated over the same
-    # revenue-measure arithmetic; pivot_status_qty keeps the third
-    # GROUPING SETS shape gated.
-    "rollup_revenue",
-    # r10, swapped for bipartite_pagerank + tfidf_doc_pairs:
-    # lsh_topk_ann's bucket/top-k pipeline runs VERBATIM inside
-    # ann_recall_eval (ann_recall calls lsh_topk as its approximate side
-    # and differentials it against brute force every cycle), so X3's LSH
-    # serving evidence continues oracle-gated; repeat_vs_lapsed_custs'
-    # EXCEPT evidence continues via brands_never_shipped_1998 (same
-    # subtract path) and its intersect branch stays differential-tested
-    # by the pytest oracle-parity suite, which exercises ALL registered
-    # queries including retired ones.
-    "lsh_topk_ann",
-    "repeat_vs_lapsed_custs",
-    # r10, swapped for record_linkage + rp_recall_eval: centroid_assign
-    # runs VERBATIM inside semdedup_drop (semantic_dedup persists
-    # centroid_assign's (vec_id, pred_label) as its cluster table — the
-    # oracle differentials that assignment every cycle) and inside
-    # label_centroids/kmeans_refine_step's prototype math, all of which
-    # stay gated; ivf_topk_ann's full pipeline is nested as the approx
-    # CTE of ivf_recall_eval (same precedent as the r10 lsh_topk_ann
-    # retirement).  Both remain registered and oracle-parity-tested.
-    "centroid_assign",
-    "ivf_topk_ann",
-    # r10, swapped for dsir_select (X20): source_mix's per-source
-    # doc/token-share aggregate is the literal FIRST STAGE of the gated
-    # temperature_mixture (operators/mixing.temperature_mixture calls
-    # source_mix() and reweights its token_share column — the oracle
-    # differentials the whole composition every cycle); pack_efficiency
-    # is the aggregate companion of the gated pack_plan over the same
-    # token counts and shares its shard-hash construction with the gated
-    # training_order.  Both remain registered + oracle-parity-tested.
-    "source_mix",
-    "pack_efficiency",
-    # r11, swapped for trigram_backoff_quality + perplexity_buckets:
-    # unigram_logprob_quality's ENTIRE pipeline is the first stage of the
-    # gated perplexity_buckets (operators/text.perplexity_buckets calls
-    # unigram_logprob() and buckets its scores — the oracle differentials
-    # the whole composition every cycle); language_id's argmax projection
-    # runs VERBATIM inside the gated source_language_mix
-    # (text.source_language_mix joins language_id()'s predictions to the
-    # source column — same containment precedent).  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "unigram_logprob_quality",
-    "language_id",
-    # r11, swapped for hard_negative_mining + weighted_reservoir_sample:
-    # gopher_rules() runs VERBATIM as the first stage of the gated
-    # curation_pipeline (mixing.curation_pipeline filters on its `keep`
-    # flag — the composite of all four rule flags — and the oracle
-    # differentials the whole funnel every cycle); dedup_content_hash's
-    # normalized-sha256 hash-groupBy construction is inlined identically
-    # in the gated dedup_rate_by_source (same normalization expression,
-    # same min-id keeps, plus the per-source rollup).  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "gopher_quality_rules",
-    "dedup_content_hash",
-    # r11, swapped for unigram_lm_pieces (X24): validate_documents is a
-    # demo of the conditional-count aggregate shape (A2/A4 —
-    # count(when(...)) over one scan) whose oracle evidence continues
-    # through three gated queries built on the identical construction:
-    # quality_funnel (cumulative count_if funnel over the same documents
-    # table), priority_counts, and count_data_rows.  Remains registered,
-    # benched, and oracle-parity-tested.
-    "validate_documents",
-    # r12, swapped for xlingual_align (X25) + curriculum_packed_order
-    # (X26); both retirements cite r11-green rows per the retire-on-green
-    # guard.  approx_profile is the rows-only sketch demo (no oracle BY
-    # DESIGN — its r11 row is the expected no_oracle state); X6's actual
-    # oracle evidence is sketch_profile_check (the exact-twin
-    # differential), which sits in the r12 snapshot window and re-checks
-    # this round, and every sketch stays pytest-pinned (test_sketches.py)
-    # and benched.  salted_qty_by_flag's measures are the identical
-    # exact_sum arithmetic as the gated pricing_summary over the same
-    # lineitem grain (the salting is a two-phase re-aggregation of the
-    # same values — the r12 window re-checks pricing_summary); the
-    # salted plan SHAPE (partial salt-key combine, no skewed single
-    # reducer) stays pinned in test_plans.py.  Both remain registered,
-    # benched, and oracle-parity-tested.
-    "approx_profile",
-    "salted_qty_by_flag",
-    # r13, swapped for longest_dup_substring + tokenizer_fertility (the
-    # registry stays at 100 exported / 50-slot windows — the 2-round
-    # rotation holds): pq_topk_adc's PQ evidence continues oracle-gated
-    # through ivfpq_topk_adc, whose serve computes the SAME
-    # _pq_codes_expr encoding, _adc_table_expr query tables, and
-    # _adc_pair_dist m-lookup arithmetic (similarity.py) over the probed
-    # cells — exhaustive-ADC was the eval scaffold, IVF-PQ is the
-    # production composition; pack_plan's packing-cumsum evidence
-    # continues through curriculum_packed_order, which computes the
-    # IDENTICAL start_bin/start_offset window arithmetic
-    # (chunking.py pack_sequences ≡ the cumsum inside
-    # curriculum_pack_order) plus the ordering discipline, and the
-    # (lang, shard) strata shape stays pytest+scale-probed.
-    "pq_topk_adc",
-    "pack_plan",
-    # r14, swapped for memorization_profile + domain_mix_report (the
-    # registry stays at 100 exported / 50-slot windows — the 2-round
-    # rotation holds); both retirements cite r13-green rows per the
-    # retire-on-green guard.  ngram_jaccard_near_dups' end-to-end answer
-    # (near-dup pairs at exact n-gram Jaccard ≥ 0.7) stays oracle-gated
-    # VERBATIM through jaccard_ssjoin_near_dups — the two queries share
-    # the IDENTICAL oracle string (_JACCARD_07_SQL) and threshold, so the
-    # gate keeps checking the same expected rows every cycle — while its
-    # LSH candidate stage (lsh_candidate_pairs) and exact-Jaccard verify
-    # stage (exact_jaccard_pairs) both run inside the gated
-    # minhash_est_calibration, which persists the banded candidate pairs
-    # and differentials the MinHash estimate against exact string-shingle
-    # Jaccard on them (the accepted carrier of the r9
-    # minhash_lsh_candidates retirement).  cross_doc_gram_overlap's
-    # 8-gram explode and cross-doc duplicated-gram detection are the
-    # literal first two stages of the gated duplicated_span_stats (same
-    # hashed-8-gram occurrence table, same COUNT(DISTINCT doc) >= 2
-    # duplicated-gram set — span_stats adds the positional islands on
-    # top), and the same gram machinery now also feeds the gated
-    # memorization_profile and longest_dup_substring.  Both remain
-    # registered, benched, and oracle-parity-tested.
-    "ngram_jaccard_near_dups",
-    "cross_doc_gram_overlap",
-    # r15, swapped for hybrid_rrf_retrieval + shard_admission_report
-    # (retire-on-green: both r14 rows triple-green).
-    # collapse_repeated_paras' paragraph construction (_para_array over
-    # the shared tokenization) is the literal first stage of the gated
-    # paragraph_dup_stats (dedup.paragraph_table builds on the same
-    # _para_array — the oracle differentials that construction every
-    # cycle); its order-preserving prefix-filter projection stays pinned
-    # by pytest and the oracle-parity suite.  top_part_per_brand_maxby's
-    # per-brand argmax is the k=1 case of the gated
-    # top3_parts_per_brand's rank window (same grouping, same ordering,
-    # same tie-break), and its grouped-measure shape continues through
-    # the five gated Ext-A6 siblings (pricing_summary, cube_revenue,
-    # pivot_status_qty, quantity_percentiles, shipping_lead_time).
-    # Both remain registered, benched, and oracle-parity-tested.
-    "collapse_repeated_paras",
-    "top_part_per_brand_maxby",
-    # r15, swapped for temporal_split_events (retire-on-green: r14 row
-    # triple-green).  lexical_diversity is a pure tokens-projection —
-    # the same array-op construction the gated text_quality computes its
-    # per-doc token statistics with and the gated repetition_scores'
-    # plan class (projection-only, pinned) — and X7's corpus-statistics
-    # evidence continues via four gated carriers (token_count_histogram,
-    # bigram_merge_candidates, zipf_profile, bigram_logprob_quality).
-    # Remains registered, benched, and oracle-parity-tested.
-    "lexical_diversity",
-    # r16, swapped for shard_admission_index (retire-on-green: r15 row
-    # triple-green).  jaccard_ssjoin_near_dups is the exact
-    # set-similarity join — the deterministic baseline the LSH pipeline
-    # is measured against — and that exact-verification evidence runs
-    # inside the gated minhash_est_calibration EVERY cycle (it
-    # differentials the MinHash estimate against exact string-shingle
-    # Jaccard on the persisted banded pairs — the accepted carrier of
-    # the r9 minhash_lsh_candidates retirement), while the shingle
-    # inverted-index candidate machinery is the identical banded
-    # equi-join now gated twice over in shard_admission_report and
-    # shard_admission_index; the exact all-pairs SQL twin also remains
-    # benched as the r14-retired ngram_jaccard_near_dups.  Remains
-    # registered, benched, and oracle-parity-tested.
-    "jaccard_ssjoin_near_dups",
-    # r16, swapped for span_corruption_examples + fim_examples
-    # (retire-on-green: both r15 rows triple-green).
-    # mixture_budget_fill's hash-ordered greedy fill consumes the same
-    # importance-weight machinery as the gated dsir_select, and the
-    # mixing family keeps THREE gated oracle carriers (dsir_select,
-    # temperature_mixture, domain_mix_report); the exact integer fill
-    # arithmetic stays pinned by an independent pure-Python twin
-    # (test_mixing_decontam.test_budget_fill_matches_python_twin) plus
-    # the determinism/clamp tests.  grouped_pandas_price_stats is the
-    # grouped-applyInPandas Arrow demo: the Arrow/pandas boundary keeps
-    # four gated carriers (multimodal_features + video_frame_sample via
-    # mapInPandas, bpe_corpus_stats + unigram_lm_pieces via the
-    # Arrow-batched encode) and the grouped shape itself stays
-    # plan-pinned in test_plans.py and exercised by the stateful
-    # streaming + jobs suites.  Both remain registered, benched, and
-    # oracle-parity-tested.
-    "mixture_budget_fill",
-    "grouped_pandas_price_stats",
-    # r16, swapped for quality_ensemble (retire-on-green: r15 row
-    # triple-green).  revenue_rank_tiers' rank window is the same
-    # bounded_window construction as the gated top3_parts_per_brand
-    # (identical partitioning and tie-break discipline; rank vs
-    # row_number is the only delta) and its tier CASE is a pure
-    # post-window projection; §2.8's window evidence keeps three gated
-    # carriers (top3_parts_per_brand, cumulative_monthly_volume,
-    # daily_price_delta) plus the rank-over-histogram start_rank
-    # windows gated inside perplexity_buckets and quality_ensemble.
-    # Remains registered, benched, and oracle-parity-tested.
-    "revenue_rank_tiers",
-    # r17, swapped for decontam_holdout_split (X36, retire-on-green:
-    # r16 row triple-green).  benchmark_decontam's ENTIRE overlap
-    # machinery — the string-shingle explode, the distinct reference
-    # gram table, the equi-join on g — is the factored
-    # decontam.gram_hits, which the gated decontam_holdout_split runs
-    # VERBATIM every cycle (reference-side grouping instead of
-    # corpus-side is the only delta; the oracle differentials the whole
-    # construction at every gate round), and the gram machinery keeps a
-    # second gated carrier in memorization_profile (the positional
-    # variant over the same gram_hash_array convention).  Remains
-    # registered, benched, and oracle-parity-tested.
-    "benchmark_decontam",
-    # r17, swapped for instruction_pairs (X37, retire-on-green: r16 row
-    # triple-green).  split_leakage is the exact-content leak DETECTOR:
-    # a normalized-md5 content-hash groupBy whose construction class
-    # stays oracle-gated through dedup_rate_by_source (the identical
-    # normalize -> hash -> groupBy -> cross-source rollup shape, sha256
-    # flavor) and doc_fingerprints (the gated hash-projection carrier),
-    # while the LEAKAGE discipline itself is now gated at strictly
-    # stronger grain by decontam_holdout_split (gram-level
-    # cross-split contamination, not just byte-identical text).
-    # Remains registered, benched, and oracle-parity-tested.
-    "split_leakage",
-    # r18, swapped for preference_pairs (X38, retire-on-green: r17 row
-    # triple-green).  quality_classifier_scores' ENTIRE pipeline — the
-    # relational featurization, the one exact distributed LR gradient
-    # step in int64 micro-units, and the integer-dot-product sign test —
-    # is expressed as the shared _LR_FEATS/_LR_SCORE_CTES/_LR_DOT
-    # constants, which the gated quality_ensemble nests VERBATIM as its
-    # clf vote (the sharing was built at r16 precisely so the
-    # classifier's SQL twin cannot drift from the ensemble's) and which
-    # the newly-registered preference_pairs oracle nests the same way —
-    # so the featurize -> train-step -> score construction keeps TWO
-    # gated oracle carriers differentialing it every cycle.  Multi-step
-    # driver training (fit_lr), literal-weight serving, and the CLI
-    # quality-fit path stay pytest-pinned (test_classifier.py,
-    # test_cli.py).  Remains registered, benched, and
-    # oracle-parity-tested.
-    "quality_classifier_scores",
-    # r18, swapped for best_of_n_examples (X39, retire-on-green: r17
-    # row triple-green).  uniform_hash_sample is the pure
-    # salted-hash-threshold sample demo (one filter projection), and
-    # the deterministic hash-threshold SELECTION discipline it
-    # demonstrates — a salted portable hash compared against a fixed
-    # ppm threshold, NULL keys never selected — is now gated at
-    # strictly richer grain through decontam_holdout_split, whose
-    # hash-mode candidacy applies the identical construction class
-    # (pmod(portable_token_hash('holdout:'||id), 1e6) < ppm, the same
-    # engine-portable md5 machinery, differentialed by the oracle
-    # every cycle) and through its streaming serve (stream_holdout_tag
-    # computes the same candidacy in-plan).  The sampling family keeps
-    # two further gated carriers in weighted_reservoir_sample
-    # (deterministic seeded selection over the same documents grain)
-    # and stratified_sample_by_lang (deterministic content-hash-ranked
-    # quota).  Remains registered, benched, and oracle-parity-tested.
-    "uniform_hash_sample",
-)
-
-
-# Retirement ledger: name -> (round retired from the gate export, latest
-# round with a green driver gate row at retirement time).  The r11 verdict
-# ("What's wrong #3") asked that retirement discipline be retire-on-green:
-# a query retired at round N must have been green at N or N-1, so the
-# carrier-containment argument is made against fresh evidence, not stale
-# rows.  `_check_gate_lists` enforces that rule for every retirement from
-# r12 onward; pre-r12 entries are recorded faithfully (several were
-# retired on older evidence — the judge reviewed and accepted each
-# carrier rationale, so they are grandfathered, not rewritten).
-_RETIRE_ON_GREEN_SINCE = 12
-GATE_RETIREMENT_LEDGER: dict[str, tuple[int, int]] = {
-    "html_table_scan_datasource": (8, 6),
-    "dedup_survivors": (8, 6),
-    "token_counts": (8, 6),
-    "dup_paragraph_docs": (8, 6),
-    "embedding_norms": (8, 7),
-    "cosine_topk_bruteforce": (9, 7),
-    "dedup_exact_groups": (9, 7),
-    "doc_length_histogram": (9, 7),
-    "minhash_lsh_candidates": (9, 7),
-    "per_doc_term_counts": (9, 7),
-    "term_frequencies": (9, 7),
-    "rollup_revenue": (9, 6),
-    "lsh_topk_ann": (10, 6),
-    "repeat_vs_lapsed_custs": (10, 6),
-    "centroid_assign": (10, 6),
-    "ivf_topk_ann": (10, 6),
-    "source_mix": (10, 9),
-    "pack_efficiency": (10, 9),
-    "unigram_logprob_quality": (11, 10),
-    "language_id": (11, 10),
-    "gopher_quality_rules": (11, 9),
-    "dedup_content_hash": (11, 9),
-    "validate_documents": (11, 9),
-    "approx_profile": (12, 11),
-    "salted_qty_by_flag": (12, 11),
-    "pq_topk_adc": (13, 12),
-    "pack_plan": (13, 12),
-    "ngram_jaccard_near_dups": (14, 13),
-    "cross_doc_gram_overlap": (14, 13),
-    "collapse_repeated_paras": (15, 14),
-    "top_part_per_brand_maxby": (15, 14),
-    "lexical_diversity": (15, 14),
-    "jaccard_ssjoin_near_dups": (16, 15),
-    "mixture_budget_fill": (16, 15),
-    "grouped_pandas_price_stats": (16, 15),
-    "revenue_rank_tiers": (16, 15),
-    "benchmark_decontam": (17, 16),
-    "split_leakage": (17, 16),
-    "quality_classifier_scores": (18, 17),
-    "uniform_hash_sample": (18, 17),
-}
-
 
 def _check_gate_lists() -> None:
-    """Import-time structural guard (r6 review): the gate lists (plus the
-    retired list) must PARTITION the registry exactly.  A typo'd or
-    forgotten name would otherwise silently drop a query from the export
-    order and it would never get a correctness row (this bit round 5)."""
-    prio, deferred = set(GATE_PRIORITY), set(GATE_DEFERRED)
-    retired, reg = set(GATE_RETIRED), set(REGISTRY)
-    for a, b, la, lb in (
-        (prio, deferred, "GATE_PRIORITY", "GATE_DEFERRED"),
-        (prio, retired, "GATE_PRIORITY", "GATE_RETIRED"),
-        (deferred, retired, "GATE_DEFERRED", "GATE_RETIRED"),
-    ):
-        overlap = a & b
-        if overlap:
-            raise KeyError(f"queries in both {la} and {lb}: {sorted(overlap)}")
-    unknown = (prio | deferred | retired) - reg
+    """Import-time structural guard (r6 review): the two gate lists must
+    PARTITION the registry exactly.  A typo'd or forgotten name would
+    otherwise silently drop a query from the export order and it would
+    never get a correctness row (this bit round 5)."""
+    prio, deferred, reg = set(GATE_PRIORITY), set(GATE_DEFERRED), set(REGISTRY)
+    overlap = prio & deferred
+    if overlap:
+        raise KeyError(
+            f"queries in both GATE_PRIORITY and GATE_DEFERRED: {sorted(overlap)}"
+        )
+    unknown = (prio | deferred) - reg
     if unknown:
         raise KeyError(f"gate window names missing from REGISTRY: {sorted(unknown)}")
-    unlisted = reg - prio - deferred - retired
+    unlisted = reg - prio - deferred
     if unlisted:
         raise KeyError(
             f"registered queries missing from the gate lists: {sorted(unlisted)}"
         )
-    # Retire-on-green (r11 verdict #3): every retired query must appear in
-    # the ledger, and any retirement from r12 onward must cite a green gate
-    # row from the retirement round or the round before it.
-    unledgered = retired - set(GATE_RETIREMENT_LEDGER)
-    if unledgered:
-        raise KeyError(
-            f"GATE_RETIRED entries missing from GATE_RETIREMENT_LEDGER: "
-            f"{sorted(unledgered)}"
-        )
-    phantom = set(GATE_RETIREMENT_LEDGER) - retired
-    if phantom:
-        raise KeyError(
-            f"GATE_RETIREMENT_LEDGER entries not in GATE_RETIRED: {sorted(phantom)}"
-        )
-    for name, (retired_round, last_green) in GATE_RETIREMENT_LEDGER.items():
-        if retired_round >= _RETIRE_ON_GREEN_SINCE and last_green < retired_round - 1:
-            raise ValueError(
-                f"stale retirement: {name!r} retired at r{retired_round} with "
-                f"latest green row r{last_green}; retire-on-green requires "
-                f"r{retired_round - 1} or newer"
-            )
 
 
 def _gate_order() -> list[str]:

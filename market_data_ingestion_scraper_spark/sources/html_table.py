@@ -242,78 +242,3 @@ def render_alltable(headers: list[str], rows: list[list[str]]) -> str:
         f"<tbody>{''.join(trs)}</tbody>"
         "</table></body></html>"
     )
-
-
-# ---------------------------------------------------------------------------
-# The same scan as a registered Spark 4 Python Data Source: after
-# ``spark.dataSource.register(HtmlTableDataSource)`` the reference's table
-# boundary is a first-class format —
-# ``spark.read.format("htmltable").options(...).load()`` — usable from SQL
-# and from any DataFrame pipeline with no helper import.  Semantics are
-# identical to :func:`read_html_tables` (same parser, same guards); the
-# unit of parallelism is again the file: ``partitions()`` lists the landed
-# pages on the driver (cheap — a directory listing, not a data read) and
-# each ``read()`` task parses exactly one page.
-
-import glob as _glob
-import json as _json
-
-from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-
-
-class _HtmlFilePartition(InputPartition):
-    def __init__(self, path: str) -> None:
-        self.path = path
-
-
-class HtmlTableReader(DataSourceReader):
-    def __init__(self, options) -> None:
-        self.path = options["path"]
-        self.headers = _json.loads(options["headers"])
-        self.columns = _json.loads(options.get("columns") or "null") or self.headers
-        self.mode = options.get("mode", "strict")
-        if self.mode not in ("strict", "union"):
-            raise ValueError(f"mode must be 'strict' or 'union', got {self.mode!r}")
-
-    def partitions(self):  # one task per landed page
-        pattern = os.path.join(self.path, "*.html")
-        return [_HtmlFilePartition(p) for p in sorted(_glob.glob(pattern))]
-
-    def read(self, partition):
-        with open(partition.path, encoding="utf-8", errors="replace") as f:
-            parsed = parse_alltable(f.read())
-        if parsed is None:
-            return
-        hdrs, rows = parsed
-        projected = _project_rows(hdrs, rows, self.headers, self.mode)
-        if projected is None:
-            return
-        fname = os.path.basename(partition.path)
-        for i, r in projected:
-            yield (*r, fname, i)
-
-
-class HtmlTableDataSource(DataSource):
-    """``format("htmltable")``: scan a directory of landed HTML pages into
-    string rows under the reference's table contract (S1 —
-    ``table_scraper.py:9-38``).  Options: ``path`` (directory), ``headers``
-    (JSON list of expected ``th.header`` texts — the schema rule), optional
-    ``columns`` (JSON list of output names), and optional ``mode``
-    (``strict`` default / ``union`` for by-name header-drift tolerance).
-    Output schema is all strings plus ``src_file``/``row_idx`` lineage,
-    exactly like :func:`read_html_tables`."""
-
-    @classmethod
-    def name(cls) -> str:
-        return "htmltable"
-
-    def schema(self) -> str:
-        headers = _json.loads(self.options["headers"])
-        cols = _json.loads(self.options.get("columns") or "null") or headers
-        return (
-            ", ".join(f"`{c}` string" for c in cols)
-            + ", src_file string, row_idx long"
-        )
-
-    def reader(self, schema) -> HtmlTableReader:
-        return HtmlTableReader(self.options)

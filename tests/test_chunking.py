@@ -1,5 +1,5 @@
 """Chunking / sequence-packing operator tests: window boundaries,
-overlap arithmetic, empty-document behavior, packing offsets."""
+overlap arithmetic, empty-document behavior, packing validation."""
 
 from __future__ import annotations
 
@@ -7,7 +7,7 @@ import pytest
 
 from market_data_ingestion_scraper_spark.operators.chunking import (
     chunk_documents,
-    pack_sequences,
+    curriculum_pack_order,
 )
 
 
@@ -46,39 +46,14 @@ def test_chunk_overlap_validation():
         chunk_documents(None, 100, 100)
 
 
-def test_pack_sequences_offsets(spark):
-    # tokens: doc1=3, doc2=5, doc3=2 in one stratum; ctx=4
-    docs = spark.createDataFrame(
-        [
-            (1, "en", "one two three"),
-            (2, "en", "a b c d e"),
-            (3, "en", "x y"),
-            (4, "fr", "un deux trois quatre cinq"),
-        ],
-        "doc_id long, lang string, text string",
-    )
-    out = {
-        r["doc_id"]: (r["n_tokens"], r["start_bin"], r["start_offset"])
-        for r in pack_sequences(docs, 4, "lang").collect()
-    }
-    assert out[1] == (3, 0, 0)  # starts the stream
-    assert out[2] == (5, 0, 3)  # straddles bins 0->1
-    assert out[3] == (2, 2, 0)  # cum_before=8 -> bin 2 exactly
-    assert out[4] == (5, 0, 0)  # fr stratum packs independently
-
-
 def test_pack_ctx_tokens_validation(spark):
     """r13 review: ctx_tokens < 1 must refuse loudly — under non-ANSI SQL
     a zero divisor yields NULL bins, an all-null pack order that looks
     successfully built."""
-    from market_data_ingestion_scraper_spark.operators.chunking import (
-        curriculum_pack_order,
-    )
-
     docs = spark.createDataFrame(
         [(1, "a b c", "en")], "doc_id long, text string, lang string"
     )
     with pytest.raises(ValueError, match="ctx_tokens"):
-        pack_sequences(docs, 0)
+        curriculum_pack_order(docs, 0)
     with pytest.raises(ValueError, match="ctx_tokens"):
         curriculum_pack_order(docs, -5)

@@ -51,11 +51,6 @@ def test_cluster_reps_cover_planted_fixture(spark, sf_smoke):
 
 def test_sampling_is_partition_invariant(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents")
-    a = {r["doc_id"] for r in S.uniform_hash_sample(docs, 100_000).collect()}
-    b = {r["doc_id"] for r in
-         S.uniform_hash_sample(docs.repartition(13), 100_000).collect()}
-    assert a == b and 0 < len(a) < docs.count()  # same rows, any layout
-
     sa = {(r["doc_id"], r["sample_rank"])
           for r in S.stratified_sample(docs, "lang", 5).collect()}
     sb = {(r["doc_id"], r["sample_rank"])
@@ -63,31 +58,6 @@ def test_sampling_is_partition_invariant(spark, sf_smoke):
     assert sa == sb
     n_langs = docs.select("lang").distinct().count()
     assert len(sa) == 5 * n_langs  # exact quota per stratum
-
-
-def test_uniform_sample_rate_bounds(spark, sf_smoke):
-    import pytest
-
-    docs = load_table(spark, sf_smoke, "documents")
-    n = docs.count()
-    # rate 1e6 keeps every non-null key (sentinel threshold 'g')
-    assert S.uniform_hash_sample(docs, 1_000_000).count() == n
-    assert S.uniform_hash_sample(docs, 0).count() == 0
-    with pytest.raises(ValueError):
-        S.uniform_hash_sample(docs, 1_000_001)
-    with pytest.raises(ValueError):
-        S.uniform_hash_sample(docs, -1)
-    # NULL keys never sample — at ANY rate, including 1e6 (one code path;
-    # previously the 1e6 short-circuit returned null-key rows that every
-    # lower rate dropped)
-    withnull = spark.createDataFrame(
-        [(1,), (2,), (None,)], "doc_id bigint"
-    )
-    assert S.uniform_hash_sample(withnull, 1_000_000).count() == 2
-    kept_ids = {
-        r["doc_id"] for r in S.uniform_hash_sample(withnull, 1_000_000).collect()
-    }
-    assert kept_ids == {1, 2}
 
 
 def test_repetition_scores_edges(spark):
@@ -172,25 +142,6 @@ def test_label_centroids_array_form(spark):
     assert out[8]["n_vecs"] == 1 and out[8]["centroid"] == [10.0, 20.0, 30.0]
 
 
-def test_collapse_repeated_paragraphs_keeps_first_occurrence(spark):
-    # doc 1: paragraphs [A, B, A] (k=2 tokens each) -> A B kept, second A
-    # dropped; doc 2: no repeats -> untouched.  Hash must equal the hash
-    # of the first-occurrence-order rejoin, not a sorted/set order.
-    docs = spark.createDataFrame(
-        [
-            (1, "aa bb cc dd aa bb"),
-            (2, "aa bb cc dd ee ff"),
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in D.collapse_repeated_paragraphs(docs, k=2).collect()}
-    assert out[1]["n_paras"] == 3 and out[1]["n_kept"] == 2
-    assert out[2]["n_paras"] == 3 and out[2]["n_kept"] == 3
-    import hashlib
-
-    assert out[1]["clean_hash"] == hashlib.md5(b"aa bb\ncc dd").hexdigest()
-
-
 def test_paragraph_dup_stats_counts_planted_dup(spark):
     # two identical docs of 2 paragraphs + one unique doc: 6 instances,
     # 4 distinct, 4 instances belong to repeated paragraphs
@@ -203,18 +154,6 @@ def test_paragraph_dup_stats_counts_planted_dup(spark):
     assert row["n_distinct_paragraphs"] == 4
     assert row["n_dup_instances"] == 4
     assert abs(row["dup_ratio"] - round(4 / 6, 6)) < 1e-9
-
-
-def test_dup_paragraph_docs_cross_doc_only(spark):
-    # doc 3 repeats a paragraph INTERNALLY but shares nothing across docs
-    # -> excluded; docs 1 and 2 share one paragraph -> included
-    docs = spark.createDataFrame(
-        [(1, "a b c d"), (2, "a b e f"), (3, "q r q r")],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in D.dup_paragraph_docs(docs, k=2).collect()}
-    assert set(out) == {1, 2}
-    assert out[1]["n_dup_paras"] == 1 and out[1]["n_paras"] == 2
 
 
 def test_bigram_merges_rank_and_tiebreak(spark):
@@ -247,16 +186,6 @@ def test_centroid_assign_recovers_planted_labels(spark):
     )
     out = {r["vec_id"]: r["pred_label"] for r in centroid_assign(emb).collect()}
     assert out == {1: 0, 2: 0, 3: 1, 4: 1}
-
-
-def test_token_counts_bpe_proxy(spark):
-    # "internationalization" = 20 chars -> ceil(20/4) = 5 BPE-ish tokens
-    docs = spark.createDataFrame(
-        [(1, "internationalization is fun")], "doc_id long, text string"
-    )
-    row = T.token_counts(docs).collect()[0]
-    assert row["n_words"] == 3
-    assert row["n_bpe_tokens"] == 5 + 1 + 1
 
 
 def test_near_dup_clusters_methods_agree(spark):
@@ -347,34 +276,6 @@ def test_clustering_loop_releases_checkpoint_storage(spark):
     D._star_components(pairs, max_iter=25, stats=s_stats).collect()
     assert s_stats["converged"]
     assert census() - before <= 3, (before, census(), s_stats)
-
-
-def test_approx_profile_within_sketch_error_bounds(spark):
-    # the rows-only sketch query gets hard local evidence: HLL++ distinct
-    # counts within its published ~2.3% default rsd (allow 4 sigma), and
-    # approx percentiles bracketed by nearby exact percentiles
-    from market_data_ingestion_scraper_spark.queries import REGISTRY
-
-    sf = "/root/testdata/sf0.001"
-    row = REGISTRY["approx_profile"].fn(spark, sf).collect()[0]
-    li = load_table(spark, sf, "lineitem")
-    exact_parts = li.select("l_partkey").distinct().count()
-    exact_orders = li.select("l_orderkey").distinct().count()
-    assert abs(row["approx_parts"] - exact_parts) <= 0.1 * exact_parts
-    assert abs(row["approx_orders"] - exact_orders) <= 0.1 * exact_orders
-    lo, hi = [
-        r[0]
-        for r in li.selectExpr(
-            "percentile(l_extendedprice, 0.40)"
-        ).collect()
-    ], [
-        r[0]
-        for r in li.selectExpr(
-            "percentile(l_extendedprice, 0.60)"
-        ).collect()
-    ]
-    assert lo[0] <= row["price_p50"] <= hi[0]
-    assert row["price_p50"] <= row["price_p95"] <= row["price_p99"]
 
 
 def _wrs_twin(rows, n, seed="wrs-v1"):

@@ -105,67 +105,3 @@ def test_union_mode_accepts_header_variants(spark, tmp_path):
     assert {(r["K"], r["V"], r["W"]) for r in strict.collect()} == {
         ("1", "one", "uno")
     }
-
-
-def test_union_mode_datasource_matches_helper(spark, tmp_path):
-    import json
-
-    from market_data_ingestion_scraper_spark.sources.html_table import (
-        HtmlTableDataSource,
-    )
-
-    (tmp_path / "full.html").write_text(
-        render_alltable(["K", "V"], [["1", "one"]])
-    )
-    (tmp_path / "variant.html").write_text(render_alltable(["V"], [["solo"]]))
-    spark.dataSource.register(HtmlTableDataSource)
-    df = (
-        spark.read.format("htmltable")
-        .option("path", str(tmp_path))
-        .option("headers", json.dumps(["K", "V"]))
-        .option("mode", "union")
-        .load()
-    )
-    got = {tuple(r) for r in df.select("K", "V").collect()}
-    want = {
-        tuple(r)
-        for r in read_html_tables(
-            spark, str(tmp_path), ["K", "V"], mode="union"
-        ).select("K", "V").collect()
-    }
-    assert got == want == {("1", "one"), (None, "solo")}
-
-
-def test_datasource_format_matches_mapinpandas_path(spark, tmp_path):
-    import json
-
-    from market_data_ingestion_scraper_spark.sources.html_table import (
-        HtmlTableDataSource,
-    )
-
-    (tmp_path / "good.html").write_text(
-        render_alltable(["K", "V"], [["1", "one"], ["2", "two"]])
-    )
-    (tmp_path / "foreign.html").write_text(render_alltable(["X"], [["zzz"]]))
-    (tmp_path / "ragged.html").write_text(
-        render_alltable(["K", "V"], [["3", "three"], ["4"]])
-    )
-    spark.dataSource.register(HtmlTableDataSource)
-    df = (
-        spark.read.format("htmltable")
-        .option("path", str(tmp_path))
-        .option("headers", json.dumps(["K", "V"]))
-        .option("columns", json.dumps(["k", "v"]))
-        .load()
-    )
-    assert df.columns == ["k", "v", "src_file", "row_idx"]
-    got = {tuple(r) for r in df.collect()}
-    want = {
-        tuple(r)
-        for r in read_html_tables(
-            spark, str(tmp_path), ["K", "V"], columns=["k", "v"]
-        ).collect()
-    }
-    assert got == want and len(got) == 3
-    # parallelism unit is the file: one input partition per landed page
-    assert df.rdd.getNumPartitions() == 3

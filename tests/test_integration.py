@@ -16,7 +16,9 @@ from market_data_ingestion_scraper_spark.operators.dedup import (
     dedup_survivors,
     strip_duplicated_spans,
 )
-from market_data_ingestion_scraper_spark.operators.chunking import pack_sequences
+from market_data_ingestion_scraper_spark.operators.chunking import (
+    curriculum_pack_order,
+)
 from market_data_ingestion_scraper_spark.operators.mixing import training_order
 from market_data_ingestion_scraper_spark.operators.text import gopher_rules
 from market_data_ingestion_scraper_spark.sources import load_table
@@ -69,9 +71,8 @@ def test_full_training_corpus_pipeline(spark, sf_smoke, tmp_path):
     )
     assert bad.count() == 0
 
-    # 6. pack plan over the survivors: every doc placed exactly once,
-    # bins dense within each stratum
-    plan = pack_sequences(surv, ctx_tokens=512, strata_cols="lang")
+    # 6. pack plan over the survivors: every doc placed exactly once
+    plan = curriculum_pack_order(surv, ctx_tokens=512, strata_cols="lang")
     assert plan.count() == n_surv
     assert plan.select("doc_id").distinct().count() == n_surv
 

@@ -60,47 +60,6 @@ def test_observed_count_rides_action(spark, sf_smoke):
     assert obs.get["n_rows"] == 200
 
 
-def test_salted_group_sum_matches_plain(spark, sf_smoke):
-    li = load_table(spark, sf_smoke, "lineitem")
-    plain = {
-        r["l_returnflag"]: r["s"]
-        for r in li.groupBy("l_returnflag")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(18,2)")).cast("double").alias("s"))
-        .collect()
-    }
-    salted = {
-        r["l_returnflag"]: r["s"]
-        for r in K.salted_group_sum(li, "l_returnflag", "l_quantity", "s").collect()
-    }
-    assert salted == plain  # bit-identical: decimal partials are exact
-
-
-def test_grouped_pandas_udaf_matches_builtin(spark, sf_smoke):
-    """applyInPandas weighted-average equals the built-in expression within
-    float tolerance (pandas sums in arrival order; exactness is the decimal
-    path's job — this is the escape-hatch API)."""
-    from market_data_ingestion_scraper_spark.queries import REGISTRY
-
-    got = {
-        r["p_brand"]: r["weighted_avg_price"]
-        for r in REGISTRY["grouped_pandas_price_stats"].fn(spark, sf_smoke).collect()
-    }
-    li = load_table(spark, sf_smoke, "lineitem").withColumnRenamed("l_partkey", "p_partkey")
-    part = load_table(spark, sf_smoke, "part")
-    want = {
-        r["p_brand"]: r["w"]
-        for r in li.join(F.broadcast(part), "p_partkey")
-        .groupBy("p_brand")
-        .agg(
-            (F.sum(F.col("l_extendedprice") * F.col("l_quantity")) / F.sum("l_quantity")).alias("w")
-        )
-        .collect()
-    }
-    assert set(got) == set(want)
-    for b in got:
-        assert abs(got[b] - want[b]) < 1e-6 * max(1.0, abs(want[b]))
-
-
 def test_salted_broadcast_left_matches_plain(spark, sf_smoke):
     li = load_table(spark, sf_smoke, "lineitem").withColumnRenamed("l_partkey", "p_partkey")
     part = load_table(spark, sf_smoke, "part")

@@ -1,44 +1,17 @@
-"""Mixing/decontamination operator tests: broadcast plan shape,
-determinism under repartitioning, salt redraw, funnel monotonicity."""
+"""Mixing operator tests: broadcast plan shape, determinism under
+repartitioning, salt redraw, funnel monotonicity."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from market_data_ingestion_scraper_spark.operators.decontam import decontaminate
 from market_data_ingestion_scraper_spark.operators.mixing import (
+    budget_fill_docs,
     quality_funnel,
     source_mix,
     training_order,
 )
 from market_data_ingestion_scraper_spark.sources import load_table
-
-
-def test_decontaminate_flags_overlap_only(spark):
-    docs = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta"),
-            (2, "totally different words nothing shared here at all"),
-        ],
-        "doc_id long, text string",
-    )
-    bench = spark.createDataFrame(
-        [(100, "alpha beta gamma delta epsilon completely new tail")],
-        "bench_id long, text string",
-    )
-    out = {r["doc_id"]: r["n_hit_grams"] for r in
-           decontaminate(docs, bench, k=5).collect()}
-    assert out == {1: 1}  # only the shared 5-gram prefix hits
-
-
-def test_decontaminate_broadcasts_benchmark(spark, sf_smoke):
-    docs = load_table(spark, sf_smoke, "documents")
-    bench = docs.filter(F.col("doc_id") % 29 == 0).select(
-        F.col("doc_id").alias("bench_id"), "text"
-    )
-    corpus = docs.filter(F.col("doc_id") % 29 != 0)
-    plan = decontaminate(corpus, bench, k=5)._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in plan  # corpus side must not shuffle for the join
 
 
 def test_training_order_is_partition_invariant(spark, sf_smoke):
@@ -137,17 +110,6 @@ def test_training_order_parallelism_exceeds_shard_count(spark, sf_smoke):
         ).distinct().count()
     )
     assert distinct_bkts > 8 * 8, distinct_bkts
-
-
-def test_pack_plan_strata_scale_with_shards(spark, sf_smoke):
-    """The registered pack plan strates by (lang, shard): stratum count —
-    the packing parallelism — must far exceed the language count."""
-    from market_data_ingestion_scraper_spark.queries import REGISTRY
-
-    df = REGISTRY["pack_plan"].fn(spark, sf_smoke)
-    strata = df.select("lang", "shard").distinct().count()
-    langs = df.select("lang").distinct().count()
-    assert strata > 3 * langs, (strata, langs)
 
 
 def test_temperature_mixture_flattens_toward_tail(spark):
@@ -256,9 +218,10 @@ def test_bm25_topk_is_take_ordered_not_global_window(spark, sf_smoke):
 # ---------------------------------------------------------------- budget fill
 
 def _py_budget_fill(rows, total_budget, seed="fill"):
-    """Independent pure-Python twin of hash_budget_fill (alpha=0.5):
-    integer-ppm mixture math (half-up DIV identities), half-up round-6
-    sqrt, portable md5 uniforms, hash-threshold selection."""
+    """Independent pure-Python twin of budget_fill_docs (alpha=0.5),
+    reported per source as (n_docs, n_tokens): integer-ppm mixture math
+    (half-up DIV identities), half-up round-6 sqrt, portable md5
+    uniforms, hash-threshold selection."""
     import hashlib
     import math
 
@@ -285,16 +248,13 @@ def _py_budget_fill(rows, total_budget, seed="fill"):
     w_ppm = {s: half_up_ppm(v, tot_sm) for s, v in sm.items()}
     budget = {s: (p * total_budget + 500_000) // 1_000_000 for s, p in w_ppm.items()}
     frac = {s: min(1.0, budget[s] / per[s]) for s in per}
-    out = {s: [budget[s], 0, 0] for s in per}
+    out = {}
     for doc_id, src, text in rows:
         h = int(hashlib.md5(f"{seed}:{doc_id}".encode()).hexdigest()[:8], 16) % P
         if (h + 1) / (P + 1) < frac[src]:
-            out[src][1] += 1
-            out[src][2] += len(toks(text))
-    return {
-        s: (b, nd, nt, rnd6(nt / b) if b > 0 else None)
-        for s, (b, nd, nt) in out.items()
-    }
+            nd, nt = out.get(src, (0, 0))
+            out[src] = (nd + 1, nt + len(toks(text)))
+    return out
 
 
 _FILL_ROWS = [
@@ -305,53 +265,43 @@ _FILL_ROWS = [
 ]
 
 
-def test_budget_fill_matches_python_twin(spark):
-    from market_data_ingestion_scraper_spark.operators.mixing import (
-        hash_budget_fill,
-    )
-
-    docs = spark.createDataFrame(_FILL_ROWS, "doc_id long, source string, text string")
-    got = {
-        r["source"]: (
-            r["budget_tokens"],
-            r["n_docs"],
-            r["n_tokens"],
-            r["fill_rate"],
+def _fill_report(selected):
+    """Per-source (n_docs, n_tokens) of a budget_fill_docs selection."""
+    return {
+        r["source"]: (r["n_docs"], r["n_tokens"])
+        for r in selected.groupBy("source")
+        .agg(
+            F.count(F.lit(1)).alias("n_docs"),
+            F.sum("_n_tok").cast("long").alias("n_tokens"),
         )
-        for r in hash_budget_fill(docs, 300).collect()
+        .collect()
     }
+
+
+def test_budget_fill_matches_python_twin(spark):
+    docs = spark.createDataFrame(_FILL_ROWS, "doc_id long, source string, text string")
+    got = _fill_report(budget_fill_docs(docs, 300))
     assert got == _py_budget_fill(_FILL_ROWS, 300)
     # partial selection on the heavy source (threshold actually bites)
-    assert 0 < got["big"][1] < 40
+    assert 0 < got["big"][0] < 40
 
 
 def test_budget_fill_deterministic_and_clamped(spark):
-    from market_data_ingestion_scraper_spark.operators.mixing import (
-        hash_budget_fill,
-    )
-
     docs = spark.createDataFrame(_FILL_ROWS, "doc_id long, source string, text string")
-    a = sorted(tuple(r) for r in hash_budget_fill(docs, 300).collect())
+    a = sorted(r["doc_id"] for r in budget_fill_docs(docs, 300).collect())
     b = sorted(
-        tuple(r) for r in hash_budget_fill(docs.repartition(7), 300).collect()
+        r["doc_id"] for r in budget_fill_docs(docs.repartition(7), 300).collect()
     )
     assert a == b
     # a budget far above the corpus clamps frac to 1: everything selected
-    full = {
-        r["source"]: r["n_docs"]
-        for r in hash_budget_fill(docs, 10_000_000).collect()
-    }
-    assert full == {"big": 40, "small": 6}
+    full = _fill_report(budget_fill_docs(docs, 10_000_000))
+    assert {s: nd for s, (nd, _) in full.items()} == {"big": 40, "small": 6}
 
 
 def test_budget_fill_plan_broadcasts_cutoffs(spark):
-    from market_data_ingestion_scraper_spark.operators.mixing import (
-        hash_budget_fill,
-    )
-
     docs = spark.createDataFrame(_FILL_ROWS, "doc_id long, source string, text string")
     plan = (
-        hash_budget_fill(docs, 300)
+        budget_fill_docs(docs, 300)
         ._jdf.queryExecution()
         .executedPlan()
         .toString()
@@ -368,11 +318,6 @@ def test_budget_fill_degenerate_sources(spark):
     source must not NULL-propagate into frac=1 (whole source selected on
     a zero budget); NULL-source docs are excluded from budgets AND
     selection."""
-    from market_data_ingestion_scraper_spark.operators.mixing import (
-        budget_fill_docs,
-        hash_budget_fill,
-    )
-
     rows = [
         (1, "good", "alpha beta gamma delta epsilon zeta"),
         (2, "good", "alpha beta gamma delta"),
@@ -382,11 +327,7 @@ def test_budget_fill_degenerate_sources(spark):
         (6, None, "some unattributed text here"),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, source string, text string")
-    rep = {r["source"]: tuple(r)[1:] for r in hash_budget_fill(docs, 100).collect()}
-    # no crash; degenerate sources report zero selection on a zero-ish budget
-    assert rep["empty"][1:3] == (0, 0)
-    assert rep["nulls"][1:3] == (0, 0)
-    assert None not in rep  # NULL source consumes no budget row
-    assert rep["good"][1] > 0  # the real source still fills
-    sel = budget_fill_docs(docs, 100).collect()
-    assert {r["doc_id"] for r in sel} <= {1, 2}
+    # no crash; degenerate and NULL sources select nothing, the real
+    # source still fills
+    sel = {r["doc_id"] for r in budget_fill_docs(docs, 100).collect()}
+    assert sel and sel <= {1, 2}

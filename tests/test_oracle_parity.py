@@ -31,7 +31,7 @@ def test_matches_oracle(spark, name):
 
 def test_all_queries_return_rows(spark):
     """Every registered query composes and computes at the smoke SF.
-    The 140 counts are independent jobs, so they run 4-wide from a
+    The 100 counts are independent jobs, so they run 4-wide from a
     thread pool (r19 suite-time fix; py4j calls release the GIL and the
     scheduler back-fills executor cores across jobs — 107 s → ~35 s).
     Each worker owns a contiguous registry slice and runs it in order,
@@ -67,16 +67,12 @@ def test_gate_window_ordering():
     from market_data_ingestion_scraper_spark.queries import (
         GATE_DEFERRED,
         GATE_PRIORITY,
-        GATE_RETIRED,
         oracle_sql,
         queries,
     )
 
     names = list(queries())
-    assert sorted(names + list(GATE_RETIRED)) == sorted(
-        REGISTRY
-    ), "export + retired must cover REGISTRY"
-    assert not set(GATE_RETIRED) & set(names), "retired queries must not export"
+    assert sorted(names) == sorted(REGISTRY), "export must cover REGISTRY"
     window = set(names[:50])
     missing = set(GATE_PRIORITY) - window
     assert not missing, f"priority queries outside gate window: {missing}"
@@ -85,31 +81,3 @@ def test_gate_window_ordering():
     # and the parked list fills the next round's window exactly
     assert len(GATE_PRIORITY) == 50 and len(GATE_DEFERRED) == 50
     assert set(oracle_sql()) <= set(names)
-
-
-def test_retire_on_green_guard():
-    """r11 verdict #3: a query retired at round N must cite a green gate
-    row from N or N-1 (enforced from r12 onward).  The import-time guard
-    must fail fast on a stale future retirement and pass on the current
-    ledger."""
-    from unittest import mock
-
-    from market_data_ingestion_scraper_spark import queries as q
-
-    # every retired query is ledgered, no phantoms, and the guard passes
-    assert set(q.GATE_RETIREMENT_LEDGER) == set(q.GATE_RETIRED)
-    q._check_gate_lists()
-
-    # a hypothetical r12+ retirement with r10-vintage evidence must raise
-    name = q.GATE_RETIRED[0]
-    stale = dict(q.GATE_RETIREMENT_LEDGER)
-    stale[name] = (12, 10)
-    with mock.patch.object(q, "GATE_RETIREMENT_LEDGER", stale):
-        with pytest.raises(ValueError, match="stale retirement"):
-            q._check_gate_lists()
-
-    # ...while r12-retired-with-r11-green passes
-    fresh = dict(q.GATE_RETIREMENT_LEDGER)
-    fresh[name] = (12, 11)
-    with mock.patch.object(q, "GATE_RETIREMENT_LEDGER", fresh):
-        q._check_gate_lists()

@@ -11,6 +11,7 @@ from market_data_ingestion_scraper_spark.plans import (
     plan_report,
 )
 from market_data_ingestion_scraper_spark.queries import REGISTRY
+from market_data_ingestion_scraper_spark.sources import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -68,7 +69,12 @@ def test_events_scan_prunes_unused_columns(spark):
 
 
 def test_minhash_lsh_has_no_cartesian(spark):
-    txt = explain_str(_plan(spark, "minhash_lsh_candidates"))
+    from market_data_ingestion_scraper_spark.operators.dedup import (
+        lsh_candidate_pairs,
+    )
+
+    docs = load_table(spark, SF, "documents")
+    txt = explain_str(lsh_candidate_pairs(docs, portable=True))
     assert "CartesianProduct" not in txt
     assert "BroadcastNestedLoopJoin" not in txt
 
@@ -92,21 +98,16 @@ def test_minhash_table_fused_no_object_agg_no_sentinel_join(spark):
         with aqe_disabled(spark):
             txt = explain_str(minhash_table(docs, portable=portable))
         assert "ObjectHashAggregate" not in txt, txt
-        # formatted output prints each scan twice (tree + detail); the
-        # sentinel join's third corpus scan would read 6 (portable:
-        # occurrences + vocab + sentinel) / 4 (xxhash: shingles +
-        # sentinel) mentions.  Bounded with <= (r18 advisor): an exact
-        # == would break on a Spark version that adds a detail section
-        # to plan printing without any real plan regression; the
-        # sentinel-join regression this pin exists for would push the
-        # count ABOVE the bound.
+        # formatted output prints each scan twice (tree + detail); a
+        # sentinel join's second corpus scan would read 4 mentions.
+        # Bounded with <= (r18 advisor): an exact == would break on a
+        # Spark version that adds a detail section to plan printing
+        # without any real plan regression; the sentinel-join regression
+        # this pin exists for would push the count ABOVE the bound.
         n_scans = txt.count("Scan parquet")
-        if portable:
-            assert 1 <= n_scans <= 4, txt  # occurrences + vocab only
-        else:
-            assert 1 <= n_scans <= 2, txt  # one scan, period
-            # xxhash path: explode_outer + one groupBy, no join at all
-            assert "Join" not in txt, txt
+        assert 1 <= n_scans <= 2, txt  # one scan, both hash flavors
+        # explode_outer + one groupBy, no join at all
+        assert "Join" not in txt, txt
 
 
 def test_embedding_near_dups_has_no_cartesian(spark):
@@ -161,30 +162,18 @@ def test_doc_chunks_is_shuffle_free(spark):
     assert rep.n_broadcast_joins == 0 and rep.n_sortmerge_joins == 0
 
 
-def test_pack_plan_shuffles_once_on_stratum(spark):
-    # one window pass per stratum: exactly one exchange (the stratum key)
-    txt = explain_str(_plan(spark, "pack_plan"), "simple")
-    assert txt.count("Exchange") == 1, txt
-
-
 def test_source_mix_single_scan_single_grouped_shuffle(spark):
     # per-source agg then totals via a window over the post-agg rows: the
     # corpus is scanned ONCE (the broadcast-total alternative evaluates the
     # aggregate subtree twice), with map-side partial aggregation
-    txt = explain_str(_plan(spark, "source_mix"), "simple")
+    from market_data_ingestion_scraper_spark.operators.mixing import source_mix
+
+    df = source_mix(load_table(spark, SF, "documents"))
+    txt = explain_str(df, "simple")
     assert txt.count("FileScan parquet") == 1, txt
     assert "Join" not in txt, txt
-    rep = plan_report(_plan(spark, "source_mix"))
+    rep = plan_report(df)
     assert rep.has_partial_agg, rep.summary()
-
-
-def test_decontam_corpus_never_shuffles_for_the_join(spark):
-    # the benchmark gram table broadcasts; the only exchange left is the
-    # final per-doc aggregation of matched rows
-    with aqe_disabled(spark):
-        rep = plan_report(_plan(spark, "benchmark_decontam"))
-    assert rep.n_broadcast_joins >= 1, rep.summary()
-    assert rep.n_sortmerge_joins == 0, rep.summary()
 
 
 def test_quality_funnel_single_pass(spark):
@@ -200,8 +189,12 @@ def test_quality_funnel_single_pass(spark):
 
 
 def _shuffle_count(spark, name):
+    return _shuffles(spark, _plan(spark, name))
+
+
+def _shuffles(spark, df):
     with aqe_disabled(spark):
-        txt = explain_str(_plan(spark, name), "simple")
+        txt = explain_str(df, "simple")
     return (
         txt.count("Exchange") - txt.count("BroadcastExchange"),
         txt.count("BroadcastExchange"),
@@ -218,23 +211,28 @@ def test_repetition_scores_is_projection_only(spark):
     assert n_bcast == 0 and "Join" not in txt, txt
 
 
-def test_decontam_broadcasts_grams_corpus_never_shuffles(spark):
-    # benchmark grams broadcast (corpus side never hash-partitions for the
-    # join); remaining exchanges are the spread + the bench-side distinct +
-    # the final per-doc aggregation — all bounded, none corpus-wide.
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "benchmark_decontam")
-    assert n_bcast >= 1, txt
-    assert "SortMergeJoin" not in txt and "CartesianProduct" not in txt, txt
-    assert n_shuffle <= 4, txt
-
-
 def test_lsh_topk_all_joins_hash_or_broadcast(spark):
     # multi-table LSH: the candidate/scoring joins are equi-joins
     # (bucket/id) with the query side broadcast; corpus-side work never
     # sorts.  The ONLY nested-loop joins allowed are the deliberate 1-row
     # weight broadcasts inside bucket_table (IdentityBroadcastMode — a
     # constant-size literal carrier, not a data join).
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "lsh_topk_ann")
+    from pyspark.sql import functions as F
+
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        bucket_table,
+        lsh_topk,
+    )
+
+    emb = load_table(spark, SF, "embeddings")
+    buckets = bucket_table(
+        emb, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
+        seed_base=1000,
+    )
+    df = lsh_topk(
+        emb, emb.filter(F.col("vec_id") < 8), k=5, corpus_buckets=buckets
+    )
+    n_shuffle, n_bcast, txt = _shuffles(spark, df)
     assert n_bcast >= 2, txt
     assert "SortMergeJoin" not in txt, txt
     assert "CartesianProduct" not in txt, txt
@@ -275,17 +273,11 @@ def test_near_dup_clusters_no_cartesian_anywhere(spark):
     assert "BroadcastNestedLoopJoin" not in txt, txt
 
 
-def test_grouped_pandas_broadcasts_dim_single_group_shuffle(spark):
-    # UDAF path: part dimension broadcasts into the fact scan; exactly one
-    # hash exchange (the group key) feeds FlatMapGroupsInPandas.
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "grouped_pandas_price_stats")
-    assert n_bcast == 1 and "SortMergeJoin" not in txt, txt
-    assert n_shuffle == 1 and "FlatMapGroupsInPandas" in txt, txt
-
-
 def test_gopher_rules_is_projection_only(spark):
     # per-row rule flags: no exchange, no join — scan-bandwidth-bound
-    rep = plan_report(_plan(spark, "gopher_quality_rules"))
+    from market_data_ingestion_scraper_spark.operators.text import gopher_rules
+
+    rep = plan_report(gopher_rules(load_table(spark, SF, "documents")))
     assert rep.n_shuffles == 0, rep.summary()
     assert rep.n_broadcast_joins == 0 and rep.n_sortmerge_joins == 0
 
@@ -311,20 +303,6 @@ def test_label_centroids_single_agg_shuffle(spark):
     assert rep.has_partial_agg, rep.summary()
 
 
-def test_token_counts_is_projection_only(spark):
-    # word + BPE-proxy counts: per-row projection, no exchange, no join
-    rep = plan_report(_plan(spark, "token_counts"))
-    assert rep.n_shuffles == 0, rep.summary()
-    assert rep.n_broadcast_joins == 0 and rep.n_sortmerge_joins == 0
-
-
-def test_collapse_paras_is_projection_only(spark):
-    # intra-doc paragraph dedup: indexed array filter per row, no exchange
-    rep = plan_report(_plan(spark, "collapse_repeated_paras"))
-    assert rep.n_shuffles == 0, rep.summary()
-    assert rep.n_broadcast_joins == 0 and rep.n_sortmerge_joins == 0
-
-
 def test_paragraph_dup_stats_two_bounded_exchanges(spark):
     # explode -> groupBy(para_hash) (map-side combined, bounded by distinct
     # paragraphs) -> single-row global agg; no join anywhere
@@ -334,19 +312,13 @@ def test_paragraph_dup_stats_two_bounded_exchanges(spark):
     assert plan_report(_plan(spark, "paragraph_dup_stats")).has_partial_agg
 
 
-def test_dup_paragraph_docs_hash_joins_only(spark):
-    # paragraph table joined to its per-hash doc counts: every join must
-    # stay an equi-join on the 16-byte hash; paragraph text never shuffles
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "dup_paragraph_docs")
-    assert "CartesianProduct" not in txt, txt
-    assert "BroadcastNestedLoopJoin" not in txt, txt
-    assert n_shuffle <= 5, txt
-
-
 def test_unigram_logprob_no_cartesian_corpus(spark):
     # unigram LM scoring: the only nested-loop is the deliberate 1-row
     # grand-total broadcast; the term join and aggregations are hash-based
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "unigram_logprob_quality")
+    from market_data_ingestion_scraper_spark.operators.text import unigram_logprob
+
+    df = unigram_logprob(load_table(spark, SF, "documents"))
+    n_shuffle, _, txt = _shuffles(spark, df)
     assert "CartesianProduct" not in txt, txt
     assert txt.count("BroadcastNestedLoopJoin") <= 1, txt
     assert n_shuffle <= 6, txt
@@ -355,10 +327,15 @@ def test_unigram_logprob_no_cartesian_corpus(spark):
 def test_centroid_assign_broadcasts_prototypes(spark):
     # the |labels| x dims prototype table broadcasts; the corpus explode
     # never sort-merges, and per-(vec,label) partial agg runs map-side
-    n_shuffle, n_bcast, txt = _shuffle_count(spark, "centroid_assign")
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        centroid_assign,
+    )
+
+    df = centroid_assign(load_table(spark, SF, "embeddings"))
+    _, n_bcast, txt = _shuffles(spark, df)
     assert n_bcast >= 1, txt
     assert "SortMergeJoin" not in txt and "CartesianProduct" not in txt, txt
-    rep = plan_report(_plan(spark, "centroid_assign"))
+    rep = plan_report(df)
     assert rep.has_partial_agg, rep.summary()
 
 
@@ -421,26 +398,15 @@ def test_semdedup_no_cartesian_cluster_keyed_pairs(spark):
     assert "BroadcastNestedLoopJoin" not in txt, txt
 
 
-def test_gram_overlap_inverted_index_equi_join(spark):
-    # exact-substring overlap: docs meet ONLY through the shared-gram
-    # equi-join (inverted index); no cartesian, grouped pair counts
-    # partial-aggregate before the shuffle.
-    with aqe_disabled(spark):
-        rep = plan_report(_plan(spark, "cross_doc_gram_overlap"))
-    assert rep.n_broadcast_joins + rep.n_sortmerge_joins >= 1, rep.summary()
-    txt = explain_str(_plan(spark, "cross_doc_gram_overlap"), "simple")
-    assert "CartesianProduct" not in txt and "BroadcastNestedLoopJoin" not in txt
-
 def test_histograms_single_agg_shuffle(spark):
     # log2-bucket histograms: one partial-agged groupBy shuffle plus the
     # single-partition window for the share — bounded by bucket count.
-    for name in ("doc_length_histogram", "token_count_histogram"):
-        with aqe_disabled(spark):
-            rep = plan_report(_plan(spark, name))
-        assert rep.has_partial_agg, (name, rep.summary())
-        # bucket groupBy + single-partition share window (+ plan-internal
-        # reuse) — all carrying <= ~40 bucket rows after partial agg
-        assert rep.n_shuffles <= 4, (name, rep.summary())
+    with aqe_disabled(spark):
+        rep = plan_report(_plan(spark, "token_count_histogram"))
+    assert rep.has_partial_agg, rep.summary()
+    # bucket groupBy + single-partition share window (+ plan-internal
+    # reuse) — all carrying <= ~40 bucket rows after partial agg
+    assert rep.n_shuffles <= 4, rep.summary()
 
 
 def test_duplicated_span_stats_plan_shape(spark):
@@ -453,24 +419,6 @@ def test_duplicated_span_stats_plan_shape(spark):
     assert "BroadcastNestedLoopJoin" not in txt
     rep = plan_report(df)
     assert rep.has_partial_agg, rep.summary()
-
-
-def test_pq_topk_adc_gate_plan_shape(spark):
-    """The PQ gate query end-to-end (r10 expression form): the corpus
-    side reads the encoded codes in ONE pass with no exchange before
-    scoring — the per-query ADC tables ride a broadcast (the
-    brute_force_topk exhaustive-scan shape), and the only shuffle is the
-    per-query top-k window."""
-    df = _plan(spark, "pq_topk_adc")
-    txt = explain_str(df)
-    assert "CartesianProduct" not in txt
-    assert "SortMergeJoin" not in txt
-    with aqe_disabled(spark):
-        rep = plan_report(_plan(spark, "pq_topk_adc"))
-    # the deliberate spread-scan repartition, the broadcast build of the
-    # |Q|-row ADC side, and the top-k window hash partition — nothing
-    # else may exchange (the r8 relational form had 6+)
-    assert rep.n_shuffles <= 4, rep.summary()
 
 
 def test_ivfpq_gate_plan_shape(spark):
@@ -665,7 +613,7 @@ def test_registered_queries_emit_no_windowexec_warn(spark):
     sf = "/root/testdata/sf0.001"
     offenders = []
 
-    # Planning the 140 physical plans is independent driver-side work —
+    # Planning the 100 physical plans is independent driver-side work —
     # run it 4-wide (r19 suite-time fix: py4j releases the GIL and
     # Catalyst plans distinct queries concurrently; 45 s → ~15 s).
     # Plans are BUILT in the pool too: eager-checkpoint operators run
@@ -759,7 +707,7 @@ def test_longest_dup_probe_and_stats_scan_bound(spark):
 
 
 def test_memorization_profile_plan_shape(spark):
-    """The eval-vs-corpus overlap must keep the decontaminate asymmetry:
+    """The eval-vs-corpus overlap must keep the broadcast asymmetry:
     the corpus gram explode meets the tiny eval gram set through
     BROADCAST hash joins only (both directions), never a cartesian/BNL,
     and the matched-gram distinct combines map-side before its shuffle."""

@@ -15,7 +15,6 @@ import re
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from market_data_ingestion_scraper_spark.functions import sanitize_name
 
@@ -118,31 +117,6 @@ def test_dedup_survivors_partition_of_corpus(spark, texts):
     dropped = {r["doc_b"] for r in pairs}
     assert surv == set(range(len(texts))) - dropped
     assert 0 not in dropped  # doc 0 can never have a smaller near-dup
-
-
-@_slow
-@given(texts=st.lists(doc_text, min_size=1, max_size=12))
-def test_collapse_never_grows_and_counts_match(spark, texts):
-    from market_data_ingestion_scraper_spark.operators.dedup import (
-        collapse_repeated_paragraphs,
-        paragraph_table,
-    )
-
-    docs = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-    )
-    rows = collapse_repeated_paragraphs(docs, k=3).collect()
-    per_doc_distinct = {
-        r["doc_id"]: r["cnt"]
-        for r in paragraph_table(docs, k=3)
-        .groupBy("doc_id")
-        .agg(F.countDistinct("para_hash").alias("cnt"))
-        .collect()
-    }
-    for r in rows:
-        assert 0 <= r["n_kept"] <= r["n_paras"]
-        # first-occurrence collapse keeps exactly one copy per distinct para
-        assert r["n_kept"] == per_doc_distinct.get(r["doc_id"], 0)
 
 
 @_slow
