@@ -334,12 +334,9 @@ def run_corpus_ingestion(
         )
 
         if bloom is not None:
-            # localCheckpoint cuts lineage back to the bloom parquet so
-            # overwriting the same path below is safe (never lazily read
-            # a path mid-overwrite); the table is n_shards small rows
-            updated = extend_hash_bloom(
-                bloom, deduped.select("content_hash")
-            ).localCheckpoint(eager=True)
+            # write_hash_bloom checkpoints before it writes, so
+            # overwriting the path this table was loaded from is safe
+            updated = extend_hash_bloom(bloom, deduped.select("content_hash"))
         else:
             # first run (or rebuild after a lost sidecar): cover ALL of
             # gold, not just this batch — the ⊇ invariant must hold
@@ -435,17 +432,24 @@ def run_training_data_build(
     exactly with the gated per-stage operators run independently
     (pytest-pinned).
 
-    Scale shape: nothing here adds to the composed operators' own
-    shapes — the only job-level choices are persisting the two frames
-    multiple stages read (the slim deduped corpus and the assignment)
-    and the deterministic single-file-per-output layout of
-    :func:`~.sources.writer.write_gold` (swap ``files_per_partition``
-    up for real corpora)."""
+    Scale shape: every stage runs once.  Only the frames several
+    stages read are persisted — the slim keep-id frame of the quality
+    gate (the ensemble then runs once, for the kept count and for the
+    dedup), the slim deduped corpus, the assignment and each side's
+    distinct gram hashes (sized and bloom-built from one explode) — and
+    all of them are released when the build returns or raises.  The
+    example counters are ``DataFrame.observe`` riders on the writes
+    themselves, so no output is read back to be counted, and
+    :func:`~.operators.bloom.write_hash_bloom` materializes each sidecar
+    once for its checks and its write.  Outputs use the deterministic
+    single-file-per-output layout of :func:`~.sources.writer.write_gold`
+    (swap ``files_per_partition`` up for real corpora)."""
     import os
 
     from .operators.corruption import fim_examples, span_corruption_examples
     from .operators.dedup import content_hash_dedup
     from .operators.ensemble import quality_ensemble
+    from .operators.metrics import observed_count
     from .operators.splits import decontaminated_holdout
     from .sources.writer import write_gold
 
@@ -455,107 +459,130 @@ def run_training_data_build(
         raise ValueError(f"documents parquet missing columns: {need}")
     n_input = docs.count()
 
-    kept = (
-        quality_ensemble(docs, min_votes=min_votes)
-        .where(F.col("keep"))
-        .select("doc_id")
-    )
-    gated = docs.join(kept, "doc_id", "left_semi")
-    n_kept = gated.count()
+    cached: list[DataFrame] = []
 
-    groups = content_hash_dedup(gated.withColumn("content_hash", _content_hash()))
-    deduped = gated.join(
-        groups.select(F.col("keep_doc_id").alias("doc_id")),
-        "doc_id",
-        "left_semi",
-    ).persist()
-    n_deduped = deduped.count()
+    def persisted(df: DataFrame) -> DataFrame:
+        cached.append(df.persist())
+        return df
 
-    assignment = decontaminated_holdout(
-        deduped.select("doc_id", "text"),
-        holdout_ppm=holdout_ppm,
-        k=k,
-        min_hits=min_hits,
-    ).persist()
-    split_counts = {
-        r["split"]: r["n"]
-        for r in assignment.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    sides = {
-        side: deduped.join(
-            assignment.where(F.col("split") == side).select("doc_id"),
-            "doc_id",
-            "left_semi",
+    try:
+        kept = persisted(
+            quality_ensemble(docs, min_votes=min_votes)
+            .where(F.col("keep"))
+            .select("doc_id")
         )
-        for side in ("train", "eval")
-    }
-    write_gold(
-        sides["eval"], os.path.join(out_root, "eval_docs"),
-        sort_within=("doc_id",),
-    )
-    # the split artifact carries its authoritative parameter sidecar
-    # (above all the gram width k) so assignment= reuse, sidecar builds,
-    # and the streaming tagger can refuse a mismatch
-    from .operators.splits import write_holdout_split
+        gated = docs.join(kept, "doc_id", "left_semi")
+        n_kept = gated.count()
 
-    split_meta = write_holdout_split(
-        assignment, os.path.join(out_root, "split_assignment"),
-        k=k, holdout_ppm=holdout_ppm, min_hits=min_hits,
-    )
-    train = sides["train"]
-    span = span_corruption_examples(train)
-    write_gold(span, os.path.join(out_root, "train_span"), sort_within=("doc_id",))
-    fim = fim_examples(train)
-    write_gold(fim, os.path.join(out_root, "train_fim"), sort_within=("doc_id",))
-    counters = {
-        "n_input": n_input,
-        "n_quality_kept": n_kept,
-        "n_deduped": n_deduped,
-        "n_train": split_counts.get("train", 0),
-        "n_eval": split_counts.get("eval", 0),
-        "n_quarantine": split_counts.get("quarantine", 0),
-        "n_span_examples": spark.read.parquet(
-            os.path.join(out_root, "train_span")
-        ).count(),
-        "n_fim_examples": spark.read.parquet(
-            os.path.join(out_root, "train_fim")
-        ).count(),
-    }
-    if "source" in docs.columns:
-        from .operators.instruct import instruction_pairs
+        groups = content_hash_dedup(
+            gated.withColumn("content_hash", _content_hash())
+        )
+        deduped = persisted(
+            gated.join(
+                groups.select(F.col("keep_doc_id").alias("doc_id")),
+                "doc_id",
+                "left_semi",
+            )
+        )
+        n_deduped = deduped.count()
 
-        pairs = instruction_pairs(train)
+        assignment = persisted(
+            decontaminated_holdout(
+                deduped.select("doc_id", "text"),
+                holdout_ppm=holdout_ppm,
+                k=k,
+                min_hits=min_hits,
+            )
+        )
+        split_counts = {
+            r["split"]: r["n"]
+            for r in assignment.groupBy("split")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
+        }
+        sides = {
+            side: deduped.join(
+                assignment.where(F.col("split") == side).select("doc_id"),
+                "doc_id",
+                "left_semi",
+            )
+            for side in ("train", "eval")
+        }
         write_gold(
-            pairs, os.path.join(out_root, "train_instruct"),
-            sort_within=("prompt_doc_id",),
+            sides["eval"], os.path.join(out_root, "eval_docs"),
+            sort_within=("doc_id",),
         )
-        counters["n_instruct_examples"] = spark.read.parquet(
-            os.path.join(out_root, "train_instruct")
-        ).count()
-    if write_sidecars:
-        from .operators.bloom import build_hash_bloom, write_hash_bloom
-        from .operators.splits import HoldoutSplit, holdout_gram_hashes
+        # the split artifact carries its authoritative parameter sidecar
+        # (above all the gram width k) so assignment= reuse, sidecar
+        # builds, and the streaming tagger can refuse a mismatch
+        from .operators.splits import write_holdout_split
 
-        handle = HoldoutSplit(assignment, split_meta)
-        for side in ("train", "eval"):
-            # the handle derives (and would refuse a conflicting) gram
-            # width, so the sidecar cannot be built at the wrong k
-            grams = holdout_gram_hashes(
-                deduped.select("doc_id", "text"), side,
-                assignment=handle,
+        split_meta = write_holdout_split(
+            assignment, os.path.join(out_root, "split_assignment"),
+            k=k, holdout_ppm=holdout_ppm, min_hits=min_hits,
+        )
+        train = sides["train"]
+        span, span_obs = observed_count(
+            span_corruption_examples(train), "n_span_examples"
+        )
+        write_gold(
+            span, os.path.join(out_root, "train_span"), sort_within=("doc_id",)
+        )
+        fim, fim_obs = observed_count(fim_examples(train), "n_fim_examples")
+        write_gold(
+            fim, os.path.join(out_root, "train_fim"), sort_within=("doc_id",)
+        )
+        counters = {
+            "n_input": n_input,
+            "n_quality_kept": n_kept,
+            "n_deduped": n_deduped,
+            "n_train": split_counts.get("train", 0),
+            "n_eval": split_counts.get("eval", 0),
+            "n_quarantine": split_counts.get("quarantine", 0),
+            "n_span_examples": span_obs.get["n_rows"],
+            "n_fim_examples": fim_obs.get["n_rows"],
+        }
+        if "source" in docs.columns:
+            from .operators.instruct import instruction_pairs
+
+            pairs, pairs_obs = observed_count(
+                instruction_pairs(train), "n_instruct_examples"
             )
-            # size to the documented ~10 bits/key rule from the side's
-            # distinct-gram count (next power of two, floor 2^20)
-            n_grams = grams.count()
-            n_bits = 1 << max(20, (n_grams * 10 // 16).bit_length())
-            write_hash_bloom(
-                build_hash_bloom(grams, "gram_hash", n_bits=n_bits),
-                os.path.join(out_root, f"sidecar_{side}_grams"),
-                hash_col="gram_hash",
-                extra_meta={"k": int(k), "holdout_ppm": int(holdout_ppm),
-                            "min_hits": int(min_hits)},
+            write_gold(
+                pairs, os.path.join(out_root, "train_instruct"),
+                sort_within=("prompt_doc_id",),
             )
-            counters[f"n_{side}_grams"] = n_grams
-    deduped.unpersist()
-    assignment.unpersist()
+            counters["n_instruct_examples"] = pairs_obs.get["n_rows"]
+        if write_sidecars:
+            from .operators.bloom import build_hash_bloom, write_hash_bloom
+            from .operators.splits import HoldoutSplit, holdout_gram_hashes
+
+            handle = HoldoutSplit(assignment, split_meta)
+            for side in ("train", "eval"):
+                # the handle derives (and would refuse a conflicting)
+                # gram width, so the sidecar cannot be built at the
+                # wrong k; persisted so the count that sizes the bloom
+                # and the bloom build share one gram explode
+                grams = persisted(
+                    holdout_gram_hashes(
+                        deduped.select("doc_id", "text"), side,
+                        assignment=handle,
+                    )
+                )
+                # size to the documented ~10 bits/key rule from the
+                # side's distinct-gram count (next power of two, floor
+                # 2^20)
+                n_grams = grams.count()
+                n_bits = 1 << max(20, (n_grams * 10 // 16).bit_length())
+                write_hash_bloom(
+                    build_hash_bloom(grams, "gram_hash", n_bits=n_bits),
+                    os.path.join(out_root, f"sidecar_{side}_grams"),
+                    hash_col="gram_hash",
+                    extra_meta={"k": int(k), "holdout_ppm": int(holdout_ppm),
+                                "min_hits": int(min_hits)},
+                )
+                counters[f"n_{side}_grams"] = n_grams
+    finally:
+        for df in cached:
+            df.unpersist()
     return counters

@@ -64,6 +64,16 @@ from pyspark.sql.types import (
     StructType,
 )
 
+# This module ships a module-level kernel (_set_bits) inside its pandas
+# UDFs; pickle the module by value so executor workers never need the
+# repo package importable (see operators/multimodal.py for the full
+# rationale).
+import sys as _sys
+
+from pyspark import cloudpickle as _cloudpickle
+
+_cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+
 #: sidecar recording build provenance next to the bloom parquet
 BLOOM_SIDECAR = "_bloom.json"
 
@@ -109,40 +119,45 @@ def bit_positions(hash_col, n_bits: int, n_hashes: int):
 def _position_rows(
     hashes: DataFrame, n_shards: int, n_bits: int, n_hashes: int
 ) -> DataFrame:
-    """(shard, pos) rows for every distinct non-null hash — the sparse
-    form of the filter.  distinct() bounds the frame by n_shards x n_bits
-    regardless of corpus size (it can never exceed the bit population)."""
-    return (
-        hashes.where(F.col("_h").isNotNull())
-        .select(
-            shard_of(F.col("_h"), n_shards).alias("shard"),
-            F.explode(bit_positions(F.col("_h"), n_bits, n_hashes)).alias(
-                "pos"
-            ),
-        )
-        .distinct()
+    """(shard, pos) rows, k per non-null hash row — the sparse form of
+    the filter.  No distinct, on the hashes or on the positions: setting
+    a bit twice is harmless and :func:`_set_bits` counts n_set as the
+    popcount, so a repeated position (two hashes colliding, or a hash
+    given twice) changes nothing but the row count, and the build skips
+    an aggregate shuffle.  The jobs pass distinct hashes anyway (gold's
+    deduped content hashes, a split side's distinct grams)."""
+    return hashes.where(F.col("_h").isNotNull()).select(
+        shard_of(F.col("_h"), n_shards).alias("shard"),
+        F.explode(bit_positions(F.col("_h"), n_bits, n_hashes)).alias("pos"),
     )
 
 
-def _seeded_position_rows(
-    hashes: DataFrame, n_shards: int, n_bits: int, n_hashes: int
-) -> DataFrame:
-    """_position_rows plus one synthetic (shard, pos=-1) row for EVERY
-    shard 0..n_shards-1.  The seed rows guarantee the built table is
-    DENSE — one row per shard even when no hash routes there — which is
-    what makes deriving n_shards as max(shard)+1 sound.  A sparse build
-    (small corpus, shard 3 of 4 unoccupied) would otherwise make every
-    later probe/extend route hashes with a DIFFERENT modulus than the
-    build, producing exactly the false negatives the filter promises
-    are impossible (r9 review finding).  Bit-setters filter pos >= 0,
-    so seeds never set bits and never count toward n_set."""
-    spark = hashes.sparkSession
-    seeds = spark.range(n_shards).select(
-        F.col("id").cast("int").alias("shard"),
-        F.lit(-1).cast("long").alias("pos"),
-    )
-    return _position_rows(hashes, n_shards, n_bits, n_hashes).unionByName(
-        seeds
+def _set_bits(
+    shard: int, bitmap: bytes | None, pos: np.ndarray, n_bits: int,
+    n_hashes: int,
+) -> pd.DataFrame:
+    """The set-bits kernel build and extend share: OR positions ``pos``
+    (negative ones — the density seeds — are skipped) into ``bitmap``
+    (``None`` = all zero) and return the shard's one-row bloom frame.
+    Bit ``p`` lives in byte ``p >> 3`` at bit ``p & 7`` (little bit
+    order); n_set is the popcount, so it is exact whatever the
+    multiplicity of ``pos``."""
+    if bitmap is None:
+        bits = np.zeros(n_bits, dtype=bool)
+    else:
+        bits = np.unpackbits(
+            np.frombuffer(bitmap, dtype=np.uint8), count=n_bits,
+            bitorder="little",
+        ).view(bool)
+    bits[pos[pos >= 0]] = True
+    return pd.DataFrame(
+        {
+            "shard": [int(shard)],
+            "n_bits": [n_bits],
+            "n_hashes": [n_hashes],
+            "n_set": [int(np.count_nonzero(bits))],
+            "bitmap": [np.packbits(bits, bitorder="little").tobytes()],
+        }
     )
 
 
@@ -156,33 +171,30 @@ def build_hash_bloom(
     """Build the sharded bloom table from a hash column: one row per
     shard, (shard, n_bits, n_hashes, n_set, bitmap).
 
-    Plan: distinct hashes (map-side combined) → k portable positions each
-    → distinct (shard, pos) plus a seed row per shard (DENSE table — one
-    row for every shard 0..n_shards-1, occupied or not, so the
-    self-describing max(shard)+1 derivation is always the build count) →
-    groupBy(shard).applyInPandas sets bits into a numpy bitmap.  The
-    shuffle carries (int, long) pairs bounded by the bit population;
-    document text never moves.  Size n_bits ~10x the expected DISTINCT
-    hash count per shard for ~1% fpr at k=5."""
+    Plan: k portable (shard, pos) rows per hash (:func:`_position_rows`),
+    plus a seed row (shard, -1) per shard → ONE shuffle, by shard →
+    groupBy(shard).applyInPandas sets the bits into a numpy bitmap
+    (:func:`_set_bits`).  The seed rows make the table DENSE —
+    one row for every shard 0..n_shards-1, occupied or not — which is
+    what makes the self-describing max(shard)+1 derivation the build
+    count: a sparse build (small corpus, shard 3 of 4 unoccupied) would
+    make every later probe/extend route hashes with a DIFFERENT modulus
+    than the build, the false negatives the filter promises are
+    impossible (r9 review finding).  Seeds set no bit and never count
+    toward n_set.  The shuffle carries k (int, long) pairs per hash;
+    document text never moves.  Size n_bits ~10x the expected
+    DISTINCT hash count per shard for ~1% fpr at k=5."""
     nb, nh = int(n_bits), int(n_hashes)
-    pos = _seeded_position_rows(
-        df.select(F.col(hash_col).alias("_h")).distinct(), n_shards, nb, nh
+    seeds = df.sparkSession.range(n_shards).select(
+        F.col("id").cast("int").alias("shard"),
+        F.lit(-1).cast("long").alias("pos"),
     )
+    pos = _position_rows(
+        df.select(F.col(hash_col).alias("_h")), n_shards, nb, nh
+    ).unionByName(seeds)
 
     def set_bits(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
-        bm = np.zeros((nb + 7) // 8, dtype=np.uint8)
-        p = pdf["pos"].to_numpy(dtype=np.int64)
-        p = p[p >= 0]  # drop the density seed; it sets no bit
-        np.bitwise_or.at(bm, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "n_bits": [nb],
-                "n_hashes": [nh],
-                "n_set": [len(p)],
-                "bitmap": [bm.tobytes()],
-            }
-        )
+        return _set_bits(key[0], None, pdf["pos"].to_numpy(np.int64), nb, nh)
 
     return pos.groupBy("shard").applyInPandas(set_bits, _BLOOM_SCHEMA)
 
@@ -379,7 +391,7 @@ def extend_hash_bloom(
             "gapped tables cannot be extended at all, rebuild instead"
         )
     pos = _position_rows(
-        new_hashes.select(F.col(hash_col).alias("_h")).distinct(), ns, nb, nh
+        new_hashes.select(F.col(hash_col).alias("_h")), ns, nb, nh
     )
 
     def merge(
@@ -398,19 +410,9 @@ def extend_hash_bloom(
                 f"extend_hash_bloom: new positions touch shard {key[0]} "
                 "which has no bitmap row — gapped table cannot extend"
             )
-        bm = np.frombuffer(old["bitmap"].iloc[0], dtype=np.uint8).copy()
-        base = int(old["n_set"].iloc[0])
-        p = new_pos["pos"].to_numpy(dtype=np.int64)
-        was = ((bm[p >> 3] >> (p & 7).astype(np.uint8)) & 1).sum()
-        np.bitwise_or.at(bm, p >> 3, (1 << (p & 7)).astype(np.uint8))
-        return pd.DataFrame(
-            {
-                "shard": [int(key[0])],
-                "n_bits": [nb],
-                "n_hashes": [nh],
-                "n_set": [base + len(p) - int(was)],
-                "bitmap": [bm.tobytes()],
-            }
+        return _set_bits(
+            key[0], old["bitmap"].iloc[0], new_pos["pos"].to_numpy(np.int64),
+            nb, nh,
         )
 
     return (
@@ -430,7 +432,15 @@ def write_hash_bloom(
     per shard would be ideal; shard-count files via repartition keeps
     single small files without a driver collect.  ``extra_meta`` merges
     caller provenance into the sidecar (e.g. the gold row count the
-    filter covers, which ingest's staleness guard compares on load)."""
+    filter covers, which ingest's staleness guard compares on load).
+
+    The table is materialized ONCE, by an eager ``localCheckpoint``,
+    before anything reads it: the parameter checks and the write then
+    see the same rows, the build (gram explode, shuffle, bit setting)
+    runs one time instead of once per reader, and the lineage no longer
+    reads ``path`` — so extending a table loaded from ``path`` and
+    writing it back there never reads the path mid-overwrite."""
+    blooms = blooms.localCheckpoint(eager=True)
     ns, nb, nh = _bloom_params(blooms)
     blooms.repartition(ns, "shard").write.mode("overwrite").parquet(path)
     sidecar = {

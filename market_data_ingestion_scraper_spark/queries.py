@@ -2895,7 +2895,7 @@ def _bpe_reference_encoded_vocab(sf_dir: str) -> list[tuple[str, int]]:
         "    string_split_regex(lower(text), '[^a-z0-9]+'), t -> t <> ''))"
         "    AS w"
         f"  FROM read_parquet('{sf_dir}/documents.parquet')"
-        ") GROUP BY w"
+        ") GROUP BY w ORDER BY w"
     ).fetchall()
     con.close()
     assert len(vocab) < 100_000  # the Spark side's max_vocab cap is inert

@@ -427,3 +427,76 @@ def test_extend_refuses_gapped_table_even_with_n_shards(spark):
     assert [(r["shard"], bytes(r["bitmap"])) for r in a] == [
         (r["shard"], bytes(r["bitmap"])) for r in b
     ]
+
+
+def _twin_bloom(hashes, n_shards, n_bits, n_hashes):
+    """Pure-Python reference of the sharded bloom: shard = first 8 hex
+    chars of md5(h) mod n_shards (:func:`shard_of`), position_j = first
+    15 hex chars of md5(h ':' j) mod n_bits (:func:`bit_positions`), bit
+    p in byte p >> 3 at bit p & 7.  NULL hashes set nothing; every shard
+    gets a row.  Returns {shard: (bitmap bytes, n_set)}."""
+    import hashlib
+
+    def fold(s, n_hex):
+        return int(hashlib.md5(s.encode()).hexdigest()[:n_hex], 16)
+
+    bitmaps = {s: bytearray((n_bits + 7) // 8) for s in range(n_shards)}
+    for h in hashes:
+        if h is None:
+            continue
+        bm = bitmaps[fold(h, 8) % n_shards]
+        for j in range(n_hashes):
+            p = fold(f"{h}:{j}", 15) % n_bits
+            bm[p >> 3] |= 1 << (p & 7)
+    return {
+        s: (bytes(bm), sum(bin(b).count("1") for b in bm))
+        for s, bm in bitmaps.items()
+    }
+
+
+def _bloom_by_shard(blooms):
+    return {
+        r["shard"]: (bytes(r["bitmap"]), r["n_set"])
+        for r in blooms.collect()
+    }
+
+
+@pytest.mark.parametrize(
+    "n_shards,n_bits",
+    [
+        (2, 61),  # 60 hashes x 3 positions over 61 bits: collisions
+        (64, 1 << 10),  # sparse: most shards hold only their seed row
+    ],
+)
+def test_set_bits_kernel_matches_python_twin(spark, n_shards, n_bits):
+    """build_hash_bloom and extend_hash_bloom set exactly the twin's
+    bits, and n_set is the twin's popcount, per shard — with colliding
+    positions, a repeated hash, a NULL hash, and shards no hash routes
+    to (filled by the density seed alone)."""
+    import hashlib
+
+    def h(i):
+        return hashlib.sha256(str(i).encode()).hexdigest()
+
+    a = [h(i) for i in range(60)] + [h(0), None]
+    b = [h(i) for i in range(50, 90)] + [None]
+    n_hashes = 3
+
+    def frame(hs):
+        return spark.createDataFrame([(x,) for x in hs], "content_hash string")
+
+    want_a = _twin_bloom(a, n_shards, n_bits, n_hashes)
+    want_ab = _twin_bloom(a + b, n_shards, n_bits, n_hashes)
+    if n_bits == 61:
+        # the case is only meaningful if positions really collide, so a
+        # count of positions (not of set bits) would be wrong
+        assert sum(n for _, n in want_a.values()) < 60 * n_hashes
+    else:
+        assert any(n == 0 for _, n in want_a.values())
+
+    built = build_hash_bloom(
+        frame(a), n_shards=n_shards, n_bits=n_bits, n_hashes=n_hashes
+    ).cache()
+    assert _bloom_by_shard(built) == want_a
+    assert _bloom_by_shard(extend_hash_bloom(built, frame(b))) == want_ab
+    built.unpersist()

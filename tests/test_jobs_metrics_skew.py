@@ -100,6 +100,12 @@ def test_run_training_data_build_end_to_end(spark, tmp_path):
     assert c["n_span_examples"] == c["n_train"]
     assert c["n_fim_examples"] <= c["n_train"]
     assert 0 < c["n_instruct_examples"] <= c["n_train"] // 2 + 1
+    # the example counters are observed on the writes, not re-read: each
+    # must equal the row count of the output it counts
+    for key, sub in (("n_span_examples", "train_span"),
+                     ("n_fim_examples", "train_fim"),
+                     ("n_instruct_examples", "train_instruct")):
+        assert c[key] == spark.read.parquet(os.path.join(out1, sub)).count(), key
 
     # stage reconciliation: the written assignment equals the gated
     # operator run independently over the same deduped corpus
@@ -157,11 +163,56 @@ def test_run_training_data_build_end_to_end(spark, tmp_path):
         spark, docs_path, out2, write_sidecars=True
     ) == c
     for sub in ("eval_docs", "split_assignment", "train_span", "train_fim",
-                "train_instruct"):
+                "train_instruct", "sidecar_train_grams", "sidecar_eval_grams"):
         p1 = sorted(glob.glob(os.path.join(out1, sub, "part-*")))
         p2 = sorted(glob.glob(os.path.join(out2, sub, "part-*")))
-        assert len(p1) == len(p2) == 1, (sub, p1, p2)
-        assert open(p1[0], "rb").read() == open(p2[0], "rb").read(), sub
+        # a sidecar writes one file per non-empty shard partition
+        assert len(p1) == len(p2) >= 1, (sub, p1, p2)
+        if not sub.startswith("sidecar_"):
+            assert len(p1) == 1, (sub, p1)
+        for f1, f2 in zip(p1, p2):
+            assert open(f1, "rb").read() == open(f2, "rb").read(), (sub, f1)
+
+
+def _cache_manager_entries(spark) -> int:
+    """Number of frames in the session's cache manager (its private
+    ``cachedData`` sequence, read by reflection)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = next(
+        f for f in cm.getClass().getDeclaredFields()
+        if f.getName().endswith("cachedData")
+    )
+    field.setAccessible(True)
+    return field.get(cm).size()
+
+
+def test_run_training_data_build_releases_caches_when_a_stage_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A stage that raises must not leave the build's persisted frames
+    (keep ids, deduped corpus, assignment) cached in the session: after
+    a failed build the cache manager holds no more entries than after a
+    successful one."""
+    from market_data_ingestion_scraper_spark.jobs import (
+        run_training_data_build,
+    )
+    from market_data_ingestion_scraper_spark.operators import splits
+    from market_data_ingestion_scraper_spark.sources.tables import load_table
+
+    docs_path = str(tmp_path / "docs_in")
+    load_table(spark, "/root/testdata/sf0.001", "documents").select(
+        "doc_id", "text", "lang", "source"
+    ).write.parquet(docs_path)
+    run_training_data_build(spark, docs_path, str(tmp_path / "ok"))
+    after_ok = _cache_manager_entries(spark)
+
+    def fail(*args, **kwargs):
+        raise RuntimeError("split write failed")
+
+    monkeypatch.setattr(splits, "write_holdout_split", fail)
+    with pytest.raises(RuntimeError, match="split write failed"):
+        run_training_data_build(spark, docs_path, str(tmp_path / "failed"))
+    assert _cache_manager_entries(spark) <= after_ok
 
 
 def test_run_training_data_build_serve_handoff(spark, tmp_path):

@@ -319,3 +319,16 @@ def test_fertility_literal_wordless_policy_and_stream_filter(spark, tmp_path):
     )
     key = lambda df: sorted(map(tuple, df.collect()))
     assert key(out) == key(batch)
+
+
+def test_bpe_reference_vocab_is_sorted_by_word(sf_smoke):
+    """The reference vocabulary behind the tokenizer_fertility and
+    bpe_corpus_stats oracles comes back sorted by word, so their VALUES
+    literal — and the oracle text — is the same in every process."""
+    from market_data_ingestion_scraper_spark.queries import (
+        _bpe_reference_encoded_vocab,
+    )
+
+    words = [w for w, _ in _bpe_reference_encoded_vocab(sf_smoke)]
+    assert len(words) > 1 and words == sorted(words)
+    assert len(set(words)) == len(words)
