@@ -208,6 +208,13 @@ def run_corpus_ingestion(
     from .sources.jsonl import read_jsonl
     from .sources.writer import write_gold
 
+    if bloom_path is not None:
+        # before anything is read or written: the bloom sidecar goes
+        # through open(), and a URI path would read as "no sidecar yet"
+        # and fail only after gold was written
+        from .util import require_local_path
+
+        require_local_path(bloom_path)
     clean, quarantine = read_jsonl(spark, landing_path)
     clean = clean.withColumn("content_hash", _content_hash())
     groups = content_hash_dedup(clean).persist()

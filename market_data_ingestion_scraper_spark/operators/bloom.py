@@ -30,10 +30,18 @@ Design, Spark-first:
   (shard, position) integers and fixed-size bitmaps — never documents —
   and every batch is Arrow-transferred and vectorized.
 - The bloom table is SELF-DESCRIBING: each row carries (n_bits,
-  n_hashes) alongside the bitmap, and probes derive their hash
-  parameters from the table instead of trusting caller-supplied ints —
-  a parameter mismatch with a persisted artifact is therefore
-  impossible, not merely documented (the r8 AnnIndex lesson).
+  n_hashes) alongside the bitmap, and every reader derives its hash
+  parameters and its shard modulus (max(shard) + 1) from the table
+  instead of trusting caller-supplied ints — a parameter mismatch with
+  a persisted artifact is therefore impossible, not merely documented
+  (the r8 AnnIndex lesson).  One check,
+  :func:`bloom_params_from_rows`, refuses every table those rules cannot
+  read safely: empty, mixed parameters, duplicate shard rows, shard gaps.
+- Two probes, one spec: :func:`bloom_probe_hashes` tests a frame of
+  hashes in a cogrouped shuffle (the path for a bloom of any size);
+  :func:`bloom_closure_probe` collects a bounded bloom into a Python
+  closure for the streaming serve paths, which probe it per micro-batch
+  with no join.
 
 False-positive math (standard Bloom bound): with m bits, n keys, k
 hashes, fpr ≈ (1 - e^(-kn/m))^k; m/n = 10 bits/key and k = 5 gives
@@ -47,8 +55,10 @@ scale mission; Bloom filters are textbook public knowledge (Bloom 1970).
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+from collections.abc import Callable
 
 import numpy as np
 import pandas as pd
@@ -64,10 +74,12 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from ..util import require_local_path
+
 # This module ships a module-level kernel (_set_bits) inside its pandas
-# UDFs; pickle the module by value so executor workers never need the
-# repo package importable (see operators/multimodal.py for the full
-# rationale).
+# UDFs, and the streaming serve paths ship bloom_closure_probe's closure;
+# pickle the module by value so executor workers never need the repo
+# package importable (see operators/multimodal.py for the full rationale).
 import sys as _sys
 
 from pyspark import cloudpickle as _cloudpickle
@@ -200,15 +212,15 @@ def build_hash_bloom(
 
 
 def bloom_params_from_rows(rows) -> tuple[int, int, int]:
-    """(n_shards, n_bits, n_hashes) from COLLECTED bloom rows — the same
-    self-describing contract as :func:`_bloom_params`, for callers that
-    already hold the rows (the streaming admission filter collects the
-    bitmaps into its closure; re-aggregating the frame would scan it
-    twice).  Enforces the identical rules: non-empty table, one
-    parameterization, and shard count = max(shard)+1 (build_hash_bloom's
-    DENSE table guarantees it — any other modulus routes probes to the
-    wrong shard and produces false negatives, the r9 finding).  Parity
-    with _bloom_params on the same table is pytest-pinned."""
+    """(n_shards, n_bits, n_hashes) from the COLLECTED rows of a bloom
+    table — the one parameter check every reader runs.  Frame callers
+    pass ``blooms.select("shard", "n_bits", "n_hashes").collect()``: one
+    small row per shard, one Spark job, and the bitmaps never reach the
+    driver.  Refuses an empty table, mixed parameterizations, duplicate
+    shard rows and shard gaps; the shard count is max(shard) + 1, which
+    build_hash_bloom's DENSE table guarantees — any other modulus routes
+    probes to the wrong shard and produces false negatives (the r9
+    finding)."""
     rows = list(rows)
     if not rows:
         raise ValueError(
@@ -227,9 +239,9 @@ def bloom_params_from_rows(rows) -> tuple[int, int, int]:
         )
     if set(shards) != set(range(max(shards) + 1)):
         # a partial/filtered artifact (e.g. shards {0, 3} written out)
-        # would route grams to MISSING shards, which probe as
-        # definitely-absent — silent false negatives, the one failure
-        # direction a bloom must never have (r14 advisor finding)
+        # would route hashes to MISSING shards, which probe as
+        # definitely-absent, and an extend would seed fresh zero bitmaps
+        # for them — silent false negatives either way (r14/r15 findings)
         raise ValueError(
             "bloom table has shard gaps — partial/filtered artifact?  "
             f"got shards {sorted(set(shards))}, expected 0..{max(shards)}"
@@ -241,80 +253,24 @@ def bloom_params_from_rows(rows) -> tuple[int, int, int]:
     )
 
 
-def _bloom_params(
-    blooms: DataFrame, allow_gaps: bool = False
-) -> tuple[int, int, int]:
-    """Derive (n_shards, n_bits, n_hashes) FROM the bloom table — the
-    self-describing contract (rows-side twin: :func:`bloom_params_from_rows`).
-    One tiny driver aggregate; raises when the
-    table mixes parameterizations (a corrupt or hand-edited artifact),
-    carries duplicate shard rows (an append-mode rewrite — either
-    generation alone loses the other's set bits), or has shard gaps
-    (a partial/filtered artifact — missing shards probe
-    definitely-absent).  ``allow_gaps=True`` is for callers probing a
-    DELIBERATELY filtered shard subset who supply the build-time shard
-    count themselves (the documented ``n_shards=`` override)."""
-    row = blooms.agg(
-        F.countDistinct("n_bits").alias("d_b"),
-        F.countDistinct("n_hashes").alias("d_h"),
-        F.max("n_bits").alias("n_bits"),
-        F.max("n_hashes").alias("n_hashes"),
-        F.max("shard").alias("max_shard"),
-        F.countDistinct("shard").alias("d_shards"),
-        F.count(F.lit(1)).alias("n_rows"),
-    ).collect()[0]
-    if row["max_shard"] is None:
-        raise ValueError(
-            "empty bloom table — nothing was built (all-null hash column?)"
-        )
-    if row["d_b"] != 1 or row["d_h"] != 1:
-        raise ValueError("bloom table mixes n_bits/n_hashes parameterizations")
-    # an append-mode rewrite leaves two bitmap generations per shard;
-    # the probe's cogroup would take an arbitrary one and LOSE the
-    # other's set bits — false negatives (the rows-twin refuses this
-    # identically; r15 review finding)
-    if int(row["n_rows"]) != int(row["d_shards"]):
-        raise ValueError(
-            "duplicate shard rows in bloom table — appended/rewritten "
-            "artifact?  rebuild or extend_hash_bloom instead"
-        )
-    # build_hash_bloom emits a row for EVERY shard (density seeds), so
-    # max(shard)+1 IS the build-time shard count — routing with any other
-    # modulus would produce false negatives.  A gap (distinct < max+1)
-    # means a partial/filtered artifact whose missing shards would probe
-    # definitely-absent: refuse (r14 advisor finding) unless the caller
-    # filtered deliberately and supplies the build-time count.
-    if not allow_gaps and int(row["d_shards"]) != int(row["max_shard"]) + 1:
-        raise ValueError(
-            "bloom table has shard gaps — partial/filtered artifact?  "
-            f"{int(row['d_shards'])} distinct shards but max shard "
-            f"{int(row['max_shard'])}; pass n_shards= when probing a "
-            "deliberately filtered shard subset"
-        )
-    return int(row["max_shard"]) + 1, int(row["n_bits"]), int(row["n_hashes"])
-
-
-def bloom_probe_hashes(
-    hashes: DataFrame,
-    blooms: DataFrame,
-    n_shards: int | None = None,
-) -> DataFrame:
+def bloom_probe_hashes(hashes: DataFrame, blooms: DataFrame) -> DataFrame:
     """Membership verdict for a frame of hashes: (_h, bloom_maybe).
 
     ``bloom_maybe = false`` is a GUARANTEE of absence (no false
     negatives); ``true`` means "check exactly".  NULL hashes return
     ``true`` — they must flow to the exact (eqNullSafe) path, never be
-    admitted as definitely-new.  Hash parameters come from the bloom
-    table itself; pass ``n_shards`` only when probing a filtered subset
-    of shards (routing needs the BUILD-time shard count).
+    admitted as definitely-new.  Hash parameters and the shard modulus
+    come from the bloom table itself (:func:`bloom_params_from_rows`).
 
     Plan: probe hashes carry their k positions as ONE array column into
     a cogrouped applyInPandas against the shard's bitmap — the narrow
     (hash, k longs) frame shuffles by shard; bitmaps move once; the bit
-    test is a vectorized numpy gather per Arrow batch.  A shard absent
-    from the bloom table answers definitely-new for its whole group."""
-    ns, nb, nh = _bloom_params(blooms, allow_gaps=n_shards is not None)
-    ns = int(n_shards) if n_shards is not None else ns
+    test is a vectorized numpy gather per Arrow batch.  This is the probe
+    for a bloom of any size; :func:`bloom_closure_probe` is the
+    streaming twin for a bloom small enough to ship in a closure."""
+    ns, nb, nh = bloom_params_from_rows(
+        blooms.select("shard", "n_bits", "n_hashes").collect()
+    )
     probes = hashes.select(F.col("_h")).distinct()
     nulls = probes.where(F.col("_h").isNull()).select(
         "_h", F.lit(True).alias("bloom_maybe")
@@ -338,10 +294,6 @@ def bloom_probe_hashes(
             return pd.DataFrame({"_h": [], "bloom_maybe": []}).astype(
                 {"_h": "object", "bloom_maybe": "bool"}
             )
-        if right.empty:  # shard never built → nothing is in it
-            return pd.DataFrame(
-                {"_h": left["_h"], "bloom_maybe": False}
-            )
         bm = np.frombuffer(right["bitmap"].iloc[0], dtype=np.uint8)
         pos = np.stack(
             [np.asarray(a, dtype=np.int64) for a in left["pos_arr"]]
@@ -363,33 +315,19 @@ def extend_hash_bloom(
     blooms: DataFrame,
     new_hashes: DataFrame,
     hash_col: str = "content_hash",
-    n_shards: int | None = None,
 ) -> DataFrame:
     """OR newly-admitted hashes into the filter WITHOUT rebuilding: only
     shards their positions touch rewrite; untouched shards pass through
     byte-identical.  Same cogroup shape as the probe — new (shard, pos)
     rows meet the shard's existing bitmap and set bits in numpy.
     Invariant (pytest-pinned): extend(build(A), B) ≡ build(A ∪ B).
-
-    STRICT on the input table, unlike :func:`bloom_probe_hashes`: a
-    gapped (filtered) table refuses even when ``n_shards`` is supplied,
-    because merge() would seed fresh ZERO bitmaps for the absent shards
-    — the extended artifact then passes the gap check while silently
-    false-negativing on every build-time bit the filtered-out shards
-    carried (r15 advisor finding).  ``allow_gaps`` is a PROBE-side
-    affordance (probing a deliberate shard subset is read-only);
-    extending one is always lossy.  ``n_shards``, when supplied, may
-    only restate the table's own build count — any other modulus would
-    route the new hashes' positions to the wrong shards (silent false
-    negatives on the new keys)."""
-    ns, nb, nh = _bloom_params(blooms)
-    if n_shards is not None and int(n_shards) != ns:
-        raise ValueError(
-            f"extend_hash_bloom: n_shards={int(n_shards)} contradicts the "
-            f"table's build count {ns} — a different modulus routes new "
-            "positions to the wrong shards (silent false negatives); "
-            "gapped tables cannot be extended at all, rebuild instead"
-        )
+    Routes with the table's own shard count; the parameter check refuses
+    a gapped table, because extending it would seed fresh ZERO bitmaps
+    for the absent shards and false-negative on every build-time bit
+    they carried (r15 advisor finding)."""
+    ns, nb, nh = bloom_params_from_rows(
+        blooms.select("shard", "n_bits", "n_hashes").collect()
+    )
     pos = _position_rows(
         new_hashes.select(F.col(hash_col).alias("_h")), ns, nb, nh
     )
@@ -402,10 +340,8 @@ def extend_hash_bloom(
                 ["shard", "n_bits", "n_hashes", "n_set", "bitmap"]
             ]
         if old.empty:
-            # unreachable behind the strict dense-table check above —
-            # kept as a refusal (never a fresh zero bitmap: seeding one
-            # here would fabricate a shard that false-negatives on all
-            # its lost build-time bits, the r15 advisor finding)
+            # unreachable behind the dense-table check above — kept as a
+            # refusal, never a fresh zero bitmap (r15 advisor finding)
             raise ValueError(
                 f"extend_hash_bloom: new positions touch shard {key[0]} "
                 "which has no bitmap row — gapped table cannot extend"
@@ -440,8 +376,11 @@ def write_hash_bloom(
     runs one time instead of once per reader, and the lineage no longer
     reads ``path`` — so extending a table loaded from ``path`` and
     writing it back there never reads the path mid-overwrite."""
+    require_local_path(path)  # the sidecar is written with open()
     blooms = blooms.localCheckpoint(eager=True)
-    ns, nb, nh = _bloom_params(blooms)
+    ns, nb, nh = bloom_params_from_rows(
+        blooms.select("shard", "n_bits", "n_hashes").collect()
+    )
     blooms.repartition(ns, "shard").write.mode("overwrite").parquet(path)
     sidecar = {
         "kind": "sharded-bloom",
@@ -459,11 +398,59 @@ def write_hash_bloom(
 def load_hash_bloom(
     spark: SparkSession, path: str
 ) -> tuple[DataFrame, dict]:
-    """Load (bloom table, sidecar).  Probe/extend still derive hash
-    parameters from the TABLE; the sidecar is provenance + the build
-    shard count for routing filtered subsets."""
+    """Load (bloom table, sidecar).  Probe/extend derive hash parameters
+    and the shard count from the TABLE; the sidecar is provenance (the
+    build parameters, plus whatever ``extra_meta`` the writer added)."""
+    require_local_path(path)  # the sidecar is read with open()
     with open(os.path.join(path, BLOOM_SIDECAR)) as f:
         sidecar = json.load(f)
     if sidecar.get("kind") != "sharded-bloom":
         raise ValueError(f"not a bloom sidecar: {sidecar}")
     return spark.read.parquet(path), sidecar
+
+
+def bloom_closure_probe(
+    blooms: DataFrame, max_artifact_bytes: int, what: str
+) -> Callable[[str], bool]:
+    """Collect a bloom table into a Python membership test ``maybe(h)``
+    for the streaming serve paths, which probe it inside ``mapInPandas``
+    with no join.  Runs the parameter check, then refuses a table whose
+    bitmaps total more than ``max_artifact_bytes`` — a plan-literal
+    artifact must stay broadcast-sized; a larger bloom goes through
+    :func:`bloom_probe_hashes` (``what`` names the artifact in the
+    error).
+
+    ``maybe`` is the portable spec of :func:`shard_of` /
+    :func:`bit_positions`, verdict-for-verdict equal to
+    :func:`bloom_probe_hashes` (pytest-pinned).  md5 is a streaming
+    hash, so absorbing ``h`` ONCE and deriving each position via
+    copy() + update(":j") pays one full hash per probe instead of
+    n_hashes + 1 (r14 verdict #5)."""
+    rows = blooms.select("shard", "n_bits", "n_hashes", "bitmap").collect()
+    n_shards, n_bits, n_hashes = bloom_params_from_rows(rows)
+    total = sum(len(r["bitmap"]) for r in rows)
+    if total > max_artifact_bytes:
+        raise ValueError(
+            f"{what} artifact is {total} bytes > max_artifact_bytes="
+            f"{max_artifact_bytes}: a plan-literal probe must stay "
+            "broadcast-sized — raise the cap on bigger executors or use "
+            "the exact batch path"
+        )
+    # dense by the check above: shard s is at index s
+    bitmaps = [None] * n_shards
+    for r in rows:
+        bitmaps[int(r["shard"])] = np.frombuffer(r["bitmap"], dtype=np.uint8)
+    suffixes = [f":{j}".encode() for j in range(n_hashes)]
+
+    def maybe(h: str) -> bool:
+        base = hashlib.md5(h.encode())
+        bm = bitmaps[int(base.hexdigest()[:8], 16) % n_shards]
+        for suf in suffixes:
+            m = base.copy()
+            m.update(suf)
+            pos = int(m.hexdigest()[:15], 16) % n_bits
+            if not (bm[pos >> 3] >> (pos & 7)) & 1:
+                return False
+        return True
+
+    return maybe

@@ -25,6 +25,7 @@ import itertools
 import logging
 import random
 
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -1038,9 +1039,8 @@ def _simhash_from_hash_arrays():
     chunked to ≤ 2^21 tokens (~128 MB) so one wide batch cannot balloon
     worker memory."""
     import numpy as np
-    import pandas as pd
 
-    def _sh(hs):
+    def _sh(hs: pd.Series) -> pd.Series:
         if len(hs) == 0:
             return pd.Series([], dtype="int64")
         arrs = [np.asarray(a, dtype=np.int64).view(np.uint64) for a in hs]
@@ -1075,12 +1075,6 @@ def _simhash_from_hash_arrays():
             start = end
         return pd.Series(out.view(np.int64))
 
-    # real annotation objects, not strings: this module's
-    # `from __future__ import annotations` would otherwise leave pyspark's
-    # type-hint inference unable to resolve 'pd.Series' (pandas is a
-    # function-local import here so the one Arrow UDF doesn't put pandas
-    # on every dedup import path)
-    _sh.__annotations__ = {"hs": pd.Series, "return": pd.Series}
     return F.pandas_udf(_sh, "long")
 
 

@@ -3141,7 +3141,7 @@ def q_bloom_dedup_filter(spark: SparkSession, sf: str) -> DataFrame:
         "doc_id", "content_hash"
     )
     # materialize the n_shards-row bloom table once: bloom_probe_hashes
-    # reads it twice (the _bloom_params aggregate, then the cogroup) and
+    # reads it twice (the parameter check's collect, then the cogroup) and
     # without this the whole build pipeline would run twice
     blooms = build_hash_bloom(
         idx, n_shards=_B_SHARDS, n_bits=_B_BITS, n_hashes=_B_K

@@ -1132,41 +1132,25 @@ def stream_novelty_filter(
     always counted matched (an actually-memorizable document can never
     sneak through), while a false positive only over-counts overlap and
     drops a borderline-novel document the exact batch profile would have
-    kept (~fp-rate of the sidecar).  Shard routing and bit positions are
-    the PORTABLE bloom spec (`bloom.shard_of` / `bloom.bit_positions`) —
-    verdict parity with `bloom_probe_hashes` is pytest-pinned.
+    kept (~fp-rate of the sidecar).  The probe is
+    :func:`~..operators.bloom.bloom_closure_probe` — the portable bloom
+    spec, verdict parity with `bloom_probe_hashes` pytest-pinned.
 
     Returns admitted rows: (id, text, n_positions, n_matched_maybe,
     max_overlap_tokens_ub, novelty_ppm).  POLICY: documents shorter than
     ``k`` tokens have no measurable position, score novelty 1e6 and are
     ADMITTED (same convention as the batch profile — gram-level
     memorization risk needs at least one gram)."""
-    import hashlib
-
-    import numpy as np
     import pandas as pd
 
-    from ..operators.bloom import bloom_params_from_rows
+    from ..operators.bloom import bloom_closure_probe
     from ..operators.decontam import gram_hash_array
 
     if k < 1:  # fail like the batch twin, not deep inside execution
         raise ValueError(f"k must be >= 1, got {k}")
-    brows = corpus_gram_blooms.select(
-        "shard", "n_bits", "n_hashes", "bitmap"
-    ).collect()
-    n_shards, n_bits, n_hashes = bloom_params_from_rows(brows)
-    total = sum(len(r["bitmap"]) for r in brows)
-    if total > max_artifact_bytes:
-        raise ValueError(
-            f"bloom artifact is {total} bytes > max_artifact_bytes="
-            f"{max_artifact_bytes}: a plan-literal admission filter must "
-            "stay broadcast-sized — raise the cap on bigger executors or "
-            "use the exact batch path (memorization_profile)"
-        )
-    bitmaps = {
-        int(r["shard"]): np.frombuffer(r["bitmap"], dtype=np.uint8)
-        for r in brows
-    }
+    _maybe = bloom_closure_probe(
+        corpus_gram_blooms, max_artifact_bytes, "corpus-gram bloom"
+    )
 
     # the ONE gram-hash expression shared with the oracle-gated batch
     # profile — the two paths cannot drift (decontam.gram_hash_array)
@@ -1182,28 +1166,6 @@ def stream_novelty_filter(
         "n_positions long, n_matched_maybe long, "
         "max_overlap_tokens_ub long, novelty_ppm long"
     )
-
-    # the portable spec is shard = md5(h)[:8] and pos_j = md5(h ':' j)[:15]
-    # (bloom.shard_of / bloom.bit_positions).  md5 is a streaming hash, so
-    # absorbing h ONCE and deriving each position via copy()+update(":j")
-    # is bit-for-bit the spec while paying one full hash per gram instead
-    # of n_hashes+1 (r14 verdict #5); parity with bloom_probe_hashes stays
-    # pytest-pinned.
-    _suffixes = [f":{j}".encode() for j in range(n_hashes)]
-
-    def _maybe(h: str) -> bool:
-        base = hashlib.md5(h.encode())
-        shard = int(base.hexdigest()[:8], 16) % n_shards
-        bm = bitmaps.get(shard)
-        if bm is None:
-            return False
-        for suf in _suffixes:
-            m = base.copy()
-            m.update(suf)
-            pos = int(m.hexdigest()[:15], 16) % n_bits
-            if not (bm[pos >> 3] >> (pos & 7)) & 1:
-                return False
-        return True
 
     def score(batches):
         for pdf in batches:
@@ -1822,12 +1784,9 @@ def stream_holdout_tag(
     train arrivals their eval-bloom hits; documents with no checkable
     gram score 0 and admit to their hash side — the batch vacuous-clean
     policy)."""
-    import hashlib
-
-    import numpy as np
     import pandas as pd
 
-    from ..operators.bloom import bloom_params_from_rows
+    from ..operators.bloom import bloom_closure_probe
     from ..operators.dedup import portable_token_hash, string_shingles
 
     if not 0 < int(holdout_ppm) < 1_000_000:
@@ -1852,27 +1811,12 @@ def stream_holdout_tag(
                 cutoff=cutoff, ts_col=ts_col, what=what,
             )
 
-    def _load(blooms: DataFrame, what: str):
-        brows = blooms.select(
-            "shard", "n_bits", "n_hashes", "bitmap"
-        ).collect()
-        n_shards, n_bits, n_hashes = bloom_params_from_rows(brows)
-        total = sum(len(r["bitmap"]) for r in brows)
-        if total > max_artifact_bytes:
-            raise ValueError(
-                f"{what} bloom artifact is {total} bytes > "
-                f"max_artifact_bytes={max_artifact_bytes}: a plan-literal "
-                "tagger must stay broadcast-sized — raise the cap on "
-                "bigger executors or re-run the batch builder"
-            )
-        bitmaps = {
-            int(r["shard"]): np.frombuffer(r["bitmap"], dtype=np.uint8)
-            for r in brows
-        }
-        return n_shards, n_bits, n_hashes, bitmaps
-
-    train_art = _load(train_gram_blooms, "train-gram")
-    eval_art = _load(eval_gram_blooms, "eval-gram")
+    maybe_train = bloom_closure_probe(
+        train_gram_blooms, max_artifact_bytes, "train-gram bloom"
+    )
+    maybe_eval = bloom_closure_probe(
+        eval_gram_blooms, max_artifact_bytes, "eval-gram bloom"
+    )
 
     if cutoff is not None:
         from ..operators.splits import _valid_ts
@@ -1919,28 +1863,6 @@ def stream_holdout_tag(
         "split string, n_hit_grams_ub long"
     )
 
-    def _prober(art):
-        n_shards, n_bits, n_hashes, bitmaps = art
-        suffixes = [f":{j}".encode() for j in range(n_hashes)]
-
-        def maybe(h: str) -> bool:
-            base = hashlib.md5(h.encode())
-            shard = int(base.hexdigest()[:8], 16) % n_shards
-            bm = bitmaps.get(shard)
-            if bm is None:
-                return False
-            for suf in suffixes:
-                m = base.copy()
-                m.update(suf)
-                pos = int(m.hexdigest()[:15], 16) % n_bits
-                if not (bm[pos >> 3] >> (pos & 7)) & 1:
-                    return False
-            return True
-
-        return maybe
-
-    maybe_train = _prober(train_art)
-    maybe_eval = _prober(eval_art)
     mh = int(min_hits)
 
     def tag(batches):

@@ -11,6 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from market_data_ingestion_scraper_spark.operators.bloom import (
+    bloom_closure_probe,
+    bloom_params_from_rows,
     build_hash_bloom,
     bloom_probe_hashes,
     extend_hash_bloom,
@@ -219,18 +221,12 @@ def test_sparse_build_stays_dense_and_routes_with_build_modulus(spark):
     row per shard, so the self-describing n_shards = max(shard)+1 equals
     the build count and probes route with the build modulus.  A sparse
     table would probe with a smaller modulus — false negatives."""
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        _bloom_params,
-        bloom_probe_hashes,
-        build_hash_bloom,
-    )
-
     one = spark.createDataFrame([("solo-hash",)], "content_hash string")
     blooms = build_hash_bloom(
         one, n_shards=4, n_bits=1 << 10, n_hashes=5
     ).persist()
     assert blooms.count() == 4                      # dense: every shard
-    assert _bloom_params(blooms)[0] == 4            # derived == build
+    assert bloom_params_from_rows(blooms.collect())[0] == 4  # == build
     occupied = {r["shard"]: r["n_set"] for r in blooms.collect()}
     assert sum(1 for v in occupied.values() if v > 0) == 1
     got = bloom_probe_hashes(
@@ -338,97 +334,6 @@ def test_gold_build_id_write_failure_returns_none(tmp_path):
     assert _read_gold_build_id(str(missing)) is None
 
 
-def test_filtered_subset_probe_with_explicit_shard_count(spark):
-    """The documented filtered-subset workflow must survive the r15
-    shard-gap hardening: probing ONE shard's rows with the build-time
-    n_shards supplied routes correctly and answers without raising,
-    while the same filtered table WITHOUT the override refuses loudly."""
-    import pytest
-
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        _bloom_params,
-        bloom_probe_hashes,
-        build_hash_bloom,
-    )
-
-    hashes = spark.range(0, 400).select(
-        F.sha2(F.col("id").cast("string"), 256).alias("content_hash")
-    )
-    blooms = build_hash_bloom(hashes, n_shards=4, n_bits=1 << 16, n_hashes=3)
-    one_shard = blooms.filter("shard = 3").persist()
-    assert one_shard.count() == 1
-    with pytest.raises(ValueError, match="shard gaps"):
-        _bloom_params(one_shard)
-    probe = hashes.select(F.col("content_hash").alias("_h"))
-    got = bloom_probe_hashes(probe, one_shard, n_shards=4)
-    # every present hash routed to shard 3 must answer maybe=True; the
-    # rest route to absent shards and answer definitely-new
-    full = {r["_h"]: r["bloom_maybe"]
-            for r in bloom_probe_hashes(probe, blooms).collect()}
-    from market_data_ingestion_scraper_spark.operators.bloom import shard_of
-
-    shards = {r["_h"]: r["s"] for r in probe.select(
-        "_h", shard_of(F.col("_h"), 4).alias("s")).collect()}
-    for r in got.collect():
-        if shards[r["_h"]] == 3:
-            assert r["bloom_maybe"] == full[r["_h"]]
-        else:
-            assert r["bloom_maybe"] is False
-    one_shard.unpersist()
-
-
-def test_bloom_params_frame_refuses_duplicate_shards(spark):
-    """The frame-side derivation must refuse an appended/rewritten
-    artifact (two bitmap generations per shard) exactly like the
-    rows-side twin — picking either generation loses set bits (r15
-    review finding)."""
-    import pytest
-
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        _bloom_params,
-        build_hash_bloom,
-    )
-
-    hashes = spark.range(0, 50).select(
-        F.sha2(F.col("id").cast("string"), 256).alias("content_hash")
-    )
-    blooms = build_hash_bloom(hashes, n_shards=4, n_bits=1 << 16, n_hashes=3)
-    with pytest.raises(ValueError, match="duplicate shard"):
-        _bloom_params(blooms.unionAll(blooms))
-
-
-def test_extend_refuses_gapped_table_even_with_n_shards(spark):
-    """r16 advisor fix: extend must stay STRICT — a gapped (filtered)
-    table refuses even with the build-time n_shards supplied, because
-    merge() would otherwise seed fresh zero bitmaps for the absent
-    shards and the extended artifact would pass the gap check while
-    false-negativing on every lost build-time bit.  allow_gaps is a
-    probe-side affordance only."""
-    import pytest
-
-    hashes = _hashes(spark, 0, 400)
-    blooms = build_hash_bloom(hashes, n_shards=4, n_bits=1 << 16, n_hashes=3)
-    gapped = blooms.filter("shard <> 2")
-    new = _hashes(spark, 1000, 1100)
-    # without the override: the standing gap refusal
-    with pytest.raises(ValueError, match="shard gaps"):
-        extend_hash_bloom(gapped, new).collect()
-    # WITH the override (the r15 escape hatch): still refuses
-    with pytest.raises(ValueError, match="shard gaps"):
-        extend_hash_bloom(gapped, new, n_shards=4).collect()
-    # a contradictory modulus on a DENSE table refuses too — it would
-    # route the new hashes' positions to the wrong shards
-    with pytest.raises(ValueError, match="contradicts"):
-        extend_hash_bloom(blooms, new, n_shards=8).collect()
-    # restating the true build count stays accepted and bit-identical
-    # to the no-override call
-    a = extend_hash_bloom(blooms, new, n_shards=4).orderBy("shard").collect()
-    b = extend_hash_bloom(blooms, new).orderBy("shard").collect()
-    assert [(r["shard"], bytes(r["bitmap"])) for r in a] == [
-        (r["shard"], bytes(r["bitmap"])) for r in b
-    ]
-
-
 def _twin_bloom(hashes, n_shards, n_bits, n_hashes):
     """Pure-Python reference of the sharded bloom: shard = first 8 hex
     chars of md5(h) mod n_shards (:func:`shard_of`), position_j = first
@@ -500,3 +405,106 @@ def test_set_bits_kernel_matches_python_twin(spark, n_shards, n_bits):
     assert _bloom_by_shard(built) == want_a
     assert _bloom_by_shard(extend_hash_bloom(built, frame(b))) == want_ab
     built.unpersist()
+
+
+def _refused_table(blooms, case):
+    """A bloom table each reader must refuse: ``blooms`` is a dense
+    4-shard build."""
+    if case == "empty":
+        return blooms.where("false")
+    if case == "mixed":  # shards 0-1 and 2-3 at different n_bits
+        other = build_hash_bloom(
+            _hashes(blooms.sparkSession, 0, 10), n_shards=4, n_bits=1 << 11,
+            n_hashes=3,
+        )
+        return blooms.where("shard < 2").unionByName(other.where("shard >= 2"))
+    if case == "duplicate":  # an append-mode rewrite: two generations
+        return blooms.unionAll(blooms)
+    return blooms.where("shard <> 1")  # gap: max shard 3, shard 1 missing
+
+
+_REFUSALS = {
+    "empty": "empty bloom table",
+    "mixed": "mixes n_bits/n_hashes",
+    "duplicate": "duplicate shard",
+    "gap": "shard gaps",
+}
+
+
+@pytest.mark.parametrize("case", list(_REFUSALS))
+def test_every_reader_refuses_unsafe_table(spark, tmp_path, case):
+    """The one parameter check refuses an empty table, mixed parameters,
+    duplicate shard rows (either bitmap generation alone loses the
+    other's set bits) and shard gaps (a missing shard probes
+    definitely-absent, and extending would seed it with a zero bitmap)
+    — and every reader runs it: the check itself, the cogroup probe,
+    extend, write, and both streaming serve paths."""
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+
+    good = build_hash_bloom(
+        _hashes(spark, 0, 50), n_shards=4, n_bits=1 << 10, n_hashes=3
+    ).localCheckpoint(eager=True)
+    bad = _refused_table(good, case).localCheckpoint(eager=True)
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    path = str(tmp_path / "bloom")
+    readers = [
+        lambda: bloom_params_from_rows(bad.collect()),
+        lambda: bloom_probe_hashes(_hashes(spark, 0, 5, col="_h"), bad),
+        lambda: extend_hash_bloom(bad, _hashes(spark, 100, 110)),
+        lambda: write_hash_bloom(bad, path),
+        lambda: P.stream_novelty_filter(docs, bad),
+        lambda: P.stream_holdout_tag(docs, bad, good),
+        lambda: P.stream_holdout_tag(docs, good, bad),
+    ]
+    for read in readers:
+        with pytest.raises(ValueError, match=_REFUSALS[case]):
+            read()
+    assert not os.path.exists(path)
+
+
+def test_closure_probe_matches_bloom_probe_hashes(spark):
+    """The streaming closure probe (shared by stream_novelty_filter and
+    stream_holdout_tag) gives bloom_probe_hashes' verdict on every hash,
+    members and non-members alike, on a bloom dense enough that false
+    positives occur — so the two probes agree on the false positives
+    too, not just on the guaranteed members."""
+    members = _hashes(spark, 0, 400, col="_h")
+    outsiders = _hashes(spark, 10_000, 11_000, col="_h")
+    blooms = build_hash_bloom(
+        members, "_h", n_shards=2, n_bits=1 << 10, n_hashes=3
+    ).localCheckpoint(eager=True)
+    assert bloom_params_from_rows(blooms.collect()) == (2, 1 << 10, 3)
+    want = {
+        r["_h"]: r["bloom_maybe"]
+        for r in bloom_probe_hashes(members.union(outsiders), blooms).collect()
+    }
+    maybe = bloom_closure_probe(blooms, 1 << 20, "test bloom")
+    assert {h: maybe(h) for h in want} == want
+    assert all(want[r["_h"]] for r in members.collect())
+    n_fp = sum(want[r["_h"]] for r in outsiders.collect())
+    assert 0 < n_fp < 1000  # false positives AND true negatives
+
+
+def test_bloom_paths_refuse_uri(spark, tmp_path):
+    """The sidecar is read and written with open(), so a URI bloom path
+    must refuse up front — before the ingest job reads the landing or
+    writes gold.  Unguarded, a URI reads as "no sidecar yet", gold is
+    written, and only the bloom write fails, on every run."""
+    from market_data_ingestion_scraper_spark.jobs import run_corpus_ingestion
+
+    uri = "s3a://bucket/bloom"
+    blooms = build_hash_bloom(_hashes(spark, 0, 10), n_shards=2,
+                              n_bits=1 << 10, n_hashes=3)
+    with pytest.raises(ValueError, match="local filesystem path"):
+        write_hash_bloom(blooms, uri)
+    with pytest.raises(ValueError, match="local filesystem path"):
+        load_hash_bloom(spark, uri)
+    landing = _land(tmp_path, "landing", [
+        {"doc_id": 1, "text": "first doc", "lang": "en", "source": "a",
+         "n_chars": 9},
+    ])
+    gold = str(tmp_path / "gold")
+    with pytest.raises(ValueError, match="local filesystem path"):
+        run_corpus_ingestion(spark, landing, gold, incremental=True,
+                             bloom_path=uri)
+    assert not os.path.exists(gold)

@@ -369,27 +369,6 @@ def test_stream_novelty_filter_validates_k(spark):
         P.stream_novelty_filter(rows, blooms, k=0)
 
 
-def test_bloom_params_rows_twin_matches_frame_derivation(spark):
-    """bloom_params_from_rows (the collected-rows twin the streaming
-    filter uses) must derive the identical (n_shards, n_bits, n_hashes)
-    as _bloom_params on the same table, and enforce the same refusals."""
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        _bloom_params,
-        bloom_params_from_rows,
-    )
-    import pytest
-
-    blooms = _corpus_bloom(spark, ["shared corpus text with enough tokens"])
-    rows = blooms.collect()
-    assert bloom_params_from_rows(rows) == _bloom_params(blooms)
-    with pytest.raises(ValueError, match="empty bloom table"):
-        bloom_params_from_rows([])
-    mixed = [dict(r.asDict()) for r in rows]
-    mixed[0]["n_bits"] = mixed[0]["n_bits"] * 2
-    with pytest.raises(ValueError, match="mixes"):
-        bloom_params_from_rows(mixed)
-
-
 # ------------------------------------------------ streaming domain tag
 
 
@@ -539,26 +518,6 @@ def test_stream_novelty_probe_matches_bloom_probe_hashes(spark):
         assert got[i] == want[h], (t, got[i], want[h])
 
 
-def test_bloom_duplicate_shard_rows_refused(spark):
-    """An appended/rewritten bloom artifact (two bitmap generations per
-    shard) must refuse — silently picking either generation loses set
-    bits and produces false negatives, the one direction a bloom
-    guarantees impossible."""
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        bloom_params_from_rows,
-    )
-    from market_data_ingestion_scraper_spark.streaming import pipeline as P
-    import pytest
-
-    blooms = _corpus_bloom(spark, ["corpus words here with enough tokens now"])
-    doubled = blooms.unionAll(blooms)
-    with pytest.raises(ValueError, match="duplicate shard"):
-        bloom_params_from_rows(doubled.collect())
-    rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="duplicate shard"):
-        P.stream_novelty_filter(rows, doubled)
-
-
 def test_stream_domain_tag_null_pos_refused(spark):
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
     import pytest
@@ -569,29 +528,6 @@ def test_stream_domain_tag_null_pos_refused(spark):
     )
     with pytest.raises(ValueError, match="null label, pos, or _sm"):
         P.stream_domain_tag(rows, bad)
-
-
-def test_bloom_shard_gap_refused(spark):
-    """A partial/filtered bloom artifact (a shard row missing) must
-    refuse in BOTH parameter derivations: grams routing to a missing
-    shard would probe definitely-absent — silent false negatives, the
-    one direction a bloom guarantees impossible (r14 advisor finding)."""
-    from market_data_ingestion_scraper_spark.operators.bloom import (
-        _bloom_params,
-        bloom_params_from_rows,
-    )
-    from market_data_ingestion_scraper_spark.streaming import pipeline as P
-    import pytest
-
-    blooms = _corpus_bloom(spark, ["corpus words here with enough tokens now"])
-    gapped = blooms.filter("shard <> 1")  # keeps shard 3 → max+1 = 4, gap at 1
-    with pytest.raises(ValueError, match="shard gaps"):
-        bloom_params_from_rows(gapped.collect())
-    with pytest.raises(ValueError, match="shard gaps"):
-        _bloom_params(gapped)
-    rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
-    with pytest.raises(ValueError, match="shard gaps"):
-        P.stream_novelty_filter(rows, gapped)
 
 
 def test_stream_domain_tag_bounds_artifact_before_collect(spark):
