@@ -462,6 +462,46 @@ def test_every_reader_refuses_unsafe_table(spark, tmp_path, case):
     assert not os.path.exists(path)
 
 
+def test_bloom_params_frame_refuses_duplicate_shards(spark, tmp_path):
+    """An appended/rewritten artifact (two bitmap generations per shard)
+    refuses on the frame side exactly like the rows side: the probe,
+    extend and write all run the one check on the table's shard rows,
+    and picking either generation would lose set bits."""
+    blooms = build_hash_bloom(
+        _hashes(spark, 0, 50), n_shards=4, n_bits=1 << 16, n_hashes=3
+    )
+    doubled = blooms.unionAll(blooms)
+    with pytest.raises(ValueError, match="duplicate shard"):
+        bloom_params_from_rows(doubled.collect())
+    with pytest.raises(ValueError, match="duplicate shard"):
+        bloom_probe_hashes(_hashes(spark, 0, 5, col="_h"), doubled)
+    with pytest.raises(ValueError, match="duplicate shard"):
+        extend_hash_bloom(doubled, _hashes(spark, 100, 110))
+    path = str(tmp_path / "bloom")
+    with pytest.raises(ValueError, match="duplicate shard"):
+        write_hash_bloom(doubled, path)
+    assert not os.path.exists(path)
+
+
+def test_extend_refuses_gapped_table_even_with_n_shards(spark):
+    """Extend stays strict: a gapped (filtered) table refuses, and there
+    is no build-time ``n_shards`` override left to get round it —
+    merge() would otherwise seed fresh zero bitmaps for the absent
+    shards, and the extended artifact would pass the gap check while
+    false-negativing on every lost build-time bit."""
+    hashes = _hashes(spark, 0, 400)
+    blooms = build_hash_bloom(hashes, n_shards=4, n_bits=1 << 16, n_hashes=3)
+    gapped = blooms.filter("shard <> 2")
+    new = _hashes(spark, 1000, 1100)
+    with pytest.raises(ValueError, match="shard gaps"):
+        extend_hash_bloom(gapped, new).collect()
+    with pytest.raises(TypeError, match="n_shards"):
+        extend_hash_bloom(gapped, new, n_shards=4)
+    # the dense table extends, routing with its own shard count
+    got = extend_hash_bloom(blooms, new).orderBy("shard").collect()
+    assert [r["shard"] for r in got] == [0, 1, 2, 3]
+
+
 def test_closure_probe_matches_bloom_probe_hashes(spark):
     """The streaming closure probe (shared by stream_novelty_filter and
     stream_holdout_tag) gives bloom_probe_hashes' verdict on every hash,

@@ -518,6 +518,50 @@ def test_stream_novelty_probe_matches_bloom_probe_hashes(spark):
         assert got[i] == want[h], (t, got[i], want[h])
 
 
+def test_bloom_duplicate_shard_rows_refused(spark):
+    """An appended/rewritten bloom artifact (two bitmap generations per
+    shard) must refuse — silently picking either generation loses set
+    bits and produces false negatives, the one direction a bloom
+    guarantees impossible."""
+    from market_data_ingestion_scraper_spark.operators.bloom import (
+        bloom_params_from_rows,
+    )
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+    import pytest
+
+    blooms = _corpus_bloom(spark, ["corpus words here with enough tokens now"])
+    doubled = blooms.unionAll(blooms)
+    with pytest.raises(ValueError, match="duplicate shard"):
+        bloom_params_from_rows(doubled.collect())
+    rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="duplicate shard"):
+        P.stream_novelty_filter(rows, doubled)
+
+
+def test_bloom_shard_gap_refused(spark):
+    """A partial/filtered bloom artifact (a shard row missing) must
+    refuse on both the rows side and the frame side: grams routing to a
+    missing shard would probe definitely-absent — silent false
+    negatives, the one direction a bloom guarantees impossible."""
+    from market_data_ingestion_scraper_spark.operators.bloom import (
+        bloom_params_from_rows,
+        bloom_probe_hashes,
+    )
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+    import pytest
+
+    blooms = _corpus_bloom(spark, ["corpus words here with enough tokens now"])
+    gapped = blooms.filter("shard <> 1")  # keeps shard 3 → max+1 = 4, gap at 1
+    with pytest.raises(ValueError, match="shard gaps"):
+        bloom_params_from_rows(gapped.collect())
+    hdf = spark.createDataFrame([("x",)], "_h string")
+    with pytest.raises(ValueError, match="shard gaps"):
+        bloom_probe_hashes(hdf, gapped)
+    rows = spark.createDataFrame([(1, "x")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="shard gaps"):
+        P.stream_novelty_filter(rows, gapped)
+
+
 def test_stream_domain_tag_null_pos_refused(spark):
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
     import pytest
