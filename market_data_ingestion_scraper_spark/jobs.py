@@ -158,9 +158,6 @@ def run_corpus_ingestion(
     gold_path: str,
     incremental: bool = False,
     bloom_path: str | None = None,
-    bloom_shards: int = 16,
-    bloom_bits: int = 1 << 20,
-    bloom_hashes: int = 5,
     sketch_path: str | None = None,
 ) -> dict[str, int]:
     """Training-corpus twin of :func:`run_market_ingestion`: JSONL landing
@@ -348,10 +345,7 @@ def run_corpus_ingestion(
             # first run (or rebuild after a lost sidecar): cover ALL of
             # gold, not just this batch — the ⊇ invariant must hold
             updated = build_hash_bloom(
-                spark.read.parquet(gold_path).select("content_hash"),
-                n_shards=bloom_shards,
-                n_bits=bloom_bits,
-                n_hashes=bloom_hashes,
+                spark.read.parquet(gold_path).select("content_hash")
             )
         # record the gold generation the filter covers: the build id of
         # the write it just absorbed plus the row count (parquet-metadata
@@ -429,10 +423,12 @@ def run_training_data_build(
        ``sidecar_train_grams/`` and ``sidecar_eval_grams/``
        (:func:`~.operators.splits.holdout_gram_hashes` over the SAME
        persisted assignment → :func:`~.operators.bloom.build_hash_bloom`
-       → :func:`~.operators.bloom.write_hash_bloom`), so
+       → :func:`~.operators.bloom.write_hash_bloom`, each sidecar
+       carrying the split record), so
        :func:`~.streaming.pipeline.stream_holdout_tag` can route later
-       arrivals against exactly this build's split — the build → serve
-       handoff in one command.
+       arrivals against exactly this build's split, reading its
+       parameters from the two sidecars — the build → serve handoff in
+       one command.
 
     Returns the funnel counters (input → kept → deduped → per-split →
     per-example-family) a build dashboard needs; the numbers reconcile
@@ -519,9 +515,9 @@ def run_training_data_build(
             sides["eval"], os.path.join(out_root, "eval_docs"),
             sort_within=("doc_id",),
         )
-        # the split artifact carries its authoritative parameter sidecar
-        # (above all the gram width k) so assignment= reuse, sidecar
-        # builds, and the streaming tagger can refuse a mismatch
+        # the split artifact carries its split record (above all the
+        # gram width k): the sidecar builds and the streaming tagger
+        # read the parameters from it
         from .operators.splits import write_holdout_split
 
         split_meta = write_holdout_split(
@@ -566,10 +562,10 @@ def run_training_data_build(
 
             handle = HoldoutSplit(assignment, split_meta)
             for side in ("train", "eval"):
-                # the handle derives (and would refuse a conflicting)
-                # gram width, so the sidecar cannot be built at the
-                # wrong k; persisted so the count that sizes the bloom
-                # and the bloom build share one gram explode
+                # the handle carries the gram width, so the sidecar
+                # cannot be built at the wrong k; persisted so the count
+                # that sizes the bloom and the bloom build share one
+                # gram explode
                 grams = persisted(
                     holdout_gram_hashes(
                         deduped.select("doc_id", "text"), side,
@@ -585,8 +581,11 @@ def run_training_data_build(
                     build_hash_bloom(grams, "gram_hash", n_bits=n_bits),
                     os.path.join(out_root, f"sidecar_{side}_grams"),
                     hash_col="gram_hash",
-                    extra_meta={"k": int(k), "holdout_ppm": int(holdout_ppm),
-                                "min_hits": int(min_hits)},
+                    # the split record, so the tagger reads the split
+                    # parameters from the bloom it serves; the bloom
+                    # keeps its own kind
+                    extra_meta={key: v for key, v in split_meta.items()
+                                if key != "kind"},
                 )
                 counters[f"n_{side}_grams"] = n_grams
     finally:

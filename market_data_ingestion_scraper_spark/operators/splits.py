@@ -262,6 +262,9 @@ def decontaminated_holdout(
     checkable gram and admit to ``eval`` vacuously clean — by
     definition they cannot leak a ``k``-gram.
 
+    The parameters pass :func:`split_params`, the check every persisted
+    split record passes (:func:`write_holdout_split`).
+
     Scale shape at 100 TB: THREE column-pruned scans of (id, text) per
     action — the train-side gram explode, the eval-side gram explode,
     and the final assignment join each read the source (Catalyst does
@@ -280,40 +283,12 @@ def decontaminated_holdout(
     extreme scale.
     """
     from .decontam import gram_hits
-    from .dedup import portable_token_hash
 
-    if not 0 < int(holdout_ppm) < 1_000_000:
-        raise ValueError(
-            f"holdout_ppm must be in (0, 1000000), got {holdout_ppm}"
-        )
-    if int(min_hits) < 1:
-        raise ValueError(f"min_hits must be >= 1, got {min_hits}")
-    if (cutoff is None) != (ts_col is None):
-        raise ValueError(
-            "temporal mode needs BOTH cutoff= and ts_col= (hash mode: "
-            "neither)"
-        )
-    if cutoff is not None:
-        cut = F.lit(_valid_ts(cutoff, "cutoff")).cast("timestamp")
-        is_cand = F.col(ts_col) >= cut
-        # a NULL timestamp — or a NULL id, which has no deterministic
-        # hash side either — cannot be placed: quarantine, the X33
-        # NULL policy (without the id branch a NULL-id row would fall
-        # through the 3VL comparisons into eval UNCHECKED)
-        unplaced = F.col(ts_col).isNull() | F.col(id_col).isNull()
-    else:
-        is_cand = (
-            F.pmod(
-                portable_token_hash(
-                    F.concat(
-                        F.lit("holdout:"), F.col(id_col).cast("string")
-                    )
-                ),
-                F.lit(1_000_000),
-            )
-            < F.lit(int(holdout_ppm))
-        )
-        unplaced = F.col(id_col).isNull()
+    params = split_params(
+        _split_record(k, holdout_ppm, min_hits, cutoff, ts_col),
+        "holdout split",
+    )
+    is_cand, unplaced = holdout_candidacy(params, id_col)
     base = documents.select(
         F.col(id_col),
         F.col(text_col),
@@ -328,7 +303,7 @@ def decontaminated_holdout(
         gram_hits(
             train,
             evals,
-            k=k,
+            k=params["k"],
             id_col=id_col,
             text_col=text_col,
             ref_id_col="_eval_id",
@@ -352,7 +327,7 @@ def decontaminated_holdout(
         F.when(F.col("_unplaced"), F.lit("quarantine"))
         .when(~F.col("_cand"), F.lit("train"))
         .when(
-            F.coalesce(F.col("_n_hit_grams"), F.lit(0)) >= int(min_hits),
+            F.coalesce(F.col("_n_hit_grams"), F.lit(0)) >= params["min_hits"],
             F.lit("quarantine"),
         )
         .otherwise(F.lit("eval"))
@@ -367,107 +342,129 @@ def decontaminated_holdout(
 
 
 #: JSON sidecar filename written next to a persisted split assignment —
-#: records the selection parameters (above all the gram width ``k``) the
-#: split was decontaminated at, so every serving path can REFUSE a
-#: mismatch instead of documenting it (r17 review: a k=7 split served
-#: through k=5 sidecars would silently break batch ≡ serve parity).
-#: Underscore-prefixed so ``spark.read.parquet`` ignores it.
+#: the split record: the selection parameters (above all the gram width
+#: ``k``) the split was decontaminated at, which every serving path
+#: reads instead of taking them again as arguments (r17 review: a k=7
+#: split served through k=5 sidecars would silently break batch ≡ serve
+#: parity).  Underscore-prefixed so ``spark.read.parquet`` ignores it.
 SPLIT_SIDECAR = "_holdout_split.json"
 
 
-class HoldoutSplit:
-    """A :func:`decontaminated_holdout` assignment PLUS the frozen
-    selection parameters it was built with, travelling as one handle —
-    the :class:`~.similarity.AnnIndex` discipline: every consumer that
-    needs a parameter derives it from the handle's metadata instead of
-    re-typing it, and conflicting explicit values are refused (r17
-    verdict: the ``k`` hazard on ``holdout_gram_hashes(assignment=)``
-    was documented but unvalidated).
+def _split_record(
+    k: int,
+    holdout_ppm: int | None,
+    min_hits: int,
+    cutoff: str | None,
+    ts_col: str | None,
+) -> dict:
+    """The split parameters as an unchecked record: temporal mode when
+    ``cutoff`` or ``ts_col`` is given, hash mode otherwise."""
+    record: dict = {"k": k, "min_hits": min_hits}
+    if cutoff is not None or ts_col is not None:
+        record.update(cutoff=cutoff, ts_col=ts_col)
+    else:
+        record["holdout_ppm"] = holdout_ppm
+    return record
 
-    Tuple-unpacks as ``(assignment_df, meta)`` for dict-style callers.
-    ``meta`` always carries ``kind='holdout-split'`` and ``k``; hash
-    mode records ``holdout_ppm``, temporal mode ``cutoff``/``ts_col``;
-    ``min_hits`` rides along for provenance."""
+
+def split_params(record: dict, what: str = "holdout split record") -> dict:
+    """The one check of a split record — the :data:`SPLIT_SIDECAR` of
+    :func:`write_holdout_split`, or a gram-bloom sidecar of the
+    training-data build, which carries the same keys.  Refuses a record
+    that misses a key (rebuild the artifact: no consumer takes the split
+    parameters as arguments any more), whose ``k`` or ``min_hits`` is
+    below 1, or that does not name exactly one selection mode —
+    ``holdout_ppm`` in (0, 1000000) for hash mode, or ``cutoff`` (an ISO
+    timestamp) together with ``ts_col`` for temporal mode.
+
+    Returns the parameters: ``k``, ``min_hits`` and either
+    ``holdout_ppm`` or ``cutoff`` (normalized) and ``ts_col``."""
+
+    def rebuild(problem: str) -> ValueError:
+        return ValueError(
+            f"{what} {problem}: rebuild the artifact — every consumer "
+            "reads its split parameters from the record"
+        )
+
+    for key in ("k", "min_hits"):
+        if record.get(key) is None:
+            raise rebuild(f"does not record {key!r}")
+    params = {"k": int(record["k"]), "min_hits": int(record["min_hits"])}
+    for key, val in params.items():
+        if val < 1:
+            raise ValueError(f"{key} must be >= 1, got {val}")
+    temporal = any(record.get(key) is not None for key in ("cutoff", "ts_col"))
+    if temporal and record.get("holdout_ppm") is not None:
+        raise rebuild(
+            "records both selection modes (holdout_ppm and cutoff/ts_col)"
+        )
+    if temporal:
+        if record.get("cutoff") is None or record.get("ts_col") is None:
+            raise rebuild(
+                "is half temporal: temporal mode needs BOTH cutoff and "
+                "ts_col (hash mode: neither)"
+            )
+        params["cutoff"] = _valid_ts(str(record["cutoff"]), "cutoff")
+        params["ts_col"] = str(record["ts_col"])
+        return params
+    if record.get("holdout_ppm") is None:
+        raise rebuild(
+            "records no selection mode (holdout_ppm, or cutoff and ts_col)"
+        )
+    params["holdout_ppm"] = int(record["holdout_ppm"])
+    if not 0 < params["holdout_ppm"] < 1_000_000:
+        raise ValueError(
+            "holdout_ppm must be in (0, 1000000), got "
+            f"{params['holdout_ppm']}"
+        )
+    return params
+
+
+def holdout_candidacy(params: dict, id_col: str):
+    """``(is_cand, unplaced)`` columns of the selection rule that
+    :func:`split_params` ``params`` name — the one rule the batch
+    builder and the streaming tagger both apply."""
+    from .dedup import portable_token_hash
+
+    if "cutoff" in params:
+        ts = F.col(params["ts_col"])
+        # a NULL timestamp — or a NULL id, which has no deterministic
+        # hash side either — cannot be placed: quarantine, the X33
+        # NULL policy (without the id branch a NULL-id row would fall
+        # through the 3VL comparisons into eval UNCHECKED)
+        return (
+            ts >= F.lit(params["cutoff"]).cast("timestamp"),
+            ts.isNull() | F.col(id_col).isNull(),
+        )
+    is_cand = (
+        F.pmod(
+            portable_token_hash(
+                F.concat(F.lit("holdout:"), F.col(id_col).cast("string"))
+            ),
+            F.lit(1_000_000),
+        )
+        < F.lit(params["holdout_ppm"])
+    )
+    return is_cand, F.col(id_col).isNull()
+
+
+class HoldoutSplit:
+    """A :func:`decontaminated_holdout` assignment PLUS the split record
+    it was built with, travelling as one handle — the
+    :class:`~.similarity.AnnIndex` discipline: every consumer reads the
+    split parameters from the handle and takes none of them again as an
+    argument.  The record (``kind='holdout-split'``) is checked by
+    :func:`split_params` on construction; ``params`` holds the result."""
 
     def __init__(self, df: DataFrame, meta: dict):
         if meta.get("kind") != "holdout-split":
             raise ValueError(f"not a holdout-split meta: {meta}")
-        if "k" not in meta:
-            raise ValueError(
-                "holdout-split meta must record the gram width 'k' — it "
-                "is the parameter the sidecar exists to freeze"
-            )
+        self.params = split_params(meta)
         self.df = df
-        self.meta = dict(meta)
 
     @property
     def k(self) -> int:
-        return int(self.meta["k"])
-
-    def __iter__(self):  # (df, meta) unpacking compatibility
-        return iter((self.df, self.meta))
-
-
-def check_split_meta(
-    meta: dict,
-    k: int,
-    holdout_ppm: int | None = None,
-    cutoff: str | None = None,
-    ts_col: str | None = None,
-    what: str = "holdout split artifact",
-) -> None:
-    """Refuse serving-parameter / build-parameter mismatches against a
-    recorded split (or gram-bloom sidecar) metadata dict.  Only keys
-    PRESENT in ``meta`` are checked — older sidecars without a recorded
-    parameter keep loading (they just keep the documented hazard)."""
-    mk = meta.get("k")
-    if mk is not None and int(mk) != int(k):
-        raise ValueError(
-            f"gram-width mismatch: {what} was built at k={mk} but the "
-            f"caller asked for k={k} — a split decontaminated at one "
-            "gram width served through another silently breaks the "
-            "batch ≡ serve parity; pass the artifact's k (or none, "
-            "to derive it)"
-        )
-    # selection-MODE mismatch: a recorded cutoff means the split was
-    # temporal; a recorded holdout_ppm (and no cutoff) means hash mode.
-    # Serving the other mode routes arrivals to the wrong side even
-    # when every shared parameter happens to agree.
-    if meta.get("cutoff") is not None and cutoff is None:
-        raise ValueError(
-            f"selection-mode mismatch: {what} was built TEMPORAL "
-            f"(cutoff={meta['cutoff']!r}) but the caller is serving "
-            "hash mode — pass the artifact's cutoff=/ts_col="
-        )
-    if (
-        meta.get("holdout_ppm") is not None
-        and meta.get("cutoff") is None
-        and cutoff is not None
-    ):
-        raise ValueError(
-            f"selection-mode mismatch: {what} was built HASH-selected "
-            f"(holdout_ppm={meta['holdout_ppm']}) but the caller is "
-            "serving temporal mode"
-        )
-    mp = meta.get("holdout_ppm")
-    if (
-        holdout_ppm is not None
-        and cutoff is None
-        and mp is not None
-        and int(mp) != int(holdout_ppm)
-    ):
-        raise ValueError(
-            f"holdout_ppm mismatch: {what} was built at "
-            f"holdout_ppm={mp} but the caller asked for {holdout_ppm} — "
-            "arrivals would be routed to the wrong side"
-        )
-    for key, val in (("cutoff", cutoff), ("ts_col", ts_col)):
-        mv = meta.get(key)
-        if mv is not None and val is not None and str(mv) != str(val):
-            raise ValueError(
-                f"{key} mismatch: {what} was built with {key}={mv!r} "
-                f"but the caller asked for {val!r}"
-            )
+        return self.params["k"]
 
 
 def write_holdout_split(
@@ -478,14 +475,14 @@ def write_holdout_split(
     min_hits: int = 1,
     cutoff: str | None = None,
     ts_col: str | None = None,
-    extra_meta: dict | None = None,
 ) -> dict:
     """Persist a :func:`decontaminated_holdout` assignment as parquet
-    plus the authoritative :data:`SPLIT_SIDECAR` — the split artifact a
-    100 TB build hands to every later consumer (``assignment=`` reuse,
-    bloom-sidecar builds, the streaming tagger), carrying the gram
-    width ``k`` and the selection mode so those consumers can refuse a
-    mismatch.  Returns the sidecar dict written."""
+    plus its split record, the :data:`SPLIT_SIDECAR` — the split
+    artifact a 100 TB build hands to every later consumer (bloom-sidecar
+    builds through :func:`holdout_gram_hashes`, the streaming tagger),
+    which read ``k``, ``min_hits`` and the selection mode from it.  The
+    record is checked by :func:`split_params` before anything is
+    written.  Returns the record written."""
     import json
     import os
 
@@ -493,25 +490,22 @@ def write_holdout_split(
     from ..util import require_local_path
 
     require_local_path(path)
+    meta = {
+        "kind": "holdout-split",
+        **split_params(
+            _split_record(k, holdout_ppm, min_hits, cutoff, ts_col)
+        ),
+    }
     write_gold(assignment, path, sort_within=("doc_id",))
-    meta: dict = {"kind": "holdout-split", "k": int(k),
-                  "min_hits": int(min_hits)}
-    if cutoff is not None:
-        meta["cutoff"] = str(cutoff)
-        meta["ts_col"] = str(ts_col)
-    elif holdout_ppm is not None:
-        meta["holdout_ppm"] = int(holdout_ppm)
-    if extra_meta:
-        meta.update(extra_meta)
     with open(os.path.join(path, SPLIT_SIDECAR), "w") as f:
         json.dump(meta, f)
     return meta
 
 
 def load_holdout_split(spark, path: str) -> HoldoutSplit:
-    """Load ``(assignment, meta)`` as a :class:`HoldoutSplit` handle;
-    pass it straight to :func:`holdout_gram_hashes` via ``assignment=``
-    so the gram width is DERIVED from the sidecar, never re-typed."""
+    """Load a persisted split as a :class:`HoldoutSplit` handle (its
+    record checked); pass it straight to :func:`holdout_gram_hashes`,
+    which reads the gram width from it."""
     import json
     import os
 
@@ -526,14 +520,9 @@ def load_holdout_split(spark, path: str) -> HoldoutSplit:
 def holdout_gram_hashes(
     documents: DataFrame,
     side: str,
-    holdout_ppm: int = 100_000,
-    k: int | None = None,
-    min_hits: int = 1,
-    cutoff: str | None = None,
-    ts_col: str | None = None,
+    assignment: HoldoutSplit,
     id_col: str = "doc_id",
     text_col: str = "text",
-    assignment: DataFrame | HoldoutSplit | None = None,
 ) -> DataFrame:
     """Distinct md5 gram hashes of one SIDE of a
     :func:`decontaminated_holdout` split — the input to the frozen
@@ -548,57 +537,38 @@ def holdout_gram_hashes(
     the batch builder checks (md5 is only the bloom key), so the two
     paths cannot drift.
 
-    Scale shape: one assignment build + a side-filtered gram explode
-    into a map-side-combined distinct — the shuffle carries 32-byte
-    hashes bounded by the side's distinct-gram count; build the bloom
-    with :func:`~.bloom.build_hash_bloom` and persist with
-    :func:`~.bloom.write_hash_bloom`.  Building BOTH sidecars?  Compute
-    the assignment once (persist or write it — it is the split artifact
-    anyway) and pass it as ``assignment=`` so the gram-overlap plan does
-    not run once per side.  The SELECTION parameters (holdout_ppm /
-    min_hits / cutoff / ts_col) are then ignored in its favor — but
-    ``k`` is NOT: it sets the gram width of the sidecar itself and must
-    match the width the split was decontaminated at (r17 review: a
-    k=7 split served through k=5 sidecars would silently break the
-    batch ≡ serve parity).  Pass a :class:`HoldoutSplit` handle (from
-    :func:`load_holdout_split` or built in-memory) and the width is
-    DERIVED from its metadata — an explicitly conflicting ``k`` is
-    REFUSED instead of silently producing the wrong-width sidecar (r17
-    verdict nit: the hazard was documented but unvalidated; bare
-    DataFrame assignments keep the documented hazard for
-    compatibility).  ``k=None`` (the default) means: the handle's
-    width, or 5 when there is no handle."""
+    ``assignment`` is the split as a :class:`HoldoutSplit` handle (from
+    :func:`load_holdout_split`, or built in memory from the assignment
+    and its record): the gram width ``k`` of the sidecar is read from
+    its record, so a sidecar cannot be built at another width than the
+    split was decontaminated at.  A bare DataFrame carries no width and
+    is refused.
+
+    Scale shape: a side-filtered gram explode of the documents (a
+    semi-join against the assignment) into a map-side-combined distinct
+    — the shuffle carries 32-byte hashes bounded by the side's
+    distinct-gram count; build the bloom with
+    :func:`~.bloom.build_hash_bloom` and persist with
+    :func:`~.bloom.write_hash_bloom`.  Building BOTH sidecars?  Persist
+    or write the assignment first (it is the split artifact anyway), so
+    its gram-overlap plan does not run once per side."""
     from .dedup import string_shingles
 
     if side not in ("train", "eval"):
         raise ValueError(f"side must be 'train' or 'eval', got {side!r}")
-    if isinstance(assignment, HoldoutSplit):
-        if k is not None:
-            check_split_meta(
-                assignment.meta, k=k, what="holdout split assignment"
-            )
-        k = assignment.k
-        assignment = assignment.df
-    if k is None:
-        k = 5
-    if assignment is None:
-        assignment = decontaminated_holdout(
-            documents,
-            holdout_ppm=holdout_ppm,
-            k=k,
-            min_hits=min_hits,
-            cutoff=cutoff,
-            ts_col=ts_col,
-            id_col=id_col,
-            text_col=text_col,
+    if not isinstance(assignment, HoldoutSplit):
+        raise TypeError(
+            "assignment must be a HoldoutSplit (load_holdout_split, or "
+            "HoldoutSplit(df, record)): the sidecar's gram width is read "
+            "from its record"
         )
-    assigned = assignment.filter(F.col("split") == side)
+    assigned = assignment.df.filter(F.col("split") == side)
     docs_side = documents.join(
         assigned.select(id_col), id_col, "left_semi"
     )
     return (
         docs_side.select(
-            F.explode(string_shingles(text_col, k)).alias("_g")
+            F.explode(string_shingles(text_col, assignment.k)).alias("_g")
         )
         .select(F.md5(F.col("_g").cast("binary")).alias("gram_hash"))
         .distinct()

@@ -1033,6 +1033,11 @@ def fit_trigram_model(
     import json as _json
     import os as _os
 
+    from ..util import require_local_path
+
+    # before the count tables are written: the sidecar goes through
+    # open(), and a URI path would leave a model without one
+    require_local_path(path)
     staged = _staged_tokens(documents)
     cu, cb, ct, total = trigram_counts(staged)
     cu.write.mode("overwrite").parquet(_os.path.join(path, "cu"))

@@ -1146,7 +1146,8 @@ def _minhash_oracle_sql() -> str:
     FROM reach GROUP BY u
     """,
     doc="X1/X2 end-to-end dedup decision: connected components over the "
-    "exact near-dup graph via min-label propagation (iterative joins); "
+    "exact near-dup graph via alternating large-star/small-star rounds "
+    "(iterative joins); "
     "oracle is a recursive-CTE transitive closure in DuckDB — a strong "
     "differential since the algorithms share nothing.",
 )

@@ -1711,16 +1711,11 @@ def stream_holdout_tag(
     rows: DataFrame,
     train_gram_blooms: DataFrame,
     eval_gram_blooms: DataFrame,
-    holdout_ppm: int = 100_000,
-    k: int = 5,
-    min_hits: int = 1,
-    cutoff: str | None = None,
-    ts_col: str | None = None,
+    train_meta: dict,
+    eval_meta: dict,
     id_col: str = "doc_id",
     text_col: str = "text",
     max_artifact_bytes: int = 64 << 20,
-    train_meta: dict | None = None,
-    eval_meta: dict | None = None,
 ) -> DataFrame:
     """Streaming X36 holdout tagging: route incoming documents
     train / eval / quarantine against a FROZEN
@@ -1745,22 +1740,20 @@ def stream_holdout_tag(
       eval side is admitted — the exact tolerance the batch builder
       already accepted when it declared that eval side clean.
 
-    ``train_meta`` / ``eval_meta`` take the bloom artifacts' sidecar
-    dicts (:func:`~..operators.bloom.load_hash_bloom` returns them;
-    the X36 build job records ``k`` and ``holdout_ppm`` there) and
-    REFUSE a gram-width or selection mismatch with the passed
-    parameters instead of silently probing wrong-width grams (r17
-    verdict nit — the :class:`~..operators.splits.HoldoutSplit`
-    refusal, serve side).
+    ``train_meta`` / ``eval_meta`` are the two blooms' split records:
+    the sidecar dicts :func:`~..operators.bloom.load_hash_bloom` returns
+    for the training-data build's blooms (or a
+    :data:`~..operators.splits.SPLIT_SIDECAR` record).  The tagger takes
+    the gram width ``k``, ``min_hits`` and the selection mode from them
+    and from nowhere else: each passes
+    :func:`~..operators.splits.split_params`, and two records that
+    disagree are refused — both blooms must come from one split.
 
     Candidacy is the SAME rule as the batch builder that froze the
-    split: hash mode (default) uses the portable md5 projection, so a
-    document's side never depends on arrival time; temporal mode
-    (``cutoff=`` + ``ts_col=``, matching the batch builder's) uses the
-    X33 time boundary — pass the SAME mode and parameters the split was
-    built with, or arrivals would be routed to the wrong side with no
-    error (r17 review finding: the tagger must be able to EXPRESS the
-    temporal contract).  Grams are the batch builder's
+    split (:func:`~..operators.splits.holdout_candidacy`): hash mode
+    uses the portable md5 projection, so a document's side never
+    depends on arrival time; temporal mode uses the X33 time boundary.
+    Grams are the batch builder's
     :func:`~..operators.dedup.string_shingles` hashed with md5 in-plan
     (one pure projection); both sidecars are bounded plan-literal
     artifacts (validated against ``max_artifact_bytes``) probed inside
@@ -1787,30 +1780,16 @@ def stream_holdout_tag(
     import pandas as pd
 
     from ..operators.bloom import bloom_closure_probe
-    from ..operators.dedup import portable_token_hash, string_shingles
+    from ..operators.dedup import string_shingles
+    from ..operators.splits import holdout_candidacy, split_params
 
-    if not 0 < int(holdout_ppm) < 1_000_000:
+    params = split_params(train_meta, "train-gram bloom record")
+    if split_params(eval_meta, "eval-gram bloom record") != params:
         raise ValueError(
-            f"holdout_ppm must be in (0, 1000000), got {holdout_ppm}"
+            "the train-gram and eval-gram bloom records disagree "
+            f"({train_meta} vs {eval_meta}): both blooms must come from "
+            "one split"
         )
-    if int(min_hits) < 1:
-        raise ValueError(f"min_hits must be >= 1, got {min_hits}")
-    if (cutoff is None) != (ts_col is None):
-        raise ValueError(
-            "temporal mode needs BOTH cutoff= and ts_col= (hash mode: "
-            "neither) — and it must match the mode the split was built "
-            "with"
-        )
-    from ..operators.splits import check_split_meta
-
-    for meta, what in ((train_meta, "train-gram bloom"),
-                       (eval_meta, "eval-gram bloom")):
-        if meta is not None:
-            check_split_meta(
-                meta, k=k, holdout_ppm=int(holdout_ppm),
-                cutoff=cutoff, ts_col=ts_col, what=what,
-            )
-
     maybe_train = bloom_closure_probe(
         train_gram_blooms, max_artifact_bytes, "train-gram bloom"
     )
@@ -1818,25 +1797,7 @@ def stream_holdout_tag(
         eval_gram_blooms, max_artifact_bytes, "eval-gram bloom"
     )
 
-    if cutoff is not None:
-        from ..operators.splits import _valid_ts
-
-        cut = F.lit(_valid_ts(cutoff, "cutoff")).cast("timestamp")
-        is_cand = F.col(ts_col) >= cut
-        unplaced = F.col(id_col).isNull() | F.col(ts_col).isNull()
-    else:
-        is_cand = (
-            F.pmod(
-                portable_token_hash(
-                    F.concat(
-                        F.lit("holdout:"), F.col(id_col).cast("string")
-                    )
-                ),
-                F.lit(1_000_000),
-            )
-            < F.lit(int(holdout_ppm))
-        )
-        unplaced = F.col(id_col).isNull()
+    is_cand, unplaced = holdout_candidacy(params, id_col)
     # unplaceable rows quarantine IN-PLAN: keeping NULL ids out of the
     # Arrow batch keeps the id column int64 (a nullable batch coerces to
     # float64 and corrupts ids past 2^53)
@@ -1852,7 +1813,7 @@ def stream_holdout_tag(
         F.col(text_col),
         is_cand.alias("_cand"),
         F.transform(
-            string_shingles(text_col, k),
+            string_shingles(text_col, params["k"]),
             lambda g: F.md5(g.cast("binary")),
         ).alias("_grams"),
     )
@@ -1863,7 +1824,7 @@ def stream_holdout_tag(
         "split string, n_hit_grams_ub long"
     )
 
-    mh = int(min_hits)
+    mh = params["min_hits"]
 
     def tag(batches):
         for pdf in batches:

@@ -148,14 +148,11 @@ def test_incremental_ingest_with_bloom_identical_to_plain(spark, tmp_path):
         l1 = _land(tmp_path, f"{variant}_b1", b1)
         l2 = _land(tmp_path, f"{variant}_b2", b2)
         m1 = run_corpus_ingestion(spark, l1, gold, incremental=True,
-                                  bloom_path=bloom_path, bloom_shards=4,
-                                  bloom_bits=1 << 12)
+                                  bloom_path=bloom_path)
         m2 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                                  bloom_path=bloom_path, bloom_shards=4,
-                                  bloom_bits=1 << 12)
+                                  bloom_path=bloom_path)
         m3 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                                  bloom_path=bloom_path, bloom_shards=4,
-                                  bloom_bits=1 << 12)
+                                  bloom_path=bloom_path)
         rows = sorted(
             (r["doc_id"], r["content_hash"])
             for r in spark.read.parquet(gold).collect()
@@ -187,8 +184,7 @@ def test_bloom_sidecar_extends_and_catches_recrawl(spark, tmp_path):
         {"doc_id": 1, "text": "alpha text", "lang": "en", "source": "a", "n_chars": 10},
     ])
     m1 = run_corpus_ingestion(spark, l1, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     # first incremental run: no sidecar existed, so nothing skipped, and
     # the filter was then built covering gold
     assert m1["n_bloom_skipped"] == 0
@@ -200,15 +196,13 @@ def test_bloom_sidecar_extends_and_catches_recrawl(spark, tmp_path):
         {"doc_id": 3, "text": "gamma text", "lang": "en", "source": "a", "n_chars": 10},
     ])
     m2 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     assert m2["n_kept"] == 2 and m2["n_bloom_skipped"] == 2
 
     # the sidecar was EXTENDED with batch 2's hashes: a re-crawl of batch
     # 2 must now be bloom-positive (skipped=0) and append nothing
     m3 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     assert m3["n_kept"] == 0 and m3["n_seen_before"] == 2
     assert m3["n_bloom_skipped"] == 0
     assert sorted(
@@ -250,8 +244,7 @@ def test_bloomless_append_detected_as_stale_sidecar(spark, tmp_path):
          "n_chars": 10},
     ])
     run_corpus_ingestion(spark, l1, gold, incremental=True,
-                         bloom_path=bloom_path, bloom_shards=4,
-                         bloom_bits=1 << 12)
+                         bloom_path=bloom_path)
     # append WITHOUT the sidecar: bloom now misses doc 2's hash
     l2 = _land(tmp_path, "st2", [
         {"doc_id": 2, "text": "beta text", "lang": "en", "source": "a",
@@ -261,8 +254,7 @@ def test_bloomless_append_detected_as_stale_sidecar(spark, tmp_path):
     # re-deliver doc 2 WITH the sidecar: a trusted stale bloom would
     # answer definitely-new and re-append; the guard must route exact
     m3 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     assert m3["n_kept"] == 0 and m3["n_seen_before"] == 1
     assert m3["n_bloom_skipped"] == 0               # stale -> exact path
     ids = sorted(r["doc_id"] for r in spark.read.parquet(gold).collect())
@@ -274,8 +266,7 @@ def test_bloomless_append_detected_as_stale_sidecar(spark, tmp_path):
          "n_chars": 10},
     ])
     m4 = run_corpus_ingestion(spark, l4, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     assert m4["n_kept"] == 1 and m4["n_bloom_skipped"] == 1
 
 
@@ -294,8 +285,7 @@ def test_equal_rowcount_rewrite_detected_by_build_id(spark, tmp_path):
          "n_chars": 10},
     ])
     run_corpus_ingestion(spark, l1, gold, incremental=True,
-                         bloom_path=bloom_path, bloom_shards=4,
-                         bloom_bits=1 << 12)
+                         bloom_path=bloom_path)
     # non-incremental corrected re-ingest WITHOUT the sidecar: same row
     # count (1), different content — the count check alone passes
     l2 = _land(tmp_path, "bid2", [
@@ -307,8 +297,7 @@ def test_equal_rowcount_rewrite_detected_by_build_id(spark, tmp_path):
     # re-deliver doc 2 WITH the sidecar: a trusted stale bloom would
     # answer definitely-new and re-append a duplicate
     m3 = run_corpus_ingestion(spark, l2, gold, incremental=True,
-                              bloom_path=bloom_path, bloom_shards=4,
-                              bloom_bits=1 << 12)
+                              bloom_path=bloom_path)
     assert m3["n_kept"] == 0 and m3["n_seen_before"] == 1
     assert m3["n_bloom_skipped"] == 0              # stale -> exact path
     ids = sorted(r["doc_id"] for r in spark.read.parquet(gold).collect())
@@ -447,14 +436,15 @@ def test_every_reader_refuses_unsafe_table(spark, tmp_path, case):
     bad = _refused_table(good, case).localCheckpoint(eager=True)
     docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
     path = str(tmp_path / "bloom")
+    record = {"k": 5, "holdout_ppm": 100_000, "min_hits": 1}
     readers = [
         lambda: bloom_params_from_rows(bad.collect()),
         lambda: bloom_probe_hashes(_hashes(spark, 0, 5, col="_h"), bad),
         lambda: extend_hash_bloom(bad, _hashes(spark, 100, 110)),
         lambda: write_hash_bloom(bad, path),
         lambda: P.stream_novelty_filter(docs, bad),
-        lambda: P.stream_holdout_tag(docs, bad, good),
-        lambda: P.stream_holdout_tag(docs, good, bad),
+        lambda: P.stream_holdout_tag(docs, bad, good, record, record),
+        lambda: P.stream_holdout_tag(docs, good, bad, record, record),
     ]
     for read in readers:
         with pytest.raises(ValueError, match=_REFUSALS[case]):

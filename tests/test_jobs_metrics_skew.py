@@ -254,7 +254,62 @@ def test_run_training_data_build_serve_handoff(spark, tmp_path):
     )
     served = {
         r["doc_id"]: r["split"]
-        for r in stream_holdout_tag(corpus, tb, eb).collect()
+        for r in stream_holdout_tag(corpus, tb, eb, tside, eside).collect()
     }
     want = {r["doc_id"]: r["split"] for r in assignment.collect()}
     assert served == want
+
+
+def test_run_training_data_build_serves_its_own_gram_width(
+    spark, tmp_path, sf_oracle
+):
+    """A build at a gram width other than the default serves from its
+    sidecars alone: each sidecar carries the split record (k=7, the
+    hash mode, min_hits), the tagger reads them from there, and the fit
+    corpus's tags equal the written split assignment.  The tagger takes
+    no k= of its own that could disagree."""
+    import os
+
+    from market_data_ingestion_scraper_spark.jobs import (
+        run_training_data_build,
+    )
+    from market_data_ingestion_scraper_spark.operators.bloom import (
+        load_hash_bloom,
+    )
+    from market_data_ingestion_scraper_spark.operators.splits import (
+        load_holdout_split,
+    )
+    from market_data_ingestion_scraper_spark.sources.tables import load_table
+    from market_data_ingestion_scraper_spark.streaming.pipeline import (
+        stream_holdout_tag,
+    )
+
+    docs_path = str(tmp_path / "docs_in")
+    load_table(spark, sf_oracle, "documents").select(
+        "doc_id", "text", "lang", "source"
+    ).write.parquet(docs_path)
+    out = str(tmp_path / "build")
+    run_training_data_build(spark, docs_path, out, k=7, write_sidecars=True)
+    tb, tm = load_hash_bloom(spark, os.path.join(out, "sidecar_train_grams"))
+    eb, em = load_hash_bloom(spark, os.path.join(out, "sidecar_eval_grams"))
+    split = load_holdout_split(spark, os.path.join(out, "split_assignment"))
+    # the bloom sidecars keep their own kind and carry the split record
+    assert tm["kind"] == em["kind"] == "sharded-bloom"
+    for meta in (tm, em):
+        assert {k: meta[k] for k in split.params} == split.params
+    assert split.params == {"k": 7, "min_hits": 1, "holdout_ppm": 100_000}
+
+    corpus = (
+        spark.read.parquet(docs_path)
+        .join(split.df.select("doc_id"), "doc_id", "left_semi")
+        .select("doc_id", "text")
+    )
+    served = {
+        r["doc_id"]: r["split"]
+        for r in stream_holdout_tag(
+            corpus, tb, eb, train_meta=tm, eval_meta=em
+        ).collect()
+    }
+    assert served == {r["doc_id"]: r["split"] for r in split.df.collect()}
+    with pytest.raises(TypeError, match="'k'"):
+        stream_holdout_tag(corpus, tb, eb, train_meta=tm, eval_meta=em, k=7)

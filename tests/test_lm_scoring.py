@@ -376,6 +376,24 @@ def test_fit_trigram_model_refuses_empty_corpus(spark, tmp_path):
         fit_trigram_model(empty, str(tmp_path / "m"))
 
 
+def test_fit_trigram_model_refuses_uri_before_writing(spark, tmp_path):
+    """The model sidecar is written with open(), so a URI path is refused
+    before Spark writes the count tables — not after, which left a model
+    without its sidecar."""
+    import os
+
+    import pytest
+    from market_data_ingestion_scraper_spark.operators.text import (
+        fit_trigram_model,
+    )
+
+    docs = spark.createDataFrame([(1, "aa bb cc dd")], "doc_id long, text string")
+    local = str(tmp_path / "m")
+    with pytest.raises(ValueError, match="local filesystem path required"):
+        fit_trigram_model(docs, "file://" + local)
+    assert not os.path.exists(local)
+
+
 def test_load_trigram_model_refuses_bad_alpha(spark, tmp_path):
     import json
     import pytest

@@ -162,18 +162,23 @@ def test_temporal_split_nondistinct_entities_and_compact_cutoff(spark):
 # ---------------------------------------------------------------- X36
 
 
+def _py_grams(text, k):
+    import re
+
+    ts = [t for t in re.split(r"[^a-z0-9]+", (text or "").lower()) if t]
+    return {" ".join(ts[i:i + k]) for i in range(len(ts) - k + 1)}
+
+
 def _py_holdout(rows, holdout_ppm=100_000, k=5, min_hits=1):
     """Independent pure-Python twin of decontaminated_holdout (hash
     mode): md5 candidacy, set-based gram overlap, the three-way label."""
     import hashlib
-    import re
 
     def h(s):
         return int(hashlib.md5(s.encode()).hexdigest()[:8], 16) % 2_147_483_647
 
     def grams(text):
-        ts = [t for t in re.split(r"[^a-z0-9]+", (text or "").lower()) if t]
-        return {" ".join(ts[i:i + k]) for i in range(len(ts) - k + 1)}
+        return _py_grams(text, k)
 
     cand = {d: h(f"holdout:{d}") % 1_000_000 < holdout_ppm for d, _ in rows}
     train_grams = {}
@@ -324,15 +329,23 @@ def test_decontaminated_holdout_validation(spark):
         decontaminated_holdout(docs, cutoff="nope", ts_col="ts")
 
 
+#: The split record of decontaminated_holdout's defaults: the blooms
+#: built below carry it, and the tagger reads its parameters from it.
+_RECORD = {"kind": "holdout-split", "k": 5, "holdout_ppm": 100_000,
+           "min_hits": 1}
+
+
 def _holdout_blooms(spark, docs, n_bits=1 << 20):
     """Sidecars sized to the house guidance (~10+ bits per distinct
     gram, 5 hashes → fp ~ 0 at fixture scale, which the equality pin
     below relies on; an undersized bloom only OVER-quarantines — the
-    documented safe direction, demonstrated in the directional test)."""
+    documented safe direction, demonstrated in the directional test).
+    Built from the split :data:`_RECORD` describes."""
     from market_data_ingestion_scraper_spark.operators.bloom import (
         build_hash_bloom,
     )
     from market_data_ingestion_scraper_spark.operators.splits import (
+        HoldoutSplit,
         decontaminated_holdout,
         holdout_gram_hashes,
     )
@@ -341,12 +354,13 @@ def _holdout_blooms(spark, docs, n_bits=1 << 20):
     # feeds both side filters instead of re-running the gram join
     assignment = decontaminated_holdout(docs).persist()
     assignment.count()
+    handle = HoldoutSplit(assignment, _RECORD)
     tb = build_hash_bloom(
-        holdout_gram_hashes(docs, "train", assignment=assignment),
+        holdout_gram_hashes(docs, "train", handle),
         "gram_hash", n_shards=4, n_bits=n_bits, n_hashes=5,
     )
     eb = build_hash_bloom(
-        holdout_gram_hashes(docs, "eval", assignment=assignment),
+        holdout_gram_hashes(docs, "eval", handle),
         "gram_hash", n_shards=4, n_bits=n_bits, n_hashes=5,
     )
     assignment.unpersist()
@@ -374,7 +388,7 @@ def test_stream_holdout_tag_matches_batch_on_fit_corpus(spark):
     }
     served = {
         r["doc_id"]: (r["split"], r["n_hit_grams_ub"])
-        for r in stream_holdout_tag(docs, tb, eb).collect()
+        for r in stream_holdout_tag(docs, tb, eb, _RECORD, _RECORD).collect()
     }
     assert set(served) == set(batch)
     for d, (split, ub) in served.items():
@@ -418,7 +432,7 @@ def test_stream_holdout_tag_protects_both_directions(spark):
     )
     got = {
         r["doc_id"]: r["split"]
-        for r in stream_holdout_tag(arrivals, tb, eb).collect()
+        for r in stream_holdout_tag(arrivals, tb, eb, _RECORD, _RECORD).collect()
     }
     assert got[cand_ids[1]] == "quarantine"
     assert got[cand_ids[2]] == "eval"
@@ -443,9 +457,13 @@ def test_stream_holdout_tag_is_stream_legal(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(src)
     )
-    want = {tuple(r) for r in stream_holdout_tag(docs, tb, eb).collect()}
+    want = {
+        tuple(r)
+        for r in stream_holdout_tag(docs, tb, eb, _RECORD, _RECORD).collect()
+    }
     got = run_to_memory(
-        stream_holdout_tag(stream, tb, eb), "t_holdout_tag", spark,
+        stream_holdout_tag(stream, tb, eb, _RECORD, _RECORD),
+        "t_holdout_tag", spark,
         mode="append",
     )
     assert {tuple(r) for r in got.collect()} == want
@@ -460,18 +478,21 @@ def test_stream_holdout_tag_validation(spark):
         [(1, "a b c d e f")], "doc_id long, text string"
     )
     tb, eb = _holdout_blooms(spark, docs)
-    with pytest.raises(ValueError, match="holdout_ppm"):
-        stream_holdout_tag(docs, tb, eb, holdout_ppm=0)
-    with pytest.raises(ValueError, match="min_hits"):
-        stream_holdout_tag(docs, tb, eb, min_hits=0)
     with pytest.raises(ValueError, match="max_artifact_bytes"):
-        stream_holdout_tag(docs, tb, eb, max_artifact_bytes=8)
+        stream_holdout_tag(
+            docs, tb, eb, _RECORD, _RECORD, max_artifact_bytes=8
+        )
     with pytest.raises(ValueError, match="side must be"):
         from market_data_ingestion_scraper_spark.operators.splits import (
+            HoldoutSplit,
+            decontaminated_holdout,
             holdout_gram_hashes,
         )
 
-        holdout_gram_hashes(docs, "quarantine")
+        holdout_gram_hashes(
+            docs, "quarantine",
+            HoldoutSplit(decontaminated_holdout(docs), _RECORD),
+        )
 
 
 def test_decontaminated_holdout_null_id_policy(spark):
@@ -499,7 +520,7 @@ def test_decontaminated_holdout_null_id_policy(spark):
     tb, eb = _holdout_blooms(spark, docs.where("doc_id IS NOT NULL"))
     served = {
         r["doc_id"]: (r["split"], r["n_hit_grams_ub"]) for r in
-        stream_holdout_tag(docs, tb, eb).collect()
+        stream_holdout_tag(docs, tb, eb, _RECORD, _RECORD).collect()
     }
     assert served[None] == ("quarantine", None)
 
@@ -570,6 +591,7 @@ def test_stream_holdout_tag_temporal_mode(spark):
         build_hash_bloom,
     )
     from market_data_ingestion_scraper_spark.operators.splits import (
+        HoldoutSplit,
         decontaminated_holdout,
         holdout_gram_hashes,
     )
@@ -578,19 +600,23 @@ def test_stream_holdout_tag_temporal_mode(spark):
     )
 
     CUT = "2024-02-01 00:00:00"
+    record = {"kind": "holdout-split", "k": 5, "min_hits": 1,
+              "cutoff": CUT, "ts_col": "ts"}
     t0, t1 = dtm.datetime(2024, 1, 10), dtm.datetime(2024, 2, 10)
     train_text = "alpha beta gamma delta epsilon zeta"
     fit = spark.createDataFrame(
         [(1, train_text, t0), (2, "one two three four five six", t1)],
         "doc_id long, text string, ts timestamp",
     )
-    assignment = decontaminated_holdout(fit, cutoff=CUT, ts_col="ts")
+    handle = HoldoutSplit(
+        decontaminated_holdout(fit, cutoff=CUT, ts_col="ts"), record
+    )
     tb = build_hash_bloom(
-        holdout_gram_hashes(fit, "train", assignment=assignment),
+        holdout_gram_hashes(fit, "train", handle),
         "gram_hash", n_shards=4, n_bits=1 << 20, n_hashes=5,
     )
     eb = build_hash_bloom(
-        holdout_gram_hashes(fit, "eval", assignment=assignment),
+        holdout_gram_hashes(fit, "eval", handle),
         "gram_hash", n_shards=4, n_bits=1 << 20, n_hashes=5,
     )
     arrivals = spark.createDataFrame(
@@ -604,19 +630,12 @@ def test_stream_holdout_tag_temporal_mode(spark):
     )
     got = {
         r["doc_id"]: (r["split"], r["n_hit_grams_ub"]) for r in
-        stream_holdout_tag(
-            arrivals, tb, eb, cutoff=CUT, ts_col="ts"
-        ).collect()
+        stream_holdout_tag(arrivals, tb, eb, record, record).collect()
     }
     assert got[10][0] == "quarantine" and got[10][1] >= 1
     assert got[11] == ("eval", 0)
     assert got[12] == ("train", 0)
     assert got[13] == ("quarantine", None)
-    # mode mismatch refusals
-    with pytest.raises(ValueError, match="temporal mode"):
-        stream_holdout_tag(arrivals, tb, eb, cutoff=CUT)
-    with pytest.raises(ValueError, match="ISO timestamp"):
-        stream_holdout_tag(arrivals, tb, eb, cutoff="nope", ts_col="ts")
 
 
 def test_holdout_split_artifact_roundtrip(spark, tmp_path):
@@ -637,17 +656,19 @@ def test_holdout_split_artifact_roundtrip(spark, tmp_path):
     assert meta["kind"] == "holdout-split" and meta["k"] == 7
     handle = load_holdout_split(spark, path)
     assert handle.k == 7
-    assert handle.meta["holdout_ppm"] == 100_000
-    df, m = handle  # tuple-unpacks like the AnnIndex handle
-    assert m["k"] == 7
+    assert handle.params == {"k": 7, "min_hits": 1, "holdout_ppm": 100_000}
     key = lambda d: sorted(map(tuple, d.collect()))  # noqa: E731
-    assert key(df) == key(assignment)
+    assert key(handle.df) == key(assignment)
 
 
-def test_holdout_gram_hashes_handle_derives_and_refuses_k(spark, tmp_path):
-    """The HoldoutSplit handle makes the sidecar's gram width
-    authoritative: k is DERIVED when unspecified, and an explicitly
-    conflicting k is REFUSED (previously a silent wrong-width sidecar)."""
+def test_holdout_gram_hashes_handle_derives_and_refuses_k(spark):
+    """The HoldoutSplit handle is the only source of the sidecar's gram
+    width: the hashes are the md5s of the train side's 7-grams when the
+    record says k=7 (pure-Python twin), a k= argument is no longer
+    accepted, and a bare assignment DataFrame, which carries no width,
+    is refused."""
+    import hashlib
+
     from market_data_ingestion_scraper_spark.operators.splits import (
         HoldoutSplit,
         decontaminated_holdout,
@@ -656,84 +677,120 @@ def test_holdout_gram_hashes_handle_derives_and_refuses_k(spark, tmp_path):
 
     docs = load_table(spark, SF, "documents").select("doc_id", "text")
     assignment = decontaminated_holdout(docs, k=7).persist()
-    assignment.count()
-    handle = HoldoutSplit(
-        assignment, {"kind": "holdout-split", "k": 7, "min_hits": 1}
-    )
-    derived = holdout_gram_hashes(docs, "train", assignment=handle)
-    explicit = holdout_gram_hashes(
-        docs, "train", k=7, assignment=assignment
-    )
-    key = lambda d: sorted(r["gram_hash"] for r in d.collect())  # noqa: E731
-    assert key(derived) == key(explicit)
-    # matching explicit k passes through the refusal check
-    assert key(
-        holdout_gram_hashes(docs, "train", k=7, assignment=handle)
-    ) == key(explicit)
-    with pytest.raises(ValueError, match="gram-width mismatch"):
-        holdout_gram_hashes(docs, "train", k=5, assignment=handle)
+    handle = HoldoutSplit(assignment, {**_RECORD, "k": 7})
+    train_ids = {
+        r["doc_id"] for r in assignment.where("split = 'train'").collect()
+    }
+    want = {
+        hashlib.md5(g.encode()).hexdigest()
+        for r in docs.collect() if r["doc_id"] in train_ids
+        for g in _py_grams(r["text"], 7)
+    }
+    got = {
+        r["gram_hash"]
+        for r in holdout_gram_hashes(docs, "train", handle).collect()
+    }
+    assert got == want and want
+    with pytest.raises(TypeError, match="'k'"):
+        holdout_gram_hashes(docs, "train", handle, k=7)
+    with pytest.raises(TypeError, match="HoldoutSplit"):
+        holdout_gram_hashes(docs, "train", assignment)
     assignment.unpersist()
 
 
 def test_holdout_split_handle_validation():
     from market_data_ingestion_scraper_spark.operators.splits import (
         HoldoutSplit,
-        check_split_meta,
     )
 
     with pytest.raises(ValueError, match="not a holdout-split"):
         HoldoutSplit(None, {"kind": "sharded-bloom", "k": 5})
-    with pytest.raises(ValueError, match="record the gram width"):
+    with pytest.raises(ValueError, match="does not record 'k'"):
         HoldoutSplit(None, {"kind": "holdout-split"})
-    # selection-mode refusals: temporal artifact served hash-mode and
-    # vice versa, even when every shared parameter agrees
-    with pytest.raises(ValueError, match="built TEMPORAL"):
-        check_split_meta(
-            {"k": 5, "cutoff": "2024-01-01 00:00:00", "ts_col": "ts"},
-            k=5,
-        )
-    with pytest.raises(ValueError, match="built HASH-selected"):
-        check_split_meta(
-            {"k": 5, "holdout_ppm": 100_000}, k=5,
-            cutoff="2024-01-01 00:00:00", ts_col="ts",
-        )
-    with pytest.raises(ValueError, match="holdout_ppm mismatch"):
-        check_split_meta(
-            {"k": 5, "holdout_ppm": 50_000}, k=5, holdout_ppm=100_000
-        )
-    # keys absent from older metas are not checked (documented hazard
-    # preserved, no refusal)
-    check_split_meta({"k": 5}, k=5, holdout_ppm=123, cutoff=None)
 
 
-def test_stream_holdout_tag_sidecar_meta_refusal(spark):
-    """The serve-side half of the k-persistence nit: passing the bloom
-    artifacts' sidecar dicts lets the tagger refuse a gram-width or
-    selection mismatch instead of silently probing wrong-width grams."""
+_TEMPORAL_RECORD = {"kind": "holdout-split", "k": 5, "min_hits": 1,
+                    "cutoff": "2024-02-01 00:00:00", "ts_col": "ts"}
+
+
+def _without(record, key):
+    return {k: v for k, v in record.items() if k != key}
+
+
+#: case -> (train record, eval record or None for "the same", refusal)
+_BAD_RECORDS = {
+    "missing-k": (_without(_RECORD, "k"), None, "does not record 'k'"),
+    "missing-mode": (
+        _without(_RECORD, "holdout_ppm"), None, "records no selection mode"
+    ),
+    "both-modes": (
+        {**_TEMPORAL_RECORD, "holdout_ppm": 100_000}, None,
+        "records both selection modes",
+    ),
+    "half-temporal": (
+        _without(_TEMPORAL_RECORD, "ts_col"), None,
+        "temporal mode needs BOTH",
+    ),
+    "ppm-zero": ({**_RECORD, "holdout_ppm": 0}, None, "holdout_ppm must be"),
+    "min-hits-zero": ({**_RECORD, "min_hits": 0}, None, "min_hits must be"),
+    "bad-cutoff": (
+        {**_TEMPORAL_RECORD, "cutoff": "nope"}, None, "ISO timestamp"
+    ),
+    "disagree": (_RECORD, {**_RECORD, "k": 7}, "records disagree"),
+}
+
+
+@pytest.mark.parametrize("case", list(_BAD_RECORDS))
+def test_every_reader_refuses_bad_split_record(spark, case):
+    """One check of the split record, run by every reader: the check
+    itself, the HoldoutSplit handle, the gram-hash builder (through its
+    handle) and the streaming tagger with the bad record on either
+    side.  Two records that are each valid but disagree are refused by
+    the tagger only, the one reader that takes two."""
+    from pyspark.sql import functions as F
+
+    from market_data_ingestion_scraper_spark.operators.bloom import (
+        build_hash_bloom,
+    )
+    from market_data_ingestion_scraper_spark.operators.splits import (
+        HoldoutSplit,
+        decontaminated_holdout,
+        holdout_gram_hashes,
+        split_params,
+    )
     from market_data_ingestion_scraper_spark.streaming.pipeline import (
         stream_holdout_tag,
     )
 
+    train_rec, eval_rec, refusal = _BAD_RECORDS[case]
     docs = spark.createDataFrame(
         [(1, "a b c d e f g h")], "doc_id long, text string"
     )
-    tb, eb = _holdout_blooms(spark, docs)
-    meta = {"k": 5, "holdout_ppm": 100_000, "min_hits": 1}
-    ok = stream_holdout_tag(
-        docs, tb, eb, train_meta=meta, eval_meta=meta
+    assignment = decontaminated_holdout(docs)
+    blooms = build_hash_bloom(
+        docs.select(F.md5("text").alias("gram_hash")), "gram_hash",
+        n_shards=2, n_bits=1 << 10, n_hashes=3,
     )
-    assert ok.count() == 1
-    with pytest.raises(ValueError, match="gram-width mismatch"):
-        stream_holdout_tag(docs, tb, eb, k=7, train_meta=meta)
-    with pytest.raises(ValueError, match="holdout_ppm mismatch"):
-        stream_holdout_tag(
-            docs, tb, eb, holdout_ppm=50_000, eval_meta=meta
-        )
-    with pytest.raises(ValueError, match="built HASH-selected"):
-        stream_holdout_tag(
-            docs, tb, eb, cutoff="2024-01-01 00:00:00", ts_col="ts",
-            train_meta=meta,
-        )
+    if eval_rec is None:
+        readers = [
+            lambda: split_params(train_rec),
+            lambda: HoldoutSplit(assignment, train_rec),
+            lambda: holdout_gram_hashes(
+                docs, "train", HoldoutSplit(assignment, train_rec)
+            ),
+            lambda: stream_holdout_tag(docs, blooms, blooms, train_rec, _RECORD),
+            lambda: stream_holdout_tag(docs, blooms, blooms, _RECORD, train_rec),
+        ]
+    else:
+        for rec in (train_rec, eval_rec):
+            assert HoldoutSplit(assignment, rec).params == split_params(rec)
+        readers = [
+            lambda: stream_holdout_tag(docs, blooms, blooms, train_rec, eval_rec),
+            lambda: stream_holdout_tag(docs, blooms, blooms, eval_rec, train_rec),
+        ]
+    for read in readers:
+        with pytest.raises(ValueError, match=refusal):
+            read()
 
 
 def test_stream_holdout_tag_min_hits_symmetric(spark):
@@ -776,11 +833,12 @@ def test_stream_holdout_tag_min_hits_symmetric(spark):
     )
     strict = {
         r["doc_id"]: (r["split"], r["n_hit_grams_ub"]) for r in
-        stream_holdout_tag(arrivals, tb, eb, min_hits=1).collect()
+        stream_holdout_tag(arrivals, tb, eb, _RECORD, _RECORD).collect()
     }
+    lax_record = {**_RECORD, "min_hits": 2}
     lax = {
         r["doc_id"]: (r["split"], r["n_hit_grams_ub"]) for r in
-        stream_holdout_tag(arrivals, tb, eb, min_hits=2).collect()
+        stream_holdout_tag(arrivals, tb, eb, lax_record, lax_record).collect()
     }
     # at min_hits=1 every overlap quarantines, both directions
     assert strict[train_ids[1]][0] == "quarantine"
