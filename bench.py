@@ -124,26 +124,36 @@ def main() -> None:
         f"box calibration (1-thread 3e8 hash-sum): {calibration}s",
         file=sys.stderr,
     )
-    # 32-way parallel calibration (r12: the isolated watch-query re-check
-    # found query walls ~1.3x their r10 records while the SINGLE-thread
+    # Parallel calibration (r12: the isolated watch-query re-check found
+    # query walls ~1.3x their r10 records while the SINGLE-thread
     # calibration matched r10 exactly — host multi-core throughput drifts
     # independently of single-thread speed and the 1-thread number cannot
-    # see it).  Same per-thread workload (3e8 hashed rows each across all
-    # 32 threads): on a fixed box this tracks the 1-thread number; when
-    # the ratio to it moves across rounds, read query-wall drift against
-    # THIS number before calling anything a plan regression.
+    # see it).  Same per-thread workload (3e8 hashed rows each), one
+    # thread per core of the session (``local[$SPARK_GRAFT_CPUS]``, the
+    # get_spark default of 32 when unset): on a fixed box this tracks the
+    # 1-thread number; when the ratio to it moves across rounds, read
+    # query-wall drift against THIS number before calling anything a plan
+    # regression.
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     mcal_runs = []
     for _ in range(3):
         t0 = time.perf_counter()
-        spark.range(0, 32 * 300_000_000, 1, 32).selectExpr(
+        spark.range(0, cpus * 300_000_000, 1, cpus).selectExpr(
             "sum(xxhash64(id) % 1024) AS s"
         ).collect()
         mcal_runs.append(time.perf_counter() - t0)
-    calibration_32way = round(min(mcal_runs), 4)
+    calibration_parallel = round(min(mcal_runs), 4)
     print(
-        f"box calibration (32-way 3e8/thread hash-sum): {calibration_32way}s",
+        f"box calibration ({cpus}-way 3e8/thread hash-sum): "
+        f"{calibration_parallel}s",
         file=sys.stderr,
     )
+    host = {
+        "cpus": cpus,
+        "sf_dir": sf_dir,
+        "calibration_sec": calibration,
+        "calibration_parallel_sec": calibration_parallel,
+    }
 
     # min-of-N per query: single-shot wall times on this box swing up to
     # 18x run-to-run (r03 verdict), so one sample cannot distinguish a plan
@@ -214,8 +224,7 @@ def main() -> None:
                     "sf": sf_val,
                     "queries": timings,
                     "load_avg_start": load_start,
-                    "calibration_sec": calibration,
-                    "calibration_32way_sec": calibration_32way,
+                    **host,
                 },
                 separators=(",", ":"),
             )
@@ -242,8 +251,7 @@ def main() -> None:
                 "index_build": index_build,
                 "load_avg_start": load_start,
                 "load_avg_end": os.getloadavg(),
-                "calibration_sec": calibration,
-                "calibration_32way_sec": calibration_32way,
+                **host,
             },
             f,
             indent=1,
@@ -262,8 +270,7 @@ def main() -> None:
         "sf": sf_val,
         "n_queries": len(timings),
         "detail": os.path.basename(detail_path),
-        "calibration_sec": calibration,
-        "calibration_32way_sec": calibration_32way,
+        **host,
         "queries": {k: round(v, 2) for k, v in slowest.items()},
     }
     print(json.dumps(out, separators=(",", ":")))

@@ -1235,7 +1235,7 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "shard-admit":
-        from .operators.dedup import shard_admission_report
+        from .operators.dedup import minhash_index, shard_admission_report
 
         if (args.index is None) == (args.corpus is None):
             print("pass exactly one of --index or --corpus",
@@ -1259,7 +1259,7 @@ def main(argv: list[str] | None = None) -> int:
             try:
                 handle = load_ann_index(spark, args.index)
                 report = shard_admission_report(
-                    shard, threshold=args.threshold, index=handle,
+                    shard, handle, threshold=args.threshold,
                 )
             except (ValueError, FileNotFoundError) as exc:
                 print(str(exc), file=sys.stderr)
@@ -1274,8 +1274,8 @@ def main(argv: list[str] | None = None) -> int:
                       file=sys.stderr)
                 return 2
             report = shard_admission_report(
-                shard, corpus, threshold=args.threshold,
-                portable=args.portable,
+                shard, minhash_index(corpus, portable=args.portable),
+                threshold=args.threshold,
             )
         if args.out:
             report.write.mode("overwrite").parquet(args.out)

@@ -230,20 +230,22 @@ def minhash_table(
         F.col(id_col),
         F.explode_outer(shingles(text_col, k, portable)).alias("x"),
     )
-    sentinel_slot = F.lit(HASH_P).cast("long")
+    # The 64 slot aggregates are parsed from SQL text on the JVM, one
+    # call each: composing them from Column operators cost ~11 Py4J
+    # round trips per slot, ~0.5 s of plan construction per call on a
+    # 4-core host, paid by every operator that signatures a frame.  Same expression tree (int literals a, b, p over the long
+    # gram hash x), so the plan and the values are unchanged.
     mins = hashed.groupBy(id_col).agg(
         *[
-            F.coalesce(
-                F.min((F.lit(a) * F.col("x") + F.lit(b)) % HASH_P),
-                sentinel_slot,
-            ).alias(f"m{i}")
+            F.expr(
+                f"coalesce(min(({a} * x + {b}) % {HASH_P}), "
+                f"CAST({HASH_P} AS BIGINT)) AS m{i}"
+            )
             for i, (a, b) in enumerate(_AB)
         ]
     )
-    return mins.select(
-        id_col,
-        F.array(*[F.col(f"m{i}") for i in range(N_HASHES)]).alias("sig"),
-    )
+    slots = ", ".join(f"m{i}" for i in range(N_HASHES))
+    return mins.select(id_col, F.expr(f"array({slots}) AS sig"))
 
 
 def band_keys_from_sigs(
@@ -265,21 +267,29 @@ def band_keys_from_sigs(
     ).select(id_col, "bk.band", "bk.key")
 
 
+def _n_bands_problem(n_bands) -> str | None:
+    """Why ``n_bands`` cannot band a signature, or None when it can."""
+    if n_bands < 1 or N_HASHES % n_bands != 0:
+        return (
+            f"n_bands={n_bands} must divide N_HASHES={N_HASHES} "
+            f"(valid: {[b for b in range(1, N_HASHES + 1) if N_HASHES % b == 0]})"
+        )
+    return None
+
+
 def band_struct_array(sig_col: Column, n_bands: int) -> Column:
     """array<struct<band,key>> banding of one signature column — the
     expression :func:`band_keys_from_sigs` explodes, factored so the
     streaming admission filter bands with IDENTICAL keys (xxhash64 of
     the comma-joined band slice) and the two paths cannot drift."""
-    if n_bands < 1 or N_HASHES % n_bands != 0:
+    problem = _n_bands_problem(n_bands)
+    if problem:
         # r9 review: n_bands=128 gave r=0 → every band key the constant
         # xxhash64('') → quadratic candidate explosion baked into the
         # authoritative sidecar; non-divisors silently dropped trailing
         # signature rows.  Fail at build time, the layer the sidecar
         # exists to make mismatch-proof.
-        raise ValueError(
-            f"n_bands={n_bands} must divide N_HASHES={N_HASHES} "
-            f"(valid: {[b for b in range(1, N_HASHES + 1) if N_HASHES % b == 0]})"
-        )
+        raise ValueError(problem)
     r = N_HASHES // n_bands
     return F.transform(
         F.sequence(F.lit(0), F.lit(n_bands - 1)),
@@ -292,28 +302,59 @@ def band_struct_array(sig_col: Column, n_bands: int) -> Column:
     )
 
 
-def minhash_band_table(
+def minhash_index(
     documents: DataFrame,
     n_bands: int = 16,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 3,
     portable: bool = False,
-) -> DataFrame:
-    """(id, band, key) — the slim banded MinHash table, one shingling
-    pass end-to-end.  Together with the (id, sig) table from
-    :func:`minhash_table` this is the persistable near-dup index (the
-    MinHash counterpart of :func:`~.similarity.bucket_table`'s LSH
-    index): at 100 TB you compute both once per corpus
-    (:func:`write_minhash_index` — sigs/ + bands/ split layout), and
-    every incremental shard dedups against them via
-    :func:`near_duplicates_vs_index` — the corpus text is never
-    re-shingled.  The ``near-dup-index`` CLI builds + persists the split
-    index with an authoritative parameter sidecar."""
-    sig = minhash_table(
+    id_col: str = "doc_id",
+    text_col: str = "text",
+):
+    """The MinHash near-dup index of ``documents`` as an
+    :class:`~.similarity.AnnIndex` handle: ``sigs`` is the (id, sig)
+    table from :func:`minhash_table`, ``df`` the slim (id, band, key)
+    rows banded from it, and ``quantizer`` the record
+    ``{kind: minhash, layout: split, n_bands, shingle_k, portable}`` —
+    the same handle and record ``load_ann_index`` returns for the index
+    :func:`write_minhash_index` persists.  Every serving operator
+    (:func:`near_duplicates_vs_index`, :func:`shard_admission_report`,
+    ``stream_shard_admission_filter``) takes only this handle and reads
+    the banding parameters from its record, so a shard can never be
+    banded with parameters that differ from the corpus build.
+
+    Nothing is computed here.  ``sigs`` is marked as one cached
+    generation (released by the next call), because every serving
+    operator reads it twice — banded for the candidate join and again
+    for the signature join-back — and the inline form re-planned the
+    64-slot aggregate under both branches: at sf0.1 on 4 cores the
+    in-plan ``shard_admission_report`` took 3.91 s median lazy against
+    2.94 s cached (11 alternating runs in one Spark session)."""
+    sigs = minhash_table(
         documents, id_col=id_col, text_col=text_col, k=k, portable=portable
     )
-    return band_keys_from_sigs(sig, n_bands, id_col=id_col)
+    return _minhash_handle(
+        _persist_generation("minhash_index", sigs), n_bands, k, portable, id_col
+    )
+
+
+def _minhash_handle(sigs: DataFrame, n_bands: int, k: int, portable: bool, id_col: str):
+    """The handle over an (id, sig) table and the one place its record
+    is written; a record the reader would refuse is never built."""
+    from .similarity import AnnIndex
+
+    index = AnnIndex(
+        band_keys_from_sigs(sigs, n_bands, id_col=id_col),
+        {
+            "kind": "minhash",
+            "layout": "split",
+            "n_bands": n_bands,
+            "shingle_k": k,
+            "portable": bool(portable),
+        },
+        sigs=sigs,
+    )
+    _unpack_minhash_index(index)
+    return index
 
 
 def write_minhash_index(
@@ -325,43 +366,54 @@ def write_minhash_index(
     k: int = 3,
     portable: bool = False,
 ) -> tuple[int, int]:
-    """Build + persist the split near-dup index at ``path``:
+    """Persist the index :func:`minhash_index` builds for ``documents``
+    (the same frames and record, without the cache) at ``path``:
 
     - ``sigs/``  — (id, sig), ONE row per document,
     - ``bands/`` — slim (id, band, key), partitioned by ``band`` so an
       incremental shard's candidate join prunes to its bands' files,
-    - ``_quantizer.json`` — the authoritative parameter sidecar
-      (``layout: split`` marks the two-table form for ``load_ann_index``).
+    - ``_quantizer.json`` — the handle's record, the authoritative
+      parameter sidecar (``layout: split`` marks the two-table form for
+      ``load_ann_index``).
 
     The corpus is shingled exactly once: signatures are written first,
-    then read back and banded (a projection).  Returns
-    ``(n_docs, n_band_rows)``."""
+    then read back and banded (a projection).  The sidecar is the commit
+    point: an existing one is removed before the first write and the new
+    one is written last, so a build that fails part-way leaves no record
+    for ``load_ann_index`` to serve stale.  Returns
+    ``(n_docs, n_band_rows)``; the document count rides the ``sigs/``
+    write, and every signature bands into exactly ``n_bands`` rows."""
     import json
     import os
 
     from ..util import require_local_path
+    from .metrics import observed_count
 
     require_local_path(path)
+    # the uncached handle: the write reads the signatures once
+    index = _minhash_handle(
+        minhash_table(
+            documents, id_col=id_col, text_col=text_col, k=k,
+            portable=portable,
+        ),
+        n_bands, k, portable, id_col,
+    )
+    record_path = os.path.join(path, "_quantizer.json")
+    if os.path.exists(record_path):
+        os.remove(record_path)
     spark = documents.sparkSession
     sigs_path = os.path.join(path, "sigs")
-    bands_path = os.path.join(path, "bands")
-    minhash_table(
-        documents, id_col=id_col, text_col=text_col, k=k, portable=portable
-    ).write.mode("overwrite").parquet(sigs_path)
-    sigs = spark.read.parquet(sigs_path)
-    band_keys_from_sigs(sigs, n_bands, id_col=id_col).write.mode(
-        "overwrite"
-    ).partitionBy("band").parquet(bands_path)
-    quantizer = {
-        "kind": "minhash",
-        "layout": "split",
-        "n_bands": n_bands,
-        "shingle_k": k,
-        "portable": bool(portable),
-    }
-    with open(os.path.join(path, "_quantizer.json"), "w") as f:
-        json.dump(quantizer, f)
-    return sigs.count(), spark.read.parquet(bands_path).count()
+    sigs, obs = observed_count(index.sigs, "n_docs")
+    sigs.write.mode("overwrite").parquet(sigs_path)
+    band_keys_from_sigs(
+        spark.read.parquet(sigs_path), n_bands, id_col=id_col
+    ).write.mode("overwrite").partitionBy("band").parquet(
+        os.path.join(path, "bands")
+    )
+    with open(record_path, "w") as f:
+        json.dump(index.quantizer, f)
+    n_docs = obs.get["n_rows"]
+    return n_docs, n_docs * n_bands
 
 
 def _sig_agreement() -> Column:
@@ -375,50 +427,50 @@ def _sig_agreement() -> Column:
     return F.round(agree / F.lit(N_HASHES), 6).alias("est_jaccard")
 
 
-def _unpack_minhash_index(
-    index, id_col: str
-) -> tuple[DataFrame, DataFrame, int, int, bool]:
-    """(bands, sigs, n_bands, shingle_k, portable) from an AnnIndex
-    handle (kind ``minhash``) — parameters ALWAYS from the sidecar, and
-    the pre-split monolithic layout (each band row carrying its doc's
-    full signature, r9 advice) unpacked into the split form.  Shared by
-    every minhash serving operator so index-layout handling cannot
-    drift between them (r15 review finding)."""
-    q = index.require("minhash")
-    bands = index.df
-    sigs = index.sigs
-    if sigs is None:
-        if "sig" in bands.columns:
-            sigs = bands.select(id_col, "sig").dropDuplicates([id_col])
-            bands = bands.drop("sig")
-        else:
-            raise ValueError(
-                "legacy minhash index layout without a sig column — "
-                "rebuild with write_minhash_index / the "
-                "near-dup-index CLI"
-            )
-    return bands, sigs, q["n_bands"], q["shingle_k"], q["portable"]
+def _unpack_minhash_index(index) -> tuple[DataFrame, DataFrame, int, int, bool]:
+    """(bands, sigs, n_bands, shingle_k, portable) from a minhash
+    :class:`~.similarity.AnnIndex` handle — the ONE reader of the
+    record :func:`minhash_index` writes, shared by every serving
+    operator and :func:`extend_band_index` so the parameters always come
+    from the record and its validity is decided in one place (r15
+    review finding).  Refuses a record that is not ``kind: minhash``,
+    lacks a parameter, has ``shingle_k < 1`` or an ``n_bands`` that
+    does not divide the signature, or comes without a ``sigs/`` table."""
+    q = index.quantizer
+    missing = [key for key in ("n_bands", "shingle_k", "portable") if key not in q]
+    if q.get("kind") != "minhash":
+        problem = f"kind mismatch, the record names {q.get('kind')!r}"
+    elif missing:
+        problem = f"the record lacks {missing}"
+    elif q["shingle_k"] < 1:
+        problem = f"shingle_k={q['shingle_k']} is below 1"
+    elif _n_bands_problem(q["n_bands"]):
+        problem = _n_bands_problem(q["n_bands"])
+    elif index.sigs is None:
+        problem = "it has no sigs/ signature table"
+    else:
+        return index.df, index.sigs, q["n_bands"], q["shingle_k"], q["portable"]
+    raise ValueError(
+        f"unusable minhash index: {problem} — rebuild it with "
+        "write_minhash_index / the near-dup-index CLI"
+    )
 
 
 def near_duplicates_vs_index(
     new_docs: DataFrame,
-    corpus_index: DataFrame | None = None,
+    index,
     threshold: float = 0.5,
-    n_bands: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    portable: bool = False,
-    index=None,
-    corpus_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """Incremental near-dup admission for a NEW shard against an EXISTING
-    corpus index (slim bands from :func:`minhash_band_table` + sigs from
-    :func:`minhash_table`): only the shard is shingled/signatured;
-    candidates come from an ID-ONLY (band, key) equi-join against the
-    slim index, and signatures are joined back just for the deduplicated
-    candidate pairs — pairs with estimated Jaccard ≥ ``threshold`` are
-    reported as (doc_id, corpus_id, est_jaccard).
+    corpus index — the :class:`~.similarity.AnnIndex` handle of
+    :func:`minhash_index` or ``load_ann_index``: only the shard is
+    shingled/signatured, with the (n_bands, k, portable) the index
+    record names; candidates come from an ID-ONLY (band, key) equi-join
+    against the slim bands, and signatures are joined back just for the
+    deduplicated candidate pairs — pairs with estimated Jaccard ≥
+    ``threshold`` are reported as (doc_id, corpus_id, est_jaccard).
 
     This is the batch half of the production ingest loop — re-crawls and
     mirrors never re-pay the corpus pass (the embedding-space streaming
@@ -427,24 +479,8 @@ def near_duplicates_vs_index(
     match its own indexed copy.  Admitted docs are the shard minus the
     reported ``doc_id``s (anti-join); :func:`extend_band_index` then
     APPENDS their sigs + band rows — band keys depend only on the row
-    itself, so the index grows incrementally without rebuild.
-
-    ``index`` accepts the :class:`~.similarity.AnnIndex` handle from
-    ``load_ann_index`` (kind ``minhash``, split layout) and derives
-    (n_bands, k, portable) AND the signature table from the sidecar —
-    the mismatch-proof serving form: banding a shard with parameters
-    that differ from the index build silently destroys recall, exactly
-    like the hyperplane families.  With a raw ``corpus_index`` bands
-    DataFrame, pass the matching ``corpus_sigs``."""
-    if index is not None:
-        corpus_index, corpus_sigs, n_bands, k, portable = (
-            _unpack_minhash_index(index, id_col)
-        )
-    if corpus_index is None or corpus_sigs is None:
-        raise ValueError(
-            "near_duplicates_vs_index needs either index= or "
-            "corpus_index= plus corpus_sigs="
-        )
+    itself, so the index grows incrementally without rebuild."""
+    index_bands, index_sigs, n_bands, k, portable = _unpack_minhash_index(index)
     # Shard-bounded: signatures feed both the banding projection and the
     # sig_a join-back; cached so the shard is shingled exactly once —
     # one generation per operator, released by the next call.
@@ -458,7 +494,7 @@ def near_duplicates_vs_index(
     shard_bands = band_keys_from_sigs(shard_sigs, n_bands, id_col=id_col)
     cand_ids = (
         shard_bands.join(
-            corpus_index.withColumnRenamed(id_col, "corpus_id"),
+            index_bands.withColumnRenamed(id_col, "corpus_id"),
             ["band", "key"],
         )
         .select(id_col, "corpus_id")
@@ -467,7 +503,7 @@ def near_duplicates_vs_index(
     cand = cand_ids.join(
         shard_sigs.select(F.col(id_col), F.col("sig").alias("sig_a")), id_col
     ).join(
-        corpus_sigs.select(
+        index_sigs.select(
             F.col(id_col).alias("corpus_id"), F.col("sig").alias("sig_b")
         ),
         "corpus_id",
@@ -484,13 +520,14 @@ def extend_band_index(
     text_col: str = "text",
 ) -> int:
     """Append the admitted documents' signatures + banding rows to a
-    persisted split index (:func:`write_minhash_index` layout) — the
+    persisted index (:func:`write_minhash_index` layout) — the
     post-admission half of the incremental loop
     (:func:`near_duplicates_vs_index` flags, caller filters, this
     extends).  Band keys are row-local, so APPEND IS the index update:
-    no rebuild, no read of existing index rows.  Banding parameters are
-    read from the index's own sidecar, never re-typed.  Returns the
-    number of band rows appended.
+    no rebuild, no read of existing index rows.  The banding parameters
+    come from the index record through the same reader the serving
+    operators use, so an index they would refuse is refused here too.
+    Returns the number of band rows appended.
 
     NOT idempotent across crash-replays (plain parquet append — a
     replayed call would double the shard's rows and inflate duplicate
@@ -502,20 +539,16 @@ def extend_band_index(
     from .similarity import load_ann_index
 
     spark = admitted_docs.sparkSession
-    handle = load_ann_index(spark, index_path)
-    q = handle.require("minhash")
-    if q.get("layout") != "split":
-        raise ValueError(
-            "extend_band_index needs a split-layout index "
-            "(build it with write_minhash_index / the near-dup-index CLI)"
-        )
+    _, _, n_bands, k, portable = _unpack_minhash_index(
+        load_ann_index(spark, index_path)
+    )
     # shard-bounded; compute signatures once for both appends + the count
     sigs = minhash_table(
         admitted_docs, id_col=id_col, text_col=text_col,
-        k=q["shingle_k"], portable=q["portable"],
+        k=k, portable=portable,
     ).localCheckpoint(eager=True)
     sigs.write.mode("append").parquet(os.path.join(index_path, "sigs"))
-    banded = band_keys_from_sigs(sigs, q["n_bands"], id_col=id_col)
+    banded = band_keys_from_sigs(sigs, n_bands, id_col=id_col)
     banded.write.mode("append").partitionBy("band").parquet(
         os.path.join(index_path, "bands")
     )
@@ -1767,17 +1800,11 @@ def longest_dup_substring(
 
 def shard_admission_report(
     new_docs: DataFrame,
-    corpus_docs: DataFrame | None = None,
+    index,
     threshold: float = 0.5,
-    n_bands: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
     source_col: str = "source",
-    k: int = 3,
-    portable: bool = False,
-    index=None,
-    corpus_index: DataFrame | None = None,
-    corpus_sigs: DataFrame | None = None,
 ) -> DataFrame:
     """X32 incremental-admission near-dedup report: admit a NEW shard
     against an existing corpus and report, per source, how much of the
@@ -1802,81 +1829,31 @@ def shard_admission_report(
     SQL-expressible); the remainder is admitted.  ``admit_ppm`` is the
     exact half-up integer ppm of admitted over n_new.
 
+    ``index`` is the corpus's :class:`~.similarity.AnnIndex` handle —
+    :func:`minhash_index` in-plan, or ``load_ann_index`` over a
+    :func:`write_minhash_index` directory — and the shard is banded with
+    the (n_bands, k, portable) its record names.
+
     Scale shape at 100 TB: the shard is shingled/signatured ONCE (the
     persisted-generation cache feeds banding, the verification join-back
     and the self-join); corpus AND within-shard candidates come from ONE
     slim ID-ONLY (band, key) equi-join of the shard bands against the
     side-tagged union of the corpus band index and the shard's own bands
-    — the corpus text is never re-shingled and, with the ``bands/``
-    layout partitioned by band, partition pruning reads only the shard's
-    bands.  Signatures join back only for DEDUPLICATED candidate pairs
-    (one union-keyed join, not one per side); every shuffle carries ids
-    and 64-long signatures, never text.  The final report is a
-    |sources|-row aggregate over one groupBy(id) flag pass.
-
-    ``index`` accepts the :class:`~.similarity.AnnIndex` handle from
-    ``load_ann_index`` (kind ``minhash``, split layout) and derives
-    (n_bands, k, portable) and the corpus tables from the sidecar —
-    the mismatch-proof serving form; ``corpus_index`` + ``corpus_sigs``
-    accept already-materialized index frames (the
-    :func:`near_duplicates_vs_index` convention); otherwise pass
-    ``corpus_docs`` and the corpus is signatured in-plan (the
-    oracle-gate form)."""
-    if index is not None:
-        corpus_bands, corpus_sigs, n_bands, k, portable = (
-            _unpack_minhash_index(index, id_col)
-        )
-    elif corpus_index is not None and corpus_sigs is not None:
-        corpus_bands = corpus_index
-    elif corpus_docs is not None:
-        # ONE signature pass over shard ∪ corpus, side-tagged (r18): the
-        # shard and corpus previously ran minhash_table separately, each
-        # paying its own tokenize + vocab-distinct + window pass; the
-        # union shares all three and persists once — both sides' sig
-        # tables are then filters over the cache.  The struct key keeps
-        # the two id spaces disjoint even if a doc id appears on both
-        # sides.  Signature values are unchanged (a signature is a pure
-        # function of the text).  Measured ~4.2 -> ~3.4 s at sf0.1.
-        tagged = new_docs.select(
-            F.lit(0).alias("_side"),
-            F.col(id_col).alias("_oid"),
-            F.col(text_col),
-        ).unionByName(
-            corpus_docs.select(
-                F.lit(1).alias("_side"),
-                F.col(id_col).alias("_oid"),
-                F.col(text_col),
-            )
-        ).select(F.struct("_side", "_oid").alias("_sid"), text_col)
-        all_sigs = _persist_generation(
-            "shard_admission_report.union_sigs",
-            minhash_table(
-                tagged, id_col="_sid", text_col=text_col, k=k,
-                portable=portable,
-            ),
-        )
-        corpus_sigs = all_sigs.filter(F.col("_sid._side") == 1).select(
-            F.col("_sid._oid").alias(id_col), "sig"
-        )
-        corpus_bands = band_keys_from_sigs(corpus_sigs, n_bands, id_col=id_col)
-        shard_sigs = all_sigs.filter(F.col("_sid._side") == 0).select(
-            F.col("_sid._oid").alias(id_col), "sig"
-        )
-    else:
-        raise ValueError(
-            "shard_admission_report needs index=, corpus_index= plus "
-            "corpus_sigs=, or corpus_docs="
-        )
-
-    if corpus_docs is None:
-        # index / pre-materialized forms: only the shard is signatured
-        shard_sigs = _persist_generation(
-            "shard_admission_report",
-            minhash_table(
-                new_docs, id_col=id_col, text_col=text_col, k=k,
-                portable=portable,
-            ),
-        )
+    — with a persisted index the corpus text is never re-shingled and,
+    with the ``bands/`` layout partitioned by band, partition pruning
+    reads only the shard's bands.  Signatures join back only for
+    DEDUPLICATED candidate pairs (one union-keyed join, not one per
+    side); every shuffle carries ids and 64-long signatures, never text.
+    The final report is a |sources|-row aggregate over one groupBy(id)
+    flag pass."""
+    index_bands, index_sigs, n_bands, k, portable = _unpack_minhash_index(index)
+    shard_sigs = _persist_generation(
+        "shard_admission_report",
+        minhash_table(
+            new_docs, id_col=id_col, text_col=text_col, k=k,
+            portable=portable,
+        ),
+    )
     shard_bands = band_keys_from_sigs(shard_sigs, n_bands, id_col=id_col)
 
     # ONE banded candidate pass + ONE verification pass (r19; guide
@@ -1896,7 +1873,7 @@ def shard_admission_report(
     # as before.  Plan effect at sf0.1: 2 banded joins → 1, 4 sig
     # join-backs → 2, 2 pair dedups → 1, 2 flag distincts + 2 left
     # joins → 1 groupBy + 1 left join.
-    partners = corpus_bands.select(
+    partners = index_bands.select(
         F.lit(1).alias("_pside"), F.col(id_col).alias("_pid"), "band", "key"
     ).unionByName(
         shard_bands.select(
@@ -1910,7 +1887,7 @@ def shard_admission_report(
         .select(id_col, "_pside", "_pid")
         .dropDuplicates([id_col, "_pside", "_pid"])
     )
-    partner_sigs = corpus_sigs.select(
+    partner_sigs = index_sigs.select(
         F.lit(1).alias("_pside"),
         F.col(id_col).alias("_pid"),
         F.col("sig").alias("sig_b"),

@@ -520,9 +520,11 @@ class AnnIndex:
     Pass the handle itself: ``lsh_topk(corpus, queries, index=idx)``,
     ``ivf_topk(corpus, queries, index=idx)``,
     ``ann_enrich_stream(stream, index=idx, corpus_vectors=...)``,
-    ``stream_near_dup_filter(stream, index=idx, ...)``.  Serving raises
-    on a kind mismatch instead of degrading.  Tuple-unpacks as
-    ``(df, quantizer)`` for callers of the pre-handle API."""
+    ``stream_near_dup_filter(stream, index=idx, ...)``,
+    ``shard_admission_report(shard, idx)``.  Serving raises on a kind
+    mismatch instead of degrading.  MinHash handles come from
+    :func:`~.dedup.minhash_index` (in-plan) or :func:`load_ann_index`
+    (persisted) with the same record either way."""
 
     def __init__(self, df: DataFrame, quantizer: dict, sigs: DataFrame | None = None):
         self.df = df
@@ -535,9 +537,6 @@ class AnnIndex:
     @property
     def kind(self) -> str:
         return self.quantizer["kind"]
-
-    def __iter__(self):  # (df, quantizer) unpacking compatibility
-        return iter((self.df, self.quantizer))
 
     def require(self, kind: str) -> dict:
         if self.kind != kind:
@@ -555,16 +554,23 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     re-guessed parameters (different hyperplane seed, re-fit centroids)
     silently degrades recall to chance, so the sidecar is authoritative.
 
-    Returns an :class:`AnnIndex` handle (tuple-unpacks as
-    ``(index_df, quantizer)``); pass it to serving via ``index=`` so the
-    hash parameters are DERIVED from the sidecar, never re-typed."""
+    Returns an :class:`AnnIndex` handle; pass it to serving so the hash
+    parameters are DERIVED from the sidecar, never re-typed.  A
+    directory without the sidecar (never built, or a build that failed
+    before its last write) is refused."""
     import json
     import os
 
     from ..util import require_local_path
 
     require_local_path(path)
-    with open(os.path.join(path, "_quantizer.json")) as f:
+    record = os.path.join(path, "_quantizer.json")
+    if not os.path.exists(record):
+        raise FileNotFoundError(
+            f"no index record at {record}: the index was never built or "
+            "its build did not finish — rebuild it"
+        )
+    with open(record) as f:
         quantizer = json.load(f)
     if quantizer.get("layout") == "split":
         # write_minhash_index layout: slim bands/ + one-row-per-doc sigs/

@@ -4609,18 +4609,19 @@ def _admission_oracle_sql(threshold: float = 0.5, mod: int = 5) -> str:
     "docs near-duplicate the corpus (est Jaccard >= 0.5), how many "
     "near-duplicate a SMALLER-id shard doc (keep-lowest-id, "
     "non-cascading — the semantic_dedup rule), and the exact half-up "
-    "admit ppm.  Shard signatured once; corpus candidates from the slim "
-    "ID-ONLY band equi-join; signatures join back per deduplicated pair.",
+    "admit ppm.  The corpus index is built in-plan (minhash_index, the "
+    "same handle load_ann_index returns for a persisted index); shard "
+    "signatured once; candidates from the slim ID-ONLY band equi-join; "
+    "signatures join back per deduplicated pair.",
 )
 def q_shard_admission(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.dedup import shard_admission_report
+    from .operators.dedup import minhash_index, shard_admission_report
 
     docs = _t(spark, sf, "documents")
     return shard_admission_report(
         docs.filter(F.col("doc_id") % 5 == 0),
-        docs.filter(F.col("doc_id") % 5 != 0),
+        minhash_index(docs.filter(F.col("doc_id") % 5 != 0), portable=True),
         threshold=0.5,
-        portable=True,
     )
 
 
@@ -4629,7 +4630,7 @@ def _land_admission_index(spark: SparkSession, sf: str) -> str:
     corpus into a marker-protected temp dir (the `_land_nation_pages`
     convention) and return its path — so the gated index-form query
     exercises the REAL serving sequence (write_minhash_index →
-    load_ann_index → shard_admission_report(index=...)), parameters
+    load_ann_index → shard_admission_report(shard, handle)), parameters
     authoritative from the sidecar, corpus text never re-shingled at
     query time."""
     import hashlib
@@ -4659,7 +4660,7 @@ def _land_admission_index(spark: SparkSession, sf: str) -> str:
     "report computed against the PERSISTED split minhash index — "
     "write_minhash_index once per corpus (sigs/ + band-partitioned "
     "bands/ + authoritative _quantizer.json), load_ann_index, "
-    "shard_admission_report(index=handle).  This is the form the "
+    "shard_admission_report(shard, handle).  This is the form the "
     "100 TB story rests on (re-crawls never re-pay the corpus "
     "signature pass; band-partition pruning reads only the shard's "
     "bands), gated at equal rigor to the in-plan oracle form — the "
@@ -4673,8 +4674,8 @@ def q_shard_admission_index(spark: SparkSession, sf: str) -> DataFrame:
     handle = load_ann_index(spark, _land_admission_index(spark, sf))
     return shard_admission_report(
         _t(spark, sf, "documents").filter(F.col("doc_id") % 5 == 0),
+        handle,
         threshold=0.5,
-        index=handle,
     )
 
 

@@ -1565,21 +1565,20 @@ def stream_quality_tag(
 
 def stream_shard_admission_filter(
     rows: DataFrame,
-    corpus_index: DataFrame | None = None,
-    corpus_sigs: DataFrame | None = None,
+    index,
     threshold: float = 0.5,
-    n_bands: int = 16,
     id_col: str = "doc_id",
     text_col: str = "text",
-    k: int = 3,
-    portable: bool = False,
-    index=None,
 ) -> DataFrame:
     """Streaming X32 admission: drop incoming documents whose estimated
-    MinHash Jaccard against the persisted corpus band index reaches
-    ``threshold`` — the text-space counterpart of
-    :func:`stream_near_dup_filter`, run in front of the gold sink so
-    re-crawled/mirrored text never lands.
+    MinHash Jaccard against the corpus band index reaches ``threshold``
+    — the text-space counterpart of :func:`stream_near_dup_filter`, run
+    in front of the gold sink so re-crawled/mirrored text never lands.
+
+    ``index`` is the minhash ``AnnIndex`` handle
+    (:func:`~..operators.dedup.minhash_index` or ``load_ann_index``);
+    the rows are signatured and banded with the (n_bands, k, portable)
+    its record names.
 
     Stream-legal composition (the near-dup-filter shape): the signature
     is :func:`~..operators.dedup.minhash_signature` — a pure PROJECTION
@@ -1599,11 +1598,7 @@ def stream_shard_admission_filter(
     foreachBatch extend loop, which indexes each admitted batch before
     the next arrives).  NO self-exclusion, same rationale as the
     embedding filter: a re-crawl keeping its corpus id must still match
-    its own indexed copy.
-
-    ``index`` accepts the minhash ``AnnIndex`` handle (parameters and
-    tables from the sidecar — the mismatch-proof form); otherwise pass
-    the ``corpus_index`` bands frame plus ``corpus_sigs``."""
+    its own indexed copy."""
     from ..operators.dedup import (
         _sig_agreement,
         _unpack_minhash_index,
@@ -1611,15 +1606,7 @@ def stream_shard_admission_filter(
         minhash_signature,
     )
 
-    if index is not None:
-        corpus_index, corpus_sigs, n_bands, k, portable = (
-            _unpack_minhash_index(index, id_col)
-        )
-    if corpus_index is None or corpus_sigs is None:
-        raise ValueError(
-            "stream_shard_admission_filter needs either index= or "
-            "corpus_index= plus corpus_sigs="
-        )
+    index_bands, index_sigs, n_bands, k, portable = _unpack_minhash_index(index)
     staged = rows.select(
         F.col(id_col),
         F.col(text_col),
@@ -1632,12 +1619,12 @@ def stream_shard_admission_filter(
         F.explode(band_struct_array(F.col("sig_a"), n_bands)).alias("bk"),
     ).select(id_col, text_col, "sig_a", "bk.band", "bk.key")
     cand = banded.join(
-        corpus_index.withColumnsRenamed({id_col: "_corpus_id"}),
+        index_bands.withColumnsRenamed({id_col: "_corpus_id"}),
         ["band", "key"],
         "left",
     )
     scored = cand.join(
-        corpus_sigs.select(
+        index_sigs.select(
             F.col(id_col).alias("_corpus_id"), F.col("sig").alias("sig_b")
         ),
         "_corpus_id",

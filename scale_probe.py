@@ -26,8 +26,7 @@ from pyspark.sql import functions as F  # noqa: E402
 from market_data_ingestion_scraper_spark.operators.dedup import (  # noqa: E402
     jaccard_similarity_join,
     lsh_candidate_pairs,
-    minhash_band_table,
-    minhash_table,
+    minhash_index,
     near_duplicates_vs_index,
     simhash_near_duplicates,
 )
@@ -123,20 +122,18 @@ def main() -> None:
         # index (index build untimed — it is the amortized artifact).
         # Replicas are content-distinct, so flagged pairs stay CONSTANT
         # and serve wall must grow far below K.
-        idx_sigs = minhash_table(d, portable=True).persist()
-        idx = minhash_band_table(d, portable=True).persist()
-        idx.count(), idx_sigs.count()  # no clearCache: the warm index IS the point
+        idx = minhash_index(d, portable=True)  # sigs cached by the builder
+        idx.df.persist()
+        idx.sigs.count(), idx.df.count()  # no clearCache: the warm index IS the point
         t0 = time.perf_counter()
-        flagged = near_duplicates_vs_index(
-            shard, idx, threshold=0.5, portable=True, corpus_sigs=idx_sigs
-        ).count()
+        flagged = near_duplicates_vs_index(shard, idx, threshold=0.5).count()
         sec = round(time.perf_counter() - t0, 2)
         results.setdefault("near_dup_vs_index", {})[factor] = {
             "pairs": flagged, "sec": sec,
         }
         print(json.dumps({"op": "near_dup_vs_index", "factor": factor,
                           "pairs": flagged, "sec": sec}), flush=True)
-        idx.unpersist(), idx_sigs.unpersist()
+        idx.df.unpersist(), idx.sigs.unpersist()
         # r9: bloom sidecar — build over the K× corpus (timed: one scan +
         # bit-population-bounded shuffle), then probe a FIXED mixed shard
         # (half present, half novel hashes).  The artifact stays
@@ -647,14 +644,11 @@ def main() -> None:
             "doc_id", "text", "source"
         ).filter(F.col("doc_id") % 5 == 0)
         adm_corpus = d.filter(F.col("doc_id") % 5 != 0)
-        idx_sigs15 = minhash_table(adm_corpus, portable=True).persist()
-        idx15 = minhash_band_table(adm_corpus, portable=True).persist()
-        idx15.count(), idx_sigs15.count()  # warm index = the artifact
+        idx15 = minhash_index(adm_corpus, portable=True)
+        idx15.df.persist()
+        idx15.sigs.count(), idx15.df.count()  # warm index = the artifact
         t0 = time.perf_counter()
-        rows15 = shard_admission_report(
-            adm_shard, threshold=0.5, portable=True,
-            corpus_index=idx15, corpus_sigs=idx_sigs15,
-        ).collect()
+        rows15 = shard_admission_report(adm_shard, idx15, threshold=0.5).collect()
         sec = round(time.perf_counter() - t0, 2)
         inv15 = sum(r["n_dup_vs_corpus"] + r["n_admitted"] for r in rows15)
         results.setdefault("shard_admission", {})[factor] = {
@@ -665,7 +659,7 @@ def main() -> None:
                           "n_dup_vs_corpus": sum(r["n_dup_vs_corpus"] for r in rows15),
                           "n_admitted": sum(r["n_admitted"] for r in rows15),
                           "sec": sec}), flush=True)
-        idx15.unpersist(), idx_sigs15.unpersist()
+        idx15.df.unpersist(), idx15.sigs.unpersist()
 
         # r15: X33 temporal split.  Event replicas keep (user, ts) and
         # offset only event_id, so every replica row gets the IDENTICAL

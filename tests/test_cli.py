@@ -157,7 +157,7 @@ def test_load_ann_index_serves_lsh(tmp_path):
     emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 4)
     handle = load_ann_index(spark, out)
-    idx, quant = handle  # tuple unpacking still works for old callers
+    quant = handle.quantizer
     assert quant["n_planes"] == 6 and quant["seed_base"] == 4321
     served = lsh_topk(emb, q, k=5, index=handle)
     inline = lsh_topk(emb, q, k=5, n_planes=6, n_tables=5, seed_base=4321)
@@ -882,13 +882,15 @@ def test_cli_shard_admit(tmp_path, spark):
     assert "admit_ppm=" in r.stdout
 
     from market_data_ingestion_scraper_spark.operators.dedup import (
+        minhash_index,
         shard_admission_report,
         write_minhash_index,
     )
 
     lib = shard_admission_report(
-        spark.read.parquet(shard_path), spark.read.parquet(corpus_path),
-        threshold=0.5, portable=True,
+        spark.read.parquet(shard_path),
+        minhash_index(spark.read.parquet(corpus_path), portable=True),
+        threshold=0.5,
     )
     key = lambda df: sorted(map(tuple, df.collect()))
     assert key(spark.read.parquet(out)) == key(lib)
@@ -922,6 +924,45 @@ def test_cli_shard_admit(tmp_path, spark):
     r = _run("shard-admit", "--shard", shard_path, "--index", wrong_kind)
     assert r.returncode == 2, (r.returncode, r.stderr[-2000:])
     assert "kind mismatch" in r.stderr and "Traceback" not in r.stderr
+
+
+def test_failed_minhash_rebuild_serves_no_stale_record(
+    tmp_path, spark, sf_smoke, monkeypatch
+):
+    """write_minhash_index removes an existing _quantizer.json before its
+    first write and writes the new one last: a rebuild that fails after
+    the sigs/ write must leave an index load_ann_index refuses — never
+    the OLD record (n_bands=8, not portable) over the new half-written
+    frames, which served 0 pairs without an error."""
+    import pyspark.sql.functions as F
+    import pytest
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    from market_data_ingestion_scraper_spark.operators.dedup import (
+        write_minhash_index,
+    )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        load_ann_index,
+    )
+
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    shard_path = str(tmp_path / "shard")
+    docs.filter(F.col("doc_id") % 5 == 0).write.parquet(shard_path)
+    idx = str(tmp_path / "mh_index")
+    write_minhash_index(docs, idx, n_bands=8)
+
+    def fault(*args, **kwargs):  # the bands/ write is the one partitioned
+        raise RuntimeError("injected fault after the sigs/ write")
+
+    with monkeypatch.context() as m:
+        m.setattr(DataFrameWriter, "partitionBy", fault)
+        with pytest.raises(RuntimeError, match="injected"):
+            write_minhash_index(docs, idx, n_bands=16, portable=True)
+    with pytest.raises(FileNotFoundError, match="rebuild"):
+        load_ann_index(spark, idx)
+    r = _run("shard-admit", "--shard", shard_path, "--index", idx)
+    assert r.returncode == 2, (r.returncode, r.stderr[-2000:])
+    assert "rebuild" in r.stderr and "Traceback" not in r.stderr
 
 
 def test_cli_temporal_split(tmp_path, spark):

@@ -225,8 +225,7 @@ def test_incremental_near_dup_vs_band_index(spark, corpus):
     pipeline's for the same pairs.  Same-id re-crawls match their own
     indexed copy (no self-exclusion — admission semantics)."""
     idx_docs = corpus.filter(F.col("doc_id").isin([0, 3, 4]))
-    index = D.minhash_band_table(idx_docs)
-    index_sigs = D.minhash_table(idx_docs)
+    index = D.minhash_index(idx_docs)
     new = spark.createDataFrame(
         [
             (1, BASE.replace("quick", "speedy")),   # near-dup of corpus 0
@@ -240,9 +239,7 @@ def test_incremental_near_dup_vs_band_index(spark, corpus):
     )
     got = {
         (r["doc_id"], r["corpus_id"]): r["est_jaccard"]
-        for r in D.near_duplicates_vs_index(
-            new, index, threshold=0.5, corpus_sigs=index_sigs
-        ).collect()
+        for r in D.near_duplicates_vs_index(new, index, threshold=0.5).collect()
     }
     assert got[(2, 0)] == 1.0
     assert (1, 0) in got and got[(1, 0)] > 0.5
@@ -270,6 +267,7 @@ def test_near_dup_index_parquet_roundtrip_and_handle(spark, corpus, tmp_path):
     out = str(tmp_path / "mh_idx")
     n_docs, n_rows = D.write_minhash_index(corpus, out, n_bands=8)
     assert n_rows == n_docs * 8
+    assert n_docs == spark.read.parquet(out + "/sigs").count()
     assert os.path.isdir(os.path.join(out, "bands", "band=0"))
     # slim: the persisted band rows carry no signature column
     assert "sig" not in spark.read.parquet(os.path.join(out, "bands")).columns
@@ -286,8 +284,7 @@ def test_near_dup_index_parquet_roundtrip_and_handle(spark, corpus, tmp_path):
     direct = {
         (r["doc_id"], r["corpus_id"]): r["est_jaccard"]
         for r in D.near_duplicates_vs_index(
-            new, D.minhash_band_table(corpus, n_bands=8), threshold=0.5,
-            n_bands=8, corpus_sigs=D.minhash_table(corpus),
+            new, D.minhash_index(corpus, n_bands=8), threshold=0.5
         ).collect()
     }
     assert served == direct and (7, 0) in served
@@ -484,7 +481,11 @@ def test_minhash_band_table_rejects_bad_n_bands(spark):
     docs = spark.createDataFrame([(0, BASE)], "doc_id long, text string")
     for bad in (0, 12, 65, 128):
         with pytest.raises(ValueError, match="must divide"):
-            D.minhash_band_table(docs, n_bands=bad)
+            D.minhash_index(docs, n_bands=bad)
+    # the builder refuses a gram width the record could not honour
+    # (k=0 used to shingle as k=1 while recording 0)
+    with pytest.raises(ValueError, match="shingle_k=0"):
+        D.minhash_index(docs, k=0)
 
 
 def test_simhash_drops_tokenless_docs(spark):
@@ -860,46 +861,51 @@ def test_extend_ann_index_rejects_minhash(spark, vectors, corpus, tmp_path):
         S.extend_ann_index(vectors, out)
 
 
-def test_legacy_monolithic_minhash_index_served_via_handle(
-    spark, corpus, tmp_path
-):
-    """r9 advice: a pre-split persisted minhash index (one table whose
-    band rows carry the full signature, no `layout: split` sidecar key)
-    must still serve through the AnnIndex handle — the sig table is
-    derived from the monolithic rows, not demanded from the caller."""
+_GOOD_RECORD = {"kind": "minhash", "layout": "split", "n_bands": 8,
+                "shingle_k": 3, "portable": False}
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        ({**_GOOD_RECORD, "kind": "lsh"}, "kind mismatch"),
+        ({k: v for k, v in _GOOD_RECORD.items() if k != "portable"},
+         "lacks"),
+        ({**_GOOD_RECORD, "shingle_k": 0}, "shingle_k=0"),
+        ({**_GOOD_RECORD, "n_bands": 12}, "must divide"),
+        ("no-sigs", "no sigs/"),
+    ],
+    ids=["wrong-kind", "missing-key", "shingle-k-0", "non-divisor-bands",
+         "no-sigs"],
+)
+def test_minhash_index_record_refusals(spark, corpus, tmp_path, bad, why):
+    """One reader decides what a valid minhash record is: the reader, a
+    serving operator and extend_band_index all refuse the same bad
+    record, and the message says to rebuild.  The no-sigs case is the
+    pre-split monolithic layout (one table whose band rows carry the
+    signature), which no writer produces any more."""
     import json
     import os
 
-    from market_data_ingestion_scraper_spark.operators.similarity import (
-        load_ann_index,
-    )
-
-    out = str(tmp_path / "mh_legacy")
-    sigs = D.minhash_table(corpus)
-    mono = D.band_keys_from_sigs(sigs, 8).join(sigs, "doc_id")
-    mono.write.partitionBy("band").parquet(out)
+    out = str(tmp_path / "bad_idx")
+    if bad == "no-sigs":
+        sigs = D.minhash_table(corpus)
+        D.band_keys_from_sigs(sigs, 8).join(sigs, "doc_id").write.parquet(out)
+        record = {k: v for k, v in _GOOD_RECORD.items() if k != "layout"}
+    else:
+        D.write_minhash_index(corpus, out, n_bands=8)
+        record = bad
     with open(os.path.join(out, "_quantizer.json"), "w") as f:
-        json.dump({"kind": "minhash", "n_bands": 8, "shingle_k": 3,
-                   "portable": False}, f)
-    handle = load_ann_index(spark, out)
-    assert handle.sigs is None  # monolithic: no companion sig table
-    new = spark.createDataFrame(
-        [(7, BASE.replace("quick", "speedy"))], "doc_id long, text string"
-    )
-    served = {
-        (r["doc_id"], r["corpus_id"]): r["est_jaccard"]
-        for r in D.near_duplicates_vs_index(
-            new, threshold=0.5, index=handle
-        ).collect()
-    }
-    direct = {
-        (r["doc_id"], r["corpus_id"]): r["est_jaccard"]
-        for r in D.near_duplicates_vs_index(
-            new, D.minhash_band_table(corpus, n_bands=8), threshold=0.5,
-            n_bands=8, corpus_sigs=D.minhash_table(corpus),
-        ).collect()
-    }
-    assert served == direct and (7, 0) in served
+        json.dump(record, f)
+    handle = S.load_ann_index(spark, out)
+    for refused in (
+        lambda: D._unpack_minhash_index(handle),
+        lambda: D.near_duplicates_vs_index(corpus, handle),
+        lambda: D.extend_band_index(corpus.limit(1), out),
+    ):
+        with pytest.raises(ValueError, match=why) as exc:
+            refused()
+        assert "rebuild" in str(exc.value)
 
 
 def test_dedup_cache_generations_bounded(spark, corpus):

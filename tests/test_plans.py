@@ -1002,11 +1002,12 @@ def test_admission_union_pass_executed_shuffles_bounded(spark):
     build subtrees deduplicated (executed_shuffles — the r18 judge's
     plan-pin-hygiene ask: textual Exchange counts re-print a persisted
     frame's build plan under every cache scan).  The single-pass union
-    candidate join leaves the corpus-form report with at most: the union
-    signature build's groupBy, the banded candidate join's two sides,
-    the pair dedup, the two verification join-back sides, the flag
-    groupBy, the source left-join sides, and the final report aggregate
-    — conservatively <= 12; the pre-r19 two-join shape executed ~8 more
+    candidate join leaves the in-plan-index report with at most: the
+    shard's and the corpus's signature groupBys, the banded candidate
+    join's two sides, the pair dedup, the two verification join-back
+    sides, the flag groupBy, the source left-join sides, and the final
+    report aggregate — conservatively <= 12 (3 at sf0.001, where the
+    small sides broadcast); the pre-r19 two-join shape executed ~8 more
     (a second banded join + dedup + two more join-back sides)."""
     from market_data_ingestion_scraper_spark.plans import executed_shuffles
 

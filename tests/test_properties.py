@@ -435,6 +435,7 @@ def test_shard_admission_matches_twin_on_random_corpora(spark, docs):
     keep-lowest-id rule) the admission report equals the pure-Python
     minhash twin."""
     from market_data_ingestion_scraper_spark.operators.dedup import (
+        minhash_index,
         shard_admission_report,
     )
 
@@ -449,8 +450,9 @@ def test_shard_admission_matches_twin_on_random_corpora(spark, docs):
             r["n_admitted"], r["admit_ppm"],
         )
         for r in shard_admission_report(
-            df.filter("doc_id % 3 = 0"), df.filter("doc_id % 3 <> 0"),
-            threshold=0.5, portable=True,
+            df.filter("doc_id % 3 = 0"),
+            minhash_index(df.filter("doc_id % 3 <> 0"), portable=True),
+            threshold=0.5,
         ).collect()
     }
     assert got == want

@@ -14,6 +14,7 @@ from market_data_ingestion_scraper_spark.operators.dedup import (
     _AB,
     HASH_P,
     N_HASHES,
+    minhash_index,
     shard_admission_report,
 )
 from market_data_ingestion_scraper_spark.operators.retrieval import (
@@ -240,9 +241,8 @@ def test_shard_admission_matches_python_twin(spark):
         )
         for r in shard_admission_report(
             docs_df.filter("doc_id % 5 = 0"),
-            docs_df.filter("doc_id % 5 <> 0"),
+            minhash_index(docs_df.filter("doc_id % 5 <> 0"), portable=True),
             threshold=0.5,
-            portable=True,
         ).collect()
     }
     assert got == want
@@ -266,8 +266,9 @@ def test_shard_admission_planted_duplicates(spark):
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string, source string")
     got = shard_admission_report(
-        df.filter("doc_id % 5 = 0"), df.filter("doc_id % 5 <> 0"),
-        threshold=0.5, portable=True,
+        df.filter("doc_id % 5 = 0"),
+        minhash_index(df.filter("doc_id % 5 <> 0"), portable=True),
+        threshold=0.5,
     ).collect()
     assert len(got) == 1
     r = got[0]
@@ -279,7 +280,7 @@ def test_shard_admission_planted_duplicates(spark):
 
 def test_shard_admission_index_handle_parity(spark, tmp_path):
     """The persisted-index serving form must report exactly what the
-    in-plan corpus form reports (parameters from the sidecar, corpus
+    in-plan index form reports (parameters from the sidecar, corpus
     never re-shingled)."""
     from market_data_ingestion_scraper_spark.operators.dedup import (
         write_minhash_index,
@@ -301,21 +302,23 @@ def test_shard_admission_index_handle_parity(spark, tmp_path):
     }
     via_frames = {
         tuple(r) for r in shard_admission_report(
-            new, corpus, threshold=0.5, portable=True
+            new, minhash_index(corpus, portable=True), threshold=0.5
         ).collect()
     }
     assert via_index == via_frames
 
 
-def test_shard_admission_overlapping_ids_across_sides(spark):
-    """The corpus_docs form signatures shard UNION corpus in ONE
-    side-tagged pass (r18); the struct (side, id) key must keep the two
-    id spaces disjoint even when the SAME doc_id appears on both sides
-    with different text.  Truth source: the corpus_sigs= path, which
-    signatures the sides separately and never unions them."""
+def test_shard_admission_overlapping_ids_across_sides(spark, tmp_path):
+    """The candidate and verification joins run against the side-tagged
+    union of the corpus and shard tables (r19); the (side, id) keys must
+    keep the two id spaces disjoint even when the SAME doc_id appears on
+    both sides with different text.  The in-plan and the persisted index
+    handle must agree, and both must give the planted truth."""
     from market_data_ingestion_scraper_spark.operators.dedup import (
-        band_keys_from_sigs,
-        minhash_table,
+        write_minhash_index,
+    )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        load_ann_index,
     )
 
     shard = spark.createDataFrame(
@@ -336,17 +339,14 @@ def test_shard_admission_overlapping_ids_across_sides(spark):
     )
     union_form = {
         tuple(r) for r in shard_admission_report(
-            shard, corpus, threshold=0.5, portable=True
+            shard, minhash_index(corpus, portable=True), threshold=0.5
         ).collect()
     }
-    corpus_sigs = minhash_table(corpus, portable=True)
+    out = str(tmp_path / "mh_index")
+    write_minhash_index(corpus, out, portable=True)
     separate_form = {
         tuple(r) for r in shard_admission_report(
-            shard,
-            corpus_index=band_keys_from_sigs(corpus_sigs, 16),
-            corpus_sigs=corpus_sigs,
-            threshold=0.5,
-            portable=True,
+            shard, load_ann_index(spark, out), threshold=0.5
         ).collect()
     }
     assert union_form == separate_form
@@ -356,7 +356,7 @@ def test_shard_admission_overlapping_ids_across_sides(spark):
 
 def test_shard_admission_validation(spark):
     docs_df = spark.read.parquet(f"{SF}/documents.parquet")
-    with pytest.raises(ValueError, match="corpus_docs="):
+    with pytest.raises(TypeError, match="index"):
         shard_admission_report(docs_df.filter("doc_id % 5 = 0"))
 
 
@@ -429,10 +429,6 @@ def test_stream_shard_admission_matches_batch_report(spark, tmp_path):
     """Stream ≡ batch through the memory sink, and the admitted set is
     exactly the batch report's NOT-dup_vs_corpus documents (the stream
     covers the new-vs-corpus direction by contract)."""
-    from market_data_ingestion_scraper_spark.operators.dedup import (
-        band_keys_from_sigs,
-        minhash_table,
-    )
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     docs_df = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -440,13 +436,12 @@ def test_stream_shard_admission_matches_batch_report(spark, tmp_path):
     )
     new = docs_df.filter("doc_id % 5 = 0").select("doc_id", "text")
     corpus = docs_df.filter("doc_id % 5 <> 0")
-    corpus_sigs = minhash_table(corpus, portable=True).persist()
-    corpus_bands = band_keys_from_sigs(corpus_sigs)
+    index = minhash_index(corpus, portable=True)
 
     batch_admit = {
         r["doc_id"]: r["max_corpus_est"]
         for r in P.stream_shard_admission_filter(
-            new, corpus_bands, corpus_sigs, threshold=0.5, portable=True
+            new, index, threshold=0.5
         ).collect()
     }
     # cross-operator: admitted ∪ vs-corpus-dropped == the whole shard
@@ -456,10 +451,7 @@ def test_stream_shard_admission_matches_batch_report(spark, tmp_path):
 
     dropped = {
         r["doc_id"]
-        for r in near_duplicates_vs_index(
-            new, corpus_bands, threshold=0.5, portable=True,
-            corpus_sigs=corpus_sigs,
-        ).collect()
+        for r in near_duplicates_vs_index(new, index, threshold=0.5).collect()
     }
     all_ids = {r["doc_id"] for r in new.collect()}
     assert set(batch_admit) == all_ids - dropped
@@ -471,16 +463,13 @@ def test_stream_shard_admission_matches_batch_report(spark, tmp_path):
         "maxFilesPerTrigger", 1
     ).parquet(src)
     out = P.run_to_memory(
-        P.stream_shard_admission_filter(
-            stream, corpus_bands, corpus_sigs, threshold=0.5, portable=True
-        ),
+        P.stream_shard_admission_filter(stream, index, threshold=0.5),
         "t_shard_admit", spark,
     )
     stream_admit = {
         r["doc_id"]: r["max_corpus_est"] for r in out.collect()
     }
     assert stream_admit == batch_admit
-    corpus_sigs.unpersist()
 
 
 def test_stream_shard_admission_index_handle_and_validation(spark, tmp_path):
@@ -504,21 +493,70 @@ def test_stream_shard_admission_index_handle_and_validation(spark, tmp_path):
             new, threshold=0.5, index=handle
         ).collect()
     }
-    from market_data_ingestion_scraper_spark.operators.dedup import (
-        band_keys_from_sigs,
-        minhash_table,
-    )
-
-    sigs = minhash_table(corpus, portable=True)
     via_frames = {
         tuple(r)
         for r in P.stream_shard_admission_filter(
-            new, band_keys_from_sigs(sigs), sigs, threshold=0.5, portable=True
+            new, minhash_index(corpus, portable=True), threshold=0.5
         ).collect()
     }
     assert via_index == via_frames
-    with pytest.raises(ValueError, match="corpus_index="):
+    with pytest.raises(TypeError, match="index"):
         P.stream_shard_admission_filter(new)
+
+
+def test_minhash_index_handle_twins_serve_identically(
+    spark, sf_oracle, tmp_path
+):
+    """The in-memory minhash_index handle and its persisted-and-loaded
+    twin carry the same record and give identical results through all
+    three serving operators on a non-default build (8 bands, portable)
+    — 13 shard docs near-duplicate the corpus, 14 pairs, 87 of 100
+    admitted by the stream filter.  The operators take only the handle:
+    the banding parameters and the loose index frames are no longer
+    parameters, so they cannot contradict the record."""
+    from market_data_ingestion_scraper_spark.operators.dedup import (
+        near_duplicates_vs_index,
+        write_minhash_index,
+    )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        load_ann_index,
+    )
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+
+    docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
+    new = docs.filter("doc_id % 5 = 0")
+    corpus = docs.filter("doc_id % 5 <> 0")
+    in_memory = minhash_index(corpus, n_bands=8, portable=True)
+    out = str(tmp_path / "mh_index")
+    write_minhash_index(corpus, out, n_bands=8, portable=True)
+    persisted = load_ann_index(spark, out)
+    assert in_memory.quantizer == persisted.quantizer
+
+    def served(index):
+        report = shard_admission_report(new, index, threshold=0.5).collect()
+        pairs = near_duplicates_vs_index(new, index, threshold=0.5).collect()
+        admitted = P.stream_shard_admission_filter(
+            new.select("doc_id", "text"), index, threshold=0.5
+        ).collect()
+        return (
+            sorted(map(tuple, report)), sorted(map(tuple, pairs)),
+            sorted(map(tuple, admitted)),
+        )
+
+    got = served(in_memory)
+    assert got == served(persisted)
+    report, pairs, admitted = got
+    assert sum(r[2] for r in report) == 13      # n_dup_vs_corpus
+    assert len(pairs) == 14 and len(admitted) == 87
+    serve_paths = (
+        shard_admission_report, near_duplicates_vs_index,
+        P.stream_shard_admission_filter,
+    )
+    for serve in serve_paths:
+        for loose in ("n_bands", "k", "portable", "corpus_index",
+                      "corpus_sigs"):
+            with pytest.raises(TypeError, match=loose):
+                serve(new, in_memory, **{loose: 8})
 
 
 def test_hybrid_rrf_colliding_column_names(spark):
@@ -634,10 +672,6 @@ def test_stream_admission_agrees_with_fused_batch_report(spark):
     within-shard direction is the batch report's job by contract)."""
     from pyspark.sql import functions as F
 
-    from market_data_ingestion_scraper_spark.operators.dedup import (
-        band_keys_from_sigs,
-        minhash_table,
-    )
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
@@ -645,29 +679,22 @@ def test_stream_admission_agrees_with_fused_batch_report(spark):
     )
     new = docs.filter("doc_id % 5 = 0")
     corpus = docs.filter("doc_id % 5 <> 0")
-    corpus_sigs = minhash_table(corpus, portable=True).persist()
-    try:
-        corpus_bands = band_keys_from_sigs(corpus_sigs)
-        admitted_ids = {
-            r["doc_id"]
-            for r in P.stream_shard_admission_filter(
-                new.select("doc_id", "text"), corpus_bands, corpus_sigs,
-                threshold=0.5, portable=True,
-            ).collect()
-        }
-        stream_admitted = {
-            r["source"]: r["n"]
-            for r in new.filter(F.col("doc_id").isin(admitted_ids))
-            .groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        report = {
-            r["source"]: r
-            for r in shard_admission_report(
-                new, corpus, threshold=0.5, portable=True
-            ).collect()
-        }
-    finally:
-        corpus_sigs.unpersist()
+    index = minhash_index(corpus, portable=True)
+    admitted_ids = {
+        r["doc_id"]
+        for r in P.stream_shard_admission_filter(
+            new.select("doc_id", "text"), index, threshold=0.5
+        ).collect()
+    }
+    stream_admitted = {
+        r["source"]: r["n"]
+        for r in new.filter(F.col("doc_id").isin(admitted_ids))
+        .groupBy("source").agg(F.count(F.lit(1)).alias("n")).collect()
+    }
+    report = {
+        r["source"]: r
+        for r in shard_admission_report(new, index, threshold=0.5).collect()
+    }
     assert set(stream_admitted) <= set(report)
     for src, rep in report.items():
         assert stream_admitted.get(src, 0) == rep["n_new"] - rep[
