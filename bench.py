@@ -129,12 +129,12 @@ def main() -> None:
     # calibration matched r10 exactly — host multi-core throughput drifts
     # independently of single-thread speed and the 1-thread number cannot
     # see it).  Same per-thread workload (3e8 hashed rows each), one
-    # thread per core of the session (``local[$SPARK_GRAFT_CPUS]``, the
-    # get_spark default of 32 when unset): on a fixed box this tracks the
+    # thread per core of the session (its default parallelism — the N of
+    # get_spark's ``local[N]``): on a fixed box this tracks the
     # 1-thread number; when the ratio to it moves across rounds, read
     # query-wall drift against THIS number before calling anything a plan
     # regression.
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = spark.sparkContext.defaultParallelism
     mcal_runs = []
     for _ in range(3):
         t0 = time.perf_counter()

@@ -688,17 +688,19 @@ def main(argv: list[str] | None = None) -> int:
     if args.cmd == "ann-index":
         # The bucket/cell tables ARE the index (see SURVEY X14): built
         # once here, partitioned so a serving probe reads only its
-        # table's/cell's files, consumed via lsh_topk(corpus_buckets=) /
-        # ivf_topk(corpus_cells=) or the streaming ann_enrich_stream.
-        # The QUANTIZER PARAMETERS travel with the index as a
-        # `_quantizer.json` sidecar (underscore-prefixed → invisible to
-        # parquet readers): serving with different hyperplanes/centroids
-        # than the build silently degrades recall to chance, so the
-        # parameters the index was built with must never be guessed.
+        # table's/cell's files, loaded with load_ann_index and served
+        # through the handle (lsh_topk / ann_enrich_stream /
+        # stream_near_dup_filter / stream_margin_align, ivf_topk,
+        # ivfpq_topk).  The QUANTIZER PARAMETERS travel with the index
+        # as a `_quantizer.json` sidecar (underscore-prefixed → invisible
+        # to parquet readers): serving with different hyperplanes or
+        # centroids than the build silently degrades recall to chance,
+        # so the parameters the index was built with are never guessed.
+        # Every build replaces the whole directory, old partitions too.
         import json
 
         from .operators import similarity as S
-        from .util import require_local_path
+        from .util import overwrite_partitioned, require_local_path
 
         require_local_path(args.out)  # the sidecar write is an os-level op
         emb = spark.read.parquet(args.embeddings)
@@ -716,39 +718,29 @@ def main(argv: list[str] | None = None) -> int:
             )
             return 0
         if args.kind == "lsh":
-            idx = S.bucket_table(
-                emb, "vec_id", "embedding", args.n_planes, args.n_tables,
-                args.dim, args.seed,
+            n = S.write_lsh_index(
+                emb, args.out, n_planes=args.n_planes,
+                n_tables=args.n_tables, dim=args.dim, seed_base=args.seed,
             )
             part = "t"
-            quantizer = {
-                "kind": "lsh",
-                "n_planes": args.n_planes,
-                "n_tables": args.n_tables,
-                "dim": args.dim,
-                "seed_base": args.seed,
-            }
         else:
             cents = S.fit_ivf_centroids(
                 emb, n_lists=args.n_lists, seed=args.seed
             )
-            idx = S.ivf_cell_table(
-                emb, S._ivf_weight_table(spark, cents)
-            )
             part = "cell"
-            quantizer = {
-                "kind": "ivf",
-                "n_lists": args.n_lists,
-                "seed": args.seed,
-                "centroids": cents,
-            }
-        idx.write.mode("overwrite").partitionBy(part).parquet(args.out)
-        # counting the WRITTEN parquet is metadata-only (row-group stats)
-        # and doubles as a readability check; counting the plan instead
-        # would re-execute the whole build
-        n = spark.read.parquet(args.out).count()
-        with open(os.path.join(args.out, "_quantizer.json"), "w") as f:
-            json.dump(quantizer, f)
+            overwrite_partitioned(
+                S.ivf_cell_table(emb, S._ivf_weight_table(spark, cents)), part
+            ).parquet(args.out)
+            # counting the WRITTEN parquet is metadata-only (row-group
+            # stats) and doubles as a readability check; counting the
+            # plan instead would re-execute the whole build
+            n = spark.read.parquet(args.out).count()
+            with open(os.path.join(args.out, "_quantizer.json"), "w") as f:
+                json.dump(
+                    {"kind": "ivf", "n_lists": args.n_lists,
+                     "seed": args.seed, "centroids": cents},
+                    f,
+                )
         print(
             f"kind={args.kind} rows={n} out={args.out} partition_by={part} "
             f"quantizer=_quantizer.json"
@@ -778,22 +770,25 @@ def main(argv: list[str] | None = None) -> int:
 
     if args.cmd == "index-extend":
         # One sidecar-dispatched entry point for every index family: the
-        # quantizer names the kind, so the caller cannot append with the
-        # wrong row shape or re-typed parameters.
-        import json
-
+        # record names the kind, so the caller cannot append with the
+        # wrong row shape or re-typed parameters.  A directory without a
+        # record, or a record the family's reader refuses, prints the
+        # message and exits 2 (as shard-admit --index does).
         from .operators.dedup import extend_band_index
-        from .operators.similarity import extend_ann_index
+        from .operators.similarity import extend_ann_index, load_ann_index
         from .util import require_local_path
 
         require_local_path(args.index)
-        with open(os.path.join(args.index, "_quantizer.json")) as f:
-            kind = json.load(f)["kind"]
-        shard = spark.read.parquet(args.input)
-        if kind == "minhash":
-            n = extend_band_index(shard, args.index)
-        else:
-            n = extend_ann_index(shard, args.index)
+        try:
+            kind = load_ann_index(spark, args.index).kind
+            shard = spark.read.parquet(args.input)
+            if kind == "minhash":
+                n = extend_band_index(shard, args.index)
+            else:
+                n = extend_ann_index(shard, args.index)
+        except (ValueError, FileNotFoundError) as exc:
+            print(str(exc), file=sys.stderr)
+            return 2
         print(f"kind={kind} appended_rows={n} index={args.index}")
         return 0
 

@@ -48,7 +48,7 @@ from typing import NamedTuple
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from .similarity import _pair_cosine, _scoring_side, bucket_table
+from .similarity import _lsh_family, _pair_cosine, _scoring_side, bucket_table
 from .spread import spread_scan as _spread
 
 
@@ -198,24 +198,13 @@ class NeighborhoodStats(NamedTuple):
 
     @property
     def lsh(self) -> dict | None:
+        """The hash family an LSH-built artifact records (checked by the
+        same ``similarity._lsh_family`` the LSH index reader uses), or
+        None for a brute-force build."""
         meta = self.sidecar.get("meta") or {}
         if not meta.get("lsh"):
             return None
-        missing = [
-            key
-            for key in ("n_planes", "n_tables", "dim", "seed_base")
-            if key not in meta
-        ]
-        if missing:
-            raise ValueError(
-                f"lsh-built stats artifact missing hash-family keys: {missing}"
-            )
-        return {
-            "n_planes": int(meta["n_planes"]),
-            "n_tables": int(meta["n_tables"]),
-            "dim": int(meta["dim"]),
-            "seed_base": int(meta["seed_base"]),
-        }
+        return _lsh_family(meta, "lsh-built stats artifact")
 
 
 def save_neighborhood_stats(
@@ -251,9 +240,9 @@ def load_neighborhood_stats(spark, path: str) -> NeighborhoodStats:
     """Load a persisted stats artifact, validating kind and shape; returns
     a :class:`NeighborhoodStats` (unpacks as ``(df, sidecar)``).  Pass the
     WHOLE object to :func:`streaming.pipeline.stream_margin_align` — the
-    serve then derives ``k`` (and the LSH hash family, when the artifact
-    was built over LSH candidates) from the artifact, so a parameter
-    mismatch is impossible (the `index.require` pattern)."""
+    serve then derives ``k`` from the artifact and, when the artifact
+    was built over LSH candidates, refuses an index of another hash
+    family, so a parameter mismatch is impossible."""
     import json
     import os
 

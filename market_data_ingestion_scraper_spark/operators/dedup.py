@@ -380,13 +380,14 @@ def write_minhash_index(
     then read back and banded (a projection).  The sidecar is the commit
     point: an existing one is removed before the first write and the new
     one is written last, so a build that fails part-way leaves no record
-    for ``load_ann_index`` to serve stale.  Returns
+    for ``load_ann_index`` to serve stale; ``bands/`` is replaced whole,
+    so a rebuild with fewer bands keeps none of the old ones.  Returns
     ``(n_docs, n_band_rows)``; the document count rides the ``sigs/``
     write, and every signature bands into exactly ``n_bands`` rows."""
     import json
     import os
 
-    from ..util import require_local_path
+    from ..util import overwrite_partitioned, require_local_path
     from .metrics import observed_count
 
     require_local_path(path)
@@ -405,11 +406,10 @@ def write_minhash_index(
     sigs_path = os.path.join(path, "sigs")
     sigs, obs = observed_count(index.sigs, "n_docs")
     sigs.write.mode("overwrite").parquet(sigs_path)
-    band_keys_from_sigs(
-        spark.read.parquet(sigs_path), n_bands, id_col=id_col
-    ).write.mode("overwrite").partitionBy("band").parquet(
-        os.path.join(path, "bands")
-    )
+    overwrite_partitioned(
+        band_keys_from_sigs(spark.read.parquet(sigs_path), n_bands, id_col=id_col),
+        "band",
+    ).parquet(os.path.join(path, "bands"))
     with open(record_path, "w") as f:
         json.dump(index.quantizer, f)
     n_docs = obs.get["n_rows"]

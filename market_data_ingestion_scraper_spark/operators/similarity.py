@@ -307,18 +307,105 @@ def lsh_weights_sql(
     )
 
 
-def lsh_topk(
+_LSH_FAMILY = ("n_planes", "n_tables", "dim", "seed_base")
+
+
+def _lsh_family(record: dict, what: str) -> dict:
+    """The hash family ``{n_planes, n_tables, dim, seed_base}`` a record
+    names, as ints — the one check of it, shared by the LSH index reader
+    and the LSH-built neighborhood-stats artifact.  Refuses a missing
+    key, and a width, table count or dimension below 1 (zero planes or
+    tables build an empty index that serves nothing, silently)."""
+    missing = [key for key in _LSH_FAMILY if key not in record]
+    if missing:
+        problem = f"missing hash-family keys {missing}"
+    else:
+        family = {key: int(record[key]) for key in _LSH_FAMILY}
+        low = [f"{key}={family[key]}" for key in _LSH_FAMILY[:3] if family[key] < 1]
+        if not low:
+            return family
+        problem = f"{', '.join(low)} below 1"
+    raise ValueError(f"unusable {what}: {problem} — rebuild it")
+
+
+def _unpack_lsh_index(index: "AnnIndex") -> tuple[DataFrame, dict]:
+    """(buckets, family) from an LSH :class:`AnnIndex` — the ONE reader
+    of the record :func:`lsh_index` writes, shared by every serving path
+    and :func:`extend_ann_index`, so queries are always hashed with the
+    hyperplanes the corpus was built with."""
+    kind = index.quantizer.get("kind")
+    if kind != "lsh":
+        raise ValueError(
+            f"unusable lsh index: kind mismatch, the record names {kind!r} "
+            "— rebuild it with write_lsh_index / the ann-index CLI"
+        )
+    return index.df, _lsh_family(index.quantizer, "lsh index")
+
+
+def lsh_index(
     embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
     n_planes: int = 4,
     n_tables: int = 8,
     dim: int = 64,
+    seed_base: int = 1000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    corpus_buckets: DataFrame | None = None,
+) -> "AnnIndex":
+    """The LSH index of ``embeddings`` as an :class:`AnnIndex`: ``df`` is
+    the (id, t, bucket) relation of :func:`bucket_table`, ``quantizer``
+    the record ``{kind: lsh, n_planes, n_tables, dim, seed_base}`` — the
+    same handle ``load_ann_index`` returns for the index
+    :func:`write_lsh_index` persists.  Every LSH serving path takes only
+    this handle and reads the hash family from its record.  Nothing is
+    computed here; a record the reader would refuse is never built."""
+    record = {"kind": "lsh", "n_planes": n_planes, "n_tables": n_tables,
+              "dim": dim, "seed_base": seed_base}
+    family = _lsh_family(record, "lsh index")
+    return AnnIndex(bucket_table(embeddings, id_col, vec_col, **family), record)
+
+
+def write_lsh_index(
+    embeddings: DataFrame,
+    path: str,
+    n_planes: int = 4,
+    n_tables: int = 8,
+    dim: int = 64,
     seed_base: int = 1000,
-    index: "AnnIndex | None" = None,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> int:
+    """Persist the index :func:`lsh_index` builds at ``path``: the rows
+    partitioned by hash table ``t`` (a probe reads only its tables'
+    files) replacing every old partition, and the record as the
+    ``_quantizer.json`` sidecar.  The sidecar is the commit point: an
+    existing one is removed first and the new one written last.
+    Returns the number of rows written (vectors × tables, counted as the
+    write runs)."""
+    import json
+    import os
+
+    from ..util import overwrite_partitioned, require_local_path
+    from .metrics import observed_count
+
+    require_local_path(path)
+    index = lsh_index(embeddings, n_planes, n_tables, dim, seed_base, id_col, vec_col)
+    record_path = os.path.join(path, "_quantizer.json")
+    if os.path.exists(record_path):
+        os.remove(record_path)
+    rows, obs = observed_count(index.df, "n_rows")
+    overwrite_partitioned(rows, "t").parquet(path)
+    with open(record_path, "w") as f:
+        json.dump(index.quantizer, f)
+    return obs.get["n_rows"]
+
+
+def lsh_topk(
+    embeddings: DataFrame,
+    queries: DataFrame,
+    index: "AnnIndex",
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
     """ANN top-k via multi-table hyperplane LSH: L independent hash tables
     of b sign-bits each; a corpus vector is a candidate if it collides with
@@ -326,43 +413,27 @@ def lsh_topk(
     equi-join on (table, bucket) — never a crossJoin.
 
     Recall/cost math: a neighbor at angle θ matches one b-bit table with
-    (1-θ/π)^b; over L tables recall ≈ 1-(1-(1-θ/π)^b)^L.  Defaults (b=4,
-    L=8) give ~0.97 recall at cos≈0.5 while scoring ~L/2^b = half the
-    corpus per query; raise b (and L) as the target similarity rises —
-    near-dup search (cos≥0.9) sustains b=12+ at a tiny fraction of the
-    corpus.  Tables add candidates, so cost is tunable, recall measured
-    against brute force in tests.
+    (1-θ/π)^b; over L tables recall ≈ 1-(1-(1-θ/π)^b)^L.  The
+    :func:`lsh_index` defaults (b=4, L=8) give ~0.97 recall at cos≈0.5
+    while scoring ~L/2^b = half the corpus per query; raise b (and L) as
+    the target similarity rises — near-dup search (cos≥0.9) sustains
+    b=12+ at a tiny fraction of the corpus.  Tables add candidates, so
+    cost is tunable, recall measured against brute force in tests.
 
-    ``corpus_buckets`` mirrors ``ivf_topk(centroids=)``: the corpus-side
-    bucket assignment IS the LSH index build — at 100 TB you compute it
-    once (``bucket_table(corpus, ..., seed_base=1000)``), persist it
-    partitioned by (t, bucket), and amortize it over every query; only the
-    query-side signatures + the candidate join are per-query cost.  When
-    omitted the index is built inline (self-contained on fixtures).
-
-    ``index`` (an :class:`AnnIndex` from :func:`load_ann_index`)
-    supplies BOTH the bucket relation and the exact hash parameters the
-    index was built with, overriding the raw arguments — the
-    mismatch-proof serving form."""
-    if index is not None:
-        q = index.require("lsh")
-        corpus_buckets = index.df
-        n_planes, n_tables = q["n_planes"], q["n_tables"]
-        dim, seed_base = q["dim"], q["seed_base"]
+    ``index`` is the corpus-side bucket assignment (the LSH index
+    build) as a handle from :func:`lsh_index` or :func:`load_ann_index`:
+    at 100 TB built once by :func:`write_lsh_index` and amortized over
+    every query, so only the query-side signatures (hashed with the
+    family its record names) and the candidate join are per-query cost.
+    ``k`` is the query-time top-k."""
+    corpus_buckets, family = _unpack_lsh_index(index)
     corpus = _spread(embeddings)
-    if corpus_buckets is None:
-        corpus_buckets = bucket_table(
-            corpus, id_col, vec_col, n_planes, n_tables, dim, seed_base
-        )
     c_b = corpus_buckets.select(
         F.col(id_col).alias("neighbor_id"), "t", "bucket"
     )
-    # seed_base MUST match the one the corpus index was built with — a
-    # mismatch hashes query and corpus with different hyperplanes and
-    # collisions become random (no error, recall collapses to chance)
-    q_b = bucket_table(
-        queries, id_col, vec_col, n_planes, n_tables, dim, seed_base
-    ).select(F.col(id_col).alias("query_id"), "t", "bucket")
+    q_b = bucket_table(queries, id_col, vec_col, **family).select(
+        F.col(id_col).alias("query_id"), "t", "bucket"
+    )
     cand = (
         c_b.join(F.broadcast(q_b), ["t", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -517,14 +588,15 @@ class AnnIndex:
     a mismatch with the persisted index silently degraded recall to
     chance — the handle makes the sidecar authoritative at the API).
 
-    Pass the handle itself: ``lsh_topk(corpus, queries, index=idx)``,
+    Pass the handle itself: ``lsh_topk(corpus, queries, idx)``,
     ``ivf_topk(corpus, queries, index=idx)``,
-    ``ann_enrich_stream(stream, index=idx, corpus_vectors=...)``,
-    ``stream_near_dup_filter(stream, index=idx, ...)``,
+    ``ann_enrich_stream(stream, idx, corpus_vectors)``,
+    ``stream_near_dup_filter(stream, idx, corpus_vectors)``,
     ``shard_admission_report(shard, idx)``.  Serving raises on a kind
-    mismatch instead of degrading.  MinHash handles come from
-    :func:`~.dedup.minhash_index` (in-plan) or :func:`load_ann_index`
-    (persisted) with the same record either way."""
+    mismatch instead of degrading.  LSH and MinHash handles come from
+    :func:`lsh_index` / :func:`~.dedup.minhash_index` (in-plan) or
+    :func:`load_ann_index` (persisted) with the same record either way,
+    and their serving paths take no hash parameter beside the handle."""
 
     def __init__(self, df: DataFrame, quantizer: dict, sigs: DataFrame | None = None):
         self.df = df
@@ -555,9 +627,11 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     silently degrades recall to chance, so the sidecar is authoritative.
 
     Returns an :class:`AnnIndex` handle; pass it to serving so the hash
-    parameters are DERIVED from the sidecar, never re-typed.  A
-    directory without the sidecar (never built, or a build that failed
-    before its last write) is refused."""
+    parameters are DERIVED from the sidecar, never re-typed (the LSH and
+    MinHash serving paths accept nothing else).  A directory without
+    the sidecar (never built, or a build that failed before its last
+    write) is refused; a sidecar the family's reader refuses is refused
+    when the handle is served."""
     import json
     import os
 
@@ -628,7 +702,7 @@ def write_ivfpq_index(
     import json
     import os
 
-    from ..util import require_local_path
+    from ..util import overwrite_partitioned, require_local_path
 
     require_local_path(path)
     if centroids is None:
@@ -642,7 +716,7 @@ def write_ivfpq_index(
     rows = ivfpq_index_rows(
         embeddings, centroids, codebooks, id_col=id_col, vec_col=vec_col
     )
-    rows.write.mode("overwrite").partitionBy("cell").parquet(path)
+    overwrite_partitioned(rows, "cell").parquet(path)
     quantizer = {
         "kind": "ivfpq",
         "n_lists": len(centroids),
@@ -664,7 +738,8 @@ def extend_ann_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Append new vectors' rows to a persisted LSH or IVF index — the
+    """Append new vectors' rows to a persisted LSH, IVF, IVF-PQ or RP
+    index — the
     vector-space twin of :func:`~.dedup.extend_band_index`, completing
     the incremental lifecycle for every index family (MinHash bands for
     text, hyperplane buckets and IVF cells for vectors).
@@ -675,8 +750,8 @@ def extend_ann_index(
     list), so APPEND IS the index update: no rebuild, no read of
     existing index rows, and the new files land inside the existing
     ``t=``/``cell=`` partition directories where serving probes already
-    prune.  Parameters are ALWAYS derived from the sidecar — the whole
-    point of the handle discipline.
+    prune.  Parameters are ALWAYS derived from the sidecar; an LSH (or
+    unknown-kind) record goes through the serving paths' reader.
 
     IVF caveat (inherent, same as faiss): appends assign against the
     centroids fitted at build time, so a drifting corpus slowly degrades
@@ -689,14 +764,12 @@ def extend_ann_index(
     number of index rows appended."""
     spark = new_vectors.sparkSession
     handle = load_ann_index(spark, index_path)
-    if handle.kind == "lsh":
-        q = handle.quantizer
-        rows = bucket_table(
-            new_vectors, id_col, vec_col, q["n_planes"], q["n_tables"],
-            q["dim"], q["seed_base"],
+    if handle.kind == "minhash":
+        raise ValueError(
+            "extend_ann_index handles lsh/ivf/ivfpq/rp indexes, got "
+            "'minhash' (minhash indexes grow via extend_band_index)"
         )
-        part = "t"
-    elif handle.kind == "ivf":
+    if handle.kind == "ivf":
         rows = ivf_cell_table(
             new_vectors,
             _ivf_weight_table(spark, handle.quantizer["centroids"]),
@@ -717,11 +790,10 @@ def extend_ann_index(
             new_vectors, q["out_dim"], q["dim"], q["seed"], id_col, vec_col
         )
         part = None  # the reduced table is written flat
-    else:
-        raise ValueError(
-            f"extend_ann_index handles lsh/ivf/ivfpq/rp indexes, got "
-            f"{handle.kind!r} (minhash indexes grow via extend_band_index)"
-        )
+    else:  # lsh; the reader refuses a record of any other kind
+        _, family = _unpack_lsh_index(handle)
+        rows = bucket_table(new_vectors, id_col, vec_col, **family)
+        part = "t"
     # shard-bounded; compute once for both the append and the count
     rows = rows.localCheckpoint(eager=True)
     w = rows.write.mode("append")
@@ -1343,7 +1415,6 @@ def embedding_near_duplicates(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    corpus_buckets: DataFrame | None = None,
     seed_base: int = 7000,
 ) -> DataFrame:
     """X2 embedding-cosine near-dup: self-join within multi-table LSH
@@ -1352,24 +1423,19 @@ def embedding_near_duplicates(
     ≈0.96, while each table's buckets hold ~n/256 of the corpus — no
     crossJoin anywhere.
 
-    ``corpus_buckets`` accepts a precomputed index (see :func:`lsh_topk`,
-    seed_base=7000 here).  The inline build persists the bucket table
-    before the self-join — without that marker both join sides recompute
-    the full signature pipeline (the table is rows × n_tables of fixed
-    longs, so the cache is tiny even at corpus scale; a production run
-    would write it out partitioned by (t, bucket) instead)."""
-    corpus = _spread(embeddings)
-    if corpus_buckets is not None:
-        banded = corpus_buckets
-    else:
-        from .dedup import _persist_generation
+    The bucket table is persisted before the self-join — without that
+    marker both join sides recompute the full signature pipeline (the
+    table is rows × n_tables of fixed longs, so the cache is tiny even
+    at corpus scale).  The same family, persisted by
+    ``write_lsh_index(n_planes=8, n_tables=6, seed_base=7000)``, is the
+    index ``stream_near_dup_filter`` admits new rows against."""
+    from .dedup import _persist_generation
 
-        banded = _persist_generation(
-            "embedding_near_dups.buckets",
-            bucket_table(
-                corpus, id_col, vec_col, n_planes, n_tables, dim, seed_base
-            ),
-        )
+    corpus = _spread(embeddings)
+    banded = _persist_generation(
+        "embedding_near_dups.buckets",
+        bucket_table(corpus, id_col, vec_col, n_planes, n_tables, dim, seed_base),
+    )
     l, r = banded.alias("l"), banded.alias("r")
     cand = (
         l.join(
@@ -1630,11 +1696,10 @@ def semantic_dedup(
 def ann_recall(
     embeddings: DataFrame,
     queries: DataFrame,
+    index: AnnIndex,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    corpus_buckets: DataFrame | None = None,
-    seed_base: int = 1000,
 ) -> DataFrame:
     """Recall@k of the LSH ANN against exact brute-force ground truth —
     the eval harness every ANN deployment runs before trusting the index
@@ -1645,11 +1710,11 @@ def ann_recall(
     tie-breaks, so the comparison measures BUCKETING loss only, never
     float drift.  Cost: the exact side is the brute-force scan — run it
     on a sampled query set (queries ≪ corpus, broadcast), which is how
-    recall is estimated at 100 TB; the ANN side reuses the persisted
-    bucket index."""
+    recall is estimated at 100 TB; the ANN side serves the LSH
+    ``index`` handle (:func:`lsh_index` or :func:`load_ann_index`), so
+    its queries are hashed with the family the index was built with."""
     approx = lsh_topk(
-        embeddings, queries, k, id_col=id_col, vec_col=vec_col,
-        corpus_buckets=corpus_buckets, seed_base=seed_base,
+        embeddings, queries, index, k, id_col=id_col, vec_col=vec_col
     )
     exact = brute_force_topk(embeddings, queries, k, id_col, vec_col)
     return recall_vs_exact(approx, exact, k)

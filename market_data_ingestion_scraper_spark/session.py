@@ -27,16 +27,19 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``; unset, the
+    env defaults to the cores this process may run on
+    (``sched_getaffinity``), so a small host is never oversubscribed.
     On a cluster, pass ``master=None`` and let spark-submit decide.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    host_cpus = len(os.sched_getaffinity(0))
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(host_cpus)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
             shuffle_partitions = int(cpus)
         except ValueError:
-            shuffle_partitions = 32
+            shuffle_partitions = host_cpus
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -185,20 +185,14 @@ def enrich_with_static(
 
 
 def _staged_query_buckets(
-    rows: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_planes: int,
-    n_tables: int,
-    dim: int,
-    seed_base: int,
-):
+    rows: DataFrame, family: dict, id_col: str, vec_col: str
+) -> DataFrame:
     """Project stream rows through the shuffle-free bucket signature with
     their scoring columns CARRIED on-row (a stream cannot re-join itself
-    to fetch them back).  seed_base MUST match the corpus index build — a
-    mismatch hashes the two sides with different hyperplanes and
-    collisions become random.  Shared by ann_enrich_stream and
-    stream_near_dup_filter so the staging cannot drift between them."""
+    to fetch them back).  ``family`` is the hash family
+    ``similarity._unpack_lsh_index`` read from the corpus index record,
+    so both sides hash with the same hyperplanes.  Shared by every LSH
+    stream serve so the staging cannot drift between them."""
     from ..operators.similarity import _dbl, bucket_table, l2_norm
 
     d = _dbl(F.col(vec_col))
@@ -206,30 +200,23 @@ def _staged_query_buckets(
         F.col(id_col), F.col(vec_col), d.alias("_vq"), l2_norm(d).alias("_nq")
     )
     return bucket_table(
-        staged, id_col, vec_col, n_planes, n_tables, dim, seed_base,
-        carry=(vec_col, "_vq", "_nq"),
+        staged, id_col, vec_col, **family, carry=(vec_col, "_vq", "_nq")
     )
 
 
 def ann_enrich_stream(
     queries: DataFrame,
-    corpus_buckets: DataFrame | None = None,
-    corpus_vectors: DataFrame | None = None,
+    index,
+    corpus_vectors: DataFrame,
     k: int = 5,
-    n_planes: int = 4,
-    n_tables: int = 8,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed_base: int = 1000,
-    index=None,
 ) -> DataFrame:
     """Streaming ANN serving: each micro-batch of query vectors is
     enriched with its approximate top-k neighbors from a STATIC indexed
     corpus — the online half of the "index once, serve many" pattern
-    (the batch half builds ``corpus_buckets`` with
-    ``similarity.bucket_table`` and persists it, see
-    ``test_lsh_index_parquet_roundtrip``).
+    (the batch half builds the index with ``similarity.write_lsh_index``
+    and serves it with ``similarity.lsh_topk``).
 
     Composition is entirely stream-legal: the query-side bucket signature
     is the same shuffle-free per-row projection the batch path uses (a
@@ -243,27 +230,24 @@ def ann_enrich_stream(
     window).  State per query id is its candidate list; emit with
     update/complete mode.
 
-    ``index`` (an ``AnnIndex`` from ``similarity.load_ann_index``, kind
-    ``lsh``) supplies the bucket relation AND the exact hash parameters
-    the index was built with — the mismatch-proof serving form (r7
-    review: raw int defaults let a parameter drift silently degrade
-    recall to chance).
+    ``index`` (an LSH ``AnnIndex`` from ``similarity.lsh_index`` or
+    ``similarity.load_ann_index``) supplies the bucket relation AND the
+    exact hash family the index was built with; no hash parameter is
+    taken beside it (r7 review: raw int defaults let a parameter drift
+    silently degrade recall to chance).  ``corpus_vectors`` is the
+    static (id, vector) table candidates are scored against; ``k`` is
+    the query-time top-k.
 
     Returns (query_id, topk: array<struct<neighbor_id, cos_sim>>)."""
-    from ..operators.similarity import _pair_cosine, _scoring_side
+    from ..operators.similarity import (
+        _pair_cosine,
+        _scoring_side,
+        _unpack_lsh_index,
+    )
 
-    if index is not None:
-        qz = index.require("lsh")
-        corpus_buckets = index.df
-        n_planes, n_tables = qz["n_planes"], qz["n_tables"]
-        dim, seed_base = qz["dim"], qz["seed_base"]
-    if corpus_buckets is None or corpus_vectors is None:
-        raise ValueError(
-            "ann_enrich_stream needs corpus_vectors plus either index= "
-            "or corpus_buckets="
-        )
+    corpus_buckets, family = _unpack_lsh_index(index)
     q_b = _staged_query_buckets(
-        queries, id_col, vec_col, n_planes, n_tables, dim, seed_base
+        queries, family, id_col, vec_col
     ).drop(vec_col).withColumnsRenamed({id_col: "query_id"})
     cand = q_b.join(
         corpus_buckets.withColumnsRenamed({id_col: "neighbor_id"}),
@@ -365,14 +349,9 @@ def stream_margin_align(
     queries: DataFrame,
     side_a_vectors: DataFrame,
     stats_a,
+    index,
     k: int | None = None,
     threshold_ppm: int = 1_000_000,
-    corpus_buckets: DataFrame | None = None,
-    index=None,
-    n_planes: int | None = None,
-    n_tables: int | None = None,
-    dim: int | None = None,
-    seed_base: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
@@ -400,16 +379,16 @@ def stream_margin_align(
     ``(n − pmod(n, d)) / d`` long trick (operands all positive and far
     under 2^53, so the double division is exact).
 
-    ``stats_a`` is either a loaded
+    ``index`` is the LSH ``AnnIndex`` of side A
+    (``similarity.lsh_index`` or ``similarity.load_ann_index``): its
+    record names the hash family the queries are bucketed with, and no
+    family argument is taken beside it.  ``stats_a`` is either a loaded
     :class:`~..operators.alignment.NeighborhoodStats` artifact — the
-    mismatch-proof form: ``k`` comes from the artifact's sidecar, and
-    when the artifact was built over LSH candidates its hash family
-    drives the serving buckets; an explicit ``k``, explicit family
-    argument, or ``index`` quantizer that CONFLICTS with the artifact
-    raises (raw ``corpus_buckets`` cannot be introspected — passing them
-    with an LSH artifact asserts the caller built them from the same
-    family) — or a bare stats DataFrame (``k`` defaults to 4, family to
-    the library defaults 4/8/64/1000).  ``k`` is capped at
+    mismatch-proof form: ``k`` comes from the artifact's sidecar, an
+    explicit ``k`` that CONFLICTS with it raises, and so does an index
+    whose family differs from the one an LSH-built artifact records
+    (margins over mismatched candidate pools are silently wrong) — or a
+    bare stats DataFrame (``k`` defaults to 4).  ``k`` is capped at
     ``MAX_NEIGHBORHOOD_K`` (47): past it the long floor-division below
     exceeds 2^53 and streaming margins could drift 1 ppm from the batch
     operator's DECIMAL-exact values.
@@ -418,27 +397,26 @@ def stream_margin_align(
     one row per stream doc whose best candidate clears ``threshold_ppm``.
     """
     from ..operators.alignment import MAX_NEIGHBORHOOD_K, NeighborhoodStats
-    from ..operators.similarity import _pair_cosine, _scoring_side, bucket_table
+    from ..operators.similarity import (
+        _pair_cosine,
+        _scoring_side,
+        _unpack_lsh_index,
+    )
 
-    explicit = {
-        name: v
-        for name, v in (
-            ("n_planes", n_planes),
-            ("n_tables", n_tables),
-            ("dim", dim),
-            ("seed_base", seed_base),
-        )
-        if v is not None
-    }
-    art_lsh = None
+    corpus_buckets, family = _unpack_lsh_index(index)
     if isinstance(stats_a, NeighborhoodStats):
         if k is not None and k != stats_a.k:
             raise ValueError(
                 f"explicit k={k} conflicts with the stats artifact's "
                 f"k={stats_a.k}; serving must use the artifact's parameters"
             )
+        if stats_a.lsh is not None and stats_a.lsh != family:
+            raise ValueError(
+                f"index hash family {family} conflicts with the stats "
+                f"artifact's {stats_a.lsh}; margins over mismatched "
+                "candidate pools are silently wrong"
+            )
         k = stats_a.k
-        art_lsh = stats_a.lsh
         stats_a = stats_a.df
     elif k is None:
         k = 4
@@ -447,51 +425,8 @@ def stream_margin_align(
             f"k must be in [1, {MAX_NEIGHBORHOOD_K}] (long-arithmetic "
             f"exactness bound), got {k}"
         )
-    if index is not None:
-        qz = index.require("lsh")
-        corpus_buckets = index.df
-        family = {
-            name: qz[name]
-            for name in ("n_planes", "n_tables", "dim", "seed_base")
-        }
-        clash = {
-            name: v for name, v in explicit.items() if family[name] != v
-        }
-        if clash:
-            raise ValueError(
-                f"explicit hash-family arguments {clash} conflict with the "
-                f"index's {family}; margins over mismatched candidate "
-                "pools are silently wrong"
-            )
-        if art_lsh is not None and family != art_lsh:
-            raise ValueError(
-                f"index hash family {family} conflicts with the stats "
-                f"artifact's {art_lsh}; margins over mismatched candidate "
-                "pools are silently wrong"
-            )
-    elif art_lsh is not None:
-        clash = {
-            name: v for name, v in explicit.items() if art_lsh[name] != v
-        }
-        if clash:
-            raise ValueError(
-                f"explicit hash-family arguments {clash} conflict with the "
-                f"stats artifact's {art_lsh}"
-            )
-        family = art_lsh
-    else:
-        family = {"n_planes": 4, "n_tables": 8, "dim": 64, "seed_base": 1000}
-        family.update(explicit)
-    n_planes, n_tables = family["n_planes"], family["n_tables"]
-    dim, seed_base = family["dim"], family["seed_base"]
-    if corpus_buckets is None:
-        corpus_buckets = bucket_table(
-            side_a_vectors, id_col, vec_col, n_planes, n_tables, dim, seed_base
-        )
     q_b = (
-        _staged_query_buckets(
-            queries, id_col, vec_col, n_planes, n_tables, dim, seed_base
-        )
+        _staged_query_buckets(queries, family, id_col, vec_col)
         .drop(vec_col)
         .withColumnsRenamed({id_col: "query_id"})
     )
@@ -582,16 +517,11 @@ def stream_margin_align(
 
 def stream_near_dup_filter(
     rows: DataFrame,
-    corpus_buckets: DataFrame | None = None,
-    corpus_vectors: DataFrame | None = None,
+    index,
+    corpus_vectors: DataFrame,
     threshold: float = 0.95,
-    n_planes: int = 8,
-    n_tables: int = 6,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    seed_base: int = 7000,
-    index=None,
 ) -> DataFrame:
     """Streaming ADMISSION CONTROL against the corpus: drop incoming rows
     whose embedding is near-duplicate (cos ≥ threshold) to anything in
@@ -607,8 +537,10 @@ def stream_near_dup_filter(
     streaming aggregation keeps rows whose best match stays below the
     threshold.  An exact duplicate hashes into identical buckets in
     EVERY table, so it is always caught regardless of LSH recall;
-    near-dups are caught at the bucketing recall of
-    (n_planes, n_tables), same math as `embedding_near_duplicates`.
+    near-dups are caught at the bucketing recall of the index's
+    (n_planes, n_tables), same math as `embedding_near_duplicates`
+    (whose family is ``lsh_index(n_planes=8, n_tables=6,
+    seed_base=7000)``).
 
     Returns the admitted rows (id, vector, max_corpus_sim); identical
     code runs in batch, which is how the test cross-checks it.
@@ -620,24 +552,20 @@ def stream_near_dup_filter(
     this filter; the test pins the drop so the policy cannot change
     silently.
 
-    ``index`` (an ``AnnIndex``, kind ``lsh``) supplies the bucket
-    relation AND the exact hash parameters, like
-    :func:`ann_enrich_stream`."""
-    from ..operators.similarity import _pair_cosine, _scoring_side
-
-    if index is not None:
-        qz = index.require("lsh")
-        corpus_buckets = index.df
-        n_planes, n_tables = qz["n_planes"], qz["n_tables"]
-        dim, seed_base = qz["dim"], qz["seed_base"]
-    if corpus_buckets is None or corpus_vectors is None:
-        raise ValueError(
-            "stream_near_dup_filter needs corpus_vectors plus either "
-            "index= or corpus_buckets="
-        )
-    q_b = _staged_query_buckets(
-        rows, id_col, vec_col, n_planes, n_tables, dim, seed_base
+    ``index`` (an LSH ``AnnIndex``) supplies the bucket relation AND
+    the exact hash family, and nothing else does, like
+    :func:`ann_enrich_stream`: incoming rows hashed with another family
+    than the corpus miss their own exact copies.  ``corpus_vectors`` is
+    the static (id, vector) table; ``threshold`` the query-time cosine
+    cut."""
+    from ..operators.similarity import (
+        _pair_cosine,
+        _scoring_side,
+        _unpack_lsh_index,
     )
+
+    corpus_buckets, family = _unpack_lsh_index(index)
+    q_b = _staged_query_buckets(rows, family, id_col, vec_col)
     # NO self-exclusion: unlike lsh_topk, incoming rows are not corpus
     # members — a re-crawl that kept its corpus id but re-encoded its
     # content MUST still be compared against (and rejected by) its own

@@ -15,3 +15,15 @@ def require_local_path(path: str) -> None:
             "uses os-level file operations; at cluster scale drive the "
             "same protocol through the Hadoop FileSystem API"
         )
+
+
+def overwrite_partitioned(df, col: str):
+    """A writer that REPLACES a partitioned index directory.  The session
+    sets ``partitionOverwriteMode=dynamic`` (idempotent ingest re-runs),
+    which keeps every partition the new rows miss: a rebuild with fewer
+    tables, cells or bands would serve the old build's leftovers."""
+    return (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy(col)
+    )

@@ -35,7 +35,7 @@ from market_data_ingestion_scraper_spark.operators.scaling import (  # noqa: E40
     replicate_embeddings,
 )
 from market_data_ingestion_scraper_spark.operators.similarity import (  # noqa: E402
-    bucket_table,
+    lsh_index,
     lsh_topk,
 )
 from market_data_ingestion_scraper_spark.session import get_spark  # noqa: E402
@@ -51,13 +51,8 @@ def main() -> None:
     docs.count(), emb.count()  # warm the JVM before timing
 
     def ann(corpus):
-        buckets = bucket_table(
-            corpus, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-            seed_base=1000,
-        )
         return lsh_topk(
-            corpus, corpus.filter(F.col("vec_id") < 8), k=5,
-            corpus_buckets=buckets,
+            corpus, corpus.filter(F.col("vec_id") < 8), lsh_index(corpus), k=5
         )
 
     ops = {
@@ -585,7 +580,7 @@ def main() -> None:
         # built once, untimed) + the same BM25 list.  Wall must track the
         # BM25 term-filtered scan, not the vector corpus: the semantic
         # side serves from the warm bucket index.
-        # lsh_topk/bucket_table come from the MODULE-level import: a
+        # lsh_topk/lsh_index come from the MODULE-level import: a
         # re-import here would make them locals of main() and break the
         # ann() closure above (NameError before first assignment)
         from market_data_ingestion_scraper_spark.operators.retrieval import (
@@ -595,11 +590,8 @@ def main() -> None:
             bm25_scores,
         )
 
-        buckets15 = bucket_table(
-            e, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-            seed_base=1000,
-        ).persist()
-        buckets15.count()  # warm index = the amortized artifact
+        index15 = lsh_index(e)
+        index15.df.persist().count()  # warm index = the amortized artifact
         t0 = time.perf_counter()
         lex15 = bm25_scores(d, ("hash", "join", "vector"), top_k=20)
         from market_data_ingestion_scraper_spark.functions.scalar import (
@@ -613,8 +605,7 @@ def main() -> None:
             ).alias("rank"),
         )
         sem15 = lsh_topk(
-            e, e.filter(F.col("vec_id") == 0), k=20,
-            corpus_buckets=buckets15,
+            e, e.filter(F.col("vec_id") == 0), index15, k=20
         ).select(F.col("neighbor_id").alias("doc_id"),
                  F.col("rnk").alias("rank"))
         fused_lsh = rrf_fuse({"lex": lex15, "sem": sem15}, k=10).collect()
@@ -626,7 +617,7 @@ def main() -> None:
                           "rows": len(fused_lsh),
                           "top1_doc": int(fused_lsh[0]["doc_id"]),
                           "sec": sec}), flush=True)
-        buckets15.unpersist()
+        index15.df.unpersist()
 
         # r15: X32 shard-admission report.  FIXED shard (the base
         # corpus's doc_id % 5 == 0 slice) admitted against a K x corpus

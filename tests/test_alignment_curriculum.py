@@ -277,6 +277,9 @@ def test_stream_margin_align_forward_mining(spark, tmp_path):
     from market_data_ingestion_scraper_spark.operators.alignment import (
         side_neighborhood_stats,
     )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        lsh_index,
+    )
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     rng = np.random.default_rng(11)
@@ -292,8 +295,9 @@ def test_stream_margin_align_forward_mining(spark, tmp_path):
     stats_a = side_neighborhood_stats(side_a, ref_b, k=3).persist()
     stats_a.count()
 
-    kwargs = dict(k=3, threshold_ppm=1_000_000, n_planes=4, n_tables=8)
-    batch_out = P.stream_margin_align(q_batch, side_a, stats_a, **kwargs)
+    index_a = lsh_index(side_a, n_planes=4, n_tables=8)
+    kwargs = dict(k=3, threshold_ppm=1_000_000)
+    batch_out = P.stream_margin_align(q_batch, side_a, stats_a, index_a, **kwargs)
     key = lambda df: sorted(
         (r.query_id, r.src_id, r.cos_sim, r.margin) for r in df.collect()
     )
@@ -359,7 +363,7 @@ def test_stream_margin_align_forward_mining(spark, tmp_path):
         .parquet(qdir)
     )
     out = P.run_to_memory(
-        P.stream_margin_align(q_stream, side_a, stats_a, **kwargs),
+        P.stream_margin_align(q_stream, side_a, stats_a, index_a, **kwargs),
         "t_margin_align",
         spark,
         mode="complete",
@@ -466,9 +470,10 @@ def test_r13_gate_debt_oracle_parity_at_driver_scale(spark):
 
 
 def test_lsh_artifact_drives_streaming_family(spark, tmp_path):
-    """r12 review follow-ups: an LSH-built stats artifact must (a) drive
-    the serving hash family, (b) refuse explicit conflicting family args
-    or a mismatched index quantizer, and (c) fail at LOAD time — not deep
+    """r12 review follow-ups: an LSH-built stats artifact must (a) serve
+    with an index of its own hash family exactly as the bare stats frame
+    does, (b) refuse an index of another family, while family arguments
+    beside the index do not exist, and (c) fail at LOAD time — not deep
     in a serve — when its meta is malformed; k caps are enforced at both
     build and serve."""
     import json
@@ -482,7 +487,7 @@ def test_lsh_artifact_drives_streaming_family(spark, tmp_path):
         side_neighborhood_stats,
         xlingual_candidates_lsh,
     )
-    from market_data_ingestion_scraper_spark.operators.similarity import AnnIndex
+    from market_data_ingestion_scraper_spark.operators.similarity import lsh_index
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     rng = np.random.default_rng(21)
@@ -504,30 +509,20 @@ def test_lsh_artifact_drives_streaming_family(spark, tmp_path):
     assert art.lsh == {"n_planes": 4, "n_tables": 8, "dim": 64,
                        "seed_base": 1000}
 
-    # (a) artifact-driven serve == explicit matching-family serve
+    # (a) artifact-driven serve == bare-frame serve with the same index
     q = b.limit(4)
     key = lambda df: sorted(map(tuple, df.collect()))
-    assert key(P.stream_margin_align(q, a, art)) == key(
-        P.stream_margin_align(
-            q, a, art.df, k=3, n_planes=4, n_tables=8, dim=64,
-            seed_base=1000,
-        )
+    index_a = lsh_index(a, n_planes=4, n_tables=8, dim=64, seed_base=1000)
+    assert key(P.stream_margin_align(q, a, art, index_a)) == key(
+        P.stream_margin_align(q, a, art.df, index_a, k=3)
     )
 
-    # (b) conflicting explicit family / mismatched index quantizer raise
-    with pytest.raises(ValueError, match="conflict with the stats"):
-        P.stream_margin_align(q, a, art, n_planes=8, n_tables=4)
-    from market_data_ingestion_scraper_spark.operators.similarity import (
-        bucket_table,
-    )
-
-    wrong = AnnIndex(
-        bucket_table(a, "vec_id", "embedding", 8, 4, 64, 2000),
-        {"kind": "lsh", "n_planes": 8, "n_tables": 4, "dim": 64,
-         "seed_base": 2000},
-    )
+    # (b) family arguments do not exist; an index of another family raises
+    with pytest.raises(TypeError):
+        P.stream_margin_align(q, a, art, index_a, n_planes=8, n_tables=4)
+    wrong = lsh_index(a, n_planes=8, n_tables=4, dim=64, seed_base=2000)
     with pytest.raises(ValueError, match="conflicts with the stats"):
-        P.stream_margin_align(q, a, art, index=wrong)
+        P.stream_margin_align(q, a, art, wrong)
 
     # (c) malformed lsh meta refuses at load with the loader's error
     with open(os.path.join(path, "_stats.json")) as f:
@@ -544,7 +539,7 @@ def test_lsh_artifact_drives_streaming_family(spark, tmp_path):
     with pytest.raises(ValueError, match="exactness bound"):
         save_neighborhood_stats(art.df, str(tmp_path / "x"), k=48)
     with pytest.raises(ValueError, match="exactness bound"):
-        P.stream_margin_align(q, a, art.df, k=48)
+        P.stream_margin_align(q, a, art.df, index_a, k=48)
 
 
 # ------------------------------------------------------- n_planes law
@@ -614,19 +609,16 @@ def test_auto_width_keeps_candidates_near_linear(spark):
 
 
 def test_stream_margin_index_vs_explicit_clash(spark):
-    """r12 advice: explicit hash-family arguments that conflict with a
-    passed index must raise (they were silently overridden before),
-    mirroring the artifact-vs-explicit check; matching explicit args
-    still serve."""
+    """r12 advice: explicit hash-family arguments next to a passed index
+    were silently overridden, later refused on conflict; now the index
+    record is the only source of the family, so any family argument is a
+    TypeError — conflicting or matching — and the index alone serves."""
     import numpy as np
 
     from market_data_ingestion_scraper_spark.operators.alignment import (
         side_neighborhood_stats,
     )
-    from market_data_ingestion_scraper_spark.operators.similarity import (
-        AnnIndex,
-        bucket_table,
-    )
+    from market_data_ingestion_scraper_spark.operators.similarity import lsh_index
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     rng = np.random.default_rng(29)
@@ -636,18 +628,13 @@ def test_stream_margin_index_vs_explicit_clash(spark):
     a = mk([(i, rng.standard_normal(64).tolist()) for i in range(8)])
     b = mk([(50 + i, rng.standard_normal(64).tolist()) for i in range(8)])
     stats = side_neighborhood_stats(a, b, k=2)
-    idx = AnnIndex(
-        bucket_table(a, "vec_id", "embedding", 4, 8, 64, 1000),
-        {"kind": "lsh", "n_planes": 4, "n_tables": 8, "dim": 64,
-         "seed_base": 1000},
-    )
+    idx = lsh_index(a, n_planes=4, n_tables=8, dim=64, seed_base=1000)
     q = b.limit(3)
-    with pytest.raises(ValueError, match="conflict with the index"):
-        P.stream_margin_align(q, a, stats, k=2, index=idx, n_planes=8)
-    # matching explicit args are consistent, not a clash
-    ok = P.stream_margin_align(
-        q, a, stats, k=2, index=idx, n_planes=4, n_tables=8
-    )
+    with pytest.raises(TypeError):
+        P.stream_margin_align(q, a, stats, idx, k=2, n_planes=8)
+    with pytest.raises(TypeError):
+        P.stream_margin_align(q, a, stats, idx, k=2, n_planes=4, n_tables=8)
+    ok = P.stream_margin_align(q, a, stats, idx, k=2)
     assert ok.count() >= 0
 
 
@@ -698,6 +685,7 @@ def test_stream_margin_align_string_ids(spark):
     from market_data_ingestion_scraper_spark.operators.alignment import (
         side_neighborhood_stats,
     )
+    from market_data_ingestion_scraper_spark.operators.similarity import lsh_index
     from market_data_ingestion_scraper_spark.streaming import pipeline as P
 
     rng = np.random.default_rng(37)
@@ -718,18 +706,19 @@ def test_stream_margin_align_string_ids(spark):
         [(f"{pre}{i:03d}", v) for i, v in enumerate(vecs)],
         "vec_id string, embedding array<double>",
     )
-    kwargs = dict(k=3, threshold_ppm=900_000, n_planes=2, n_tables=8)
+    kwargs = dict(k=3, threshold_ppm=900_000)
+    side_num, side_str = mk_num(vecs_a, 0), mk_str(vecs_a, "a")
 
     num = P.stream_margin_align(
-        mk_num(q_vecs, 100), mk_num(vecs_a, 0),
-        side_neighborhood_stats(mk_num(vecs_a, 0), mk_num(vecs_b, 50), k=3),
+        mk_num(q_vecs, 100), side_num,
+        side_neighborhood_stats(side_num, mk_num(vecs_b, 50), k=3),
+        lsh_index(side_num, n_planes=2, n_tables=8),
         **kwargs,
     )
     st = P.stream_margin_align(
-        mk_str(q_vecs, "q"), mk_str(vecs_a, "a"),
-        side_neighborhood_stats(
-            mk_str(vecs_a, "a"), mk_str(vecs_b, "b"), k=3
-        ),
+        mk_str(q_vecs, "q"), side_str,
+        side_neighborhood_stats(side_str, mk_str(vecs_b, "b"), k=3),
+        lsh_index(side_str, n_planes=2, n_tables=8),
         **kwargs,
     )
     # zero-padded string ids order exactly like their numeric twins, so

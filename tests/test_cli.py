@@ -19,6 +19,8 @@ import sys
 import traceback
 from types import SimpleNamespace
 
+import pytest
+
 
 def _run_subprocess(*args: str) -> subprocess.CompletedProcess:
     return subprocess.run(
@@ -139,6 +141,7 @@ def test_load_ann_index_serves_lsh(tmp_path):
     _sys.path.insert(0, "/root/repo")
     from market_data_ingestion_scraper_spark.operators.similarity import (
         load_ann_index,
+        lsh_index,
         lsh_topk,
     )
     from market_data_ingestion_scraper_spark.session import get_spark
@@ -159,8 +162,10 @@ def test_load_ann_index_serves_lsh(tmp_path):
     handle = load_ann_index(spark, out)
     quant = handle.quantizer
     assert quant["n_planes"] == 6 and quant["seed_base"] == 4321
-    served = lsh_topk(emb, q, k=5, index=handle)
-    inline = lsh_topk(emb, q, k=5, n_planes=6, n_tables=5, seed_base=4321)
+    served = lsh_topk(emb, q, handle, k=5)
+    inline = lsh_topk(
+        emb, q, lsh_index(emb, n_planes=6, n_tables=5, seed_base=4321), k=5
+    )
     assert sorted(map(tuple, served.collect())) == sorted(
         map(tuple, inline.collect())
     )
@@ -172,6 +177,75 @@ def test_load_ann_index_serves_lsh(tmp_path):
 
     with pytest.raises(ValueError, match="kind mismatch"):
         ivf_topk(emb, q, index=handle)
+
+
+def test_cli_index_extend_without_record_exits_2(tmp_path, spark, sf_smoke):
+    """index-extend on a directory without _quantizer.json (never built,
+    or a near-dup-index rebuild that failed after its sigs/ write) prints
+    the loader's message and exits 2 instead of a FileNotFoundError
+    traceback."""
+    idx = str(tmp_path / "no_record")
+    docs = spark.read.parquet(f"{sf_smoke}/documents.parquet")
+    docs.select("doc_id").write.parquet(idx + "/sigs")
+    r = _run("index-extend", "--index", idx,
+             "--input", f"{sf_smoke}/documents.parquet")
+    assert r.returncode == 2, (r.returncode, r.stderr[-2000:])
+    assert "no index record" in r.stderr and "Traceback" not in r.stderr
+
+
+def _partitions(path):
+    import os
+
+    return sorted(d for d in os.listdir(path) if "=" in d)
+
+
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "ivfpq", "minhash"])
+def test_index_rebuild_replaces_partitions(tmp_path, spark, sf_oracle, kind):
+    """A smaller rebuild replaces the index: the session's dynamic
+    partition-overwrite mode kept the old build's partitions (t=4..7,
+    cells 4..15, bands 8..15) next to the new record, so the index
+    served rows of two builds.  After the rebuild the partition set and
+    the row count are the new build's alone."""
+    import os
+
+    from market_data_ingestion_scraper_spark.operators.dedup import (
+        write_minhash_index,
+    )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        write_ivfpq_index,
+    )
+
+    out = str(tmp_path / kind)
+    emb_path = f"{sf_oracle}/embeddings.parquet"
+    emb = spark.read.parquet(emb_path)
+
+    def cli(*args):
+        r = _run("ann-index", "--embeddings", emb_path, "--out", out, *args)
+        assert r.returncode == 0, r.stderr[-2000:]
+        return int(r.stdout.split("rows=")[1].split()[0])
+
+    if kind == "minhash":
+        docs = spark.read.parquet(f"{sf_oracle}/documents.parquet")
+        write_minhash_index(docs, out, n_bands=16)
+        n_docs, n_rows = write_minhash_index(docs, out, n_bands=8)
+        out = os.path.join(out, "bands")
+        assert _partitions(out) == [f"band={b}" for b in range(8)]
+        assert n_rows == spark.read.parquet(out).count() == n_docs * 8
+        return
+    if kind == "lsh":
+        cli("--n-tables", "8")
+        n = cli("--n-tables", "4")
+        assert _partitions(out) == [f"t={t}" for t in range(4)]
+        assert n == spark.read.parquet(out).count() == emb.count() * 4
+        return
+    if kind == "ivf":
+        cli("--kind", "ivf", "--n-lists", "16")
+        n = cli("--kind", "ivf", "--n-lists", "4")
+    else:
+        write_ivfpq_index(emb, out, n_lists=16, m=8, n_codes=8)
+        n = write_ivfpq_index(emb, out, n_lists=4, m=8, n_codes=8)
+    assert set(_partitions(out)) <= {f"cell={c}" for c in range(4)}
+    assert n == spark.read.parquet(out).count() == emb.count()
 
 
 def test_cli_near_dup_index_build_and_serve(tmp_path):
@@ -575,14 +649,19 @@ def test_cli_align_corpus_and_stats_artifact(tmp_path, spark):
     stats_df, sidecar = art  # still unpacks as a (df, sidecar) pair
     assert sidecar["k"] == 3 and sidecar["kind"] == "xlingual-nb-stats"
     assert art.k == 3 and art.lsh is None  # brute-force build: no lsh meta
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        lsh_index,
+    )
     from market_data_ingestion_scraper_spark.streaming.pipeline import (
         stream_margin_align,
     )
 
+    index_a = lsh_index(spark.read.parquet(a_path))
     served = stream_margin_align(
         spark.read.parquet(b_path).limit(5),
         spark.read.parquet(a_path),
         art,
+        index_a,
     )
     assert served.count() >= 0  # composes and runs
     # an explicit k conflicting with the artifact refuses to serve
@@ -593,6 +672,7 @@ def test_cli_align_corpus_and_stats_artifact(tmp_path, spark):
             spark.read.parquet(b_path).limit(1),
             spark.read.parquet(a_path),
             art,
+            index_a,
             k=7,
         )
 

@@ -120,7 +120,7 @@ def test_lsh_topk_recall(spark, vectors):
     compute.  Assert a conservative floor."""
     q = vectors.filter(F.col("vec_id") < 16)
     bf = S.brute_force_topk(vectors, q, k=5)
-    ann = S.lsh_topk(vectors, q, k=5)
+    ann = S.lsh_topk(vectors, q, S.lsh_index(vectors), k=5)
     bf_pairs = {(r["query_id"], r["neighbor_id"]) for r in bf.collect()}
     ann_pairs = {(r["query_id"], r["neighbor_id"]) for r in ann.collect()}
     recall = len(bf_pairs & ann_pairs) / len(bf_pairs)
@@ -130,19 +130,16 @@ def test_lsh_topk_recall(spark, vectors):
 def test_lsh_index_parquet_roundtrip(spark, vectors, tmp_path):
     """The bucket table IS the LSH index: write it out as parquet
     partitioned by hash table, read it back, and serve top-k against the
-    loaded index — results identical to the inline build.  This is the
+    loaded index — results identical to the in-plan build.  This is the
     production amortization pattern (index once at 100 TB, serve many
     query batches); the round-trip proves the index is a plain relation
     with no session-bound state."""
     q = vectors.filter(F.col("vec_id") < 8)
-    inline = S.lsh_topk(vectors, q, k=5)
+    inline = S.lsh_topk(vectors, q, S.lsh_index(vectors), k=5)
     idx_path = str(tmp_path / "lsh_index")
-    S.bucket_table(
-        vectors, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-        seed_base=1000,
-    ).write.partitionBy("t").parquet(idx_path)
-    loaded = spark.read.parquet(idx_path)
-    served = S.lsh_topk(vectors, q, k=5, corpus_buckets=loaded)
+    S.write_lsh_index(vectors, idx_path)
+    loaded = S.load_ann_index(spark, idx_path)
+    served = S.lsh_topk(vectors, q, loaded, k=5)
     assert sorted(map(tuple, inline.collect())) == sorted(
         map(tuple, served.collect())
     )
@@ -809,17 +806,12 @@ def test_extend_ann_index_lsh_append_equals_rebuild(spark, vectors, tmp_path):
     out = str(tmp_path / "lsh_grow")
     base = vectors.filter(F.col("vec_id") % 5 != 0)
     new = vectors.filter(F.col("vec_id") % 5 == 0)
-    S.bucket_table(
-        base, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-        seed_base=1000,
-    ).write.partitionBy("t").parquet(out)
-    _write_sidecar(out, {"kind": "lsh", "n_planes": 4, "n_tables": 8,
-                         "dim": 64, "seed_base": 1000})
+    S.write_lsh_index(base, out, n_planes=4, n_tables=8, dim=64, seed_base=1000)
     n = S.extend_ann_index(new, out)
     assert n == new.count() * 8  # one row per (vector, hash table)
     q = vectors.filter(F.col("vec_id") < 8)
-    inline = S.lsh_topk(vectors, q, k=5)
-    served = S.lsh_topk(vectors, q, k=5, index=S.load_ann_index(spark, out))
+    inline = S.lsh_topk(vectors, q, S.lsh_index(vectors), k=5)
+    served = S.lsh_topk(vectors, q, S.load_ann_index(spark, out), k=5)
     assert sorted(map(tuple, inline.collect())) == sorted(
         map(tuple, served.collect())
     )
@@ -1142,3 +1134,53 @@ def test_hard_negative_mining_anchor_cap_bounds_broadcast(spark):
     # heaps), never a global Sort of the anchor side
     plan = capped._jdf.queryExecution().executedPlan().toString()
     assert "TakeOrderedAndProject" in plan, plan
+
+
+_GOOD_LSH = {"kind": "lsh", "n_planes": 4, "n_tables": 8, "dim": 64,
+             "seed_base": 1000}
+
+
+@pytest.mark.parametrize(
+    "bad, why",
+    [
+        ({**_GOOD_LSH, "kind": "hyperplane"}, "kind mismatch"),
+        ({k: v for k, v in _GOOD_LSH.items() if k != "seed_base"},
+         "missing hash-family keys"),
+        ({**_GOOD_LSH, "n_planes": 0}, "n_planes=0 below 1"),
+        ({**_GOOD_LSH, "n_tables": 0}, "n_tables=0 below 1"),
+        ({**_GOOD_LSH, "dim": 0}, "dim=0 below 1"),
+    ],
+    ids=["wrong-kind", "missing-key", "zero-planes", "zero-tables",
+         "zero-dim"],
+)
+def test_lsh_index_record_refusals(spark, vectors, tmp_path, bad, why):
+    """One reader decides what a valid LSH record is: the reader, every
+    serving path and extend_ann_index refuse the same bad record, and
+    the message says to rebuild.  Zero planes or tables used to build an
+    empty index that served 0 rows without an error."""
+    import json
+    import os
+
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+
+    out = str(tmp_path / "bad_lsh")
+    S.write_lsh_index(vectors, out)
+    with open(os.path.join(out, "_quantizer.json"), "w") as f:
+        json.dump(bad, f)
+    handle = S.load_ann_index(spark, out)
+    q = vectors.limit(2)
+    stats = spark.createDataFrame([(0, 1, 1)], "src_id long, sum_c long, n_c long")
+    for refused in (
+        lambda: S._unpack_lsh_index(handle),
+        lambda: S.lsh_topk(vectors, q, handle),
+        lambda: P.ann_enrich_stream(q, handle, vectors),
+        lambda: P.stream_near_dup_filter(q, handle, vectors),
+        lambda: P.stream_margin_align(q, vectors, stats, handle),
+        lambda: S.extend_ann_index(q, out),
+    ):
+        with pytest.raises(ValueError, match=why) as exc:
+            refused()
+        assert "rebuild" in str(exc.value)
+    if why.endswith("below 1"):  # the in-memory builder refuses it too
+        with pytest.raises(ValueError, match=why):
+            S.lsh_index(vectors, **{k: v for k, v in bad.items() if k != "kind"})

@@ -313,3 +313,40 @@ def test_run_training_data_build_serves_its_own_gram_width(
     assert served == {r["doc_id"]: r["split"] for r in split.df.collect()}
     with pytest.raises(TypeError, match="'k'"):
         stream_holdout_tag(corpus, tb, eb, train_meta=tm, eval_meta=em, k=7)
+
+
+def test_get_spark_defaults_to_host_cores(monkeypatch):
+    """Without SPARK_GRAFT_CPUS, get_spark sizes local[N] and the shuffle
+    partitions by the cores this process may run on, not a fixed 32 that
+    oversubscribes a small host.  A recording fake stands in for
+    SparkSession, so no JVM starts."""
+    from market_data_ingestion_scraper_spark import session
+
+    seen = {}
+
+    class Builder:
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            seen["master"] = master
+            return self
+
+        def config(self, key, value):
+            seen[key] = value
+            return self
+
+        def getOrCreate(self):
+            return type("Fake", (), {"sparkContext": type(
+                "Ctx", (), {"setLogLevel": lambda self, level: None})()})()
+
+    monkeypatch.setattr(session, "SparkSession", type("S", (), {"builder": Builder()}))
+    monkeypatch.setattr(session.os, "sched_getaffinity", lambda pid: {0, 1, 2})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    session.get_spark()
+    assert seen["master"] == "local[3]"
+    assert seen["spark.sql.shuffle.partitions"] == "3"
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "5")
+    session.get_spark()
+    assert seen["master"] == "local[5]"
+    assert seen["spark.sql.shuffle.partitions"] == "5"

@@ -44,13 +44,7 @@ def test_compact_lsh_index_rows_and_serving_invariant(spark, vectors, tmp_path):
     """Three appends leave ≥4 files per t= dir; compaction folds each to
     one file while top-k serving against the index stays bit-identical."""
     out = str(tmp_path / "lsh_idx")
-    S.bucket_table(
-        vectors, "vec_id", "embedding", n_planes=4, n_tables=4, dim=64,
-        seed_base=1000,
-    ).write.partitionBy("t").parquet(out)
-    with open(os.path.join(out, "_quantizer.json"), "w") as f:
-        json.dump({"kind": "lsh", "n_planes": 4, "n_tables": 4, "dim": 64,
-                   "seed_base": 1000}, f)
+    S.write_lsh_index(vectors, out, n_planes=4, n_tables=4)
     for i in range(3):
         shard = vectors.limit(5).withColumn(
             "vec_id", F.col("vec_id") + F.lit((i + 1) * 1_000_000)
@@ -61,7 +55,7 @@ def test_compact_lsh_index_rows_and_serving_invariant(spark, vectors, tmp_path):
     before = _rows(spark, out)
     q = vectors.filter(F.col("vec_id") < 8)
     served_before = sorted(map(tuple, S.lsh_topk(
-        vectors, q, k=5, index=S.load_ann_index(spark, out)).collect()))
+        vectors, q, S.load_ann_index(spark, out), k=5).collect()))
 
     stats = compact_index(spark, out)
     assert stats["dirs_compacted"] == 4 and stats["files_removed"] >= 16
@@ -69,7 +63,7 @@ def test_compact_lsh_index_rows_and_serving_invariant(spark, vectors, tmp_path):
         assert len(_files(os.path.join(out, f"t={t}"))) == 1
     assert _rows(spark, out) == before
     served_after = sorted(map(tuple, S.lsh_topk(
-        vectors, q, k=5, index=S.load_ann_index(spark, out)).collect()))
+        vectors, q, S.load_ann_index(spark, out), k=5).collect()))
     assert served_after == served_before
     # idempotent: nothing left to fold
     assert compact_index(spark, out) == {

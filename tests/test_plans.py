@@ -220,18 +220,12 @@ def test_lsh_topk_all_joins_hash_or_broadcast(spark):
     from pyspark.sql import functions as F
 
     from market_data_ingestion_scraper_spark.operators.similarity import (
-        bucket_table,
+        lsh_index,
         lsh_topk,
     )
 
     emb = load_table(spark, SF, "embeddings")
-    buckets = bucket_table(
-        emb, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-        seed_base=1000,
-    )
-    df = lsh_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=5, corpus_buckets=buckets
-    )
+    df = lsh_topk(emb, emb.filter(F.col("vec_id") < 8), lsh_index(emb), k=5)
     n_shuffle, n_bcast, txt = _shuffles(spark, df)
     assert n_bcast >= 2, txt
     assert "SortMergeJoin" not in txt, txt

@@ -212,17 +212,17 @@ def test_streaming_ann_matches_batch_topk(spark, sf_smoke, tmp_path):
     answer (same candidates, same cosine, same tie-break order) — one
     index, two execution modes."""
     from market_data_ingestion_scraper_spark.operators.similarity import (
-        bucket_table,
+        lsh_index,
         lsh_topk,
     )
 
     emb = load_table(spark, sf_smoke, "embeddings").select(
         "vec_id", "embedding"
     )
-    index = bucket_table(
-        emb, "vec_id", "embedding", n_planes=4, n_tables=8, dim=64,
-        seed_base=1000,
-    ).persist()
+    # serve through the AnnIndex handle: parameters come from the
+    # record, not re-typed ints (r7 review — mismatch-proof serving)
+    handle = lsh_index(emb, n_planes=4, n_tables=8, dim=64, seed_base=1000)
+    handle.df.persist()
     q_batch = emb.filter(F.col("vec_id") < 8)
 
     qdir = str(tmp_path / "queries")
@@ -232,19 +232,8 @@ def test_streaming_ann_matches_batch_topk(spark, sf_smoke, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(qdir)
     )
-    # serve through the AnnIndex handle: parameters come from the
-    # quantizer, not re-typed ints (r7 review — mismatch-proof serving)
-    from market_data_ingestion_scraper_spark.operators.similarity import (
-        AnnIndex,
-    )
-
-    handle = AnnIndex(
-        index,
-        {"kind": "lsh", "n_planes": 4, "n_tables": 8, "dim": 64,
-         "seed_base": 1000},
-    )
     out = P.run_to_memory(
-        P.ann_enrich_stream(q_stream, corpus_vectors=emb, k=5, index=handle),
+        P.ann_enrich_stream(q_stream, handle, emb, k=5),
         "t_ann_stream",
         spark,
         mode="complete",
@@ -254,7 +243,7 @@ def test_streaming_ann_matches_batch_topk(spark, sf_smoke, tmp_path):
         for r in out.collect()
     }
     want: dict[int, list] = {}
-    for r in lsh_topk(emb, q_batch, k=5).collect():
+    for r in lsh_topk(emb, q_batch, handle, k=5).collect():
         want.setdefault(r["query_id"], []).append(
             (r["rnk"], r["neighbor_id"], r["cos_sim"])
         )
@@ -262,7 +251,7 @@ def test_streaming_ann_matches_batch_topk(spark, sf_smoke, tmp_path):
         q: [(n, c) for _, n, c in sorted(rows)] for q, rows in want.items()
     }
     assert got == want_ordered
-    index.unpersist()
+    handle.df.unpersist()
 
 
 def test_compact_events_silver_folds_batch_level(spark, sf_smoke, tmp_path):
@@ -319,16 +308,14 @@ def test_stream_near_dup_filter_admission(spark, sf_smoke, tmp_path):
     import random
 
     from market_data_ingestion_scraper_spark.operators.similarity import (
-        bucket_table,
+        lsh_index,
     )
 
     emb = load_table(spark, sf_smoke, "embeddings").select(
         "vec_id", "embedding"
     )
-    index = bucket_table(
-        emb, "vec_id", "embedding", n_planes=8, n_tables=6, dim=64,
-        seed_base=7000,
-    ).persist()
+    handle = lsh_index(emb, n_planes=8, n_tables=6, dim=64, seed_base=7000)
+    handle.df.persist()
     v0 = emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]
     rng = random.Random(11)
     fresh = [rng.uniform(-1, 1) for _ in range(64)]
@@ -344,7 +331,7 @@ def test_stream_near_dup_filter_admission(spark, sf_smoke, tmp_path):
         "vec_id long, embedding array<float>",
     )
 
-    batch = P.stream_near_dup_filter(incoming, index, emb)
+    batch = P.stream_near_dup_filter(incoming, handle, emb)
     admitted_batch = {r["vec_id"]: r["max_corpus_sim"] for r in batch.collect()}
     assert 0 not in admitted_batch             # same-id re-crawl rejected
     assert 9002 in admitted_batch              # novel content lands
@@ -354,24 +341,86 @@ def test_stream_near_dup_filter_admission(spark, sf_smoke, tmp_path):
     qdir = str(tmp_path / "incoming")
     incoming.write.parquet(qdir)
     stream = spark.readStream.schema(incoming.schema).parquet(qdir)
-    # streaming leg serves through the AnnIndex handle (parameters derive
-    # from the quantizer, mismatch-proof) — must equal the positional batch
-    from market_data_ingestion_scraper_spark.operators.similarity import (
-        AnnIndex,
-    )
-
-    handle = AnnIndex(
-        index,
-        {"kind": "lsh", "n_planes": 8, "n_tables": 6, "dim": 64,
-         "seed_base": 7000},
-    )
+    # the streaming leg serves the same handle — must equal the batch
     out = P.run_to_memory(
-        P.stream_near_dup_filter(stream, corpus_vectors=emb, index=handle),
+        P.stream_near_dup_filter(stream, handle, emb),
         "t_admission", spark, mode="complete",
     )
     admitted_stream = {r["vec_id"]: r["max_corpus_sim"] for r in out.collect()}
     assert admitted_stream == admitted_batch
-    index.unpersist()
+    handle.df.unpersist()
+
+
+def test_lsh_index_handle_twins_serve_identically(spark, sf_oracle, tmp_path):
+    """The in-memory lsh_index handle and the persisted one
+    (write_lsh_index -> load_ann_index) serve identically through all
+    five LSH serving paths, at the near-dup family (8 planes, 6 tables,
+    seed 7000) rather than the 4/8/1000 defaults.  All 20 planted exact
+    copies of corpus vectors are rejected — a 4-plane bucket frame
+    passed to the 8-plane filter admitted 19 of them — and no path takes
+    a bucket frame or a hash-family argument beside the handle."""
+    import random
+
+    from market_data_ingestion_scraper_spark.operators.alignment import (
+        side_neighborhood_stats,
+    )
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        ann_recall,
+        load_ann_index,
+        lsh_index,
+        lsh_topk,
+        write_lsh_index,
+    )
+
+    emb = load_table(spark, sf_oracle, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    family = dict(n_planes=8, n_tables=6, dim=64, seed_base=7000)
+    path = str(tmp_path / "lsh")
+    assert write_lsh_index(emb, path, **family) == emb.count() * 6
+    twins = [lsh_index(emb, **family), load_ann_index(spark, path)]
+    assert twins[0].quantizer == twins[1].quantizer == {"kind": "lsh", **family}
+
+    q = emb.filter(F.col("vec_id") < 8)
+    copies = emb.filter(F.col("vec_id") % 25 == 0).withColumn(
+        "vec_id", F.col("vec_id") + 100_000
+    )
+    rng = random.Random(5)
+    fresh = spark.createDataFrame(
+        [(900_000 + i, [rng.uniform(-1, 1) for _ in range(64)])
+         for i in range(2)],
+        emb.schema,
+    )
+    incoming = copies.unionByName(fresh)
+    stats = side_neighborhood_stats(emb, emb, k=3)
+
+    def calls(h):
+        return {
+            "lsh_topk": lambda **kw: lsh_topk(emb, q, h, **kw),
+            "ann_recall": lambda **kw: ann_recall(emb, q, h, **kw),
+            "ann_enrich_stream": lambda **kw: P.ann_enrich_stream(
+                q, h, emb, **kw),
+            "stream_near_dup_filter": lambda **kw: P.stream_near_dup_filter(
+                incoming, h, emb, **kw),
+            "stream_margin_align": lambda **kw: P.stream_margin_align(
+                q, emb, stats, h, **kw),
+        }
+
+    rows = lambda df: sorted(map(tuple, df.collect()))
+    mem, disk = calls(twins[0]), calls(twins[1])
+    for name in mem:
+        got = rows(mem[name]())
+        assert got == rows(disk[name]()), name
+        assert got, name
+    admitted = {r["vec_id"] for r in mem["stream_near_dup_filter"]().collect()}
+    assert copies.count() == 20
+    assert admitted == {900_000, 900_001}
+
+    for name, call in mem.items():
+        for kw in ({"corpus_buckets": twins[0].df}, {"n_planes": 8},
+                   {"n_tables": 6}, {"dim": 64}, {"seed_base": 7000}):
+            with pytest.raises(TypeError):
+                call(**kw)
 
 
 def test_compact_resumes_after_crash_mid_delete(spark, sf_smoke, tmp_path):
