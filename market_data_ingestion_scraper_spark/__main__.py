@@ -697,26 +697,11 @@ def main(argv: list[str] | None = None) -> int:
         # centroids than the build silently degrades recall to chance,
         # so the parameters the index was built with are never guessed.
         # Every build replaces the whole directory, old partitions too.
-        import json
-
         from .operators import similarity as S
-        from .util import overwrite_partitioned, require_local_path
+        from .util import require_local_path
 
         require_local_path(args.out)  # the sidecar write is an os-level op
         emb = spark.read.parquet(args.embeddings)
-        if args.kind == "ivfpq":
-            # both quantizers fitted + recorded by the writer; the index
-            # relation is (id, codes, cell) partitioned by cell so a
-            # serving probe reads only its cells' files
-            n = S.write_ivfpq_index(
-                emb, args.out, n_lists=args.n_lists, m=args.pq_m,
-                n_codes=args.pq_codes, seed=args.seed,
-            )
-            print(
-                f"kind=ivfpq rows={n} out={args.out} partition_by=cell "
-                f"quantizer=_quantizer.json"
-            )
-            return 0
         if args.kind == "lsh":
             n = S.write_lsh_index(
                 emb, args.out, n_planes=args.n_planes,
@@ -724,23 +709,18 @@ def main(argv: list[str] | None = None) -> int:
             )
             part = "t"
         else:
-            cents = S.fit_ivf_centroids(
-                emb, n_lists=args.n_lists, seed=args.seed
-            )
+            # the record holds the centroids actually fitted: fewer than
+            # --n-lists when the corpus has fewer vectors
+            cents = S.fit_ivf_centroids(emb, n_lists=args.n_lists, seed=args.seed)
             part = "cell"
-            overwrite_partitioned(
-                S.ivf_cell_table(emb, S._ivf_weight_table(spark, cents)), part
-            ).parquet(args.out)
-            # counting the WRITTEN parquet is metadata-only (row-group
-            # stats) and doubles as a readability check; counting the
-            # plan instead would re-execute the whole build
-            n = spark.read.parquet(args.out).count()
-            with open(os.path.join(args.out, "_quantizer.json"), "w") as f:
-                json.dump(
-                    {"kind": "ivf", "n_lists": args.n_lists,
-                     "seed": args.seed, "centroids": cents},
-                    f,
+            if args.kind == "ivf":
+                n = S.write_ivf_index(emb, args.out, cents)
+            else:
+                # (id, codes, cell) rows: both quantizers in the record
+                books = S.fit_pq_codebooks(
+                    emb, m=args.pq_m, k=args.pq_codes, seed=args.seed
                 )
+                n = S.write_ivfpq_index(emb, args.out, cents, books)
         print(
             f"kind={args.kind} rows={n} out={args.out} partition_by={part} "
             f"quantizer=_quantizer.json"

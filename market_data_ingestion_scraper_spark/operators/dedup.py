@@ -436,11 +436,11 @@ def _unpack_minhash_index(index) -> tuple[DataFrame, DataFrame, int, int, bool]:
     review finding).  Refuses a record that is not ``kind: minhash``,
     lacks a parameter, has ``shingle_k < 1`` or an ``n_bands`` that
     does not divide the signature, or comes without a ``sigs/`` table."""
-    q = index.quantizer
+    from .similarity import _index_record, _refusal
+
+    q = _index_record(index, "minhash")
     missing = [key for key in ("n_bands", "shingle_k", "portable") if key not in q]
-    if q.get("kind") != "minhash":
-        problem = f"kind mismatch, the record names {q.get('kind')!r}"
-    elif missing:
+    if missing:
         problem = f"the record lacks {missing}"
     elif q["shingle_k"] < 1:
         problem = f"shingle_k={q['shingle_k']} is below 1"
@@ -450,10 +450,7 @@ def _unpack_minhash_index(index) -> tuple[DataFrame, DataFrame, int, int, bool]:
         problem = "it has no sigs/ signature table"
     else:
         return index.df, index.sigs, q["n_bands"], q["shingle_k"], q["portable"]
-    raise ValueError(
-        f"unusable minhash index: {problem} — rebuild it with "
-        "write_minhash_index / the near-dup-index CLI"
-    )
+    raise _refusal("minhash index", problem)
 
 
 def near_duplicates_vs_index(

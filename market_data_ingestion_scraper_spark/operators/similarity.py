@@ -307,39 +307,58 @@ def lsh_weights_sql(
     )
 
 
+def _refusal(what: str, problem: str) -> ValueError:
+    """The one error every index-record reader raises: what is unusable,
+    why, and that the artifact must be rebuilt."""
+    return ValueError(f"unusable {what}: {problem} — rebuild it")
+
+
+def _index_record(index: "AnnIndex", kind: str) -> dict:
+    """The record of ``index`` if it names ``kind`` — the kind check
+    every family's record reader starts with (LSH, IVF, IVF-PQ, RP here,
+    MinHash in :func:`~.dedup._unpack_minhash_index`)."""
+    found = index.quantizer.get("kind")
+    if found != kind:
+        raise _refusal(f"{kind} index", f"kind mismatch, the record names {found!r}")
+    return index.quantizer
+
+
+def _int_family(record: dict, keys: tuple[str, ...], what: str) -> dict:
+    """``{key: int}`` for the seeded random family ``keys`` a record
+    names (LSH hyperplanes, RP's ±1 sign matrix) — shared by the LSH and
+    RP readers and the LSH-built neighborhood-stats artifact.  The last
+    key is the seed; refuses a missing key and any other value below 1
+    (zero planes, tables or output dimensions build an index that
+    serves nothing or noise, silently)."""
+    missing = [key for key in keys if key not in record]
+    if missing:
+        problem = f"missing hash-family keys {missing}"
+    else:
+        family = {key: int(record[key]) for key in keys}
+        low = [f"{key}={family[key]}" for key in keys[:-1] if family[key] < 1]
+        if not low:
+            return family
+        problem = f"{', '.join(low)} below 1"
+    raise _refusal(what, problem)
+
+
 _LSH_FAMILY = ("n_planes", "n_tables", "dim", "seed_base")
 
 
 def _lsh_family(record: dict, what: str) -> dict:
     """The hash family ``{n_planes, n_tables, dim, seed_base}`` a record
-    names, as ints — the one check of it, shared by the LSH index reader
-    and the LSH-built neighborhood-stats artifact.  Refuses a missing
-    key, and a width, table count or dimension below 1 (zero planes or
-    tables build an empty index that serves nothing, silently)."""
-    missing = [key for key in _LSH_FAMILY if key not in record]
-    if missing:
-        problem = f"missing hash-family keys {missing}"
-    else:
-        family = {key: int(record[key]) for key in _LSH_FAMILY}
-        low = [f"{key}={family[key]}" for key in _LSH_FAMILY[:3] if family[key] < 1]
-        if not low:
-            return family
-        problem = f"{', '.join(low)} below 1"
-    raise ValueError(f"unusable {what}: {problem} — rebuild it")
+    names — the one check of it, shared by the LSH index reader and the
+    LSH-built neighborhood-stats artifact."""
+    return _int_family(record, _LSH_FAMILY, what)
 
 
 def _unpack_lsh_index(index: "AnnIndex") -> tuple[DataFrame, dict]:
     """(buckets, family) from an LSH :class:`AnnIndex` — the ONE reader
     of the record :func:`lsh_index` writes, shared by every serving path
     and :func:`extend_ann_index`, so queries are always hashed with the
-    hyperplanes the corpus was built with."""
-    kind = index.quantizer.get("kind")
-    if kind != "lsh":
-        raise ValueError(
-            f"unusable lsh index: kind mismatch, the record names {kind!r} "
-            "— rebuild it with write_lsh_index / the ann-index CLI"
-        )
-    return index.df, _lsh_family(index.quantizer, "lsh index")
+    hyperplanes the corpus was built with.  ``family`` is
+    :func:`lsh_index`'s keyword arguments."""
+    return index.df, _lsh_family(_index_record(index, "lsh"), "lsh index")
 
 
 def lsh_index(
@@ -381,22 +400,10 @@ def write_lsh_index(
     existing one is removed first and the new one written last.
     Returns the number of rows written (vectors × tables, counted as the
     write runs)."""
-    import json
-    import os
-
-    from ..util import overwrite_partitioned, require_local_path
-    from .metrics import observed_count
-
-    require_local_path(path)
-    index = lsh_index(embeddings, n_planes, n_tables, dim, seed_base, id_col, vec_col)
-    record_path = os.path.join(path, "_quantizer.json")
-    if os.path.exists(record_path):
-        os.remove(record_path)
-    rows, obs = observed_count(index.df, "n_rows")
-    overwrite_partitioned(rows, "t").parquet(path)
-    with open(record_path, "w") as f:
-        json.dump(index.quantizer, f)
-    return obs.get["n_rows"]
+    return _persist_index(
+        lsh_index(embeddings, n_planes, n_tables, dim, seed_base, id_col, vec_col),
+        path,
+    )
 
 
 def lsh_topk(
@@ -496,21 +503,22 @@ def _ivf_weight_table(spark, centroids):
     """(cell, pos, wm, cn_m): broadcastable micro-unit centroid weights
     with per-cell ‖c‖² riding along — one table serves the whole
     -2·v·c + ‖c‖² assignment score (‖v‖² is constant per row and never
-    affects an argmin/rank, so it is dropped)."""
-    crows = [
-        (cell, pos, int(round(w * 1e6)))
-        for cell, cvec in enumerate(centroids)
-        for pos, w in enumerate(cvec)
-    ]
-    cw = spark.createDataFrame(crows, "cell int, pos int, wm long")
-    cn = cw.groupBy("cell").agg(F.sum(F.col("wm") * F.col("wm")).alias("cn_m"))
-    return cw.join(cn, "cell")
+    affects an argmin/rank, so it is dropped).  ‖c‖² is summed in Python
+    ints — the exact int64 Σ wm² — so the table is a local relation
+    with no aggregate or join of its own."""
+    crows = []
+    for cell, cvec in enumerate(centroids):
+        mu = [int(round(w * 1e6)) for w in cvec]
+        cn = sum(x * x for x in mu)
+        crows += [(cell, pos, wm, cn) for pos, wm in enumerate(mu)]
+    return spark.createDataFrame(crows, "cell int, pos int, wm long, cn_m long")
 
 
 def _cell_scores(
     df: DataFrame, cweights: DataFrame, id_col: str, vec_col: str, out_id: str
 ) -> DataFrame:
-    """Relational cell scoring shared by ivf_topk and ivfpq_topk: vectors
+    """Relational cell scoring shared by the IVF corpus assignment
+    (:func:`ivf_cell_table`) and query probe ranking: vectors
     posexplode once to micro-units, join the broadcast weight table, one
     codegen'd aggregate per (row, cell).  No Python in the distributed
     path; plan size constant in cell count; shuffle rows are
@@ -526,23 +534,6 @@ def _cell_scores(
         .groupBy(out_id, "cell")
         .agg((F.first("cn_m") - 2 * F.sum(F.col("vm") * F.col("wm"))).alias("score"))
     )
-
-
-def _ivf_assign(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    cweights: DataFrame,
-    n_probe: int,
-    id_col: str,
-    vec_col: str,
-):
-    """(corpus id → its cell, query id → its n_probe nearest cells) —
-    exact int64 micro-unit arithmetic, so assignment is identical at any
-    parallelism and in a DuckDB oracle."""
-    c_cell = ivf_cell_table(embeddings, cweights, id_col, vec_col).withColumnsRenamed(
-        {id_col: "neighbor_id"}
-    )
-    return c_cell, _ivf_query_cells(queries, cweights, n_probe, id_col, vec_col)
 
 
 def _ivf_query_cells(
@@ -564,15 +555,18 @@ def _ivf_query_cells(
 
 def ivf_cell_table(
     embeddings: DataFrame,
-    cweights: DataFrame,
+    centroids: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """(id, cell) corpus assignment — the persistable IVF INDEX (faiss's
-    inverted lists as a relation).  Build once against a fitted quantizer
-    weight table, write out partitioned by cell, and pass the loaded
-    relation to ``ivf_topk(corpus_cells=…)`` so serving pays only the
-    query-side probe ranking + candidate join."""
+    """(id, cell) corpus assignment — the IVF index relation (faiss's
+    inverted lists as a relation): each vector's nearest centroid in
+    exact int64 micro-units, ties to the lower cell, so the assignment
+    is identical at any parallelism and in a DuckDB oracle.
+    :func:`ivf_index` pairs it with its record, :func:`write_ivf_index`
+    persists it partitioned by cell, and :func:`ivf_topk` serves the
+    handle, paying only the query-side probe ranking + candidate join."""
+    cweights = _ivf_weight_table(embeddings.sparkSession, centroids)
     return (
         _cell_scores(_spread(embeddings), cweights, id_col, vec_col, id_col)
         .groupBy(id_col)
@@ -581,22 +575,25 @@ def ivf_cell_table(
 
 
 class AnnIndex:
-    """A loaded ANN index: the partitioned bucket/cell relation PLUS the
-    quantizer parameters it was built with, travelling as one handle so
-    serving can never pair the relation with re-guessed parameters
-    (r7 review: every serving entry point took raw ints with defaults, so
-    a mismatch with the persisted index silently degraded recall to
-    chance — the handle makes the sidecar authoritative at the API).
+    """An ANN index: the bucket/cell/code relation PLUS the record of the
+    parameters it was built with, travelling as one handle so serving
+    can never pair the relation with re-guessed parameters (r7 review:
+    every serving entry point took raw ints with defaults, so a mismatch
+    with the persisted index silently degraded recall to chance — the
+    handle makes the record authoritative at the API).
 
-    Pass the handle itself: ``lsh_topk(corpus, queries, idx)``,
-    ``ivf_topk(corpus, queries, index=idx)``,
+    Every family has an in-memory constructor — :func:`lsh_index`,
+    :func:`ivf_index`, :func:`ivfpq_index`, :func:`rp_index`,
+    :func:`~.dedup.minhash_index` — returning the same handle and record
+    that :func:`load_ann_index` returns for the index the family's
+    writer persists.  Serving paths take only the handle plus query-time
+    arguments — ``lsh_topk(corpus, queries, idx)``,
+    ``ivf_topk(corpus, queries, idx)``, ``ivfpq_topk(queries, idx)``,
+    ``rp_topk(queries, idx)``,
     ``ann_enrich_stream(stream, idx, corpus_vectors)``,
-    ``stream_near_dup_filter(stream, idx, corpus_vectors)``,
-    ``shard_admission_report(shard, idx)``.  Serving raises on a kind
-    mismatch instead of degrading.  LSH and MinHash handles come from
-    :func:`lsh_index` / :func:`~.dedup.minhash_index` (in-plan) or
-    :func:`load_ann_index` (persisted) with the same record either way,
-    and their serving paths take no hash parameter beside the handle."""
+    ``shard_admission_report(shard, idx)`` — and read the quantizers
+    through the family's one record reader, which refuses a record of
+    another kind or with unusable parameters instead of degrading."""
 
     def __init__(self, df: DataFrame, quantizer: dict, sigs: DataFrame | None = None):
         self.df = df
@@ -610,14 +607,6 @@ class AnnIndex:
     def kind(self) -> str:
         return self.quantizer["kind"]
 
-    def require(self, kind: str) -> dict:
-        if self.kind != kind:
-            raise ValueError(
-                f"ANN index kind mismatch: serving path needs {kind!r}, "
-                f"index was built as {self.kind!r}"
-            )
-        return self.quantizer
-
 
 def load_ann_index(spark, path: str) -> AnnIndex:
     """Load a persisted ANN index (the `ann-index` CLI layout): the
@@ -626,12 +615,12 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     re-guessed parameters (different hyperplane seed, re-fit centroids)
     silently degrades recall to chance, so the sidecar is authoritative.
 
-    Returns an :class:`AnnIndex` handle; pass it to serving so the hash
-    parameters are DERIVED from the sidecar, never re-typed (the LSH and
-    MinHash serving paths accept nothing else).  A directory without
-    the sidecar (never built, or a build that failed before its last
-    write) is refused; a sidecar the family's reader refuses is refused
-    when the handle is served."""
+    Returns an :class:`AnnIndex` handle; pass it to serving so the
+    quantizer parameters are READ from the sidecar, never re-typed (no
+    serving path accepts them).  A directory without the sidecar (never
+    built, or a build that failed before its last write) is refused; a
+    sidecar the family's reader refuses is refused when the handle is
+    served or extended."""
     import json
     import os
 
@@ -656,6 +645,90 @@ def load_ann_index(spark, path: str) -> AnnIndex:
     return AnnIndex(spark.read.parquet(path), quantizer)
 
 
+def _persist_index(index: AnnIndex, path: str) -> int:
+    """Persist a vector index handle at ``path`` — the one write behind
+    :func:`write_lsh_index`, :func:`write_ivf_index`,
+    :func:`write_ivfpq_index` and :func:`write_rp_index`.  In order: the
+    old ``_quantizer.json`` is removed (the record is the commit point,
+    so a build that fails part-way leaves none for ``load_ann_index`` to
+    serve stale); the relation overwrites the directory statically,
+    partitioned by its family's column, so a smaller rebuild keeps no
+    old partition; rows are counted by an observation rider on that
+    write; the record is written last.  Returns the rows written."""
+    import json
+    import os
+
+    from ..util import overwrite_partitioned, require_local_path
+    from .metrics import observed_count
+
+    require_local_path(path)
+    record_path = os.path.join(path, "_quantizer.json")
+    if os.path.exists(record_path):
+        os.remove(record_path)
+    rows, obs = observed_count(index.df, "n_rows")
+    overwrite_partitioned(rows, *_VECTOR_FAMILIES[index.kind][2]).parquet(path)
+    with open(record_path, "w") as f:
+        json.dump(index.quantizer, f)
+    return obs.get["n_rows"]
+
+
+def _ivf_params(record: dict, what: str) -> dict:
+    """``{centroids}`` from an IVF or IVF-PQ record — the coarse
+    quantizer check both readers share.  Refuses missing or empty
+    centroids (the index would serve 0 rows), centroids of different or
+    zero widths, and an ``n_lists`` that is not the centroid count."""
+    cents = record.get("centroids")
+    if not cents:
+        problem = "no centroids"
+    elif len({len(c) for c in cents}) != 1 or not cents[0]:
+        problem = f"centroid widths {sorted({len(c) for c in cents})} are ragged or zero"
+    elif record.get("n_lists") != len(cents):
+        problem = f"n_lists={record.get('n_lists')} but {len(cents)} centroids"
+    else:
+        return {"centroids": cents}
+    raise _refusal(what, problem)
+
+
+def _unpack_ivf_index(index: AnnIndex) -> tuple[DataFrame, dict]:
+    """(cells, {centroids}) from an IVF :class:`AnnIndex` — the ONE
+    reader of the record :func:`ivf_index` writes, shared by
+    :func:`ivf_topk` and :func:`extend_ann_index`, so queries always
+    probe the cells of the centroids the corpus was assigned with."""
+    return index.df, _ivf_params(_index_record(index, "ivf"), "ivf index")
+
+
+def ivf_index(
+    embeddings: DataFrame,
+    centroids: list[list[float]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> AnnIndex:
+    """The IVF index of ``embeddings`` over a fitted coarse quantizer
+    (:func:`fit_ivf_centroids`, or externally trained centroids such as
+    label prototypes) as an :class:`AnnIndex`: ``df`` is the (id, cell)
+    relation of :func:`ivf_cell_table`, ``quantizer`` the record
+    ``{kind: ivf, n_lists, centroids}`` — the same handle
+    ``load_ann_index`` returns for the index :func:`write_ivf_index`
+    persists.  A record the reader would refuse is never built."""
+    record = {"kind": "ivf", "n_lists": len(centroids), "centroids": centroids}
+    _ivf_params(record, "ivf index")
+    return AnnIndex(ivf_cell_table(embeddings, centroids, id_col, vec_col), record)
+
+
+def write_ivf_index(
+    embeddings: DataFrame,
+    path: str,
+    centroids: list[list[float]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> int:
+    """Persist the index :func:`ivf_index` builds at ``path``: (id, cell)
+    rows partitioned by ``cell`` (a probe reads only its cells' files)
+    and the record, centroids included, as the ``_quantizer.json``
+    sidecar.  Returns the number of rows written."""
+    return _persist_index(ivf_index(embeddings, centroids, id_col, vec_col), path)
+
+
 def ivfpq_index_rows(
     embeddings: DataFrame,
     centroids: list[list[float]],
@@ -665,9 +738,11 @@ def ivfpq_index_rows(
 ) -> DataFrame:
     """(id, codes, cell) — the complete IVF-PQ index relation as ONE
     shuffle-free scan projection (both quantizer halves are plan
-    literals; null/empty vectors dropped per the un-encodable policy).
-    Persisted partitioned BY CELL, this is the faiss-style on-disk
-    layout: a probe reads only its cells' files."""
+    literals; null/empty vectors dropped per the un-encodable policy of
+    :func:`pq_encode` — a null slice would land in cell 0 with codes
+    [0…] and serve as a phantom neighbor).  Persisted partitioned BY
+    CELL, this is the faiss-style on-disk layout: a probe reads only its
+    cells' files."""
     return (
         _spread(embeddings)
         .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
@@ -679,57 +754,92 @@ def ivfpq_index_rows(
     )
 
 
-def write_ivfpq_index(
+def _ivfpq_params(record: dict) -> dict:
+    """``{centroids, codebooks}`` from an IVF-PQ record.  On top of the
+    IVF centroid check, refuses missing or empty codebooks, an ``m``
+    that is not the codebook count, codebooks whose sizes differ from
+    ``n_codes``, and subspace widths that do not split the centroid
+    dimension into ``m`` equal slices (the ADC table would score the
+    wrong coordinates, silently)."""
+    params = _ivf_params(record, "ivfpq index")
+    dim = len(params["centroids"][0])
+    books = record.get("codebooks")
+    widths = {len(c) for b in books or () for c in b}
+    if not books:
+        problem = "no codebooks"
+    elif record.get("m") != len(books):
+        problem = f"m={record.get('m')} but {len(books)} codebooks"
+    elif {len(b) for b in books} != {record.get("n_codes")}:
+        problem = (
+            f"n_codes={record.get('n_codes')} but codebooks of "
+            f"{sorted({len(b) for b in books})} codes"
+        )
+    elif len(widths) != 1 or len(books) * min(widths) != dim:
+        problem = (
+            f"subspace widths {sorted(widths)} × {len(books)} codebooks "
+            f"do not make the {dim}-dim centroids"
+        )
+    else:
+        return {**params, "codebooks": books}
+    raise _refusal("ivfpq index", problem)
+
+
+def _unpack_ivfpq_index(index: AnnIndex) -> tuple[DataFrame, dict]:
+    """((id, codes, cell) rows, {centroids, codebooks}) from an IVF-PQ
+    :class:`AnnIndex` — the ONE reader of the record :func:`ivfpq_index`
+    writes, shared by :func:`ivfpq_topk`,
+    ``streaming.pipeline.ivfpq_enrich_stream`` and
+    :func:`extend_ann_index`."""
+    return index.df, _ivfpq_params(_index_record(index, "ivfpq"))
+
+
+def ivfpq_index(
     embeddings: DataFrame,
-    path: str,
-    n_lists: int = 16,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-) -> int:
-    """Build + persist the IVF-PQ index (the IndexIVFPQ artifact): fit
-    both quantizers (sample-bounded) unless given, write the (id, codes,
-    cell) relation partitioned by ``cell`` — so serving probes prune to
-    their cells' files at the parquet listing level — and record BOTH
-    quantizers in the authoritative ``_quantizer.json`` sidecar
-    (serving with re-fit centroids or re-fit codebooks silently corrupts
-    distances, the exact mismatch the handle discipline exists to
-    prevent).  Returns the number of index rows written."""
-    import json
-    import os
-
-    from ..util import overwrite_partitioned, require_local_path
-
-    require_local_path(path)
-    if centroids is None:
-        centroids = fit_ivf_centroids(
-            embeddings, n_lists=n_lists, seed=seed, vec_col=vec_col
-        )
-    if codebooks is None:
-        codebooks = fit_pq_codebooks(
-            embeddings, m=m, k=n_codes, seed=seed, vec_col=vec_col
-        )
-    rows = ivfpq_index_rows(
-        embeddings, centroids, codebooks, id_col=id_col, vec_col=vec_col
-    )
-    overwrite_partitioned(rows, "cell").parquet(path)
-    quantizer = {
+) -> AnnIndex:
+    """The IVF-PQ index of ``embeddings`` (the IndexIVFPQ artifact) over
+    fitted quantizers (:func:`fit_ivf_centroids` +
+    :func:`fit_pq_codebooks`, or externally trained ones) as an
+    :class:`AnnIndex`: ``df`` is the (id, codes, cell) relation of
+    :func:`ivfpq_index_rows`, ``quantizer`` the record
+    ``{kind: ivfpq, n_lists, m, n_codes, centroids, codebooks}`` — the
+    same handle ``load_ann_index`` returns for the index
+    :func:`write_ivfpq_index` persists.  Serving with re-fit centroids or
+    codebooks silently corrupts distances, so both travel in the record.
+    A record the reader would refuse is never built."""
+    record = {
         "kind": "ivfpq",
         "n_lists": len(centroids),
         "m": len(codebooks),
-        "n_codes": len(codebooks[0]),
-        "seed": seed,
+        "n_codes": len(codebooks[0]) if codebooks else 0,
         "centroids": centroids,
         "codebooks": codebooks,
     }
-    with open(os.path.join(path, "_quantizer.json"), "w") as f:
-        json.dump(quantizer, f)
-    # metadata-only count of the WRITTEN files doubles as a read check
-    return embeddings.sparkSession.read.parquet(path).count()
+    _ivfpq_params(record)
+    return AnnIndex(
+        ivfpq_index_rows(embeddings, centroids, codebooks, id_col, vec_col), record
+    )
+
+
+def write_ivfpq_index(
+    embeddings: DataFrame,
+    path: str,
+    centroids: list[list[float]],
+    codebooks: list[list[list[float]]],
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> int:
+    """Persist the index :func:`ivfpq_index` builds at ``path``: the
+    (id, codes, cell) rows partitioned by ``cell`` — so serving probes
+    prune to their cells' files at the parquet listing level — and the
+    record, both quantizers included, as the ``_quantizer.json``
+    sidecar.  Returns the number of index rows written."""
+    return _persist_index(
+        ivfpq_index(embeddings, centroids, codebooks, id_col, vec_col), path
+    )
 
 
 def extend_ann_index(
@@ -739,65 +849,44 @@ def extend_ann_index(
     vec_col: str = "embedding",
 ) -> int:
     """Append new vectors' rows to a persisted LSH, IVF, IVF-PQ or RP
-    index — the
-    vector-space twin of :func:`~.dedup.extend_band_index`, completing
-    the incremental lifecycle for every index family (MinHash bands for
-    text, hyperplane buckets and IVF cells for vectors).
+    index — the vector-space twin of :func:`~.dedup.extend_band_index`,
+    completing the incremental lifecycle for every index family (MinHash
+    bands for text, hyperplane buckets, IVF cells and codes, reduced
+    vectors for embeddings).
 
-    Both assignments are ROW-LOCAL given the quantizer (hyperplane
-    weights are a pure function of the sidecar's (n_planes, n_tables,
-    dim, seed_base); IVF cells come from the sidecar's frozen centroid
-    list), so APPEND IS the index update: no rebuild, no read of
-    existing index rows, and the new files land inside the existing
-    ``t=``/``cell=`` partition directories where serving probes already
-    prune.  Parameters are ALWAYS derived from the sidecar; an LSH (or
-    unknown-kind) record goes through the serving paths' reader.
+    Every assignment is ROW-LOCAL given the record (hyperplanes and the
+    RP sign matrix are pure functions of their seeded family; IVF cells
+    and PQ codes come from the record's frozen centroids and codebooks),
+    so APPEND IS the index update: the family's record reader reads the
+    parameters (refusing a record it would not serve), the family's
+    in-memory constructor builds the new rows, and they land inside the
+    existing ``t=``/``cell=`` partition directories where serving probes
+    already prune — no rebuild, no read of existing index rows.  A
+    record of unknown kind goes through the LSH reader, which refuses
+    it.
 
     IVF caveat (inherent, same as faiss): appends assign against the
     centroids fitted at build time, so a drifting corpus slowly degrades
     cell balance — monitor with the per-cell counts and periodically
-    refit (:func:`fit_ivf_centroids` / :func:`kmeans_refine_step`) and
+    refit (:func:`fit_ivf_centroids` / :func:`refine_centroids`) and
     rebuild.  LSH has no drift: the hyperplanes are data-independent.
 
     Same caveat as the band-index twin: append + count is not atomic;
     drive from an exactly-once context at production scale.  Returns the
     number of index rows appended."""
-    spark = new_vectors.sparkSession
-    handle = load_ann_index(spark, index_path)
-    if handle.kind == "minhash":
+    handle = load_ann_index(new_vectors.sparkSession, index_path)
+    kind = handle.quantizer.get("kind")
+    if kind == "minhash":
         raise ValueError(
             "extend_ann_index handles lsh/ivf/ivfpq/rp indexes, got "
             "'minhash' (minhash indexes grow via extend_band_index)"
         )
-    if handle.kind == "ivf":
-        rows = ivf_cell_table(
-            new_vectors,
-            _ivf_weight_table(spark, handle.quantizer["centroids"]),
-            id_col=id_col,
-            vec_col=vec_col,
-        )
-        part = "cell"
-    elif handle.kind == "ivfpq":
-        q = handle.quantizer
-        rows = ivfpq_index_rows(
-            new_vectors, q["centroids"], q["codebooks"],
-            id_col=id_col, vec_col=vec_col,
-        )
-        part = "cell"
-    elif handle.kind == "rp":
-        q = handle.quantizer
-        rows = rp_project(
-            new_vectors, q["out_dim"], q["dim"], q["seed"], id_col, vec_col
-        )
-        part = None  # the reduced table is written flat
-    else:  # lsh; the reader refuses a record of any other kind
-        _, family = _unpack_lsh_index(handle)
-        rows = bucket_table(new_vectors, id_col, vec_col, **family)
-        part = "t"
+    reader, build, part = _VECTOR_FAMILIES.get(kind, _VECTOR_FAMILIES["lsh"])
+    _, params = reader(handle)
+    rows = build(new_vectors, **params, id_col=id_col, vec_col=vec_col).df
     # shard-bounded; compute once for both the append and the count
     rows = rows.localCheckpoint(eager=True)
-    w = rows.write.mode("append")
-    (w.partitionBy(part) if part else w).parquet(index_path)
+    rows.write.mode("append").partitionBy(*part).parquet(index_path)
     return rows.count()
 
 
@@ -817,9 +906,10 @@ def fit_ivf_centroids(
     driver — the faiss-style "train on a sample" pattern.  The sample is
     bounded (100k × 64 doubles ≈ 50 MB) regardless of corpus size, so at
     100 TB this costs one scan, not a multi-pass MLlib job per query.
-    Returns plain floats (n_lists × dim — KBs) so callers can
-    persist/reuse them across queries; ``ivf_topk`` accepts them via
-    ``centroids=``."""
+    Returns plain floats (n_lists × dim — KBs; fewer rows when the
+    sample holds fewer than ``n_lists`` vectors) for :func:`ivf_index` /
+    :func:`write_ivf_index` (or :func:`ivfpq_index`) to record, so every
+    query probes the quantizer the corpus was assigned with."""
     x = _sample_matrix(embeddings, vec_col, max_train_rows, seed)
     cents = _kmeans(x, n_lists, seed, n_iter)
     return [list(map(float, c)) for c in cents]
@@ -848,9 +938,7 @@ def refined_centroid_elements(
     co-partitioned join of the exploded micro-values with the (id, cell)
     assignment, one (cell, pos) aggregate — k×dim output rows.  Nothing
     driver-side except the weight literals; vectors never shuffle whole."""
-    spark = embeddings.sparkSession
-    cw = _ivf_weight_table(spark, centroids)
-    assigned = ivf_cell_table(embeddings, cw, id_col, vec_col)
+    assigned = ivf_cell_table(embeddings, centroids, id_col, vec_col)
     vals = embeddings.select(
         F.col(id_col).alias("_rid"),
         F.posexplode(_dbl(F.col(vec_col))).alias("pos", "_val"),
@@ -902,83 +990,44 @@ def refine_centroids(
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
+    index: AnnIndex,
     k: int = 5,
-    n_lists: int = 16,
     n_probe: int = 4,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    centroid_elements: DataFrame | None = None,
-    corpus_cells: DataFrame | None = None,
-    index: "AnnIndex | None" = None,
 ) -> DataFrame:
-    """IVF (inverted-file) ANN: partition the corpus into ``n_lists``
-    cells; each query scores only its ``n_probe`` nearest cells.
+    """IVF (inverted-file) ANN: the corpus is partitioned into cells;
+    each query scores only its ``n_probe`` nearest cells.
 
-    ``index`` (an :class:`AnnIndex` from :func:`load_ann_index`)
-    supplies BOTH the (id, cell) relation and the exact centroids the
-    index was built with, overriding the raw arguments — the
-    mismatch-proof serving form.
-
-    ``corpus_cells`` accepts a precomputed (id, cell) corpus assignment
-    (:func:`ivf_cell_table` — the persistable index, parquet round-trip
-    tested); the quantizer weights must be the ones the index was built
-    with, and only the query-side probe ranking runs per call.
+    ``index`` is the (id, cell) corpus assignment — the IVF index build
+    — as a handle from :func:`ivf_index` or :func:`load_ann_index`: at
+    100 TB built once by :func:`write_ivf_index` and amortized over
+    every query, so only the query-side probe ranking (for a handful of
+    query vectors, against the centroids its record names) and the
+    candidate join are per-query cost.  ``embeddings`` supplies the
+    vectors that score the candidates; ``k`` is the query-time top-k.
 
     The IVF scale story vs hyperplane LSH: cells adapt to the data
     distribution (clustered corpora get balanced cells where fixed
     hyperplanes skew), and cost is exactly corpus·(n_probe/n_lists) per
-    query.  The coarse quantizer comes from either ``centroids`` (plain
-    floats — :func:`fit_ivf_centroids`' sample-bounded KMeans, the
-    unsupervised default) or ``centroid_elements`` (a relational
-    (label, pos, centroid_val) table, e.g.
-    :func:`label_centroid_elements` — faiss's "externally trained
-    quantizer" pattern, and the fully SQL-reproducible one).
+    query.  The coarse quantizer is fitted by the caller before the
+    index is built: :func:`fit_ivf_centroids`' sample-bounded KMeans
+    (the unsupervised default) or externally trained centroids, e.g. the
+    label prototypes ``ivf_recall_eval`` uses (faiss's "externally
+    trained quantizer" pattern, and the fully SQL-reproducible one).
 
     Cell assignment arithmetic runs in int64 micro-units (vectors and
     centroid weights snapped to 1e-6, scores are exact integers): argmin
     and probe ranking are summation-order-independent, so the assignment
     is identical at any parallelism and in a DuckDB oracle — same
-    discipline as :func:`bucket_table`.
-
-    At 100 TB the corpus-side (id → cell) assignment below IS the IVF
-    index build: you compute it once, persist it partitioned by cell, and
-    amortize it over every query — only the query-side path (probe-cell
-    ranking for a handful of query vectors + the candidate join) is
-    per-query cost.  This function recomputes the assignment inline so it
-    stays self-contained on fixtures."""
-    spark = embeddings.sparkSession
-    if index is not None:
-        q = index.require("ivf")
-        corpus_cells, centroids = index.df, q["centroids"]
-        centroid_elements, n_lists = None, q["n_lists"]
-    if centroid_elements is not None:
-        cw = centroid_elements.select(
-            F.col("label").alias("cell"),
-            "pos",
-            F.round(F.col("centroid_val") * 1e6).cast("long").alias("wm"),
-        )
-        cn = cw.groupBy("cell").agg(F.sum(F.col("wm") * F.col("wm")).alias("cn_m"))
-        cweights = cw.join(cn, "cell")
-    else:
-        if centroids is None:
-            centroids = fit_ivf_centroids(
-                embeddings, n_lists=n_lists, seed=seed, vec_col=vec_col
-            )
-        cweights = _ivf_weight_table(spark, centroids)
-    if corpus_cells is not None:
-        c_cell = corpus_cells.withColumnsRenamed({id_col: "neighbor_id"})
-        q_cell = _ivf_query_cells(queries, cweights, n_probe, id_col, vec_col)
-    else:
-        c_cell, q_cell = _ivf_assign(
-            embeddings, queries, cweights, n_probe, id_col, vec_col
-        )
+    discipline as :func:`bucket_table`."""
+    cells, params = _unpack_ivf_index(index)
+    cweights = _ivf_weight_table(queries.sparkSession, params["centroids"])
     c = _scoring_side(_spread(embeddings), id_col, vec_col, "neighbor_id", "n").join(
-        c_cell, "neighbor_id"
+        cells.withColumnsRenamed({id_col: "neighbor_id"}), "neighbor_id"
     )
     q = _scoring_side(queries, id_col, vec_col, "query_id", "q").join(
-        q_cell, "query_id"
+        _ivf_query_cells(queries, cweights, n_probe, id_col, vec_col), "query_id"
     )
     scored = (
         c.join(F.broadcast(q), "cell")
@@ -1270,129 +1319,80 @@ def pq_encode(
     )
 
 
-def ivfpq_topk(
-    embeddings: DataFrame,
+def _ivfpq_scored(
     queries: DataFrame,
+    corpus: DataFrame,
+    quantizers: dict,
+    n_probe: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """(query_id, neighbor_id, d_m) — the IVF-PQ query side, shared by
+    :func:`ivfpq_topk` and ``streaming.pipeline.ivfpq_enrich_stream``:
+    each query's ``n_probe`` cells and its ADC table are one per-row
+    projection (both quantizers plan literals, no state, no collect)
+    exploded to |Q|·n_probe broadcast rows; candidates are the
+    (id, codes, cell) ``corpus`` rows of a probed cell (an equi-join on
+    ``cell``), each scored by m int64 table lookups (micro²-units)."""
+    q_side = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.explode(
+            _ivf_probe_cells_expr(F.col(vec_col), quantizers["centroids"], n_probe)
+        ).alias("cell"),
+        _adc_table_expr(F.col(vec_col), quantizers["codebooks"]).alias("_qtab"),
+    )
+    return (
+        corpus.withColumnsRenamed({id_col: "neighbor_id"})
+        .join(F.broadcast(q_side), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .select("query_id", "neighbor_id", _adc_pair_dist().alias("d_m"))
+    )
+
+
+def ivfpq_topk(
+    queries: DataFrame,
+    index: AnnIndex,
     k: int = 5,
-    n_lists: int = 16,
     n_probe: int = 4,
-    m: int = 8,
-    n_codes: int = 16,
-    seed: int = 42,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    codebooks: list[list[list[float]]] | None = None,
-    encoded: DataFrame | None = None,
-    corpus_cells: DataFrame | None = None,
-    index: "AnnIndex | None" = None,
 ) -> DataFrame:
     """IVF-PQ: the production ANN composition (faiss's IndexIVFPQ shape)
     — IVF cell probing bounds WHICH vectors are scored
     (corpus·n_probe/n_lists candidates per query), PQ/ADC bounds WHAT is
-    read to score them (m small ints per candidate, never the vector).
+    read to score them (m small ints per candidate, never the vector),
+    so no corpus vector is read at serve time.
 
-    Both index artifacts are reusable across queries: the (id → cell)
-    assignment and the (id → codes) table are each one corpus pass at
-    build time; serving cost is the probe ranking (|Q|·n_lists rows) +
-    an ADC sum over the candidate code rows.  At 100 TB the encoded
-    corpus is partitioned BY CELL on disk, so a probe reads only its
-    cells' files — the candidate join below is the in-memory equivalent.
+    ``index`` is the (id, codes, cell) relation plus both quantizers, as
+    a handle from :func:`ivfpq_index` or :func:`load_ann_index` (built
+    once, at 100 TB by :func:`write_ivfpq_index`, partitioned BY CELL on
+    disk).  Serving cost is the probe ranking (|Q|·n_lists scores) + an
+    ADC sum over the candidate code rows; ``k`` is the query-time top-k.
 
     Returns squared-L2 ADC distances (on unit vectors d² = 2 - 2·cos).
 
     r10 expression form: both quantizer halves fold into the plan as
-    int64 micro-unit literals, so the corpus side is ONE projection
-    (cell + codes per row — or a join of the two persisted index
-    relations when both are supplied), the query side is one |Q|-row
-    projection (probe cells + ADC table) exploded to |Q|·n_probe
-    broadcast rows, and scoring is a broadcast equi-join on ``cell``
-    plus m array lookups per candidate.  The only exchange in the whole
-    serve is the per-query top-k window; the arithmetic (and every
-    oracle hash) is unchanged from the relational r8 form.
+    int64 micro-unit literals, the query side is one |Q|-row projection
+    (:func:`_ivfpq_scored`), and scoring is a broadcast equi-join on
+    ``cell`` plus m array lookups per candidate.  The only exchange in
+    the whole serve is the per-query top-k window; the arithmetic (and
+    every oracle hash) is unchanged from the relational r8 form.
 
-    ``index=`` (an :class:`AnnIndex`, kind ``ivfpq`` from
-    :func:`write_ivfpq_index`) supplies the persisted (id, codes, cell)
-    relation AND both quantizers — and enables the on-disk probe prune:
-    the query batch's probed cells (≤ |Q|·n_probe distinct values,
-    always ≤ n_lists — a bounded driver collect) become a STATIC
-    partition filter on the cell-partitioned parquet, so the serve
-    lists and reads ONLY the probed cells' files, the faiss read
-    pattern the layout exists for."""
-    if index is not None:
-        q = index.require("ivfpq")
-        centroids, codebooks = q["centroids"], q["codebooks"]
-        qcells = queries.select(
-            F.explode(
-                _ivf_probe_cells_expr(F.col(vec_col), centroids, n_probe)
-            ).alias("cell")
-        ).distinct()
-        probed = [r["cell"] for r in qcells.collect()]  # ≤ n_lists values
-        c_side = (
-            index.df.filter(F.col("cell").isin(probed))
-            .withColumnsRenamed({id_col: "neighbor_id"})
-        )
-    if centroids is None:
-        centroids = fit_ivf_centroids(
-            embeddings, n_lists=n_lists, seed=seed, vec_col=vec_col
-        )
-    if codebooks is None:
-        codebooks = fit_pq_codebooks(
-            embeddings, m=m, k=n_codes, seed=seed, vec_col=vec_col
-        )
-
-    # --- corpus side: (neighbor_id, cell, codes) — from the persisted
-    # index relations when given, else computed in the scan projection
-    if index is not None:
-        pass  # c_side already probe-pruned from the handle above
-    elif encoded is not None and corpus_cells is not None:
-        c_side = encoded.withColumnsRenamed({id_col: "neighbor_id"}).join(
-            corpus_cells.withColumnsRenamed({id_col: "neighbor_id"}),
-            "neighbor_id",
-        )
-    else:
-        # null/empty vectors dropped — same un-encodable policy as
-        # pq_encode (a null slice would land in cell 0 with codes [0…]
-        # and serve as a phantom neighbor)
-        base = (
-            _spread(embeddings)
-            .filter(F.col(vec_col).isNotNull() & (F.size(vec_col) > 0))
-            .select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).alias("_v"),
-            )
-        )
-        if corpus_cells is not None:
-            base = base.join(
-                corpus_cells.withColumnsRenamed({id_col: "neighbor_id"}),
-                "neighbor_id",
-            )
-        else:
-            base = base.withColumn("_cell", _ivf_cell_expr(F.col("_v"), centroids))
-            base = base.withColumnRenamed("_cell", "cell")
-        if encoded is not None:
-            base = base.join(
-                encoded.withColumnsRenamed({id_col: "neighbor_id"}),
-                "neighbor_id",
-            )
-        else:
-            base = base.withColumn(
-                "codes", _pq_codes_expr(F.col("_v"), codebooks)
-            )
-        c_side = base.drop("_v")
-
-    # --- query side: n_probe cells + the ADC table, |Q|·n_probe rows
-    q_side = queries.select(
-        F.col(id_col).alias("query_id"),
+    The probe prune: the query batch's probed cells (≤ |Q|·n_probe
+    distinct values, always ≤ n_lists — a bounded driver collect)
+    become a STATIC partition filter on the corpus rows, so a persisted
+    cell-partitioned index lists and reads ONLY the probed cells' files,
+    the faiss read pattern the layout exists for."""
+    corpus, quantizers = _unpack_ivfpq_index(index)
+    qcells = queries.select(
         F.explode(
-            _ivf_probe_cells_expr(F.col(vec_col), centroids, n_probe)
-        ).alias("cell"),
-        _adc_table_expr(F.col(vec_col), codebooks).alias("_qtab"),
-    )
-    scored = (
-        c_side.join(F.broadcast(q_side), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_pair_dist().alias("d_m"))
+            _ivf_probe_cells_expr(F.col(vec_col), quantizers["centroids"], n_probe)
+        ).alias("cell")
+    ).distinct()
+    probed = [r["cell"] for r in qcells.collect()]  # ≤ n_lists values
+    scored = _ivfpq_scored(
+        queries, corpus.filter(F.col("cell").isin(probed)), quantizers,
+        n_probe, id_col, vec_col,
     )
     w = Window.partitionBy("query_id").orderBy(F.asc("d_m"), F.asc("neighbor_id"))
     return (
@@ -1863,25 +1863,58 @@ def rp_project(
     )
 
 
-def rp_topk(
+_RP_FAMILY = ("out_dim", "dim", "seed")
+
+
+def _unpack_rp_index(index: AnnIndex) -> tuple[DataFrame, dict]:
+    """((id, rvec) rows, {out_dim, dim, seed}) from an RP
+    :class:`AnnIndex` — the ONE reader of the record :func:`rp_index`
+    writes, shared by :func:`rp_topk` and :func:`extend_ann_index`, so
+    queries are projected through the sign matrix the corpus was: a
+    different seed would compare vectors projected through different
+    matrices, cosine soup.  Refuses ``out_dim`` or ``dim`` below 1."""
+    return index.df, _int_family(_index_record(index, "rp"), _RP_FAMILY, "rp index")
+
+
+def rp_index(
     embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
     out_dim: int = 16,
     dim: int = 64,
     seed: int = 2026,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+) -> AnnIndex:
+    """The RP index of ``embeddings`` as an :class:`AnnIndex`: ``df`` is
+    the JL-reduced (id, rvec) table of :func:`rp_project`, ``quantizer``
+    the record ``{kind: rp, out_dim, dim, seed}`` — the sign matrix is a
+    pure function of it (:func:`rp_signs`).  The same handle
+    ``load_ann_index`` returns for the index :func:`write_rp_index`
+    persists; a record the reader would refuse is never built."""
+    record = {"kind": "rp", "out_dim": out_dim, "dim": dim, "seed": seed}
+    family = _int_family(record, _RP_FAMILY, "rp index")
+    return AnnIndex(
+        rp_project(embeddings, **family, id_col=id_col, vec_col=vec_col), record
+    )
+
+
+def rp_topk(
+    queries: DataFrame,
+    index: AnnIndex,
+    k: int = 5,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
 ) -> DataFrame:
-    """Approximate cosine top-k in the reduced space: project both sides
-    with the SAME sign matrix, then the existing exact scorer runs
-    unchanged over ``out_dim``-wide vectors — every pair costs
-    ``out_dim/dim`` of the full-width scan.  Same contract as
-    :func:`lsh_topk`/:func:`ivf_topk`, so :func:`recall_vs_exact`
-    evaluates it against full-width brute force directly."""
-    c = rp_project(embeddings, out_dim, dim, seed, id_col, vec_col)
-    q = rp_project(queries, out_dim, dim, seed, id_col, vec_col)
-    return brute_force_topk(c, q, k=k, id_col=id_col, vec_col="rvec")
+    """Approximate cosine top-k in the reduced space: the queries are
+    projected with the sign matrix ``index``'s record names (a handle
+    from :func:`rp_index` or :func:`load_ann_index`), then the exact
+    scorer runs unchanged over the stored ``out_dim``-wide corpus
+    vectors — every pair costs ``out_dim/dim`` of the full-width scan.
+    Same contract as :func:`lsh_topk`/:func:`ivf_topk`, so
+    :func:`recall_vs_exact` evaluates it against full-width brute force
+    directly."""
+    corpus, family = _unpack_rp_index(index)
+    q = rp_project(queries, **family, id_col=id_col, vec_col=vec_col)
+    return brute_force_topk(corpus, q, k=k, id_col=id_col, vec_col="rvec")
 
 
 def write_rp_index(
@@ -1893,43 +1926,22 @@ def write_rp_index(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> int:
-    """Persist the JL-reduced vector table — the RP index artifact: at
-    100 TB the 4× narrower (id, rvec) relation is what every downstream
+    """Persist the index :func:`rp_index` builds at ``path`` — at 100 TB
+    the 4× narrower (id, rvec) relation is what every downstream
     similarity pass scans instead of the full-width embeddings.  The
-    sidecar records (out_dim, dim, seed); the sign matrix is a pure
-    function of them (:func:`rp_signs`), so serving re-derives it
-    exactly — same authoritative-parameters discipline as every other
-    index family.  Returns rows written."""
-    import json
-    import os
-
-    from ..util import require_local_path
-
-    require_local_path(path)
-    rp_project(
-        embeddings, out_dim, dim, seed, id_col, vec_col
-    ).write.mode("overwrite").parquet(path)
-    with open(os.path.join(path, "_quantizer.json"), "w") as f:
-        json.dump(
-            {"kind": "rp", "out_dim": out_dim, "dim": dim, "seed": seed}, f
-        )
-    return embeddings.sparkSession.read.parquet(path).count()
-
-
-def rp_topk_vs_index(
-    index: "AnnIndex",
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Serve top-k against a persisted RP index: queries are projected
-    with the sidecar's EXACT (out_dim, dim, seed) — re-guessing a
-    different seed would compare vectors projected through different
-    matrices, cosine soup — and scored against the stored reduced corpus
-    by the standard brute-force ranker."""
-    q = index.require("rp")
-    qr = rp_project(
-        queries, q["out_dim"], q["dim"], q["seed"], id_col, vec_col
+    rows are written flat and the record ``{kind: rp, out_dim, dim,
+    seed}`` as the ``_quantizer.json`` sidecar.  Returns rows written."""
+    return _persist_index(
+        rp_index(embeddings, out_dim, dim, seed, id_col, vec_col), path
     )
-    return brute_force_topk(index.df, qr, k=k, id_col=id_col, vec_col="rvec")
+
+
+#: kind → (record reader, in-memory constructor, partition columns) of
+#: every vector index family; ``_persist_index`` and
+#: :func:`extend_ann_index` dispatch on a record's kind through it
+_VECTOR_FAMILIES = {
+    "lsh": (_unpack_lsh_index, lsh_index, ("t",)),
+    "ivf": (_unpack_ivf_index, ivf_index, ("cell",)),
+    "ivfpq": (_unpack_ivfpq_index, ivfpq_index, ("cell",)),
+    "rp": (_unpack_rp_index, rp_index, ()),
+}

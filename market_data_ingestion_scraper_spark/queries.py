@@ -1484,17 +1484,17 @@ def _ivf_recall_oracle() -> str:
 def q_ivf_recall(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import (
         brute_force_topk,
+        ivf_index,
         ivf_topk,
-        label_centroid_elements,
         recall_vs_exact,
     )
 
     emb = _t(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    approx = ivf_topk(
-        emb, queries_df, k=5, n_probe=4,
-        centroid_elements=label_centroid_elements(emb),
-    )
+    # cell c is the c-th label in sorted order, so (score, cell) ties
+    # break as the oracle's (score, label)
+    centroids, _ = _label_pq_quantizer(emb)
+    approx = ivf_topk(emb, queries_df, ivf_index(emb, centroids), k=5, n_probe=4)
     return recall_vs_exact(approx, brute_force_topk(emb, queries_df, k=5), 5)
 
 
@@ -1574,12 +1574,13 @@ def q_rp_recall(spark: SparkSession, sf: str) -> DataFrame:
     from .operators.similarity import (
         brute_force_topk,
         recall_vs_exact,
+        rp_index,
         rp_topk,
     )
 
     emb = _t(spark, sf, "embeddings")
     queries_df = emb.filter(F.col("vec_id") < 8)
-    approx = rp_topk(emb, queries_df, k=5, out_dim=16, dim=64)
+    approx = rp_topk(queries_df, rp_index(emb, out_dim=16, dim=64), k=5)
     return recall_vs_exact(approx, brute_force_topk(emb, queries_df, k=5), 5)
 
 
@@ -2639,7 +2640,7 @@ def _label_pq_quantizer(
     emb: DataFrame,
 ) -> tuple[list[list[float]], list[list[list[float]]]]:
     """Deterministic (centroids, codebooks) from the label prototypes —
-    an externally-trained quantizer, like ivf_recall_eval's.  The
+    an externally-trained quantizer, shared with ivf_recall_eval.  The
     centroids are the full 64-dim prototypes (IVF coarse cells); the
     codebooks slice them into m=8 subspaces of 8 dims (codebook j,
     code c = subspace-j slice of label c's centroid), so both quantizer
@@ -2771,18 +2772,11 @@ def _ivfpq_topk_oracle() -> str:
     "constructions and is bit-exact end-to-end.",
 )
 def q_ivfpq_topk(spark: SparkSession, sf: str) -> DataFrame:
-    from .operators.similarity import ivfpq_topk
+    from .operators.similarity import ivfpq_index, ivfpq_topk
 
     emb = _t(spark, sf, "embeddings")
-    centroids, codebooks = _label_pq_quantizer(emb)
-    return ivfpq_topk(
-        emb,
-        emb.filter(F.col("vec_id") < 8),
-        k=5,
-        n_probe=4,
-        centroids=centroids,
-        codebooks=codebooks,
-    )
+    index = ivfpq_index(emb, *_label_pq_quantizer(emb))
+    return ivfpq_topk(emb.filter(F.col("vec_id") < 8), index, k=5, n_probe=4)
 
 
 def _series_topk_oracle() -> str:

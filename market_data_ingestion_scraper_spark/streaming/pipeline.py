@@ -292,41 +292,26 @@ def ivfpq_enrich_stream(
     ``load_ann_index``) — the memory-bound production counterpart of
     :func:`ann_enrich_stream` (codes, never raw corpus vectors).
 
-    Stream-legal composition: the query side computes its probe cells
-    AND its per-query ADC lookup table as per-row expressions (both
-    quantizers are plan literals from the sidecar — no state, no
-    collect; the batch path's static-partition prune needs a driver
+    Stream-legal composition: the batch path's query side
+    (``similarity._ivfpq_scored``) — probe cells AND the per-query ADC
+    lookup table as per-row expressions over the record's quantizers,
+    no state, no collect — joined to the static (id, codes, cell)
+    relation.  The batch path's static-partition prune needs a driver
     collect of the probed cells, which a stream cannot do, so the prune
     here happens in the stream-static equi-join on ``cell`` instead —
     same rows read per micro-batch, pruned by the join rather than the
-    listing); candidates join the static (id, codes, cell) relation,
-    each costs m int64 array lookups, and the per-query top-k is the
-    same streaming collect-sort-slice aggregation as the LSH server.
+    listing.  The per-query top-k is the same streaming
+    collect-sort-slice aggregation as the LSH server.
+
+    ``index`` is an IVF-PQ handle (``similarity.ivfpq_index`` or
+    ``load_ann_index``); ``k`` is the query-time top-k.
 
     Returns (query_id, topk: array<struct<neighbor_id, approx_dist2>>).
     """
-    from ..operators.similarity import (
-        _adc_pair_dist,
-        _adc_table_expr,
-        _ivf_probe_cells_expr,
-    )
+    from ..operators.similarity import _ivfpq_scored, _unpack_ivfpq_index
 
-    q = index.require("ivfpq")
-    centroids, codebooks = q["centroids"], q["codebooks"]
-    q_side = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.explode(
-            _ivf_probe_cells_expr(F.col(vec_col), centroids, n_probe)
-        ).alias("cell"),
-        _adc_table_expr(F.col(vec_col), codebooks).alias("_qtab"),
-    )
-    scored = (
-        q_side.join(
-            index.df.withColumnsRenamed({id_col: "neighbor_id"}), "cell"
-        )
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", _adc_pair_dist().alias("d_m"))
-    )
+    corpus, quantizers = _unpack_ivfpq_index(index)
+    scored = _ivfpq_scored(queries, corpus, quantizers, n_probe, id_col, vec_col)
     topk = F.slice(
         F.array_sort(
             F.collect_set(F.struct(

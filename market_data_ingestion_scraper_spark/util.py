@@ -17,13 +17,14 @@ def require_local_path(path: str) -> None:
         )
 
 
-def overwrite_partitioned(df, col: str):
-    """A writer that REPLACES a partitioned index directory.  The session
-    sets ``partitionOverwriteMode=dynamic`` (idempotent ingest re-runs),
-    which keeps every partition the new rows miss: a rebuild with fewer
-    tables, cells or bands would serve the old build's leftovers."""
+def overwrite_partitioned(df, *cols: str):
+    """A writer that REPLACES an index directory, partitioned by ``cols``
+    (none: flat).  The session sets ``partitionOverwriteMode=dynamic``
+    (idempotent ingest re-runs), which keeps every partition the new
+    rows miss: a rebuild with fewer tables, cells or bands would serve
+    the old build's leftovers."""
     return (
         df.write.mode("overwrite")
         .option("partitionOverwriteMode", "static")
-        .partitionBy(col)
+        .partitionBy(*cols)
     )

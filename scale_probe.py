@@ -289,7 +289,7 @@ def main() -> None:
         # frozen quantizers and the PERSISTED on-disk index (built
         # untimed — the amortized artifact, same discipline as
         # near_dup_vs_index): serving goes through write_ivfpq_index →
-        # load_ann_index → ivfpq_topk(index=), so the timed path includes
+        # load_ann_index → ivfpq_topk(queries, handle), so the timed path includes
         # the probed-cell STATIC partition prune on the cell-partitioned
         # parquet.  Result rows fixed (queries × k), serve wall must stay
         # ~flat (probed cells bound the read regardless of K).
@@ -302,14 +302,11 @@ def main() -> None:
         )
 
         idx_dir = tempfile.mkdtemp(prefix="probe_ivfpq_")
-        write_ivfpq_index(
-            e, idx_dir, centroids=cents, codebooks=codebooks,
-        )
+        write_ivfpq_index(e, idx_dir, cents, codebooks)
         handle = load_ann_index(spark, idx_dir)
         t0 = time.perf_counter()
         n2 = ivfpq_topk(
-            e, emb.filter(F.col("vec_id") < 8), k=5,
-            n_probe=4, index=handle,
+            emb.filter(F.col("vec_id") < 8), handle, k=5, n_probe=4
         ).count()
         sec = round(time.perf_counter() - t0, 2)
         shutil.rmtree(idx_dir, ignore_errors=True)

@@ -112,8 +112,12 @@ def test_cli_ann_index_build_and_serve(tmp_path):
                  "seed_base": 1000}
 
 
-def test_cli_ann_index_ivf_kind(tmp_path):
+def test_cli_ann_index_ivf_kind(tmp_path, spark):
     import os
+
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        fit_ivf_centroids,
+    )
 
     out = str(tmp_path / "ivf")
     r = _run(
@@ -129,8 +133,39 @@ def test_cli_ann_index_ivf_kind(tmp_path):
 
     with open(os.path.join(out, "_quantizer.json")) as f:
         q = _json.load(f)
-    assert q["kind"] == "ivf" and q["n_lists"] == 8 and q["seed"] == 1000
+    assert q["kind"] == "ivf" and q["n_lists"] == 8
     assert len(q["centroids"]) == 8 and len(q["centroids"][0]) == 64
+    # the recorded centroids are the ones fitted with --seed (1000)
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    assert q["centroids"] == fit_ivf_centroids(emb, n_lists=8, seed=1000)
+
+
+def test_cli_ann_index_ivf_records_fitted_cell_count(tmp_path, spark):
+    """KMeans fits at most one centroid per vector: a 10-vector corpus
+    with --n-lists 16 gets 10 centroids.  The record names the 10 it
+    holds (it used to record n_lists 16 beside 10 centroids), and the
+    index serves through the handle."""
+    from pyspark.sql import functions as F
+
+    from market_data_ingestion_scraper_spark.operators.similarity import (
+        ivf_topk,
+        load_ann_index,
+    )
+
+    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
+    small_path = str(tmp_path / "small.parquet")
+    small = emb.filter(F.col("vec_id") < 10).select("vec_id", "embedding")
+    small.write.parquet(small_path)
+    out = str(tmp_path / "ivf_small")
+    r = _run(
+        "ann-index", "--embeddings", small_path, "--out", out,
+        "--kind", "ivf", "--n-lists", "16",
+    )
+    assert r.returncode == 0, r.stderr[-2000:]
+    handle = load_ann_index(spark, out)
+    assert handle.quantizer["n_lists"] == len(handle.quantizer["centroids"]) == 10
+    served = ivf_topk(small, small.filter(F.col("vec_id") < 2), handle, k=3)
+    assert served.count() == 6
 
 
 def test_load_ann_index_serves_lsh(tmp_path):
@@ -176,7 +211,7 @@ def test_load_ann_index_serves_lsh(tmp_path):
     )
 
     with pytest.raises(ValueError, match="kind mismatch"):
-        ivf_topk(emb, q, index=handle)
+        ivf_topk(emb, q, handle)
 
 
 def test_cli_index_extend_without_record_exits_2(tmp_path, spark, sf_smoke):
@@ -199,20 +234,27 @@ def _partitions(path):
     return sorted(d for d in os.listdir(path) if "=" in d)
 
 
-@pytest.mark.parametrize("kind", ["lsh", "ivf", "ivfpq", "minhash"])
+@pytest.mark.parametrize("kind", ["lsh", "ivf", "ivfpq", "rp", "minhash"])
 def test_index_rebuild_replaces_partitions(tmp_path, spark, sf_oracle, kind):
     """A smaller rebuild replaces the index: the session's dynamic
     partition-overwrite mode kept the old build's partitions (t=4..7,
     cells 4..15, bands 8..15) next to the new record, so the index
     served rows of two builds.  After the rebuild the partition set and
-    the row count are the new build's alone."""
+    the row count are the new build's alone (for the flat RP index: the
+    rows of the smaller corpus, at the new width)."""
     import os
+
+    from pyspark.sql import functions as F
 
     from market_data_ingestion_scraper_spark.operators.dedup import (
         write_minhash_index,
     )
     from market_data_ingestion_scraper_spark.operators.similarity import (
+        fit_ivf_centroids,
+        fit_pq_codebooks,
+        load_ann_index,
         write_ivfpq_index,
+        write_rp_index,
     )
 
     out = str(tmp_path / kind)
@@ -238,12 +280,23 @@ def test_index_rebuild_replaces_partitions(tmp_path, spark, sf_oracle, kind):
         assert _partitions(out) == [f"t={t}" for t in range(4)]
         assert n == spark.read.parquet(out).count() == emb.count() * 4
         return
+    if kind == "rp":
+        write_rp_index(emb, out, out_dim=16)
+        half = emb.filter(F.col("vec_id") % 2 == 0)
+        n = write_rp_index(half, out, out_dim=8)
+        assert _partitions(out) == []
+        index = load_ann_index(spark, out)
+        assert index.quantizer["out_dim"] == 8
+        assert n == index.df.count() == half.count()
+        assert {len(r.rvec) for r in index.df.collect()} == {8}
+        return
     if kind == "ivf":
         cli("--kind", "ivf", "--n-lists", "16")
         n = cli("--kind", "ivf", "--n-lists", "4")
     else:
-        write_ivfpq_index(emb, out, n_lists=16, m=8, n_codes=8)
-        n = write_ivfpq_index(emb, out, n_lists=4, m=8, n_codes=8)
+        books = fit_pq_codebooks(emb, m=8, k=8)
+        write_ivfpq_index(emb, out, fit_ivf_centroids(emb, n_lists=16), books)
+        n = write_ivfpq_index(emb, out, fit_ivf_centroids(emb, n_lists=4), books)
     assert set(_partitions(out)) <= {f"cell={c}" for c in range(4)}
     assert n == spark.read.parquet(out).count() == emb.count()
 

@@ -4,6 +4,8 @@ duplicate structure and assert detection + estimate quality."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -150,7 +152,8 @@ def test_ivf_topk_recall(spark, vectors):
     recall floor well above that fraction proves the cells are informative."""
     q = vectors.filter(F.col("vec_id") < 16)
     bf = S.brute_force_topk(vectors, q, k=5)
-    ivf = S.ivf_topk(vectors, q, k=5, n_lists=16, n_probe=4)
+    index = S.ivf_index(vectors, S.fit_ivf_centroids(vectors, n_lists=16))
+    ivf = S.ivf_topk(vectors, q, index, k=5, n_probe=4)
     bf_pairs = {(r["query_id"], r["neighbor_id"]) for r in bf.collect()}
     ivf_pairs = {(r["query_id"], r["neighbor_id"]) for r in ivf.collect()}
     recall = len(bf_pairs & ivf_pairs) / len(bf_pairs)
@@ -754,7 +757,11 @@ def test_ivfpq_topk_composes_probe_and_adc(spark, vectors):
     aug = unit.unionByName(spark.createDataFrame(
         [(99999, tweak)], "vec_id long, embedding array<float>"))
     q = aug.filter(F.col("vec_id").isin(0, 1, 2, 99999))
-    out = S.ivfpq_topk(aug, q, k=3, n_probe=4)
+    index = S.ivfpq_index(
+        aug, S.fit_ivf_centroids(aug, n_lists=16),
+        S.fit_pq_codebooks(aug, m=8, k=16),
+    )
+    out = S.ivfpq_topk(q, index, k=3, n_probe=4)
     rows = out.collect()
     assert len(rows) > 0
     by_q = {}
@@ -777,25 +784,15 @@ def test_ivf_index_parquet_roundtrip(spark, vectors, tmp_path):
     query-side probe ranking recomputes."""
     cents = S.fit_ivf_centroids(vectors, n_lists=16, seed=42)
     q = vectors.filter(F.col("vec_id") < 8)
-    inline = S.ivf_topk(vectors, q, k=5, centroids=cents)
+    inline = S.ivf_topk(vectors, q, S.ivf_index(vectors, cents), k=5)
     idx_path = str(tmp_path / "ivf_index")
-    cw = S._ivf_weight_table(spark, cents)
-    S.ivf_cell_table(vectors, cw).write.partitionBy("cell").parquet(idx_path)
-    loaded = spark.read.parquet(idx_path)
-    served = S.ivf_topk(
-        vectors, q, k=5, centroids=cents, corpus_cells=loaded
-    )
+    S.write_ivf_index(vectors, idx_path, cents)
+    assert any(d.startswith("cell=") for d in os.listdir(idx_path))
+    loaded = S.load_ann_index(spark, idx_path)
+    served = S.ivf_topk(vectors, q, loaded, k=5)
     assert sorted(map(tuple, inline.collect())) == sorted(
         map(tuple, served.collect())
     )
-
-
-def _write_sidecar(path, quantizer):
-    import json
-    import os
-
-    with open(os.path.join(path, "_quantizer.json"), "w") as f:
-        json.dump(quantizer, f)
 
 
 def test_extend_ann_index_lsh_append_equals_rebuild(spark, vectors, tmp_path):
@@ -826,16 +823,12 @@ def test_extend_ann_index_ivf_append_equals_rebuild(spark, vectors, tmp_path):
     base = vectors.filter(F.col("vec_id") % 5 != 0)
     new = vectors.filter(F.col("vec_id") % 5 == 0)
     cents = S.fit_ivf_centroids(base, n_lists=16, seed=42)
-    S.ivf_cell_table(base, S._ivf_weight_table(spark, cents)).write.partitionBy(
-        "cell"
-    ).parquet(out)
-    _write_sidecar(out, {"kind": "ivf", "n_lists": 16, "seed": 42,
-                         "centroids": cents})
+    S.write_ivf_index(base, out, cents)
     n = S.extend_ann_index(new, out)
     assert n == new.count()  # one (id, cell) row per vector
     q = vectors.filter(F.col("vec_id") < 8)
-    inline = S.ivf_topk(vectors, q, k=5, centroids=cents)
-    served = S.ivf_topk(vectors, q, k=5, index=S.load_ann_index(spark, out))
+    inline = S.ivf_topk(vectors, q, S.ivf_index(vectors, cents), k=5)
+    served = S.ivf_topk(vectors, q, S.load_ann_index(spark, out), k=5)
     assert sorted(map(tuple, inline.collect())) == sorted(
         map(tuple, served.collect())
     )
@@ -961,6 +954,7 @@ def test_pq_encode_drops_null_and_empty_vectors(spark):
     slice scores -> array_min picks code 0) and surfaced them as phantom
     neighbors with finite ADC distances."""
     from market_data_ingestion_scraper_spark.operators.similarity import (
+        ivfpq_index,
         ivfpq_topk,
         pq_encode,
     )
@@ -979,8 +973,8 @@ def test_pq_encode_drops_null_and_empty_vectors(spark):
     served_ivfpq = {
         r.neighbor_id
         for r in ivfpq_topk(
-            emb, emb.filter(F.col("vec_id") == 0), k=4, n_probe=2,
-            centroids=cents, codebooks=cb,
+            emb.filter(F.col("vec_id") == 0), ivfpq_index(emb, cents, cb),
+            k=4, n_probe=2,
         ).collect()
     }
     assert served_ivfpq == {1}  # phantom 2/3 never appear
@@ -988,7 +982,7 @@ def test_pq_encode_drops_null_and_empty_vectors(spark):
 
 def test_ivfpq_index_roundtrip_prunes_and_serves(spark, sf_smoke, tmp_path):
     """X13/X14 lifecycle closure: write_ivfpq_index -> load_ann_index ->
-    ivfpq_topk(index=) must (a) equal the inline quantizer serve
+    ivfpq_topk must (a) equal the in-memory ivfpq_index serve
     bit-for-bit, (b) read ONLY the probed cells' parquet files (the
     partitioned-by-cell layout is the point), and (c) grow by append via
     extend_ann_index with sidecar-frozen quantizers."""
@@ -996,6 +990,7 @@ def test_ivfpq_index_roundtrip_prunes_and_serves(spark, sf_smoke, tmp_path):
         extend_ann_index,
         fit_ivf_centroids,
         fit_pq_codebooks,
+        ivfpq_index,
         ivfpq_topk,
         load_ann_index,
         write_ivfpq_index,
@@ -1006,16 +1001,21 @@ def test_ivfpq_index_roundtrip_prunes_and_serves(spark, sf_smoke, tmp_path):
         "vec_id", "embedding"
     )
     path = str(tmp_path / "ivfpq_idx")
-    n = write_ivfpq_index(emb, path, n_lists=16, m=8, n_codes=8, seed=5)
+    n = write_ivfpq_index(
+        emb, path, fit_ivf_centroids(emb, n_lists=16, seed=5),
+        fit_pq_codebooks(emb, m=8, k=8, seed=5),
+    )
     assert n == emb.count()
     handle = load_ann_index(spark, path)
     assert handle.kind == "ivfpq"
     qs = emb.filter(F.col("vec_id") < 2)
-    served = ivfpq_topk(emb, qs, k=3, n_probe=2, index=handle)
+    served = ivfpq_topk(qs, handle, k=3, n_probe=2)
     inline = ivfpq_topk(
-        emb, qs, k=3, n_probe=2,
-        centroids=handle.quantizer["centroids"],
-        codebooks=handle.quantizer["codebooks"],
+        qs,
+        ivfpq_index(
+            emb, handle.quantizer["centroids"], handle.quantizer["codebooks"]
+        ),
+        k=3, n_probe=2,
     )
     key = lambda df: sorted(
         (r.query_id, r.neighbor_id, r.approx_dist2, r.rnk)
@@ -1184,3 +1184,82 @@ def test_lsh_index_record_refusals(spark, vectors, tmp_path, bad, why):
     if why.endswith("below 1"):  # the in-memory builder refuses it too
         with pytest.raises(ValueError, match=why):
             S.lsh_index(vectors, **{k: v for k, v in bad.items() if k != "kind"})
+
+
+def _without(key):
+    return lambda r: {k: v for k, v in r.items() if k != key}
+
+
+@pytest.mark.parametrize(
+    "kind, mutate, why, in_memory",
+    [
+        ("ivf", lambda r: {**r, "kind": "ivf_flat"}, "kind mismatch", False),
+        ("ivf", _without("centroids"), "no centroids", False),
+        ("ivf", lambda r: {**r, "centroids": []}, "no centroids", True),
+        ("ivf", lambda r: {**r, "centroids": [r["centroids"][0][:-1]]
+                           + r["centroids"][1:]}, "ragged", True),
+        ("ivf", lambda r: {**r, "n_lists": r["n_lists"] + 1}, "n_lists=5 but 4",
+         False),
+        ("ivfpq", lambda r: {**r, "codebooks": []}, "no codebooks", True),
+        ("ivfpq", lambda r: {**r, "m": 4}, "m=4 but 8 codebooks", False),
+        ("ivfpq", lambda r: {**r, "codebooks": [r["codebooks"][0][:-1]]
+                             + r["codebooks"][1:]}, r"but codebooks of \[3, 4\] codes", True),
+        ("ivfpq", lambda r: {**r, "m": 4, "codebooks": r["codebooks"][:4]},
+         "subspace widths", True),
+        ("rp", lambda r: {**r, "out_dim": 0}, "out_dim=0 below 1", True),
+        ("rp", lambda r: {**r, "dim": 0}, "dim=0 below 1", True),
+    ],
+    ids=["ivf-wrong-kind", "ivf-missing-centroids", "ivf-empty-centroids",
+         "ivf-ragged-centroids", "ivf-n-lists-mismatch", "ivfpq-empty-codebooks",
+         "ivfpq-m-mismatch", "ivfpq-ragged-n-codes", "ivfpq-subspace-widths",
+         "rp-zero-out-dim", "rp-zero-dim"],
+)
+def test_vector_index_record_refusals(spark, vectors, tmp_path, kind, mutate,
+                                      why, in_memory):
+    """One reader per vector family decides what a valid record is: the
+    reader, every serving path of the family and extend_ann_index refuse
+    the same bad record, and the message says to rebuild.  Each of these
+    records used to serve: wrong cells or codes scored by a foreign
+    quantizer (recall 0), or an empty index serving 0 rows.  Where the
+    in-memory constructor can express the record, it refuses it too."""
+    import json
+
+    from market_data_ingestion_scraper_spark.streaming import pipeline as P
+
+    out = str(tmp_path / f"bad_{kind}")
+    cents = S.fit_ivf_centroids(vectors, n_lists=4)
+    if kind == "ivf":
+        S.write_ivf_index(vectors, out, cents)
+    elif kind == "ivfpq":
+        S.write_ivfpq_index(vectors, out, cents,
+                            S.fit_pq_codebooks(vectors, m=8, k=4))
+    else:
+        S.write_rp_index(vectors, out)
+    with open(os.path.join(out, "_quantizer.json")) as f:
+        bad = mutate(json.load(f))
+    with open(os.path.join(out, "_quantizer.json"), "w") as f:
+        json.dump(bad, f)
+    handle = S.load_ann_index(spark, out)
+    q = vectors.limit(2)
+    refused = {
+        "ivf": [lambda: S._unpack_ivf_index(handle),
+                lambda: S.ivf_topk(vectors, q, handle)],
+        "ivfpq": [lambda: S._unpack_ivfpq_index(handle),
+                  lambda: S.ivfpq_topk(q, handle),
+                  lambda: P.ivfpq_enrich_stream(q, handle)],
+        "rp": [lambda: S._unpack_rp_index(handle),
+               lambda: S.rp_topk(q, handle)],
+    }[kind] + [lambda: S.extend_ann_index(q, out)]
+    for call in refused:
+        with pytest.raises(ValueError, match=why) as exc:
+            call()
+        assert "rebuild" in str(exc.value)
+    if in_memory:
+        build = {
+            "ivf": lambda r: S.ivf_index(vectors, r["centroids"]),
+            "ivfpq": lambda r: S.ivfpq_index(vectors, r["centroids"],
+                                             r["codebooks"]),
+            "rp": lambda r: S.rp_index(vectors, r["out_dim"], r["dim"]),
+        }[kind]
+        with pytest.raises(ValueError, match=why):
+            build(bad)

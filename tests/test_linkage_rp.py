@@ -22,6 +22,7 @@ from market_data_ingestion_scraper_spark.operators.linkage import (
 from market_data_ingestion_scraper_spark.operators.similarity import (
     brute_force_topk,
     recall_vs_exact,
+    rp_index,
     rp_project,
     rp_signs,
     rp_topk,
@@ -183,7 +184,7 @@ def test_rp_preserves_planted_neighbor(spark):
         (i, [rng.gauss(0, 1) for _ in range(64)]) for i in range(2, 40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    top = rp_topk(df, df.filter(F.col("vec_id") == 0), k=1)
+    top = rp_topk(df.filter(F.col("vec_id") == 0), rp_index(df), k=1)
     assert [(r.query_id, r.neighbor_id) for r in top.collect()] == [(0, 1)]
 
 
@@ -206,7 +207,7 @@ def test_rp_recall_floor_on_clustered_corpus(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
     qs = df.filter(F.col("vec_id") < 8)
     rec = recall_vs_exact(
-        rp_topk(df, qs, k=4), brute_force_topk(df, qs, k=4), 4
+        rp_topk(qs, rp_index(df), k=4), brute_force_topk(df, qs, k=4), 4
     )
     avg = rec.agg(F.avg("recall_at_4")).collect()[0][0]
     assert avg > 0.85
@@ -276,15 +277,15 @@ def test_entity_ids_collapse_transitive_matches(spark):
 
 
 def test_rp_index_roundtrip_serves_identically(spark, tmp_path):
-    """X19 lifecycle: write_rp_index -> load_ann_index -> rp_topk_vs_index
-    must equal the inline rp_topk bit-for-bit (the sidecar's seed drives
-    the projection, so the matrices are identical); kind mismatch raises."""
+    """X19 lifecycle: write_rp_index -> load_ann_index -> rp_topk must
+    equal the in-memory rp_index serve bit-for-bit (the sidecar's seed
+    drives the projection, so the matrices are identical); kind mismatch
+    raises."""
     import pytest as _pytest
 
     from market_data_ingestion_scraper_spark.operators.similarity import (
         load_ann_index,
         rp_topk,
-        rp_topk_vs_index,
         write_rp_index,
     )
 
@@ -298,11 +299,11 @@ def test_rp_index_roundtrip_serves_identically(spark, tmp_path):
     qs = df.filter(F.col("vec_id") < 3)
     served = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rnk)
-        for r in rp_topk_vs_index(handle, qs, k=4).collect()
+        for r in rp_topk(qs, handle, k=4).collect()
     )
     inline = sorted(
         (r.query_id, r.neighbor_id, r.cos_sim, r.rnk)
-        for r in rp_topk(df, qs, k=4, out_dim=16, seed=9).collect()
+        for r in rp_topk(qs, rp_index(df, out_dim=16, seed=9), k=4).collect()
     )
     assert served == inline
     # append symmetry: new vectors project with the sidecar's seed
@@ -316,6 +317,4 @@ def test_rp_index_roundtrip_serves_identically(spark, tmp_path):
     assert extend_ann_index(extra, path) == 5
     assert load_ann_index(spark, path).df.count() == 65
     with _pytest.raises(ValueError):
-        rp_topk_vs_index(
-            type(handle)(handle.df, {"kind": "lsh"}), qs
-        )
+        rp_topk(qs, type(handle)(handle.df, {"kind": "lsh"}))

@@ -423,6 +423,69 @@ def test_lsh_index_handle_twins_serve_identically(spark, sf_oracle, tmp_path):
                 call(**kw)
 
 
+def test_vector_index_handle_twins_serve_identically(spark, sf_oracle, tmp_path):
+    """The in-memory ivf_index / ivfpq_index / rp_index handles and the
+    persisted ones (write_*_index -> load_ann_index) carry the same
+    record and serve identical rows through ivf_topk, ivfpq_topk,
+    ivfpq_enrich_stream and rp_topk, at non-default quantizers (8 cells,
+    4 codebooks of 8 codes, an 8-wide seed-9 projection).  No serve path
+    takes a pre-built frame or a quantizer beside the handle, and the
+    separate persisted-RP server is gone."""
+    from market_data_ingestion_scraper_spark.operators import similarity as S
+
+    emb = load_table(spark, sf_oracle, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    cents = S.fit_ivf_centroids(emb, n_lists=8, seed=3)
+    books = S.fit_pq_codebooks(emb, m=4, k=8, seed=3)
+    builds = {
+        "ivf": (lambda: S.ivf_index(emb, cents),
+                lambda p: S.write_ivf_index(emb, p, cents)),
+        "ivfpq": (lambda: S.ivfpq_index(emb, cents, books),
+                  lambda p: S.write_ivfpq_index(emb, p, cents, books)),
+        "rp": (lambda: S.rp_index(emb, out_dim=8, seed=9),
+               lambda p: S.write_rp_index(emb, p, out_dim=8, seed=9)),
+    }
+    twins = {}
+    for kind, (build, write) in builds.items():
+        path = str(tmp_path / kind)
+        assert write(path) == emb.count()
+        twins[kind] = [build(), S.load_ann_index(spark, path)]
+        assert twins[kind][0].quantizer == twins[kind][1].quantizer
+        assert twins[kind][0].kind == kind
+
+    q = emb.filter(F.col("vec_id") < 8)
+
+    def calls(pair):
+        ivf, ivfpq, rp = pair
+        return {
+            "ivf_topk": lambda **kw: S.ivf_topk(emb, q, ivf, **kw),
+            "ivfpq_topk": lambda **kw: S.ivfpq_topk(q, ivfpq, **kw),
+            "ivfpq_enrich_stream": lambda **kw: P.ivfpq_enrich_stream(
+                q, ivfpq, **kw),
+            "rp_topk": lambda **kw: S.rp_topk(q, rp, **kw),
+        }
+
+    rows = lambda df: sorted(map(tuple, df.collect()))
+    mem = calls([twins[k][0] for k in builds])
+    disk = calls([twins[k][1] for k in builds])
+    for name in mem:
+        got = rows(mem[name]())
+        assert got == rows(disk[name]()), name
+        assert got, name
+
+    removed = ({"n_lists": 8}, {"m": 4}, {"n_codes": 8}, {"seed": 9},
+               {"centroids": cents}, {"codebooks": books},
+               {"centroid_elements": None}, {"encoded": None},
+               {"corpus_cells": None}, {"out_dim": 8}, {"dim": 64})
+    for name, call in mem.items():
+        for kw in removed:
+            with pytest.raises(TypeError):
+                call(**kw)
+    assert not hasattr(S, "rp_topk_vs_index")
+    assert not hasattr(S.AnnIndex, "require")
+
+
 def test_compact_resumes_after_crash_mid_delete(spark, sf_smoke, tmp_path):
     """The data-loss scenario the write-ahead staging exists for: staging
     snapshot complete, crash after deleting SOME source dirs.  A re-run
@@ -651,9 +714,11 @@ def test_stream_record_match_filter_admission(spark, sf_smoke, tmp_path):
 
 def test_ivfpq_enrich_stream_matches_batch(spark, sf_smoke, tmp_path):
     """Streaming IVF-PQ serving against the persisted cell-partitioned
-    index must equal the batch ivfpq_topk(index=) results bit-for-bit
-    (same quantizer literals, same ADC arithmetic, same tie-break)."""
+    index must equal the batch ivfpq_topk results bit-for-bit (same
+    quantizer literals, same ADC arithmetic, same tie-break)."""
     from market_data_ingestion_scraper_spark.operators.similarity import (
+        fit_ivf_centroids,
+        fit_pq_codebooks,
         ivfpq_topk,
         load_ann_index,
         write_ivfpq_index,
@@ -663,10 +728,13 @@ def test_ivfpq_enrich_stream_matches_batch(spark, sf_smoke, tmp_path):
         "vec_id", "embedding"
     )
     path = str(tmp_path / "ivfpq_stream_idx")
-    write_ivfpq_index(emb, path, n_lists=8, m=8, n_codes=8, seed=5)
+    write_ivfpq_index(
+        emb, path, fit_ivf_centroids(emb, n_lists=8, seed=5),
+        fit_pq_codebooks(emb, m=8, k=8, seed=5),
+    )
     handle = load_ann_index(spark, path)
     queries = emb.filter(F.col("vec_id") < 4)
-    batch = ivfpq_topk(emb, queries, k=3, n_probe=2, index=handle)
+    batch = ivfpq_topk(queries, handle, k=3, n_probe=2)
     want = {}
     for r in batch.collect():
         want.setdefault(r.query_id, []).append(
